@@ -33,7 +33,7 @@ final case class GraftDb(spark: SparkSession, warehouseDir: String) {
 
 final case class GraftCollection(spark: SparkSession, path: String) {
 
-  def toDf: DataFrame = spark.read.parquet(path)
+  def toDf: DataFrame = Util.readParquet(spark, path)
 
   private def fs = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)

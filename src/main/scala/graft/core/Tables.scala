@@ -18,10 +18,11 @@ object Tables {
 
   /** Read one table from an sf directory. Column pruning + predicate
     * pushdown reach the parquet scan because this is a plain
-    * declarative `spark.read.parquet` — no RDD wrapping.
+    * declarative parquet read — no RDD wrapping — whose schema is
+    * inferred once per file listing ([[Util.readParquet]]).
     */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Util.readParquet(spark, s"$sfDir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame   = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = t(s, d, "orders")

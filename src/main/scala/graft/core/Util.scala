@@ -3,12 +3,46 @@ package graft.core
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** S7: whole-table JSON dump / restore with schema check (reference
   * json-dump plugin, SURVEY §2.1 S7) and A4: the `docReads` cost metric
   * (rows actually scanned by an executed plan, SURVEY §2.4 A4).
   */
 object Util {
+
+  /** `spark.read.parquet(path)` for a local table, without the
+    * schema-inference job once this JVM has read the same files: the
+    * inferred schema is kept per path together with a digest of the
+    * table's file listing (relative name, size, mtime of every file,
+    * recursively), and a read whose listing digests the same states that
+    * schema instead of inferring it again. Any added, removed, resized
+    * or rewritten file infers afresh. A path that is missing or not on
+    * the local file system reads exactly as `spark.read.parquet` does.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val root = java.nio.file.Paths.get(path)
+    val listing =
+      if (path.contains("://") || !java.nio.file.Files.exists(root)) None
+      else {
+        val files = java.nio.file.Files.walk(root)
+        try Some(files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map { f =>
+            s"${root.relativize(f)}:${java.nio.file.Files.size(f)}:" +
+              java.nio.file.Files.getLastModifiedTime(f).toMillis
+          }.toSeq.sorted.mkString(";"))
+        finally files.close()
+      }
+    listing.flatMap(l => schemas.get(path).collect { case (`l`, sch) => sch }) match {
+      case Some(sch) => spark.read.schema(sch).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        listing.foreach(l => schemas.put(path, (l, df.schema)))
+        df
+    }
+  }
+  private val schemas =
+    scala.collection.concurrent.TrieMap.empty[String, (String, StructType)]
 
   /** Export a DataFrame as JSON lines. */
   def exportJson(df: DataFrame, path: String): Unit =

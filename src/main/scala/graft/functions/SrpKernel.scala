@@ -28,6 +28,39 @@ import org.apache.spark.sql.types._
 object SrpKernel {
   def srpBuckets(e: Column, proj: Seq[Seq[Seq[Float]]]): Column =
     Bridge.column(SrpBuckets(Bridge.expression(e), proj))
+
+  /** The same buckets for one vector held on the driver — the one loop
+    * [[SrpBuckets]] evaluates per row, so the two never disagree.
+    */
+  def bucketsOf(e: Array[Float], proj: Seq[Seq[Seq[Float]]]): Array[Long] =
+    buckets(e.length, e(_), proj.flatMap(_.map(_.toArray)).toArray, proj.size)
+
+  /** For table t, bucket_t = Σ_j (dot(e, w(t·bits + j)) > 0 ? 2^j : 0),
+    * the dot accumulated float→double in index order over the shorter
+    * of the two arrays.
+    */
+  private[functions] def buckets(n: Int, elem: Int => Float,
+      flat: Array[Array[Float]], tables: Int): Array[Long] = {
+    val bits = flat.length / tables
+    val out = new Array[Long](tables)
+    var t = 0
+    while (t < tables) {
+      var bucket = 0L
+      var j = 0
+      while (j < bits) {
+        val w = flat(t * bits + j)
+        val m = math.min(n, w.length)
+        var s = 0.0
+        var i = 0
+        while (i < m) { s += elem(i).toDouble * w(i).toDouble; i += 1 }
+        if (s > 0) bucket |= 1L << j
+        j += 1
+      }
+      out(t) = bucket
+      t += 1
+    }
+    out
+  }
 }
 
 case class SrpBuckets(child: Expression, proj: Seq[Seq[Seq[Float]]])
@@ -42,7 +75,6 @@ case class SrpBuckets(child: Expression, proj: Seq[Seq[Seq[Float]]])
   }
 
   @transient private lazy val tables: Int = proj.size
-  @transient private lazy val bits: Int = proj.head.size
   // flattened [table][bit] -> weight array, resolved once per task
   @transient private lazy val flat: Array[Array[Float]] =
     proj.flatMap(_.map(_.toArray)).toArray
@@ -62,28 +94,11 @@ case class SrpBuckets(child: Expression, proj: Seq[Seq[Seq[Float]]])
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val out = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      var bucket = 0L
-      var j = 0
-      while (j < bits) {
-        val w = flat(t * bits + j)
-        val n = math.min(arr.numElements(), w.length)
-        var s = 0.0
-        var i = 0
-        while (i < n) { s += arr.getFloat(i).toDouble * w(i).toDouble; i += 1 }
-        if (s > 0) bucket |= 1L << j
-        j += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
+    new GenericArrayData(SrpKernel.buckets(arr.numElements(), arr.getFloat, flat, tables))
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
   // proj is a large constant: keep toString/plan output readable
-  override def toString: String = s"srp_buckets(${child}, tables=$tables, bits=$bits)"
+  override def toString: String = s"srp_buckets(${child}, tables=$tables, bits=${proj.head.size})"
 }

@@ -44,6 +44,19 @@ object VectorFunctions {
   /** Euclidean distance as a codegen'd Catalyst expression. */
   def euclidean(a: Column, b: Column): Column = mkCol(EuclideanDistance(ex(a), ex(b)))
 
+  /** [[EuclideanDistance]] between two literal vectors, evaluated on the
+    * driver: the same expression a scan evaluates, so the value is
+    * bit-identical, with no plan and no job.
+    */
+  def euclideanOfLiterals(a: Column, b: Column): Double = {
+    val e = EuclideanDistance(Bridge.convertedExpression(a), Bridge.convertedExpression(b))
+    require(e.foldable && e.checkInputDataTypes().isSuccess,
+      s"euclideanOfLiterals needs two array<float> literals, got $e")
+    val v = e.eval(null)
+    require(v != null, s"euclideanOfLiterals: null operand in $e")
+    v.asInstanceOf[Double]
+  }
+
   /** Cosine similarity as a codegen'd Catalyst expression. */
   def cosine(a: Column, b: Column): Column = mkCol(CosineSimilarity(ex(a), ex(b)))
 

@@ -123,8 +123,7 @@ object Bucketed {
       .agg(count(lit(1)).as("n_items"),
         countDistinct("o_orderkey").as("n_orders"),
         round(sum("l_quantity"), 2).as("qty"),
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
+        Relational.revenueCents.as("revenue"))
       .orderBy("o_orderpriority")
 
   val queries: Map[String, Relational.Q] = Map(
@@ -135,11 +134,11 @@ object Bucketed {
   // logical result, so raw == bucketed is exactly the property to check.
   val oracleSql: Map[String, String] = Map(
     "q_j6_bucketed_join" ->
-      """SELECT o.o_orderpriority,
+      s"""SELECT o.o_orderpriority,
         |       count(*) AS n_items,
         |       count(DISTINCT o.o_orderkey) AS n_orders,
         |       round(CAST(sum(l.l_quantity) AS DOUBLE), 2) AS qty,
-        |       round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue
+        |       ${Relational.RevenueCentsSql} AS revenue
         |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
         |GROUP BY 1 ORDER BY 1""".stripMargin,
   )

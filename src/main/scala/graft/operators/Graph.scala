@@ -4,7 +4,9 @@ import graft.core.Tables._
 import graft.operators.Corpus.TruncOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Graph analytics over the embedding similarity graph — the corpus-
   * structure family a training-data pipeline runs AFTER near-dup
@@ -82,6 +84,28 @@ object Graph {
         floor(x.cast("double") * lit(QuantScale)) *
           floor(y.cast("double") * lit(QuantScale))),
       lit(0L), (acc, v) => acc + v)
+
+  /** One element of [[intDot]]'s quantization: `floor(x·QuantScale)`,
+    * the double→long conversion Catalyst's `floor` makes.
+    */
+  private[graft] def quantized(v: Array[Double]): Array[Long] =
+    v.map(x => math.floor(x * QuantScale).toLong)
+
+  /** The Scala twin of [[intDot]] for a query already [[quantized]]:
+    * the quantized products summed as Long in index order — the same
+    * integers Catalyst computes, so the score is bit-identical.
+    * Operands of different lengths have no score (Catalyst's
+    * `zip_with` pads with null and the sum is null); the caller never
+    * builds them.
+    */
+  private[graft] def intDotQ(q: Array[Long], v: Array[Double]): Long = {
+    require(q.length == v.length,
+      s"intDot operands differ in length: ${q.length} vs ${v.length}")
+    var acc = 0L
+    var i = 0
+    while (i < q.length) { acc += q(i) * math.floor(v(i) * QuantScale).toLong; i += 1 }
+    acc
+  }
 
   /** Scored LSH candidate pairs over an (vec_id, embedding) frame:
     * (id_a, id_b, w) with id_a < id_b, one row per distinct capped-
@@ -474,6 +498,29 @@ object Graph {
   private[graft] def edgeBucketOf(c: Column): Column =
     pmod(xxhash64(c), lit(EdgeBuckets.toLong)).cast("int")
 
+  /** [[edgeBucketOf]] of one id, on the driver: `xxhash64` of a long is
+    * `XXH64.hashLong` under Spark's default seed 42.
+    */
+  private[graft] def edgeBucketOfId(id: Long): Int =
+    java.lang.Math.floorMod(
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L),
+      EdgeBuckets.toLong).toInt
+
+  /** The stored `edges/` table's schema (`bucket` is its directory
+    * partition column) and the `buckets/` routing table's — both
+    * written only by this object into immutable version dirs, so reads
+    * state them instead of paying a schema-inference job. GraphIndexSpec
+    * pins them against what a build writes.
+    */
+  private[graft] val EdgesSchema = StructType(Seq(
+    StructField("src", LongType), StructField("dst", LongType),
+    StructField("w", LongType), StructField("rk", IntegerType),
+    StructField("dvec", ArrayType(FloatType)),
+    StructField("bucket", IntegerType)))
+  private[graft] val BucketsSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("tbl", IntegerType),
+    StructField("bkt", LongType)))
+
   private def rmTree(path: String): Unit = {
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
@@ -671,7 +718,7 @@ object Graph {
 
   /** Live stored edge table (src, dst, w, rk). */
   def storedEdges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensureKnnGraph(s, d)}/edges")
+    s.read.schema(EdgesSchema).parquet(s"${ensureKnnGraph(s, d)}/edges")
       .select("src", "dst", "w", "rk")
 
   /** Stored edge table WITH its src-hash directory-partition column
@@ -681,7 +728,7 @@ object Graph {
     * the query without touching any corpus table.
     */
   def storedEdgesPartitioned(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensureKnnGraph(s, d)}/edges")
+    s.read.schema(EdgesSchema).parquet(s"${ensureKnnGraph(s, d)}/edges")
       .select("src", "dst", "w", "rk", "dvec", "bucket")
 
   /** Live stored scored-pair table (id_a, id_b, w ≥ [[CoreWmin]]). */
@@ -2403,7 +2450,7 @@ object Graph {
     * membership, the cap is read from [[storedBucketSizes]].
     */
   def storedBuckets(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensureKnnGraph(s, d)}/buckets")
+    s.read.schema(BucketsSchema).parquet(s"${ensureKnnGraph(s, d)}/buckets")
       .select("vec_id", "tbl", "bkt")
 
   /** Live stored bucket-occupancy table (tbl, bkt, n). */
@@ -2891,22 +2938,20 @@ object Graph {
     * maintain on append — the routing table IS the append-maintained
     * membership.
     *
-    * The query's bucket keys come from hashing ITS VECTOR with the
-    * same [[graft.functions.SrpKernel]] the build used — O(Q) kernel
-    * rows over the checkpointed query table, never a routing lookup
-    * (an external query has no routing row to look up; a corpus query
-    * hashes to exactly its stored rows, so the two conventions
+    * The query's bucket keys come from hashing ITS VECTOR on the
+    * driver with the same [[graft.functions.SrpKernel]] loop the build
+    * used ([[graft.functions.SrpKernel.bucketsOf]]) — never a routing
+    * lookup (an external query has no routing row to look up; a corpus
+    * query hashes to exactly its stored rows, so the two conventions
     * coincide). The cohabitant fetch is then a (tbl, bkt)-key
     * pushdown against the routing table — its SORT order — so row
     * groups prune at scale; it collects ≤ Q·SrpTables·MaxBucket rows
     * BY CONSTRUCTION. The global-min fallback job runs only for
     * queries whose every bucket is empty-of-peers or capped out
     * (rare — and the only full-routing-scan in the serve path when it
-    * does). GraphIndexSpec's kernel-free assertion on the served
-    * frame still holds: the kernel here touches Q query rows, never
-    * the corpus.
+    * does).
     */
-  private[graft] def seededEntries(qv: DataFrame,
+  private[graft] def seededEntries(qv: Seq[(Long, Array[Float])],
       routing: DataFrame): Map[Long, Seq[Long]] = {
     // composite bucket key for DRIVER-side grouping, exact: bkt <
     // 2^SrpBits by construction
@@ -2925,11 +2970,10 @@ object Graph {
           col("bkt").isin(group.map(_ & ((1L << Dedup.SrpBits) - 1))
             .toSeq.distinct: _*)
       }.reduceOption(_ || _).getOrElse(lit(false))
-    val qb = qv.select(col("qid"),
-        posexplode(graft.functions.SrpKernel.srpBuckets(
-          col("qv"), Dedup.SrpProj)).as(Seq("tbl", "bkt")))
-      .select(col("qid"), keyCol(col("tbl"), col("bkt")).as("key"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val qb = qv.flatMap { case (q, v) =>
+      graft.functions.SrpKernel.bucketsOf(v, Dedup.SrpProj).zipWithIndex
+        .map { case (b, t) => (q, t.toLong * (1L << Dedup.SrpBits) + b) }
+    }
     val qids = qb.map(_._1).distinct.toSeq
     val keys = qb.map(_._2).distinct.toSeq
     // Over-cap buckets (r18, the r17 adversarial-ingest finding): a
@@ -2949,29 +2993,39 @@ object Graph {
     // selection and the exact baseline use, so at equal score the
     // walk serves the same ids the baseline names.
     //
-    // r20 (the NOTES_r19 lever, taken): the cohabitant fetch is ONE
-    // ranked job over the selected buckets' rows — rank ≤ MaxBucket
-    // admits a ≤cap bucket whole (every rank is within the cap) and
-    // truncates an over-cap bucket to its representatives, so the
-    // r18 two-regime's separate bsizes read + capped collect +
-    // over-cap window (2-3 sequential jobs, each ~0.15-0.2 s local
-    // scheduler latency — the g-serve family's measured cost shape)
-    // collapse into one barrier with IDENTICAL output. The rank
-    // window shuffles only rows the old capped path collected to the
-    // driver anyway (≤ |keys|·MaxBucket by the same bound), and the
-    // attribute-level keyPred still prunes row groups at the scan.
-    // The serve path no longer needs a separate sizes job; `bsizes`
-    // remains a maintenance-path artifact ([[storedBucketSizes]]) and
-    // is no longer part of the serve signature.
-    val cohab = routing
+    // The cohabitant fetch is ONE job over the selected buckets' rows:
+    // each task keeps, per key, its MaxBucket lowest vec_ids (a bounded
+    // max-heap), and the driver keeps the MaxBucket lowest of the
+    // union — the rows a `row_number() ≤ MaxBucket` window over
+    // (key, vec_id ASC) admits, without the window's shuffle (which
+    // adaptive execution runs as a second job). A ≤cap bucket is
+    // admitted whole, an over-cap one truncated to its representatives.
+    // The routing table is written clustered by `tbl`, so a key's rows
+    // sit in few partitions and the collect stays near |keys|·MaxBucket
+    // (≤ partitions·|keys|·MaxBucket in any layout); the attribute-level
+    // keyPred still prunes row groups at the scan.
+    val cap = Dedup.MaxBucket
+    val cohab: Map[Long, Array[Long]] = if (keys.isEmpty) Map.empty else routing
       .filter(keyPred(keys))
-      .select(col("vec_id"), keyCol(col("tbl"), col("bkt")).as("key"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("key").orderBy(col("vec_id").asc)))
-      .filter(col("rn") <= Dedup.MaxBucket)
-      .select("vec_id", "key")
-      .collect().map(r => (r.getLong(1), r.getLong(0)))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      .select(col("vec_id").cast("long"), keyCol(col("tbl"), col("bkt")))
+      .queryExecution.toRdd
+      .mapPartitions { it =>
+        val low = collection.mutable.HashMap.empty[Long,
+          java.util.PriorityQueue[java.lang.Long]]
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            val h = low.getOrElseUpdate(r.getLong(1),
+              new java.util.PriorityQueue[java.lang.Long](
+                java.util.Collections.reverseOrder[java.lang.Long]()))
+            h.add(r.getLong(0))
+            if (h.size > cap) h.poll()
+          }
+        }
+        low.iterator.flatMap { case (key, h) =>
+          h.iterator().asScala.map(v => (key, v.longValue)) }
+      }
+      .collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.take(cap)).toMap
     val seeded: Map[Long, Seq[Long]] = qids.flatMap { q =>
       val peers = qb.collect { case (v, key) if v == q => key }
         .flatMap(k => cohab.getOrElse(k, Array.empty[Long]))
@@ -3014,31 +3068,127 @@ object Graph {
     */
   val GannBatchQ = 8L
 
+  /** Per-phase timing split of the most recent [[graphAnnBatchOn]]
+    * walk in this JVM (seconds), populated only when the session conf
+    * `graft.gserve.timings` is true: `seed` (query-vector collect and
+    * LSH seed selection), `seed_score` (the seed-scoring point fetch),
+    * per-hop `hop<k>` walls and their `hops` total, `hops_rounds`
+    * (executed rounds), `final` (the driver-side top-K selection plus
+    * the `allowed` point fetch, if any), plus `<phase>_job`/
+    * `<phase>_task` Spark-side splits from
+    * [[graft.core.JobGroupMetrics]] — 0 for a phase that ran no job (a
+    * phase whose wall inflates while `_task` stays flat was queued,
+    * not working). Bench enables the conf and emits the map after each
+    * g-serve query.
+    */
+  @volatile private[graft] var lastGServeTimings: Map[String, Double] = Map.empty
+
+  /** Most queries one [[graphAnnBatchOn]] call serves: the query
+    * vectors are held on the driver and shipped with every hop task.
+    */
+  val GannMaxQueries = 4096
+
+  /** The (vec_id, embedding) rows `isQuery` selects, collected in ONE
+    * job that keeps at most `bound + 1` rows per partition (the local
+    * half of `limit(bound + 1)`; a global limit would scan the
+    * partitions incrementally, one job per step) and fails when more
+    * than `bound` rows match.
+    */
+  private[graft] def queryVectors(e: DataFrame, isQuery: Column,
+      bound: Int = GannMaxQueries): Seq[(Long, Array[Float])] = {
+    val rows = e.filter(isQuery)
+      .select(col("vec_id").cast("long"), col("embedding"))
+      .queryExecution.toRdd
+      .mapPartitions(_.take(bound + 1).map(r =>
+        (r.getLong(0), r.getArray(1).toFloatArray())))
+      .collect()
+    require(rows.length <= bound,
+      s"graph ANN serves at most $bound queries per call; the query predicate matched more")
+    rows.toSeq
+  }
+
+  /** The task body shared by the seed-scoring and hop jobs. `rows` are
+    * (key, id, vector: array<double>[, bucket: int]); a row whose key
+    * is in `qidsOf` (and, with `buckets`, whose bucket is in that set)
+    * is scored against each of its queries' quantized vectors,
+    * emitting (qid, id, score). Rows with a null key, id or vector
+    * never match — the inner-join semantics of the planned form.
+    */
+  private def scoreTask(qidsOf: Map[Long, Array[Long]],
+      qq: Map[Long, Array[Long]], buckets: Option[Set[Int]])
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] => Array[(Long, Long, Long)] =
+    it => {
+      val out = Array.newBuilder[(Long, Long, Long)]
+      it.foreach { r =>
+        val qs =
+          if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) null
+          else qidsOf.getOrElse(r.getLong(0), null)
+        if (qs != null && buckets.forall(b => !r.isNullAt(3) && b(r.getInt(3)))) {
+          val id = r.getLong(1)
+          val v = r.getArray(2).toDoubleArray()
+          qs.foreach(q => out += ((q, id, intDotQ(qq(q), v))))
+        }
+      }
+      out.result()
+    }
+
+  /** For each partition of `rows` (the planned form of `plan`), the
+    * `bucket` values its files hold — known when the plan is one file
+    * scan whose `bucket` output is the scan's integer directory
+    * partition column; None otherwise (every partition may hold every
+    * bucket).
+    */
+  private def partitionBuckets(plan: DataFrame,
+      rows: org.apache.spark.rdd.RDD[_]): Option[Array[Set[Int]]] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val exec = plan.queryExecution.executedPlan
+    val out = exec.output.find(_.name == "bucket")
+    exec.collect { case f: FileSourceScanExec => f } match {
+      case Seq(scan) if rows.partitions.forall(_.isInstanceOf[FilePartition]) =>
+        val ps = scan.relation.partitionSchema
+        val idx = ps.fieldNames.indexOf("bucket")
+        val same = scan.output.exists(a => out.exists(_.exprId == a.exprId))
+        if (idx < 0 || ps(idx).dataType != IntegerType || !same) None
+        else Some(rows.partitions.map(_.asInstanceOf[FilePartition].files
+          .map(_.partitionValues.getInt(idx)).toSet))
+      case _ => None
+    }
+  }
+
   /** Batch graph-ANN serving: greedy beam search for N query vectors,
-    * DRIVER-PACED with every data-proportional read in Spark.
+    * DRIVER-PACED, with one Spark job per hop round and no Catalyst
+    * planning inside the loop.
     *
     * A graph walk is a sequential pointer-chase: hop k's reads depend
-    * on hop k-1's results, so SOMETHING must sync per hop. Earlier
-    * rounds synced on per-hop checkpoints of distributed beam frames
-    * — but the beam is ≤ Q·[[GannBeam]] rows BY CONSTRUCTION
-    * (independent of corpus size), so those frames were 12-96 rows
-    * shuffled through 3-5 scheduled stages per hop: pure scheduling
-    * tax (~0.5 s/hop at sf0.1, >90% of the family's serve cost). This
-    * loop instead holds the bounded search STATE (beams, visited
-    * scores — ≤ Q·(seeds + hops·beam·G) rows of 3 longs at the g8
-    * defaults) on the driver, the coordinator role every NSW serving
-    * system gives it, and runs ONE Spark job per hop: the (qid, src)
-    * beam pairs broadcast against the stored edge table with its
-    * partitions PRUNED to the beams' src-hash buckets (the serve-side
-    * payoff of the artifact's directory layout), each expanded edge
-    * scored on the spot — the layout's denormalized `dvec` against
-    * the BROADCAST Q-row query-vector table via the same codegen
-    * [[intDot]] kernel as every other distance in the engine. Scores
-    * are never computed on the driver, and no corpus table appears in
-    * the hop loop at all: at 100 TB a hop reads exactly the ≤ Q·B
-    * edge partitions the beams occupy.
+    * on hop k-1's results, so SOMETHING must sync per hop. The bounded
+    * search STATE — query vectors, beams, visited scores, ≤
+    * Q·(seeds + hops·beam·G) entries — lives on the driver, the
+    * coordinator role every NSW serving system gives it (REPOSE keeps
+    * per-query state with the coordinator the same way). Everything
+    * data-proportional stays in Spark:
     *
-    * Each beam starts at its query's [[seededEntries]] seed and hops
+    *  - the Q query vectors are collected once, bounded by
+    *    [[GannMaxQueries]] (checked inside the collect job, before any
+    *    row reaches the driver), and hashed to their LSH keys on the
+    *    driver ([[seededEntries]]);
+    *  - the seed candidates are scored in ONE point-fetch job over the
+    *    corpus;
+    *  - the edge scan is planned ONCE (`queryExecution.toRdd`), and
+    *    every hop is a single `runJob` over only the scan partitions
+    *    whose files hold a src-hash bucket the round's entrants occupy
+    *    (the serve-side payoff of the artifact's `bucket=` directory
+    *    layout; an edges frame without that layout runs every
+    *    partition). The frontier and the query vectors ride in the
+    *    task closure, and each expanded edge's denormalized `dvec` is
+    *    scored in the task by [[intDotQ]], the Scala twin of
+    *    [[intDot]] — bit-identical integers, no corpus table in the
+    *    loop;
+    *  - the final top-[[GannTopK]] per query is selected on the driver
+    *    from the visited scores it already holds; only an `allowed`
+    *    predicate costs a job (one point fetch over the visited ids).
+    *
+    * Each beam starts at its query's [[seededEntries]] seeds and hops
     * until ITS OWN fixpoint: a beam whose top-B survives a round
     * unchanged can never change again (the next pool is a function of
     * the beam alone), so the query leaves the expansion set — the
@@ -3051,33 +3201,13 @@ object Graph {
     * resolve to per-class minimum ids), so the engine's early exit
     * and touch bound are verified, not trusted.
     *
-    * Output: per query, the top-[[GannTopK]] visited nodes with the
-    * per-query `visited_n` touch-bound and `hops_n` executed-hop
-    * attestations riding the hashed result (the d15 docReads
-    * discipline); the final selection runs in-plan over the visited
-    * score set. Determinism: bit-exact integer scores, every
-    * selection tie-broken (score DESC, vec_id ASC).
+    * Output: a local frame (qid, vec_id, sc, rk, visited_n, hops_n) —
+    * per query, the top-[[GannTopK]] visited nodes with the per-query
+    * `visited_n` touch-bound and `hops_n` executed-hop attestations
+    * riding the hashed result (the d15 docReads discipline).
+    * Determinism: bit-exact integer scores, every selection
+    * tie-broken (score DESC, vec_id ASC).
     */
-  /** Per-phase timing split of the most recent [[graphAnnBatchOn]]
-    * walk in this JVM (seconds), populated only when the session conf
-    * `graft.gserve.timings` is true — the v19-legs discipline applied
-    * to the g-serve family (five of r18's ten slowest bench rows, on
-    * the noise watch since r16, with no attribution split): `seed`
-    * (LSH probe/seed selection), `seed_score` (the seed-scoring point
-    * fetch), per-hop `hop<k>` walls and their `hops` total,
-    * `hops_rounds` (executed rounds), plus `<phase>_job`/`<phase>_task`
-    * Spark-side splits from [[graft.core.JobGroupMetrics]] (a phase
-    * whose wall inflates while `_task` stays flat was queued, not
-    * working). r20: the final top-K selection + hydration — lazy when
-    * untimed — executes under timing inside its own `final` job group
-    * (the walk materializes the ≤ Q·TopK result rows in-span and
-    * returns a literal frame), so the map carries measured
-    * `final`/`final_job`/`final_task` instead of leaving 40-45% of the
-    * query wall as an unattributed residual. Bench enables the conf
-    * and emits the map after each g-serve query.
-    */
-  @volatile private[graft] var lastGServeTimings: Map[String, Double] = Map.empty
-
   def graphAnnBatchOn(e: DataFrame, edges: DataFrame, routing: DataFrame,
       isQuery: Column,
       allowed: Option[Column] = None,
@@ -3106,68 +3236,41 @@ object Graph {
           s.sparkContext.clearJobGroup()
         }
       }
-    // Opt r21: the coordinator phases (seed/seed-score/hop collects)
-    // run WITHOUT adaptive execution. Every one of those jobs is a
-    // bounded broadcast-join plan with no data shuffle — AQE there
-    // contributes only per-stage re-optimization and a separate
-    // 0-task materialization job per broadcast, which JobTimelineProbe
-    // measured as the family's dominant term at sf0.1 (q_g7: 31 jobs,
-    // 0.74 s summed job wall vs 1.07 s of inter-job driver planning;
-    // ~25 gaps of 30-120 ms, two jobs per hop round). AQE changes
-    // only physical execution, never results, and the session conf is
-    // restored as soon as the hop loop exits (idempotently re-restored
-    // on failure), so the final `served` plan — the part with real
-    // shuffles — and every later caller keep their AQE posture.
-    // graft.gserve.coordinatorAqeOff=false reverts without a rebuild.
-    val coordAqeOff = s.conf
-      .get("graft.gserve.coordinatorAqeOff", "true").toBoolean
-    val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-    def coordConfRestore(): Unit =
-      if (coordAqeOff) s.conf.set("spark.sql.adaptive.enabled", aqeWas)
     // the walk body, wrapped so a failing phase cannot leave the
     // metrics listener registered for the session's lifetime
     def walk(): DataFrame = {
-    if (coordAqeOff) s.conf.set("spark.sql.adaptive.enabled", "false")
-    // materialized once (lazily, by the seed-scoring job); every hop
-    // job rereads the Q-row checkpoint, not the corpus
-    val qv = e.filter(isQuery)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .truncated(false)
-    val edSel = edges.select(col("src"), col("dst"), col("dvec"),
-      (if (edges.columns.contains("bucket")) col("bucket")
-       else edgeBucketOf(col("src"))).as("bucket"))
-    val seeds = span("seed", "seed") { seededEntries(qv, routing) }
+    val (qvs, seeds) = span("seed", "seed") {
+      val qvs = queryVectors(e, isQuery)
+      (qvs, seededEntries(qvs, routing))
+    }
+    val qq: Map[Long, Array[Long]] =
+      qvs.map { case (q, v) => q -> quantized(v.map(_.toDouble)) }.toMap
     // driver-held search state — every structure bounded by
     // Q·(seeds + hops·beam·G) with seeds ≤ SrpTables·MaxBucket,
     // never corpus-proportional
     val visitedSc = collection.mutable.Map.empty[(Long, Long), Long]
-    val nodeBkt = collection.mutable.Map.empty[Long, Int]
     var beams = Map.empty[Long, Set[(Long, Long)]]
     // seed scoring: the one embeddings lookup of the serve path — an
     // id-pushdown point fetch (row-group pruned on a sorted table)
     // while the candidate list is small, a broadcast semi-join past
-    // the isin practicality bound. Every scored candidate counts
-    // toward visited_n (those reads were paid) and the initial beam
-    // is the top-B among them.
+    // the isin practicality bound — scored in its tasks. Every scored
+    // candidate counts toward visited_n (those reads were paid) and
+    // the initial beam is the top-B among them.
     val seedPairs = seeds.toSeq
       .flatMap { case (q2, vs) => vs.map(v => (q2, v)) }.distinct
     val seedIds = seedPairs.map(_._2).distinct
-    val spDf = seedPairs.toDF("qid", "vec_id")
     val eSeeds =
       if (seedIds.size <= 1000) e.filter(col("vec_id").isin(seedIds: _*))
-      else e.join(broadcast(spDf.select("vec_id").distinct()),
-        Seq("vec_id"), "left_semi")
+      else e.join(broadcast(seedIds.toDF("vec_id")), Seq("vec_id"), "left_semi")
+    val seedQids = seedPairs.groupBy(_._2).map { case (v, ps) => v -> ps.map(_._1).toArray }
     val pool = collection.mutable.Map.empty[Long, List[(Long, Long)]]
-    for (r <- span("seed_score", "seed_score") { spDf
-        .join(eSeeds, "vec_id")
-        .join(broadcast(qv), "qid")
-        .select(col("qid"), col("vec_id"),
-          intDot(col("embedding"), col("qv")).as("sc"),
-          edgeBucketOf(col("vec_id")).cast("int").as("ebkt"))
-        .collect() }) {
-      val (qid, vid, sc, bkt) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))
+    if (seedPairs.nonEmpty) for ((qid, vid, sc) <- span("seed_score", "seed_score") {
+        eSeeds.select(col("vec_id"), col("vec_id"),
+            col("embedding").cast("array<double>"))
+          .queryExecution.toRdd
+          .mapPartitions(it => scoreTask(seedQids, qq, None)(it).iterator)
+          .collect() }) {
       visitedSc((qid, vid)) = sc
-      nodeBkt(vid) = bkt
       pool(qid) = (vid, sc) :: pool.getOrElse(qid, Nil)
     }
     beams = pool.toMap.map { case (q2, xs) =>
@@ -3176,6 +3279,17 @@ object Graph {
     }
     var active = beams.keySet
     var hopsOf = Map.empty[Long, Long]
+    // the stored edge scan, planned once for the whole walk; a frame
+    // without a `bucket` column gets the src hash computed in-plan
+    val bucket = edges.schema.find(_.name == "bucket") match {
+      case Some(f) if f.dataType == IntegerType => col("bucket")
+      case Some(_) => col("bucket").cast("int").as("bucket")
+      case None => edgeBucketOf(col("src")).as("bucket")
+    }
+    lazy val edSel = edges.select(col("src"), col("dst"),
+      col("dvec").cast("array<double>"), bucket)
+    lazy val edgeRows = edSel.queryExecution.toRdd
+    lazy val layout = partitionBuckets(edSel, edgeRows)
     // per-query set of srcs whose out-edges were already expanded: a
     // node's expansion never changes, and a candidate dropped from the
     // pool can never re-qualify (the beam's (score, id) cutoff is
@@ -3198,26 +3312,23 @@ object Graph {
         (beams(q).map(_._1) -- expanded(q)).map(srcId => (q, srcId))
       }
       for ((q2, srcId) <- pairs) expanded(q2) = expanded(q2) + srcId
-      val bkts = pairs.map(p => nodeBkt(p._2)).distinct
+      val bkts = pairs.map(p => edgeBucketOfId(p._2)).toSet
+      val frontier = pairs.groupBy(_._2).map { case (src, ps) => src -> ps.map(_._1).toArray }
+      val qActive = qq.filter { case (q, _) => active(q) }
       // the hop job: partition-pruned expand + score, one pass
-      val scored = span(s"hop$k", "hops") { pairs.toDF("qid", "src")
-        .join(edSel.filter(col("bucket").isin(bkts.map(Integer.valueOf): _*)),
-          "src")
-        .join(broadcast(qv), "qid")
-        .select(col("qid"), col("src"), col("dst"),
-          intDot(col("dvec"), col("qv")).as("sc"),
-          edgeBucketOf(col("dst")).cast("int").as("ebkt"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getInt(4))) }
+      val scored = span(s"hop$k", "hops") {
+        val parts: Seq[Int] = layout.fold[Seq[Int]](edgeRows.partitions.indices) { l =>
+          l.indices.filter(i => l(i).exists(bkts))
+        }
+        s.sparkContext.runJob(edgeRows,
+          scoreTask(frontier, qActive, Some(bkts)), parts).flatten
+      }
       val byQid = scored.groupBy(_._1)
       val stillActive = collection.mutable.Set.empty[Long]
       for (qid <- active) {
         val hop = byQid.getOrElse(qid, Array.empty)
-        for ((_, _, dst, sc, bkt) <- hop) {
-          visitedSc((qid, dst)) = sc
-          nodeBkt(dst) = bkt
-        }
-        val pool = beams(qid) ++ hop.map { case (_, _, dst, sc, _) => (dst, sc) }
+        for ((_, dst, sc) <- hop) visitedSc((qid, dst)) = sc
+        val pool = beams(qid) ++ hop.map { case (_, dst, sc) => (dst, sc) }
         val next = pool.toSeq.sortBy { case (vid, sc) => (-sc, vid) }
           .take(beam).toSet
         // Exit criterion. Default: the FULL beam survived the round
@@ -3242,72 +3353,61 @@ object Graph {
       active = stillActive.toSet
     }
     hopsOf ++= active.map(_ -> hops.toLong)
-    coordConfRestore() // the coordinator loop is done; served plan + final collect keep AQE
     if (timed) {
       phaseWalls("hops") =
         phaseWalls.collect { case (key, w) if key.startsWith("hop") => w }.sum
       phaseWalls("hops_rounds") = k.toDouble
     }
-    // final selection in-plan over the attested visited score set
-    val visDf = visitedSc.toSeq.map { case ((qid, vid), sc) => (qid, vid, sc) }
-      .sorted.toDF("qid", "vec_id", "sc")
-    val audit = visDf.groupBy("qid").agg(count(lit(1)).as("visited_n"))
-    val hopsDf = hopsOf.toSeq.sorted.toDF("qid", "hops_n")
-    // a predicate (g9) constrains the RESULT, not the walk: traversal
-    // is predicate-agnostic (connectivity must not depend on the
-    // filter), so the attestations — what the walk touched — are
+    // final selection on the driver over the attested visited score
+    // set. A predicate (g9) constrains the RESULT, not the walk:
+    // traversal is predicate-agnostic (connectivity must not depend on
+    // the filter), so the attestations — what the walk touched — are
     // computed over the full visited set. The predicate is evaluated
-    // by an id-pushdown point fetch over the VISITED ids only (driver-
-    // known, ≤ Q·(seeds+hops·beam·G)) — the seed-fetch discipline, never a
+    // by an id-pushdown point fetch over the VISITED ids only (≤
+    // Q·(seeds+hops·beam·G)) — the seed-fetch discipline, never a
     // corpus-wide label scan on the serve path.
-    val keep = allowed.fold(visDf) { pred =>
-      val ids = visitedSc.keys.map(_._2).toSeq.distinct.sorted
-      // the seed-fetch discipline: isin (row-group-pruning pushdown on
-      // the sorted table) while the visited set is small; past the
-      // practicality bound a broadcast semi — a batch caller's visited
-      // set is Q·(seeds+hops·beam·G) ids, far too many In literals
-      val ok =
-        if (ids.size <= 1000)
-          e.filter(col("vec_id").isin(ids: _*) && pred).select("vec_id")
-        else e.join(broadcast(ids.toDF("vec_id")), Seq("vec_id"), "left_semi")
-          .filter(pred).select("vec_id")
-      visDf.join(ok, Seq("vec_id"), "left_semi")
+    val rows = span("final", "final") {
+      val keep: Long => Boolean = allowed.fold((_: Long) => true) { pred =>
+        val ids = visitedSc.keys.map(_._2).toSeq.distinct.sorted
+        // isin (row-group-pruning pushdown on the sorted table) while
+        // the visited set is small; past the practicality bound a
+        // broadcast semi — a batch caller's visited set is
+        // Q·(seeds+hops·beam·G) ids, far too many In literals
+        val ok =
+          if (ids.size <= 1000) e.filter(col("vec_id").isin(ids: _*) && pred)
+          else e.join(broadcast(ids.toDF("vec_id")), Seq("vec_id"), "left_semi")
+            .filter(pred)
+        ok.select("vec_id").collect().map(_.getLong(0)).toSet
+      }
+      visitedSc.toSeq.groupBy(_._1._1).toSeq.sortBy(_._1).flatMap { case (qid, vis) =>
+        vis.collect { case ((_, vid), sc) if keep(vid) => (vid, sc) }
+          .sortBy { case (vid, sc) => (-sc, vid) }.take(GannTopK)
+          .zipWithIndex.map { case ((vid, sc), i) =>
+            Row(qid, vid, sc, (i + 1).toLong, vis.size.toLong, hopsOf(qid))
+          }
+      }
     }
-    val served = keep.withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("sc").desc, col("vec_id").asc)))
-      .filter(col("rk") <= GannTopK)
-      .join(audit, "qid")
-      .join(broadcast(hopsDf), "qid")
-      .select(col("qid"), col("vec_id"), col("sc"),
-        col("rk").cast("long").as("rk"), col("visited_n"), col("hops_n"))
-    if (!timed) served
-    else {
-      // r20 (r19 VERDICT what's-missing #3): under timing, EXECUTE the
-      // final top-K + attestation + hydration here, under its own job
-      // group, so the 40-45% of g-serve wall that was only ever a
-      // RESIDUAL (query wall − seed − seed_score − hops) becomes a
-      // measured `final` span with `final_job`/`final_task` splits. The
-      // result is ≤ Q·GannTopK rows — the v19 legFramesTimed pattern:
-      // materialize inside the span, hand back a literal frame with the
-      // identical schema and values (the caller's action then touches
-      // only local rows, so the query's total work is unchanged — it
-      // moved inside the instrumented section).
-      val rows = span("final", "final") { served.collect() }
-      phaseMetrics.foreach { m =>
-        for ((nm, (job, task)) <- m.finishAndDetach()) {
-          phaseWalls(nm + "_job") = job
-          phaseWalls(nm + "_task") = task
-        }
+    phaseMetrics.foreach { m =>
+      val split = m.finishAndDetach()
+      for (g <- Seq("seed", "seed_score", "hops", "final")) {
+        val (job, task) = split.getOrElse(g, (0.0, 0.0))
+        phaseWalls(g + "_job") = job
+        phaseWalls(g + "_task") = task
       }
       lastGServeTimings = phaseWalls.toMap
-      graft.core.Util.literalFrame(s, rows, served.schema)
     }
+    graft.core.Util.literalFrame(s, rows.toArray, GannSchema)
     }
     try walk()
     catch { case t: Throwable =>
       phaseMetrics.foreach(_.finishAndDetach(0)); throw t
-    } finally coordConfRestore()
+    }
   }
+
+  /** [[graphAnnBatchOn]]'s result schema. */
+  private val GannSchema = StructType(
+    Seq("qid", "vec_id", "sc", "rk", "visited_n", "hops_n")
+      .map(StructField(_, LongType, nullable = false)))
 
   /** G8: batch graph-ANN — [[GannBatchQ]] queries, one shared-hop
     * beam-search loop over the stored graph (each hop's single

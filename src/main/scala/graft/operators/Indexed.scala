@@ -711,15 +711,12 @@ object Indexed {
   // ---------------------------------------------------------- serving
 
   /** Query-to-pivot distances through the same Catalyst kernel the
-    * index build used (a 1-row projection — the proven bit-identical
-    * path vs the DuckDB qp CTE).
+    * index build used, evaluated on the driver ([[Knn.qPivotDists]] —
+    * bit-identical to the DuckDB qp CTE).
     */
   private def queryDists(s: SparkSession, d: String,
-      pivots: Seq[org.apache.spark.sql.Column], qid: Int = Knn.QueryId): Seq[Double] = {
-    val q = Knn.embeddingLit(s, d, qid)
-    val one = embeddings(s, d).limit(1).select(pivots.map(p => euclidean(p, q)): _*).head()
-    pivots.indices.map(one.getDouble)
-  }
+      pivots: Seq[org.apache.spark.sql.Column], qid: Int = Knn.QueryId): Seq[Double] =
+    Knn.qPivotDists(pivots, Knn.embeddingLit(s, d, qid))
 
   /** V9: pivot-range kNN served from the materialized index. The scan
     * touches only the `nprobe` probed cluster directories (partition

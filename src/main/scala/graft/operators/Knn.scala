@@ -19,12 +19,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    final merge — this is the shape that survives 100 TB.
   *  - [[indexRangeKnn]] — the reference's pivot-distance range scan
   *    (`src/search.ts:19-54`): five range predicates around the query's
-  *    own pivot distances, union, dedup by id, exact re-rank, top k.
-  *    Against a materialized vectors table (see
-  *    [[graft.index.IndexBuild]]) the five `dist_i` predicates push down
-  *    to parquet min/max stats, so each branch prunes row groups instead
-  *    of full-scanning — the columnar analogue of the reference's five
-  *    IndexedDB B-tree cursor scans.
+  *    own pivot distances, OR-ed into one scan, dedup by id, exact
+  *    re-rank, top k. Against a materialized vectors table (see
+  *    [[graft.index.IndexBuild]]) the `dist_i` predicates push down to
+  *    parquet min/max stats, so the scan prunes row groups instead of
+  *    full-scanning — the columnar analogue of the reference's five
+  *    IndexedDB B-tree cursor scans, read once.
   *  - [[ivfKnn]] — IVF-style bucketed ANN (the scale path beyond the
   *    reference): every vector is assigned to its nearest pivot
   *    (= coarse centroid); a query probes only the `nprobe` nearest
@@ -84,27 +84,26 @@ object Knn {
   def fullScanKnn(s: SparkSession, d: String, q: Column, k: Int): DataFrame =
     fullScanKnnOn(embeddings(s, d), "vec_id", "embedding", q, k)
 
-  /** Query-to-pivot distances evaluated once, through the same Catalyst
-    * kernel every other distance uses (a 1-row projection).
+  /** Query-to-pivot distances, evaluated once on the driver by the
+    * same Catalyst kernel every scan uses ([[euclideanOfLiterals]]).
     */
-  private def qPivotDists(v: DataFrame, piv: Seq[Column], q: Column): Seq[Double] = {
-    val one = v.limit(1).select(piv.map(p => euclidean(p, q)): _*).head()
-    piv.indices.map(one.getDouble)
-  }
+  private[graft] def qPivotDists(piv: Seq[Column], q: Column): Seq[Double] =
+    piv.map(euclideanOfLiterals(_, q))
 
   /** Pivot-range kNN over any (id, embedding) DataFrame
     * (`vectorSearchIndexRange`, `src/search.ts:19-54`).
     */
   def indexRangeKnnOn(v: DataFrame, idCol: String, embCol: String, q: Column,
       pivots: Seq[Column], k: Int, eps: Double): DataFrame = {
-    val qDists = qPivotDists(v, pivots, q)
-    val branches = pivots.indices.map { i =>
-      val lo = qDists(i) * (1 - eps)
-      val hi = qDists(i) * (1 + eps)
+    val qDists = qPivotDists(pivots, q)
+    // one scan keeping a row inside ANY pivot's band — the same id set
+    // as a union of the per-pivot range scans, without re-reading the
+    // table once per pivot
+    val inAnyBand = pivots.indices.map { i =>
       val di = euclidean(col(embCol), pivots(i))
-      v.filter(di > lo && di < hi).select(idCol, embCol)
-    }
-    branches.reduce(_ union _)
+      di > qDists(i) * (1 - eps) && di < qDists(i) * (1 + eps)
+    }.reduce(_ || _)
+    v.filter(inAnyBand).select(idCol, embCol)
       .dropDuplicates(idCol)
       .withColumn("dist", euclidean(col(embCol), q))
       .orderBy(col("dist").asc, col(idCol).asc)
@@ -112,8 +111,9 @@ object Knn {
       .select(idCol, "dist")
   }
 
-  /** Pivot-range kNN: five parallel range scans around the query's own
-    * pivot distances → union → dedup → exact re-rank → top k.
+  /** Pivot-range kNN: one scan keeping the rows inside any of the five
+    * bands around the query's own pivot distances → dedup → exact
+    * re-rank → top k.
     */
   def indexRangeKnn(s: SparkSession, d: String, q: Column, k: Int, eps: Double): DataFrame =
     indexRangeKnnOn(embeddings(s, d), "vec_id", "embedding", q, pivotLits(s, d), k, eps)
@@ -135,7 +135,7 @@ object Knn {
     */
   def indexSimilarityKnnOn(v: DataFrame, idCol: String, embCol: String,
       q: Column, pivots: Seq[Column], k: Int, perSide: Int): DataFrame = {
-    val qDists = qPivotDists(v, pivots, q)
+    val qDists = qPivotDists(pivots, q)
     val branches = pivots.indices.flatMap { i =>
       val di = euclidean(col(embCol), pivots(i))
       val below = v.withColumn("di", di).filter(col("di") <= qDists(i))
@@ -163,10 +163,7 @@ object Knn {
     val distArr = array(distCols: _*)
     // first index of the minimal distance = cluster id (ties → lowest id)
     val cluster = (array_position(distArr, array_min(distArr)) - 1).cast("int")
-    val qDists: Seq[Double] = {
-      val one = v.limit(1).select(piv.map(p => euclidean(p, q)): _*).head()
-      piv.indices.map(one.getDouble)
-    }
+    val qDists = qPivotDists(piv, q)
     val probes = qDists.zipWithIndex.sortBy { case (dist, pid) => (dist, pid) }
       .take(nprobe).map(_._2)
     v.withColumn("cluster", cluster)

@@ -2,17 +2,22 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Column <-> Expression bridge.
   *
   * Spark 4 moved Column onto ColumnNode and made the Expression
   * conversions `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`).
-  * This one-file shim re-exports exactly those two conversions to our
+  * This one-file shim re-exports exactly those conversions to our
   * engine — the standard pattern for libraries that ship custom Catalyst
   * expressions against Spark 4.x.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** The expression converted now rather than at analysis (where
+    * [[expression]] defers it): for literal columns evaluated on the
+    * driver, outside any plan.
+    */
+  def convertedExpression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }

@@ -130,4 +130,20 @@ class GraftDbSpec extends SparkSuite {
       selector = sel).select("id").collect().map(_.getLong(0))
     assert(simil.nonEmpty && simil.forall(allowed))
   }
+
+  test("a selector matching no document: every vector strategy returns an empty result") {
+    import org.apache.spark.sql.functions._
+    val db = GraftDb(spark, tmpDir("graftdb-vecnone"))
+    val vectors = db.collection("vectors")
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    vectors.bulkInsert(emb.select(col("vec_id").as("id"), col("embedding"), col("label")))
+    val q = emb.filter(col("vec_id") === 7).select("embedding").head().getSeq[Float](0)
+    val pivots = graft.index.IndexBuild.pivotsFromIds(emb, "vec_id", Seq(0, 1, 2, 3, 4))
+    val none = Map[String, Any]("label" -> Map("$in" -> Seq(-1)))
+    assert(vectors.vectorSearchFullScan(q, k = 10, selector = none).count() === 0)
+    assert(vectors.vectorSearchIndexRange(q, pivots, eps = 0.5, k = 10,
+      selector = none).count() === 0)
+    assert(vectors.vectorSearchIndexSimilarity(q, pivots, perSide = 100, k = 10,
+      selector = none).count() === 0)
+  }
 }

@@ -1104,6 +1104,67 @@ class GraphIndexSpec extends SparkSuite {
     }
   }
 
+  test("g8 batch walk: one job per executed hop round, none for the final selection, the session's AQE setting never written") {
+    val d = sf0001
+    Graph.ensureKnnGraph(spark, d)
+    val e = graft.core.Tables.embeddings(spark, d)
+    val edges = Graph.storedEdgesPartitioned(spark, d)
+    val routing = Graph.storedBuckets(spark, d)
+    // (job group, spark.sql.adaptive.enabled) per job: SQL jobs carry the
+    // session's explicitly-set spark.* confs as job properties, so a walk
+    // that flipped AQE would start some of them with "false"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          jobs.add((p.getProperty("spark.jobGroup.id", ""),
+            p.getProperty("spark.sql.adaptive.enabled", "")))
+          ()
+        }
+    }
+    // the jobs of one timed walk, with its phase map
+    def walk(allowed: Option[org.apache.spark.sql.Column]) = {
+      Thread.sleep(500)
+      jobs.clear()
+      Graph.graphAnnBatchOn(e, edges, routing, col("vec_id") < Graph.GannBatchQ,
+        allowed = allowed)
+      // listener delivery is async; the walk's own jobs are done here
+      Thread.sleep(1000)
+      (jobs.toArray.toSeq.map(_.asInstanceOf[(String, String)])
+        .filter(_._1.startsWith("gserve:")), Graph.lastGServeTimings)
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("graft.gserve.timings", "true")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (g8, m) = walk(None)
+      val rounds = m("hops_rounds").toInt
+      val hopJobs = g8.count(_._1.endsWith(":hops"))
+      val finalJobs = g8.count(_._1.endsWith(":final"))
+      assert(rounds >= 2, s"the fixture walk should take several rounds, took $rounds")
+      assert(hopJobs === rounds, s"$hopJobs hop jobs for $rounds executed rounds")
+      assert(finalJobs === 0 && m("final_job") === 0.0,
+        s"the final selection ran $finalJobs jobs")
+      // the g11 form adds the predicate's point fetch, a SQL job
+      val (g11, _) = walk(Some(col("label").isin(graft.operators.Indexed.FilterLabels: _*)))
+      val aqe = (g8 ++ g11).map(_._2).filter(_.nonEmpty)
+      assert(aqe.nonEmpty && aqe.forall(_ == "true"),
+        s"walk SQL jobs saw spark.sql.adaptive.enabled = ${aqe.distinct}")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("graft.gserve.timings", "false")
+    }
+  }
+
+  test("stored edges and routing tables are read with the schemas a build writes") {
+    val dir = Graph.ensureKnnGraph(spark, sf0001)
+    def types(t: org.apache.spark.sql.types.StructType) =
+      t.fields.map(f => f.name -> f.dataType.catalogString).toSeq
+    assert(types(spark.read.parquet(s"$dir/edges").schema) === types(Graph.EdgesSchema))
+    assert(types(spark.read.parquet(s"$dir/buckets").schema) === types(Graph.BucketsSchema))
+  }
+
   test("census budget guards fire BEFORE any driver collect: a zero adjacency budget declines with its witness, no incident materialization") {
     val (d, heldOut) = splitDataset()
     val base = graft.core.Tables.embeddings(spark, d)

@@ -24,6 +24,40 @@ class GraphSpec extends SparkSuite {
     assert(got === exp)
   }
 
+  test("intDot's Scala twin ≡ the Catalyst intDot, and edgeBucketOfId ≡ edgeBucketOf (property)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // exact multiples of 1/QuantScale and their float neighbours sit on
+    // the edge of a quantization step, where floor jumps; both signs
+    val step: Gen[Float] = for {
+      k <- Gen.choose(-3000, 3000)
+      nudge <- Gen.oneOf(0, 1, -1)
+    } yield {
+      val x = k.toFloat / Graph.QuantScale
+      if (nudge > 0) Math.nextUp(x) else if (nudge < 0) Math.nextDown(x) else x
+    }
+    val elem: Gen[Float] = Gen.frequency(
+      2 -> step, 1 -> Gen.choose(-2.0f, 2.0f), 1 -> Gen.oneOf(0.0f, -0.0f, 0.1f, -0.1f))
+    val pair: Gen[(Array[Float], Array[Float])] = for {
+      n <- Gen.choose(0, 70)
+      a <- Gen.listOfN(n, elem)
+      b <- Gen.listOfN(n, elem)
+    } yield (a.toArray, b.toArray)
+    val pairs = Gen.listOfN(300, pair).apply(Gen.Parameters.default, Seed(20261019L))
+      .getOrElse(fail("generator exhausted"))
+    val catalyst = pairs.toDF("a", "b")
+      .select(Graph.intDot(col("a"), col("b"))).collect().map(_.getLong(0)).toSeq
+    val twin = pairs.map { case (a, b) =>
+      Graph.intDotQ(Graph.quantized(a.map(_.toDouble)), b.map(_.toDouble)) }
+    assert(twin === catalyst)
+    val ids = Gen.listOfN(500, Gen.oneOf(Gen.choose(-1000L, 100000L),
+        Gen.choose(Long.MinValue, Long.MaxValue)))
+      .apply(Gen.Parameters.default, Seed(7L)).getOrElse(fail("generator exhausted"))
+    val hashed = ids.toDF("id").select(Graph.edgeBucketOf(col("id")))
+      .collect().map(_.getInt(0)).toSeq
+    assert(ids.map(Graph.edgeBucketOfId) === hashed)
+  }
+
   test("knnGraphEdges: bounded out-degree, dense ranks, descending weights, no self-loops") {
     val edges = Graph.knnGraphEdgesOn(
         graft.core.Tables.embeddings(spark, sf0001))
@@ -283,9 +317,7 @@ class GraphSpec extends SparkSuite {
       val adj: Map[Long, Seq[Long]] = edges.select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-      val seeds = Graph.seededEntries(
-        e.filter(isQ).select(col("vec_id").as("qid"), col("embedding").as("qv")),
-        routing)
+      val seeds = Graph.seededEntries(Graph.queryVectors(e, isQ), routing)
       def topB(pool: Iterable[(Long, Long)], b: Int): Set[(Long, Long)] =
         pool.toSeq.distinct.sortBy { case (vid, sc) => (-sc, vid) }
           .take(b).toSet
@@ -525,8 +557,7 @@ class GraphSpec extends SparkSuite {
       s"tie-broken out-edges must be the lowest family ids, got $dstsOfMin")
     // seeding: a family query's over-cap buckets contribute their
     // lowest-id representatives, bounded per bucket by MaxBucket
-    val qv = e.filter(col("vec_id") === 100L)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val qv = Graph.queryVectors(e, col("vec_id") === 100L)
     val routing = e.select(col("vec_id"),
       posexplode(graft.functions.SrpKernel.srpBuckets(
         col("embedding"), Dedup.SrpProj)).as(Seq("tbl", "bkt")))

@@ -83,4 +83,49 @@ class KnnSpec extends SparkSuite {
     // it should be near-exhaustive in recall on this fixture
     assert(meanRecall >= 0.8)
   }
+
+  test("pivot range as one OR-filtered scan ≡ the union of per-pivot range scans (property, with ties)") {
+    import graft.functions.VectorFunctions.euclidean
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // the pre-rewrite form: one filtered scan per pivot, union, dedup
+    def unionForm(v: DataFrame, q: Column, pivots: Seq[Column], k: Int,
+        eps: Double): DataFrame = {
+      val qd = pivots.map(p => v.limit(1).select(euclidean(p, q)).head().getDouble(0))
+      pivots.indices.map { i =>
+        val di = euclidean(col("embedding"), pivots(i))
+        v.filter(di > qd(i) * (1 - eps) && di < qd(i) * (1 + eps)).select("id", "embedding")
+      }.reduce(_ union _)
+        .dropDuplicates("id")
+        .withColumn("dist", euclidean(col("embedding"), q))
+        .orderBy(col("dist").asc, col("id").asc)
+        .limit(k)
+        .select("id", "dist")
+    }
+    // small integer coordinates: many vectors share a distance to the
+    // query and to each pivot, and some are exact duplicates
+    val genVec: Gen[Seq[Float]] = Gen.listOfN(4, Gen.choose(-2, 2).map(_.toFloat))
+    for (seed <- Seq(3L, 17L, 20261019L)) {
+      val (vecs, pivs, q, eps) = (for {
+        n <- Gen.choose(20, 60)
+        vs <- Gen.listOfN(n, genVec)
+        ps <- Gen.listOfN(5, genVec)
+        qv <- Gen.oneOf(genVec, Gen.oneOf(vs))
+        e <- Gen.oneOf(0.0, 0.05, 0.3, 1.0)
+      } yield (vs, ps, qv, e)).apply(Gen.Parameters.default, Seed(seed))
+        .getOrElse(fail(s"generator exhausted at seed $seed"))
+      val v = vecs.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF("id", "embedding")
+      val pivots = pivs.map(typedlit(_))
+      for (k <- Seq(3, vecs.size)) {
+        def rows(df: DataFrame) =
+          df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val got = rows(Knn.indexRangeKnnOn(v, "id", "embedding", typedlit(q), pivots, k, eps))
+        val want = rows(unionForm(v, typedlit(q), pivots, k, eps))
+        assert(got === want, s"seed $seed, k $k, eps $eps")
+      }
+    }
+  }
 }
+

@@ -47,4 +47,15 @@ class SrpKernelSpec extends SparkSuite {
     assert(out(1L).forall(_ === 0L))
     assert(out(3L).size === Dedup.SrpTables)
   }
+
+  test("driver-side bucketsOf == the SrpBuckets kernel over the corpus") {
+    val rows = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("embedding"),
+        SrpKernel.srpBuckets(col("embedding"), Dedup.SrpProj))
+      .collect()
+    for (r <- rows)
+      assert(SrpKernel.bucketsOf(r.getSeq[Float](0).toArray, Dedup.SrpProj).toSeq ===
+        r.getSeq[Long](1))
+  }
 }
+

@@ -38,4 +38,32 @@ class UtilSpec extends SparkSuite {
     assert(pruned < full, "partition pruning must cut scanned rows")
     assert(pruned === spark.read.parquet(dir).filter(col("l_returnflag") === "R").count())
   }
+
+  test("readParquet: a re-read of unchanged files states the inferred schema without a job; a changed listing re-infers") {
+    import spark.implicits._
+    val dir = tmpDir("readpq") + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.partitionBy("v").parquet(dir)
+    val first = Util.readParquet(spark, dir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val t0 = System.currentTimeMillis()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.time >= t0) { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val again = try Util.readParquet(spark, dir) finally {
+      Thread.sleep(500)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs.get() === 0, "the re-read inferred its schema again")
+    assert(again.schema === first.schema && again.schema === spark.read.parquet(dir).schema)
+    assert(again.orderBy("id").collect().toSeq === first.orderBy("id").collect().toSeq)
+    // an append with a new column changes the listing: the new column shows
+    Seq((3L, "a", 1.5)).toDF("id", "v", "x").write.mode("append").partitionBy("v").parquet(dir)
+    assert(Util.readParquet(spark, dir).schema === spark.read.parquet(dir).schema)
+    for (t <- graft.core.Tables.all)
+      assert(Util.readParquet(spark, s"$sf0001/$t.parquet").schema ===
+        spark.read.parquet(s"$sf0001/$t.parquet").schema, t)
+  }
 }
+
