@@ -158,21 +158,10 @@ object Corpus {
     * (non-convergence) leaves the previous call's witness in place.
     * Diagnostic for specs/probes only — results are path-independent.
     */
-  final case class CcWitness(mode: String, contractLevels: Int,
-      edges: Long = -1L)
+  final case class CcWitness(mode: String, contractLevels: Int)
   @volatile private[graft] var lastCcWitness: CcWitness = CcWitness("", 0)
   private[graft] def lastCcMode: String = lastCcWitness.mode
   private[graft] def lastCcContractLevels: Int = lastCcWitness.contractLevels
-
-  /** How many fused `take(budget+1)` admission probes came back OVER
-    * budget — i.e. paid a budget-sized driver collect only to learn
-    * "no" (r17 VERDICT: on a permanently-over-budget graph the stats
-    * refresh paid this per loop per refresh). The stored-count
-    * pre-check exists to keep this flat in the steady state; the
-    * counter makes that spec-assertable across every admission site
-    * (CC here, rank/census/peel in [[graft.operators.Graph]]).
-    */
-  private[graft] val declinedProbes = new java.util.concurrent.atomic.AtomicLong
 
   /** In-driver union-find over a collected canonical edge list.
     * Union-by-min keeps every root the component MINIMUM, so the
@@ -304,10 +293,9 @@ object Corpus {
     // is "the most recent CC call of either algorithm", and this
     // variant never contracts
     if (probe.length <= budget) {
-      lastCcWitness = CcWitness("driver", 0, probe.length.toLong)
+      lastCcWitness = CcWitness("driver", 0)
       return driverUnionFind(pairs.sparkSession, probe)
     }
-    declinedProbes.incrementAndGet()
     // LOCAL-CHECKPOINT, not persist: each round's labels plan embeds the
     // previous round's, so with a mere persist the LOGICAL plan (which
     // the cache does not truncate) grows per round and every lblSum
@@ -367,7 +355,7 @@ object Corpus {
     require(converged,
       s"connected components did not converge within $MaxCcIters rounds " +
         "— pair-graph diameter exceeds the cap; raise MaxCcIters")
-    lastCcWitness = CcWitness("distributed", 0, rawCount / 2)
+    lastCcWitness = CcWitness("distributed", 0)
     labels.select(col("doc_id"), col("lbl").as("cluster"))
   }
 
@@ -438,20 +426,7 @@ object Corpus {
     * "driver_contracted"`) and only a genuinely node-rich graph pays
     * star rounds, on the contracted forest instead of the raw pairs.
     */
-  /** `edgeFloor`: a caller-supplied LOWER BOUND on the deduped
-    * canonical edge count (e.g. an artifact's stored count — edge
-    * sets are append-only within a build lineage, so a previously
-    * observed count never overstates the live one). When the floor
-    * already exceeds the budget the fused admission probe is SKIPPED
-    * entirely — the steady-state decline on a permanently-over-budget
-    * graph costs zero driver collects (r17 VERDICT) — and the
-    * distributed path runs as if the probe had declined. A floor at
-    * or under the budget says "maybe": the fused take stays the
-    * authoritative gate. Both paths are exact, so even a wrong floor
-    * can only cost speed, never correctness.
-    */
-  def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
-      edgeFloor: Option[Long] = None): DataFrame = {
+  def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     // edge-count-derived round partitioning — same two-regime sizing
     // as connectedComponents (see loopPartsFor)
     val raw = pairs
@@ -464,14 +439,10 @@ object Corpus {
     // union-find — identical min-label assignment, none of the star
     // rounds' per-round shuffle floor
     val budget = driverEdgeBudget(pairs.sparkSession)
-    val floored = edgeFloor.exists(_ > budget)
-    if (!floored) {
-      val probe = raw.take(budget + 1)
-      if (probe.length <= budget) {
-        lastCcWitness = CcWitness("driver", 0, probe.length.toLong)
-        return driverUnionFind(pairs.sparkSession, probe)
-      }
-      declinedProbes.incrementAndGet()
+    val probe = raw.take(budget + 1)
+    if (probe.length <= budget) {
+      lastCcWitness = CcWitness("driver", 0)
+      return driverUnionFind(pairs.sparkSession, probe)
     }
     val s = pairs.sparkSession
     val par = s.sparkContext.defaultParallelism
@@ -504,7 +475,7 @@ object Corpus {
           .truncated(true)
         val nextCount = next.count()
         if (budget >= 0 && nextCount <= budget) {
-          lastCcWitness = CcWitness("driver_contracted", levels + 1, rawCount)
+          lastCcWitness = CcWitness("driver_contracted", levels + 1)
           return driverUnionFind(s, next.collect())
         }
         // >= so the empty graph and the already-a-forest graph (next
@@ -579,7 +550,7 @@ object Corpus {
     }
     require(converged,
       s"star connected components did not converge within $MaxStarIters rounds")
-    lastCcWitness = CcWitness("distributed", levels, rawCount)
+    lastCcWitness = CcWitness("distributed", levels)
     // at the fixpoint the edge set IS the component assignment: every
     // non-root points straight at its component minimum (checkpointed
     // RDDs of dropped rounds are reclaimed by the ContextCleaner)

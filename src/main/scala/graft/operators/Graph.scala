@@ -297,7 +297,7 @@ object Graph {
     * oracles unroll the separate formulations and still hash-match).
     */
   def rankTablesOn(nodes: DataFrame, edges: DataFrame,
-      isSeed: Column, edgeFloor: Option[Long] = None): (DataFrame, DataFrame) = {
+      isSeed: Column): (DataFrame, DataFrame) = {
     val s = nodes.sparkSession
     // budgeted driver fast path (the CC loops' admission discipline,
     // [[Corpus.driverEdgeBudget]]): the rank ROUNDS only move mass
@@ -312,17 +312,10 @@ object Graph {
     // as the independent formulations the specs cross-validate
     // against; the g2/g6 oracles unroll the same arithmetic.
     val budget = Corpus.driverEdgeBudget(s)
-    // stored-count pre-check (r17 VERDICT): the probed DIRECTED edge
-    // count is never below the deduped undirected count an artifact
-    // stores, so a floor over the budget skips the probe collect —
-    // the steady-state decline on an over-budget graph is free
-    if (!edgeFloor.exists(_ > budget)) {
-      val eprobe = edges.select(col("src"), col("dst")).take(budget + 1)
-      if (eprobe.length <= budget) {
-        lastRankMode = "driver"
-        return driverRankTables(s, nodes, isSeed, eprobe)
-      }
-      Corpus.declinedProbes.incrementAndGet()
+    val eprobe = edges.select(col("src"), col("dst")).take(budget + 1)
+    if (eprobe.length <= budget) {
+      lastRankMode = "driver"
+      return driverRankTables(s, nodes, isSeed, eprobe)
     }
     lastRankMode = "distributed"
     val ed = edges.select(col("src"), col("dst"))
@@ -482,8 +475,8 @@ object Graph {
   // lazy: CoreWmin is declared further down the object body — an
   // eager val here would read its pre-initialization 0 into the tag
   // "dv": the edge layout carrying the dst vector (serve-side score
-  // denormalization); "2": per-generation pair_delta logs + the .build
-  // lineage nonce — layout changes, so a new artifact dir
+  // denormalization); "2": the .build lineage nonce on every kNN-graph
+  // version
   private[graft] lazy val GraphTag =
     s"g${GraphTopG}q${QuantScale}w${CoreWmin}b${EdgeBuckets}s${Dedup.SrpTables}x${Dedup.SrpBits}dv2"
 
@@ -548,17 +541,14 @@ object Graph {
   /** BUILD LINEAGE of a stored-graph version: a nonce stamped by every
     * FULL (re)build ([[writeGraphTables]] — gen-0 build and the
     * cap-crossing rebuild), carried unchanged through appends and
-    * compaction. Generations alone cannot witness lineage: a vacuumed-
-    * and-rebuilt artifact restarts its generations, and subsequent
-    * appends can bring the generation back PAST a surviving stats
-    * version's stamp with delta logs covering the range — numbers from
-    * a different graph. The stats refresh records this id next to
-    * `GRAPH_GEN` and requires EQUALITY before replaying any delta log
-    * against carried state (census deg/triangles, cc assignments), so
-    * cross-lineage replay is structurally impossible, not just
-    * unlikely. Dotfile for the same reason as `.gen`: the append's
-    * hard-link carry-forward must not alias the previous version's
-    * inode.
+    * compaction. Generations alone cannot identify a graph: a
+    * vacuumed-and-rebuilt artifact restarts its generations, and
+    * subsequent appends bring the generation back to a surviving
+    * stats version's stamp — numbers from a different graph. The stats
+    * artifact records this id next to `GRAPH_GEN` and serves a version
+    * only while they are equal ([[ensureGraphStats]]). Dotfile for the
+    * same reason as `.gen`: the append's hard-link carry-forward must
+    * not alias the previous version's inode.
     */
   def graphBuildId(versionDir: String): String =
     readMetaString(versionDir, ".build")
@@ -649,8 +639,7 @@ object Graph {
     writeMetaLong(target, ".gen", gen)
     writeMetaLong(target, ".crossed", 0L)
     // fresh lineage: every full (re)build starts a new build identity —
-    // stats versions stamped under the old identity can never replay
-    // their carried state against this graph's delta logs
+    // stats versions stamped under the old identity never serve it
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(target, ".build"),
       java.util.UUID.randomUUID().toString)
@@ -750,35 +739,11 @@ object Graph {
   private def graphFileCount(versionDir: String): Int = {
     def cnt(f: java.io.File): Int =
       Option(f.listFiles()).getOrElse(Array.empty).map { c =>
-        // edge_delta/ and pair_delta/ are per-generation incremental-
-        // stats metadata (one tiny file per append), not data layout —
-        // compaction retains them, so counting them would ratchet the
-        // trigger into a compaction storm
-        if (c.isDirectory && c.getName != "edge_delta" &&
-            c.getName != "pair_delta") cnt(c)
+        if (c.isDirectory) cnt(c)
         else if (c.isFile && c.getName.endsWith(".parquet")) 1 else 0
       }.sum
     cnt(new java.io.File(versionDir))
   }
-
-  /** Generations of directed edge-delta logs retained through a
-    * compaction — bounds the artifact's metadata growth under a long
-    * append stream. A stats refresh whose gen range predates the
-    * retained window simply fails the coverage check and takes the
-    * full census path (conservative by construction).
-    */
-  private val DeltaLogKeep = 64
-
-  /** Sorted generation numbers of the version's delta logs under the
-    * named log directory (`edge_delta` for the census replay,
-    * `pair_delta` for the component-scoped analytics).
-    */
-  private def deltaLogGens(versionDir: String,
-      logDir: String = "edge_delta"): Seq[Long] =
-    Option(new java.io.File(s"$versionDir/$logDir").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("gen="))
-      .map(_.getName.stripPrefix("gen=").toLong).toSeq.sorted
 
   /** Delta-append new vectors into the stored graph — a publish
     * ([[graft.core.ArtifactStore.appendVersion]]: hard-link
@@ -932,22 +897,6 @@ object Graph {
               .filter(col("w") >= CoreWmin)
               .sortWithinPartitions(col("w").desc, col("id_a").asc)
               .write.mode(SaveMode.Append).parquet(s"$target/pairs")
-            // pair-delta log for this generation: exactly the pair rows
-            // this append contributed (pairs/ is append-only between
-            // full rebuilds, so additions ARE the whole delta). The
-            // stats refresh's component-scoped incremental path keys on
-            // these gen-ranged logs — the same coverage discipline as
-            // edge_delta — so it survives compaction, where the old
-            // pair-FILE-set identity forced a full recompute exactly
-            // when the graph was largest. Written ALWAYS (empty frame
-            // included): the log's existence is the coverage witness.
-            scored
-              .select(least(col("u"), col("v2")).as("id_a"),
-                greatest(col("u"), col("v2")).as("id_b"), col("w"))
-              .filter(col("w") >= CoreWmin)
-              .coalesce(1)
-              .write.mode("overwrite")
-              .parquet(s"$target/pair_delta/gen=${prevGen + 1}")
             newB.repartition(col("tbl")).sortWithinPartitions("tbl", "bkt", "vec_id")
               .write.mode(SaveMode.Append).parquet(s"$target/buckets")
             // bsizes: buckets-count sized — rewrite via staging now,
@@ -995,32 +944,6 @@ object Graph {
                 .select("src", "dst", "w", "rk", "dvec", "bucket")
                 .write.partitionBy("bucket").mode("overwrite")
                 .parquet(s"$target/edges_new")
-              // directed edge-delta log for this generation: the net
-              // per-(src,dst) change of the affected srcs' adjacency
-              // (+1 added, -1 removed; kept edges net to 0 and drop
-              // out). The stats census's incremental path replays these
-              // logs to maintain the triangle count without the full
-              // 3-way join — see [[writeGraphStatsTables]]. Written
-              // BEFORE the directory swaps (its lineage reads the
-              // pre-swap edge partitions), delta-sized by construction
-              // (affected srcs' old + new rows only).
-              oldPart.join(affected, Seq("src"))
-                .select(col("src"), col("dst")).withColumn("op", lit(-1))
-                .unionByName(rer.select(col("src"), col("dst"))
-                  .withColumn("op", lit(1)))
-                .groupBy("src", "dst").agg(sum("op").cast("int").as("op"))
-                .filter(col("op") =!= 0)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(s"$target/edge_delta/gen=${prevGen + 1}")
-            } else {
-              // no candidates landed (every bucket capped): the edge
-              // set is unchanged, but the generation's log must still
-              // exist for the census coverage check
-              s.range(0).select(col("id").as("src"), col("id").as("dst"),
-                  lit(1).as("op"))
-                .coalesce(1).write.mode("overwrite")
-                .parquet(s"$target/edge_delta/gen=${prevGen + 1}")
             }
             // every plan has executed — now the directory swaps (the
             // only destructive steps, and nothing reads after them)
@@ -1126,17 +1049,6 @@ object Graph {
           writeMetaLong(target, ".crossed", graphCrossedBuckets(cur))
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(target, ".build"), graphBuildId(cur))
-          // carry the newest DeltaLogKeep generations of BOTH delta-log
-          // families (hard links) so a compaction forces neither the
-          // census replay nor the component-scoped refresh back to the
-          // full path; older gens age out, bounding metadata growth
-          for (logDir <- Seq("edge_delta", "pair_delta");
-               g <- deltaLogGens(cur, logDir).takeRight(DeltaLogKeep)) {
-            val t = java.nio.file.Paths.get(s"$target/$logDir/gen=$g")
-            java.nio.file.Files.createDirectories(t)
-            graft.core.ArtifactStore.linkTree(
-              java.nio.file.Paths.get(s"$cur/$logDir/gen=$g"), t)
-          }
         }
       }
     }
@@ -1147,63 +1059,51 @@ object Graph {
   // ------------------------------------- stored analytics (graph_stats)
 
   /** Derived-analytics artifact over the stored graph: the PageRank,
-    * personalized-PageRank, k-core, and community-census TABLES
-    * materialized once per graph version and served by g2/g4/g5/g6 as
-    * plain sorted reads — the same argument that stored the graph
-    * itself: at 100 TB centrality/structure analytics are pipeline
-    * outputs consumed many times, not per-query fixpoint loops (each
-    * was ~2-6 s of pure loop scheduling per query at sf0.1 even on
-    * the stored edges).
+    * personalized-PageRank, triangle-census, k-core, and
+    * community-census TABLES materialized once per graph version and
+    * served by g2-g6 as plain sorted reads — the same argument that
+    * stored the graph itself: at 100 TB centrality/structure analytics
+    * are pipeline outputs consumed many times, not per-query fixpoint
+    * loops (each was ~2-6 s of pure loop scheduling per query at sf0.1
+    * even on the stored edges).
     *
-    * Freshness is keyed on the graph's CONTENT GENERATION
-    * ([[graphGen]]), not its version-dir name: the version dir records
-    * the generation it was computed from (`GRAPH_GEN`), an append's
-    * gen bump invalidates, and a COMPACTION — identical content, new
-    * dir — does not (the dir-name stamp thrashed a full six-table
-    * rebuild per compaction). `maxLagGen` is the STALENESS POLICY for
-    * continuous-ingest consumers: serve the stamped version while the
-    * live graph is at most that many content generations ahead,
-    * rebuild only past the budget — so a live
+    * A stats version is stamped with the graph it was computed from:
+    * the build lineage (`GRAPH_BUILD`, [[graphBuildId]]) and the
+    * content generation (`GRAPH_GEN`, [[graphGen]]). It serves while
+    * its lineage is the live graph's and its generation is at most
+    * `maxLagGen` behind the live one. An append's gen bump
+    * invalidates; a COMPACTION — identical content, new dir, same
+    * lineage and generation — does not. A full rebuild of the graph (a
+    * vacuumed artifact built again, or the cap-crossing rebuild)
+    * starts a new lineage, so no version stamped from the old graph
+    * serves it, even where the generations coincide. `maxLagGen` is
+    * the STALENESS POLICY for continuous-ingest consumers: a live
     * [[graft.streaming.StreamingGraphIngest]] stream (one gen bump per
     * micro-batch) amortizes the rebuild across `maxLagGen` batches
     * instead of paying it per batch. The default 0 is strict: a stale
     * stats table can never serve a registered query.
     *
-    * When a rebuild does run, the COMPONENT-SCOPED analytics (k-core,
-    * community census) refresh INCREMENTALLY whenever the delta since
-    * the previous stats version is identifiable — see
-    * [[writeGraphStatsTables]]; `STATS_MODE` in the version dir
-    * records which path ran. The TRIANGLE census is likewise
-    * incremental (edge-local counting — [[incrementalCensus]] replays
-    * the appends' directed edge-delta logs; `TRI_MODE` records the
-    * path). Only PageRank/PPR are always full: their semantics are
-    * global (rank₀ = PrScale div N over the global node count), so no
-    * append leaves any of their rows untouched — NOTES_r13 records
-    * the analysis.
-    *
     * Correctness: every consumer query's DuckDB oracle recomputes the
     * analytic from raw parquet, so the stored tables sit under the
-    * same hash gate as live computation, whichever path wrote them.
+    * same hash gate as live computation.
     */
   def ensureGraphStats(s: SparkSession, d: String,
       maxLagGen: Long = 0L): String = synchronized {
     val graphDir = ensureKnnGraph(s, d)
     val gv = graphGen(graphDir)
-    // "-s5": the stats LAYOUT version (s3 added the cc assignment
-    // tables; s4 the census state deg/ + TRI_MODE; s5 the GRAPH_BUILD
-    // lineage stamp + gen-keyed cc delta, dropping PAIR_FILES) — a new
-    // meta file must not be looked up in a stamp-fresh artifact of an
-    // older layout
+    val build = graphBuildId(graphDir)
+    // "-s5": the stats LAYOUT version — a changed layout must land in a
+    // new artifact dir, never be looked up in an older one
     val adir = graft.core.ArtifactStore.artifactDir("graph_stats", d, GraphTag + "-s5")
     def stampOf(ver: String): Option[Long] =
       try Some(java.nio.file.Files.readString(
         java.nio.file.Paths.get(ver, "GRAPH_GEN")).trim.toLong)
       catch { case _: Throwable => None }
-    // within policy ⟺ stamped gen in [gv - maxLagGen, gv]: a FUTURE
-    // stamp (a vacuumed-and-rebuilt graph artifact restarting its
-    // generations) is stale, never "fresh enough"
+    // within policy ⟺ same lineage and stamped gen in [gv - maxLagGen,
+    // gv]: a FUTURE stamp is stale, never "fresh enough"
     def freshEnough(ver: String): Boolean =
-      stampOf(ver).exists(gs => gs <= gv && gv - gs <= maxLagGen)
+      readMetaString(ver, "GRAPH_BUILD") == build &&
+        stampOf(ver).exists(gs => gs <= gv && gv - gs <= maxLagGen)
     graft.core.ArtifactStore.current(adir) match {
       case Some(cur) if freshEnough(cur) => cur
       case _ =>
@@ -1211,9 +1111,8 @@ object Graph {
           graft.core.ArtifactStore.current(adir) match {
             case Some(cur) if freshEnough(cur) => cur // lost race, fresh
             case _ =>
-              val prev = graft.core.ArtifactStore.current(adir)
               graft.core.ArtifactStore.publish(adir) { target =>
-                writeGraphStatsTables(s, graphDir, gv, target, prev)
+                writeGraphStatsTables(s, graphDir, gv, build, target)
               }
           }
         }
@@ -1222,41 +1121,15 @@ object Graph {
     }
   }
 
-  /** Which path wrote a stats version: "full" or "incremental". */
-  def graphStatsMode(versionDir: String): String =
-    try java.nio.file.Files.readString(
-      java.nio.file.Paths.get(versionDir, "STATS_MODE")).trim
-    catch { case _: Throwable => "unknown" }
-
-  /** One stats-version build. PageRank and PPR are ALWAYS recomputed
-    * from the live graph (global semantics — no row survives any
-    * append untouched). The triangle census goes incremental when the
-    * appends' per-generation edge-delta logs cover the gen range —
-    * see [[incrementalCensus]]. The component-scoped pair
-    * analytics (k-core, community census) go INCREMENTAL under the
-    * SAME gen-keyed coverage discipline over the `pair_delta/` logs
-    * (each append logs exactly the pair rows it contributed — pairs/
-    * is append-only between full rebuilds, so additions are the whole
-    * delta): only components containing a delta endpoint re-run their
-    * CC / peel fixpoints — every other component's assignment, census
-    * row, and core membership carries forward verbatim (components are
-    * closed under edges, so an untouched component's subgraph is
-    * untouched). Both incremental paths additionally require the
-    * previous version to come from the same BUILD LINEAGE
-    * ([[graphBuildId]] equality — see [[statsDeltaGens]]); a
-    * cap-crossing rebuild starts a fresh lineage with no logs →
-    * conservative full recompute, while a COMPACTION hard-links the
-    * recent logs forward so neither path loses its delta (the r13
-    * pair-file-set keying went full on every compaction — exactly when
-    * the graph is largest). `STATS_MODE` records the path taken.
-    *
-    * At 100 TB the win is the fixpoint LOOPS, not I/O: the delta-
-    * scoped CC/peel runs rounds over the affected components only,
-    * while the untouched bulk — the overwhelming majority under
-    * continuous ingest — is one carried join, no rounds.
+  /** One stats-version build, a function of the live graph version
+    * alone: the five served tables (`pagerank`, `ppr`, `triangles`,
+    * `kcore`, `communities`), each recomputed in full, plus the
+    * `GRAPH_GEN`/`GRAPH_BUILD` stamps [[ensureGraphStats]] checks.
+    * Every loop picks its driver or distributed path from its own
+    * input size ([[Corpus.driverEdgeBudget]]).
     */
   private def writeGraphStatsTables(s: SparkSession, graphDir: String,
-      gv: Long, target: String, prev: Option[String]): Unit = {
+      gv: Long, build: String, target: String): Unit = {
     val edges = s.read.parquet(s"$graphDir/edges")
       .select("src", "dst", "w", "rk")
     val pairs = s.read.parquet(s"$graphDir/pairs")
@@ -1266,210 +1139,30 @@ object Graph {
     // after an append the graph holds vectors the base table doesn't
     val nodes = s.read.parquet(s"$graphDir/buckets")
       .select("vec_id").distinct()
-    // per-phase walls, written as a TIMINGS meta file next to
-    // STATS_MODE/TRI_MODE: a production stats refresh needs to see
-    // WHERE a refresh spent its time (the always-full PageRank/PPR
-    // contract vs the delta-scoped census/cc paths), and the census
-    // probe reads the isolated census term from here instead of
-    // differencing whole-refresh walls the rank loops dominate
-    val phaseWall = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def phase[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      phaseWall(name) = (System.nanoTime() - t0) / 1e9; r
-    }
-    // stored-count pre-check floors (r17 VERDICT): counts the previous
-    // stats version OBSERVED are lower bounds on the live deduped edge
-    // sets — edges/ and pairs/ are append-only within a build lineage
-    // — so an over-budget floor lets every admission below decline
-    // without its budget-sized probe collect. Gated on GRAPH_BUILD
-    // equality (the statsDeltaGens lineage witness): a rebuilt graph's
-    // counts say nothing about the new lineage. Floors are hints with
-    // both paths exact — a stale-but-same-lineage floor can only cost
-    // speed, never correctness.
-    val sameLineagePrev = prev.filter { p =>
-      val lb = graphBuildId(graphDir)
-      lb.nonEmpty && readMetaString(p, "GRAPH_BUILD") == lb
-    }
-    // the census row (full or incrementally maintained) counts the
-    // deduped undirected edge set — also a floor for the rank probe's
-    // DIRECTED row count
-    val edgesFloor = sameLineagePrev.flatMap { p =>
-      try Some(s.read.parquet(s"$p/triangles")
-        .select("n_edges").head().getLong(0))
-      catch { case _: Throwable => None }
-    }
-    val (coreFloor, commFloor) = sameLineagePrev.map { p =>
-      val m = readMetaString(p, "PAIR_EDGE_COUNTS")
-      def num(k: String): Option[Long] =
-        s""""$k":(\\d+)""".r.findFirstMatchIn(m).map(_.group(1).toLong)
-      (num("core"), num("comm"))
-    }.getOrElse((None, None))
     // fused rank loop (r16): one set of PrIters rounds carries both
     // rank columns — pageRankOn/pprOn arithmetic per column, spec-
     // pinned equal; the final checkpointed frame feeds both writes
-    phase("rank") {
-      val (pr, ppr) =
-        rankTablesOn(nodes, edges, col("vec_id") < PprSeedMax, edgesFloor)
-      sortedStatsWrite(pr, s"$target/pagerank",
-        col("rank").desc, col("vec_id").asc)
-      sortedStatsWrite(ppr, s"$target/ppr",
-        col("rank").desc, col("vec_id").asc)
-    }
-    // ---- triangle census: INCREMENTAL when the graph's per-generation
-    // edge-delta logs cover (prevGen, gv] and the previous version
-    // stored its census state (deg/ + triangles/) — the census is pure
-    // edge-local counting, so unlike PageRank/PPR it has no global-N
-    // obstruction; the delta replay below avoids the full 3-way
-    // triangle join entirely. Missing logs (a cap-crossing rebuild
-    // publishes a fresh artifact with none; compaction retains only
-    // DeltaLogKeep gens) → conservative full path. `TRI_MODE` records
-    // which ran.
-    val censusGens: Option[Seq[Long]] =
-      prev.flatMap(p => statsDeltaGens(p, graphDir, gv,
-        "edge_delta", Seq("deg", "triangles")))
-    val triOutcome: Option[String] = phase("census") {
-      val out = censusGens match {
-        case Some(gens) => incrementalCensus(s, graphDir, gens, prev.get, target)
-        case None => Some("uncovered")
-      }
-      out.foreach(_ => fullCensus(s, nodes, edges, target, edgesFloor))
-      out
-    }
+    val (pr, ppr) = rankTablesOn(nodes, edges, col("vec_id") < PprSeedMax)
+    sortedStatsWrite(pr, s"$target/pagerank",
+      col("rank").desc, col("vec_id").asc)
+    sortedStatsWrite(ppr, s"$target/ppr",
+      col("rank").desc, col("vec_id").asc)
+    fullCensus(s, nodes, edges, target)
+    sortedStatsWrite(kcoreOn(pairs.filter(col("w") >= CoreWmin)
+        .select(col("id_a").as("src"), col("id_b").as("dst"))),
+      s"$target/kcore", col("vec_id"))
+    val commEdges = Dedup.cacheSlot("gstats-comm-edges",
+      pairs.filter(col("w") >= CommWmin).select(col("id_a"), col("id_b")))
+    val cc = Dedup.cacheSlot("gstats-comm-cc",
+      Corpus.connectedComponentsStar(commEdges, "id_a", "id_b"))
+    sortedStatsWrite(censusOf(cc, commEdges),
+      s"$target/communities", col("cluster"))
+    writeMetaLong(target, "GRAPH_GEN", gv)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(target, "TRI_MODE"),
-      if (triOutcome.isEmpty) "incremental" else "full")
-    // decline witness: WHICH guard sent the census to the full path —
-    // the budget guards' whole claim is that they fire BEFORE any
-    // driver materialization, so the reason is recorded observably
-    // (and spec-asserted) rather than inferred from timing
-    triOutcome.filter(_ != "uncovered").foreach(reason =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(target, "TRI_DECLINE"), reason))
-    // ---- component-scoped analytics: incremental when the pair-delta
-    // logs cover the gen range under the SAME build lineage (the
-    // census's coverage discipline — survives compaction, where the
-    // r13 pair-FILE-set identity forced a full recompute)
-    val ccGens: Option[Seq[Long]] =
-      prev.flatMap(p => statsDeltaGens(p, graphDir, gv,
-        "pair_delta", Seq("cc_core", "cc_comm")))
-    phase("components") {
-      def declineFull(reason: Option[String]): Unit = {
-        phaseWall ++= fullComponentTables(s, pairs, target, coreFloor, commFloor)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(target, "STATS_MODE"), "full")
-        reason.foreach(r => java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(target, "STATS_DECLINE"), r))
-        ()
-      }
-      // small-graph admission (r17): below the driver edge budget the
-      // FULL path serves every fixpoint loop from the driver (CC
-      // union-find, driver peel, driver rank rounds) and measured at
-      // or under the incremental replay's wall (CensusProbe ×10: full
-      // 9.7-10.9 s vs incremental 10.3-12.8 s) — the delta machinery
-      // pays for itself only past the budget, which is the regime it
-      // exists for. One cheap row-count metadata job decides;
-      // witnessed as a decline so the mode stays observable. pairs is
-      // the CoreWmin-floored table, an upper bound on every loop's
-      // edge input (comm ⊆ core).
-      val smallGraph = {
-        val b = Corpus.driverEdgeBudget(s)
-        b >= 0 && pairs.count() <= b
-      }
-      if (smallGraph) declineFull(Some("small_graph"))
-      else ccGens match {
-        case Some(gens) =>
-          val delta =
-            if (gens.isEmpty) pairs.limit(0)
-            else s.read.parquet(
-                gens.map(g => s"$graphDir/pair_delta/gen=$g"): _*)
-              .select("id_a", "id_b", "w")
-              // a duplicate-vec_id append (a caller ledger violation
-              // the append survives) stores self-pairs; they carry no
-              // connectivity and the full path's CC input drops them
-              // (u =!= v) — drop them here too or a self-pair whose
-              // node is new to the comm graph contracts to a
-              // zero-node group and the census divides by zero
-              .filter(col("id_a") =!= col("id_b"))
-          // guard BEFORE the incremental path builds anything: the
-          // contracted-merge formulation BROADCASTS delta-bounded
-          // frames (contracted labels, affected clusters) into every
-          // corpus-sized join, so the delta row count must sit inside
-          // the declared broadcast bound — a bulk append declines to
-          // the exact full path with its witness. The limit(budget+1)
-          // probe early-exits the log scan and ships only a count;
-          // saturated budgets decline explicitly (limit counts in
-          // Int — the census guard's discipline).
-          val budget = ccDeltaBudget(s)
-          val overBudget = budget >= Int.MaxValue.toLong - 1 ||
-            delta.limit((budget + 1).toInt).count() > budget
-          if (overBudget) declineFull(Some("delta_budget"))
-          else {
-            phaseWall ++=
-              incrementalComponentTables(s, pairs, delta, prev.get, target)
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(target, "STATS_MODE"), "incremental")
-            // carry the pair-count floors forward verbatim: pairs are
-            // append-only within the lineage, so the previous
-            // version's observed counts stay valid lower bounds for
-            // the NEXT refresh's admission pre-check even though this
-            // version never ran the full loops
-            val pf = readMetaString(prev.get, "PAIR_EDGE_COUNTS")
-            if (pf.nonEmpty) java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(target, "PAIR_EDGE_COUNTS"), pf)
-          }
-        case None => declineFull(None)
-      }
-    }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(target, "TIMINGS"),
-      phaseWall.map { case (k, v) =>
-        s""""${k}_s":${math.round(v * 1000) / 1000.0}"""
-      }.mkString("{", ",", "}"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(target, "GRAPH_GEN"), gv.toString)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(target, "GRAPH_BUILD"), graphBuildId(graphDir))
+      java.nio.file.Paths.get(target, "GRAPH_BUILD"), build)
     ()
   }
 
-  /** Shared delta-identification gate for the incremental stats paths:
-    * the generation range (prevStatsGen, gv] is replayable from the
-    * graph's `logDir` delta logs iff the previous version stored its
-    * carried state (`stateDirs`), its stamp does not exceed the live
-    * generation, every generation in the range has a log, and — the
-    * lineage witness — the previous version was computed from the SAME
-    * BUILD of the graph ([[graphBuildId]] equality). Without the build
-    * check, a vacuumed-and-rebuilt graph whose restarted generations
-    * climb back past the surviving stats stamp would replay a new
-    * lineage's deltas against the old lineage's carried state —
-    * silently wrong numbers. Returns the (possibly empty) gen range to
-    * replay, or None → conservative full path.
-    */
-  private def statsDeltaGens(prevStats: String, graphDir: String, gv: Long,
-      logDir: String, stateDirs: Seq[String]): Option[Seq[Long]] = {
-    val pg = try Some(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(prevStats, "GRAPH_GEN")).trim.toLong)
-      catch { case _: Throwable => None }
-    val liveBuild = graphBuildId(graphDir)
-    val sameBuild = liveBuild.nonEmpty &&
-      readMetaString(prevStats, "GRAPH_BUILD") == liveBuild
-    val hasState = stateDirs.forall(dir => java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(prevStats, dir)))
-    val logs = deltaLogGens(graphDir, logDir).toSet
-    pg match {
-      case Some(g0) if sameBuild && hasState && g0 <= gv &&
-          ((g0 + 1) to gv).forall(logs.contains) =>
-        Some(((g0 + 1) to gv).toSeq)
-      case _ => None
-    }
-  }
-
-  /** Full census path: the g3 formulation verbatim over the stored
-    * edges (undirected distinct pairs → degrees → wedge fold → 3-way
-    * triangle join), node count from the routing set. Also writes the
-    * census STATE the incremental path carries: `deg/` (per-node
-    * undirected degree).
-    */
   /** Sorted stats-table write: range-partition on the sort order
     * (range partition k wholly precedes k+1, so global order survives
     * across files) and sort within partitions. AQE coalesces the
@@ -1483,36 +1176,33 @@ object Graph {
     df.repartitionByRange(by: _*).sortWithinPartitions(by: _*)
       .write.mode("overwrite").parquet(path)
 
-  /** Which path served the most recent FULL triangle census in this
-    * JVM: "driver" or "distributed". Diagnostic witness only.
+  /** Which path served the most recent triangle census in this JVM:
+    * "driver" or "distributed". Diagnostic witness only.
     */
   @volatile private[graft] var lastCensusMode: String = ""
 
+  /** Triangle census: the g3 formulation over the stored edges
+    * (undirected distinct pairs → degrees → wedge fold → triangle
+    * count), node count from the routing set, written as the one-row
+    * `triangles/` table.
+    */
   private def fullCensus(s: SparkSession, nodes: DataFrame,
-      edges: DataFrame, target: String,
-      edgeFloor: Option[Long] = None): Unit = {
+      edges: DataFrame, target: String): Unit = {
     val und = Dedup.cacheSlot("gstats-und-edges", edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct())
     // budgeted driver fast path (the fixpoint loops' admission
     // discipline): under the edge budget the canonical edge list is
-    // driver-sized, the deg table is bounded by its ENDPOINTS (≤ 2×
+    // driver-sized, the degree map is bounded by its ENDPOINTS (≤ 2×
     // budget — never the corpus; only the node COUNT below stays a
     // distributed scalar), and exact triangle counting by
     // greater-neighbor intersection replaces the 3-way wedge join:
     // a triangle a<b<c is counted once at edge (a,b) as
     // c ∈ adj⁺(a) ∩ adj⁺(b), exactly the ordered join's convention.
     val budget = Corpus.driverEdgeBudget(s)
-    // stored-count pre-check (r17 VERDICT): the artifact's previous
-    // census row counts exactly this deduped undirected set at an
-    // earlier generation of the same append-only lineage — a floor
-    // over the budget declines with zero driver collect
-    val floored = edgeFloor.exists(_ > budget)
-    val probe =
-      if (floored) Array.empty[org.apache.spark.sql.Row]
-      else und.take(budget + 1)
-    if (!floored && probe.length <= budget) {
+    val probe = und.take(budget + 1)
+    if (probe.length <= budget) {
       lastCensusMode = "driver"
       val deg = new java.util.HashMap[Long, Long]()
       val adj = new java.util.HashMap[Long, java.util.HashSet[Long]]()
@@ -1521,21 +1211,9 @@ object Graph {
         deg.merge(a, 1L, _ + _); deg.merge(b, 1L, _ + _)
         adj.computeIfAbsent(a, _ => new java.util.HashSet[Long]()).add(b)
       }
-      val degRows = new java.util.ArrayList[org.apache.spark.sql.Row](deg.size())
       var nWedges = 0L
-      val dit = deg.entrySet().iterator()
-      while (dit.hasNext) {
-        val e = dit.next()
-        degRows.add(org.apache.spark.sql.Row(e.getKey, e.getValue))
-        nWedges += e.getValue * (e.getValue - 1L) / 2L
-      }
-      sortedStatsWrite(s.createDataFrame(degRows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("v",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("dg",
-              org.apache.spark.sql.types.LongType, nullable = false)))),
-        s"$target/deg", col("v"))
+      val dit = deg.values().iterator()
+      while (dit.hasNext) { val dg = dit.next(); nWedges += dg * (dg - 1L) / 2L }
       var nTriangles = 0L
       probe.foreach { r =>
         val sa = adj.get(r.getLong(0)); val sb = adj.get(r.getLong(1))
@@ -1559,8 +1237,9 @@ object Graph {
         .write.mode("overwrite").parquet(s"$target/triangles")
       return
     }
-    if (!floored) Corpus.declinedProbes.incrementAndGet()
     lastCensusMode = "distributed"
+    // the degree table is a working step, read back by the wedge fold
+    // and both orientation joins, and removed once the row is written
     sortedStatsWrite(und.select(col("a").as("v"))
       .union(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("dg")),
@@ -1608,328 +1287,7 @@ object Graph {
           .as("closure_ppm"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$target/triangles")
-  }
-
-  /** Incremental census: maintain the triangle row WITHOUT the 3-way
-    * join by replaying the appends' directed edge-delta logs.
-    *
-    * Let N be the live undirected edge set, O the previous version's,
-    * A = N∖O (added canonical pairs), R = O∖N (removed). For either
-    * delta set X counted against its graph G, triangles touching X are
-    * counted once via inclusion–exclusion over how many X-edges a
-    * triangle holds (t1/t2/t3):
-    *
-    *  - S = Σ_{e∈X} |common neighbors of e in G| = t1 + 2·t2 + 3·t3;
-    *  - U = closed wedge-pairs of X-edges (two X-edges sharing a
-    *    vertex whose closing pair is in G) = t2 + 3·t3;
-    *  - t3 = triangles entirely inside X (the canonical a<b<c join);
-    *  - T(≥1 X-edge) = S − U + t3.
-    *
-    * Then tri_new = tri_old + T_A(over N) − T_R(over O). Degrees carry
-    * from the stored `deg/` table with per-endpoint deltas, the wedge
-    * fold moves only on touched nodes (C(d₁,2) − C(d₀,2)), edge count
-    * by |A| − |R|, and the node count is a `bsizes` fold (every vector
-    * holds exactly [[Dedup.SrpTables]] routing rows). A and R are
-    * recovered from the NETTED logs (sum of ops per directed pair
-    * across the gen range — add-then-remove cancels) against the live
-    * directed adjacency, so multi-generation ranges replay exactly.
-    *
-    * Scale shape: the search STATE (netted ops, touched pairs, the
-    * adjacency restricted to their endpoints) is bounded by the delta,
-    * so the counting runs in driver loops over collected sets — the
-    * graph-ANN beam's coordinator discipline; a dozen 1-row Spark
-    * aggregates paid ~1 s of AQE exchange-job scheduling EACH for
-    * work this small. Spark does what is corpus-sized: one
-    * broadcast-semi pruned scan fetches the incident rows, one
-    * broadcast outer join carries the deg table. Cost-model guards
-    * ([[CensusMaxDeltaFrac]]/[[censusAdjBudget]]) decline to the full
-    * path when the delta stops being small — returning false, never
-    * wrong. No full distinct over und, no full 3-way join.
-    */
-  /** Decline thresholds for [[incrementalCensus]]: a replay whose
-    * netted op count exceeds `CensusMaxDeltaFrac` of the previous edge
-    * count (plus a small-graph floor) — or whose restricted adjacency
-    * would exceed [[censusAdjBudget]] rows — is near the full path's
-    * cost anyway, so the refresh takes the exact full join instead.
-    */
-  private val CensusMaxDeltaFrac = 0.05
-  private val CensusDeltaFloor = 4096L
-  private val CensusAdjBudgetDefault = 4000000L
-  /** Session-conf read, not a JVM global: GraphIndexSpec injects 0 via
-    * `spark.conf` to prove the guard declines BEFORE the incident-edge
-    * collect can run, and a session-scoped override cannot leak into a
-    * concurrently running stats build on another session.
-    */
-  private[graft] def censusAdjBudget(s: SparkSession): Long =
-    s.conf.get("graft.census.adjBudget", CensusAdjBudgetDefault.toString)
-      .toLong
-
-  private val CcDeltaBudgetDefault = 4000000L
-  /** Admission bound for [[incrementalComponentTables]], session-conf
-    * read like [[censusAdjBudget]]: the contracted-merge path
-    * broadcasts delta-bounded frames into every corpus-sized join
-    * (assignment remaps, carried-row anti joins), so "delta-bounded"
-    * must be an enforced precondition, not a hope — a delta past this
-    * many rows declines to the exact full path (STATS_DECLINE
-    * witness) before anything is built or broadcast.
-    */
-  private[graft] def ccDeltaBudget(s: SparkSession): Long =
-    s.conf.get("graft.stats.ccDeltaBudget", CcDeltaBudgetDefault.toString)
-      .toLong
-
-  private val KcoreDeltaBudgetDefault = 1000000L
-  /** Admission bound for [[seededKcore]]: cumulative candidate-incident
-    * edge rows the seeded expansion may materialize on the driver
-    * (the closure's edges ARE its bounded state — the peel then runs
-    * in-memory over exactly those rows, the incrementalCensus
-    * discipline). Session-conf read so specs can force every decline
-    * band without leaking into concurrent builds.
-    */
-  private[graft] def kcoreDeltaBudget(s: SparkSession): Long =
-    s.conf.get("graft.stats.kcoreDeltaBudget", KcoreDeltaBudgetDefault.toString)
-      .toLong
-
-  private val KcorePeelBudgetDefault = 20000000L
-  /** Second witnessed decline for the k-core floor (r15 ADVICE): the
-    * affected-component subpeel is bounded by the components the delta
-    * TOUCHES, not by the delta — a delta into the giant component
-    * re-peels that whole component. When the affected node count
-    * exceeds this budget the floor runs the exact FULL peel and says
-    * so (`KCORE_MODE` = "full"), instead of wearing the incremental
-    * label at full-path cost.
-    */
-  private[graft] def kcorePeelBudget(s: SparkSession): Long =
-    s.conf.get("graft.stats.kcorePeelBudget", KcorePeelBudgetDefault.toString)
-      .toLong
-
-  /** Expansion-round ceiling for [[seededKcore]]: the closure's hop
-    * count is the shell region's eccentricity around the delta — long
-    * chains mean the "bounded" claim is failing in rounds rather than
-    * rows, so the loop declines past this.
-    */
-  private val KcoreSeedRounds = 16
-
-  /** Returns None when the replay ran, Some(reason) when a budget
-    * guard declined to the full path. BOTH guards are FUSED with their
-    * fetch: `take(budget+1)` materializes at most budget+1 rows — the
-    * budget IS the declared-safe driver-materialization bound, so one
-    * extra row is inside it by construction — and more rows coming
-    * back than the budget declines to the full path. Out-degree is
-    * capped at [[GraphTopG]] but IN-degree is not, so a small delta
-    * touching a hub node has an unboundedly large incident
-    * neighborhood: a post-collect check (the r13 order) would pull
-    * exactly the driver-OOM-sized state the budget exists to refuse,
-    * while a separate count-then-collect (the first r14 cut) paid a
-    * second job per guard — measurable pure scheduling at probe scale.
-    * take(n+1) returning ≤ n rows proves the frame was exhausted, so
-    * the taken rows ARE the complete set on the admit path.
-    */
-  private def incrementalCensus(s: SparkSession, graphDir: String,
-      gens: Seq[Long], prevDir: String, target: String): Option[String] = {
-    val prevRow = s.read.parquet(s"$prevDir/triangles").collect().head
-    val prevEdges = prevRow.getAs[Long]("n_edges")
-    val prevDeg = s.read.parquet(s"$prevDir/deg")
-    // take() counts in Int, so a budget at or past Int.MaxValue-1
-    // cannot be over-fetch-probed: the over-budget comparison below
-    // would saturate and a truncated row set would pass as complete.
-    // A saturated budget is an EXPLICIT decline, not a silent admit —
-    // at that scale the replay is not driver-paced anyway.
-    def saturated(budget: Long): Boolean = budget >= Int.MaxValue.toLong - 1
-    def cap(budget: Long): Int = (budget + 1).toInt
-    // netted directed ops across the gen range (add-then-evict
-    // cancels) — log-sized once netted, so the counting below is
-    // driver-paced like the graph-ANN beam (a tagged-union of a dozen
-    // tiny aggregates paid ~1 s of exchange-job scheduling EACH under
-    // AQE — fixed cost that dwarfed the saved join)
-    val netBudget =
-      (CensusMaxDeltaFrac * prevEdges + CensusDeltaFloor).toLong
-    if (saturated(netBudget)) return Some("delta_frac")
-    val netTaken: Array[org.apache.spark.sql.Row] =
-      if (gens.isEmpty) Array.empty
-      else s.read.parquet(gens.map(g => s"$graphDir/edge_delta/gen=$g"): _*)
-        .groupBy("src", "dst").agg(sum("op").as("net"))
-        .filter(col("net") =!= 0)
-        .take(cap(netBudget))
-    if (netTaken.length > netBudget) return Some("delta_frac")
-    val netRows: Array[(Long, Long, Long)] =
-      netTaken.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val adds = netRows.collect { case (a, b, n) if n > 0 => (a, b) }.toSet
-    val dels = netRows.collect { case (a, b, n) if n < 0 => (a, b) }.toSet
-    val touched: Set[(Long, Long)] = (adds ++ dels)
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-    val ed = s.read.parquet(s"$graphDir/edges").select("src", "dst")
-    import s.implicits._
-    // ONE pruned scan fetches every directed edge incident to a
-    // touched endpoint — it answers both questions below: the touched
-    // pairs' live directed membership (row present?) and the counting
-    // terms' restricted adjacency. Guard fused with the fetch:
-    // take(budget+1) bounds the driver materialization to the budget
-    // by construction, and an over-budget result declines BEFORE any
-    // unbounded state can land.
-    val adjBudget = censusAdjBudget(s)
-    if (saturated(adjBudget)) return Some("adj_budget")
-    val pSet: Set[Long] = touched.flatMap { case (a, b) => Seq(a, b) }
-    val pDf = pSet.toSeq.toDF("v")
-    val incTaken = ed
-      .join(broadcast(pDf.select(col("v").as("src"))), Seq("src"), "left_semi")
-      .unionByName(ed
-        .join(broadcast(pDf.select(col("v").as("dst"))), Seq("dst"), "left_semi")
-        .select("src", "dst"))
-      .take(cap(adjBudget))
-    if (incTaken.length > adjBudget) return Some("adj_budget")
-    val incRows = incTaken.map(r => (r.getLong(0), r.getLong(1)))
-    val dirIncident: Set[(Long, Long)] = incRows.toSet
-    val dirNew: Set[(Long, Long)] = touched.flatMap { case (a, b) =>
-      Seq((a, b), (b, a)).filter(dirIncident) }
-    val dirOld = dirNew -- adds ++ dels
-    def undOf(dir: Set[(Long, Long)]): Set[(Long, Long)] = touched.filter {
-      case (a, b) => dir((a, b)) || dir((b, a)) }
-    val membNew = undOf(dirNew)
-    val membOld = undOf(dirOld)
-    val aSet = membNew -- membOld
-    val rSet = membOld -- membNew
-    val e2: Set[Long] = (aSet ++ rSet).flatMap { case (a, b) => Seq(a, b) }
-    val adjN = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.HashSet[Long]]
-    def link(m: scala.collection.mutable.HashMap[Long,
-        scala.collection.mutable.HashSet[Long]], v: Long, o: Long): Unit = {
-      if (e2(v) && v != o) {
-        m.getOrElseUpdate(v, scala.collection.mutable.HashSet.empty) += o; ()
-      }
-    }
-    for ((a, b) <- incRows) { link(adjN, a, b); link(adjN, b, a) }
-    // old adjacency = new with the A pairs removed, R pairs restored
-    val adjO = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.HashSet[Long]]
-    for ((v, os) <- adjN) adjO(v) = os.clone()
-    for ((a, b) <- aSet) {
-      adjO.get(a).foreach(_ -= b); adjO.get(b).foreach(_ -= a)
-    }
-    for ((a, b) <- rSet) { link(adjO, a, b); link(adjO, b, a) }
-    type Adj = scala.collection.mutable.HashMap[Long,
-      scala.collection.mutable.HashSet[Long]]
-    def nbrs(adj: Adj, v: Long): scala.collection.Set[Long] =
-      adj.getOrElse(v, scala.collection.mutable.HashSet.empty)
-    // T(≥1 X-edge in G) = S − U + t3 (Scaladoc identity), all in tight
-    // driver loops over the bounded sets
-    def tTerm(x: Set[(Long, Long)], adj: Adj): Long = {
-      var sTerm = 0L
-      for ((a, b) <- x) {
-        val (sm, lg) = { val na = nbrs(adj, a); val nb = nbrs(adj, b)
-          if (na.size <= nb.size) (na, nb) else (nb, na) }
-        sTerm += sm.count(lg.contains)
-      }
-      val symX = scala.collection.mutable.HashMap
-        .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-      for ((a, b) <- x) {
-        symX.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-        symX.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-      }
-      var uTerm = 0L
-      for ((v, os) <- symX; i <- os.indices; j <- (i + 1) until os.size) {
-        val (p, q) = (math.min(os(i), os(j)), math.max(os(i), os(j)))
-        if (nbrs(adj, p).contains(q)) uTerm += 1
-      }
-      var t3 = 0L
-      val xAdj = scala.collection.mutable.HashMap
-        .empty[Long, scala.collection.mutable.HashSet[Long]]
-      for ((a, b) <- x) {
-        xAdj.getOrElseUpdate(a, scala.collection.mutable.HashSet.empty) += b
-        xAdj.getOrElseUpdate(b, scala.collection.mutable.HashSet.empty) += a
-      }
-      for ((a, b) <- x) {
-        val xa = xAdj.getOrElse(a, scala.collection.mutable.HashSet.empty[Long])
-        val xb = xAdj.getOrElse(b, scala.collection.mutable.HashSet.empty[Long])
-        val (sm, lg) = if (xa.size <= xb.size) (xa, xb) else (xb, xa)
-        t3 += sm.count(c => c > b && lg.contains(c))
-      }
-      sTerm - uTerm + t3
-    }
-    val tA = tTerm(aSet, adjN)
-    val tR = tTerm(rSet, adjO)
-    // degree deltas per endpoint; previous degrees of touched nodes
-    // come from one pruned read of the stored deg table
-    val degDelta = scala.collection.mutable.HashMap
-      .empty[Long, Long].withDefaultValue(0L)
-    for ((a, b) <- aSet) { degDelta(a) += 1; degDelta(b) += 1 }
-    for ((a, b) <- rSet) { degDelta(a) -= 1; degDelta(b) -= 1 }
-    val touchedV = degDelta.keys.toSeq
-    val d0Map: Map[Long, Long] =
-      if (touchedV.isEmpty) Map.empty
-      else prevDeg
-        .join(broadcast(touchedV.toDF("v")), Seq("v"), "left_semi")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def c2(d: Long): Long = d * (d - 1) / 2
-    var wDelta = 0L
-    for ((v, dd) <- degDelta) {
-      val d0 = d0Map.getOrElse(v, 0L)
-      wDelta += c2(d0 + dd) - c2(d0)
-    }
-    // carry the deg table with the (broadcast-joined) endpoint deltas
-    val degDeltaDf = degDelta.toSeq.toDF("v", "dd")
-    sortedStatsWrite(prevDeg.join(broadcast(degDeltaDf), Seq("v"), "full")
-      .select(col("v"),
-        (coalesce(col("dg"), lit(0L)) + coalesce(col("dd"), lit(0L))).as("dg"))
-      .filter(col("dg") > 0),
-      s"$target/deg", col("v"))
-    val nEdges = prevEdges + aSet.size - rSet.size
-    val nWedges = prevRow.getAs[Long]("n_wedges") + wDelta
-    val nTri = prevRow.getAs[Long]("n_triangles") + tA - tR
-    // every vector holds exactly SrpTables routing rows, so the node
-    // count is a bsizes fold — O(populated buckets), no corpus scan
-    val nNodes = s.read.parquet(s"$graphDir/bsizes")
-      .agg(coalesce(sum("n"), lit(0L)).as("t")).collect().head.getLong(0) /
-      Dedup.SrpTables
-    val closure = if (nWedges > 0) (3000000L * nTri) / nWedges else 0L
-    Seq((nNodes, nEdges, nWedges, nTri, closure))
-      .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles", "closure_ppm")
-      .coalesce(1).write.mode("overwrite").parquet(s"$target/triangles")
-    None
-  }
-
-  /** Which path wrote a stats version's triangle census: "full" or
-    * "incremental".
-    */
-  def graphTriMode(versionDir: String): String =
-    try java.nio.file.Files.readString(
-      java.nio.file.Paths.get(versionDir, "TRI_MODE")).trim
-    catch { case _: Throwable => "unknown" }
-
-  /** Which cost-model guard declined a covered census replay to the
-    * full path ("delta_frac" | "adj_budget"), or "" when the census
-    * was not declined by a guard. The witness that the guards fire
-    * BEFORE any driver materialization — spec-asserted with an
-    * injected zero budget.
-    */
-  def graphTriDecline(versionDir: String): String =
-    readMetaString(versionDir, "TRI_DECLINE")
-
-  /** Which guard sent the cc analytics to the full path ("" when the
-    * incremental path ran, or when full was taken for lack of log
-    * coverage rather than by decline).
-    */
-  def graphStatsDecline(versionDir: String): String =
-    readMetaString(versionDir, "STATS_DECLINE")
-
-  /** Which k-core maintenance path an INCREMENTAL refresh took:
-    * "seeded" (bounded, [[seededKcore]]), "subpeel"
-    * (affected-component peel), or "full" (peel budget exceeded —
-    * exact full peel, honestly labeled). "" for full-mode refreshes,
-    * which have no k-core sub-mode.
-    */
-  def graphKcoreMode(versionDir: String): String =
-    readMetaString(versionDir, "KCORE_MODE")
-
-  /** The witness for why [[seededKcore]] declined ("" when it ran). */
-  def graphKcoreDecline(versionDir: String): String =
-    readMetaString(versionDir, "KCORE_DECLINE")
-
-  /** Per-phase refresh walls of a stats version as the JSON written by
-    * [[writeGraphStatsTables]] — `{}` for pre-TIMINGS versions.
-    */
-  def graphStatsTimings(versionDir: String): String = {
-    val t = readMetaString(versionDir, "TIMINGS")
-    if (t.isEmpty) "{}" else t
+    rmTree(s"$target/deg")
   }
 
   /** Census rows for a (doc_id, cluster) assignment over its edge set. */
@@ -1942,498 +1300,6 @@ object Graph {
       .select(col("cluster"), col("n_nodes"), col("n_edges"),
         expr("(2000000 * n_edges) div (n_nodes * (n_nodes - 1))")
           .as("density_ppm"))
-  }
-
-  /** One sub-wall measurement for the component floors' TIMINGS
-    * split (r16 candidate #1's instrument: the contracted merge made
-    * the assignment/census terms delta-bounded, so WHICH floor the
-    * `components` phase spends on decides the next optimization).
-    */
-  private def floorWall[T](acc: collection.mutable.Buffer[(String, Double)],
-      name: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    acc += name -> (System.nanoTime() - t0) / 1e9; r
-  }
-
-  /** Full-path k-core + census + assignment tables; returns the
-    * per-floor sub-walls for the refresh's TIMINGS meta.
-    */
-  private def fullComponentTables(s: SparkSession, pairs: DataFrame,
-      target: String, coreFloor: Option[Long] = None,
-      commFloor: Option[Long] = None): Seq[(String, Double)] = {
-    val walls = collection.mutable.Buffer.empty[(String, Double)]
-    val coreEdges = Dedup.cacheSlot("gstats-core-edges",
-      pairs.filter(col("w") >= CoreWmin).select(col("id_a"), col("id_b")))
-    var coreCount = -1L
-    floorWall(walls, "cc_kcore") {
-      floorWall(walls, "cc_kcore_peel") {
-        sortedStatsWrite(kcoreOn(
-            coreEdges.select(col("id_a").as("src"), col("id_b").as("dst")),
-            edgeFloor = coreFloor),
-          s"$target/kcore", col("vec_id"))
-      }
-      floorWall(walls, "cc_core_cc") {
-        sortedStatsWrite(
-          Corpus.connectedComponentsStar(coreEdges, "id_a", "id_b", coreFloor)
-            .select(col("doc_id").as("vec_id"), col("cluster")),
-          s"$target/cc_core", col("vec_id"))
-        // the star call's witness carries the deduped canonical count
-        // it observed (exactly kcoreOn's und0 set — same edge table,
-        // same canonicalization); recorded for the NEXT refresh's
-        // pre-check. The witness is best-effort JVM-global state — a
-        // concurrent query's CC call could clobber it between the
-        // call and this read, which at worst stores a floor for a
-        // DIFFERENT graph: the pre-check then mis-skips or mis-probes
-        // one admission, both exact by construction.
-        coreCount = Corpus.lastCcWitness.edges
-      }
-    }
-    var commCount = -1L
-    floorWall(walls, "cc_comm") {
-      val commEdges = Dedup.cacheSlot("gstats-comm-edges",
-        pairs.filter(col("w") >= CommWmin).select(col("id_a"), col("id_b")))
-      val cc = Dedup.cacheSlot("gstats-comm-cc",
-        Corpus.connectedComponentsStar(commEdges, "id_a", "id_b", commFloor))
-      commCount = Corpus.lastCcWitness.edges
-      sortedStatsWrite(censusOf(cc, commEdges),
-        s"$target/communities", col("cluster"))
-      sortedStatsWrite(cc, s"$target/cc_comm", col("doc_id"))
-    }
-    if (coreCount >= 0 && commCount >= 0)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(target, "PAIR_EDGE_COUNTS"),
-        s"""{"core":$coreCount,"comm":$commCount}""")
-    walls.toSeq
-  }
-
-  /** Bounded k-core maintenance, seeded from the delta's endpoints —
-    * work bounded by the CHANGED-DEGREE REGION, never by the
-    * components the delta touches (the subpeel's failure mode: a
-    * delta into the giant component re-peels it whole; the r15
-    * TIMINGS split measured that peel flat vs the full path).
-    *
-    * Correctness rests on two published facts about single-k cores
-    * under edge ADDITIONS (Sarıyüce et al., streaming k-core
-    * maintenance; reference corpus semantics per
-    * `/root/reference/src/search.ts:5-107` need only the stored
-    * stats tables to stay exact):
-    *
-    *  1. the old k-core SURVIVES — additions never peel a member, so
-    *     every carried row stays and only gains degree;
-    *  2. every NEWLY-JOINING component of K_new \ K_old must contain
-    *     a delta endpoint, connected through newly-joining nodes —
-    *     otherwise its edges all pre-existed and it would have been a
-    *     valid extension of the old core, contradicting maximality.
-    *
-    * So the closure walks: seeds = delta endpoints ∉ stored core;
-    * expand only THROUGH candidates (non-core, full degree ≥ k —
-    * a node with full degree < k can never join); each round fetches
-    * the frontier's complete incident edge set by streaming
-    * `coreEdges` past a broadcast of the frontier, and classifies
-    * unseen neighbors by streaming `prevKcore` past a broadcast — no
-    * shuffle touches a corpus-sized table. The fetch is FUSED with
-    * its budget ([[kcoreDeltaBudget]]): `take(remaining + 1)` is the
-    * collect, and one row over budget declines. The peel then runs
-    * in the driver over exactly the collected rows, with CARRIED
-    * BOUNDARY DEGREES: stored-core neighbors are anchors that never
-    * peel, so a candidate's degree is anchors + live candidate
-    * neighbors — the exact degree in the candidate∪core subgraph.
-    * Survivors are K_new \ K_old precisely (fact 2 makes the closure
-    * complete; peel maximality makes it tight), and each stored-core
-    * row's degree increments by its surviving-candidate edges — new
-    * AND pre-existing, both previously uncounted because the
-    * candidate was outside the subgraph.
-    *
-    * Declines (returned as the witness string): saturated or
-    * exceeded budget, too many expansion rounds, a previous peel
-    * that never converged (its rows are then NOT the old k-core), an
-    * empty previous core (indistinguishable from unconverged-empty),
-    * and a delta edge between two stored-core nodes (violates the
-    * append invariant that every delta pair touches a new vector —
-    * the subpeel handles it exactly, this path would need to know
-    * whether the pair duplicates a stored edge).
-    */
-  private[graft] def seededKcore(s: SparkSession, coreEdges: DataFrame,
-      prevKcore: DataFrame, deltaCore: DataFrame): Either[String, DataFrame] = {
-    import s.implicits._
-    val k = CoreK
-    val budget = kcoreDeltaBudget(s)
-    if (budget >= Int.MaxValue.toLong - 1) return Left("budget_saturated")
-    val convRow = prevKcore.select(col("converged")).take(1)
-    if (convRow.isEmpty) return Left("prev_empty")
-    if (!convRow.head.getBoolean(0)) return Left("prev_unconverged")
-
-    // stored-core membership for a bounded id set: stream the
-    // corpus-sized table past one broadcast, collect ≤ |ids| rows
-    def memberOf(ids: Set[Long]): Set[Long] =
-      if (ids.isEmpty) Set.empty
-      else prevKcore.select("vec_id")
-        .join(broadcast(ids.toSeq.toDF("vec_id")), "vec_id")
-        .collect().map(_.getLong(0)).toSet
-
-    val seedProbe = deltaCore.select(col("id_a").as("v"))
-      .union(deltaCore.select(col("id_b").as("v"))).distinct()
-    val seedRows = seedProbe.take(budget.toInt + 1)
-    if (seedRows.length > budget) return Left("edge_budget")
-    val seeds = seedRows.map(_.getLong(0)).toSet
-    val coreSeeds = memberOf(seeds)
-    if (coreSeeds.nonEmpty) {
-      val cs = coreSeeds.toSeq.toDF("cid")
-      val coreCore = deltaCore
-        .join(broadcast(cs.select(col("cid").as("id_a"))), "id_a")
-        .join(broadcast(cs.select(col("cid").as("id_b"))), "id_b")
-        .limit(1).count()
-      if (coreCore > 0) return Left("core_core_delta")
-    }
-
-    val coreSet = collection.mutable.Set.empty[Long] ++= coreSeeds
-    val candSet = collection.mutable.Set.empty[Long]
-    val deadSet = collection.mutable.Set.empty[Long]
-    val edgeSet = collection.mutable.Set.empty[(Long, Long)]
-    var front: Set[Long] = seeds -- coreSeeds
-    var spent: Long = seedRows.length.toLong
-    var round = 0
-    while (front.nonEmpty) {
-      round += 1
-      if (round > KcoreSeedRounds) return Left("seed_rounds")
-      // small frontiers (the common case: a trickle delta's shell)
-      // fetch with ONE codegen'd isin scan of the pair table; larger
-      // frontiers pay two broadcast-join scans (an OR join condition
-      // would degrade to a nested-loop against the broadcast)
-      val efRaw =
-        if (front.size <= 1024) {
-          val ids = front.toSeq.map(java.lang.Long.valueOf)
-          coreEdges.filter(col("id_a").isin(ids: _*) ||
-            col("id_b").isin(ids: _*))
-        } else {
-          val fDf = front.toSeq.toDF("fid")
-          coreEdges
-            .join(broadcast(fDf.select(col("fid").as("id_a"))), "id_a")
-            .select("id_a", "id_b")
-            .union(coreEdges
-              .join(broadcast(fDf.select(col("fid").as("id_b"))), "id_b")
-              .select("id_a", "id_b"))
-        }
-      val ef = efRaw
-        .select(least(col("id_a"), col("id_b")).as("a"),
-          greatest(col("id_a"), col("id_b")).as("b"))
-        .distinct()
-      val remaining = budget - spent
-      if (remaining <= 0) return Left("edge_budget")
-      val rows = ef.take(remaining.toInt + 1)
-      if (rows.length > remaining) return Left("edge_budget")
-      spent += rows.length
-      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
-      // the frontier's COMPLETE incident edge sets are in this fetch,
-      // so these counts are the exact full-graph degrees
-      val deg = collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
-      es.foreach { case (a, b) =>
-        if (front(a)) deg(a) += 1
-        if (front(b)) deg(b) += 1
-      }
-      val newCand = front.filter(v => deg(v) >= k)
-      deadSet ++= front.filterNot(newCand)
-      candSet ++= newCand
-      val nbrs = collection.mutable.Set.empty[Long]
-      es.foreach { case (a, b) =>
-        val ca = newCand(a); val cb = newCand(b)
-        if (ca || cb) {
-          edgeSet += ((a, b))
-          if (ca && !candSet(b) && !deadSet(b) && !coreSet(b)) nbrs += b
-          if (cb && !candSet(a) && !deadSet(a) && !coreSet(a)) nbrs += a
-        }
-      }
-      val found = memberOf(nbrs.toSet)
-      coreSet ++= found
-      front = nbrs.toSet -- found
-    }
-
-    // in-memory peel with carried boundary degrees: anchors (stored-
-    // core neighbors) never peel; cascade candidates below k
-    val adj = collection.mutable.Map.empty[Long, List[Long]].withDefaultValue(Nil)
-    val anch = collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
-    edgeSet.foreach { case (a, b) =>
-      val ca = candSet(a); val cb = candSet(b)
-      if (ca && cb) { adj(a) = b :: adj(a); adj(b) = a :: adj(b) }
-      else if (ca && coreSet(b)) anch(a) += 1
-      else if (cb && coreSet(a)) anch(b) += 1
-    }
-    val live = collection.mutable.Set.empty[Long] ++= candSet
-    val liveDeg = collection.mutable.Map.empty[Long, Int]
-    candSet.foreach(c => liveDeg(c) = anch(c) + adj(c).size)
-    val q = collection.mutable.Queue.empty[Long]
-    candSet.foreach(c => if (liveDeg(c) < k) q.enqueue(c))
-    while (q.nonEmpty) {
-      val c = q.dequeue()
-      if (live(c)) {
-        live -= c
-        adj(c).foreach { nb =>
-          if (live(nb)) {
-            liveDeg(nb) -= 1
-            if (liveDeg(nb) == k - 1) q.enqueue(nb)
-          }
-        }
-      }
-    }
-
-    // stored-core degree increments: edges to SURVIVING candidates
-    // only (a dead or peeled neighbor is outside the new core, as it
-    // was outside the old one)
-    val inc = collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
-    edgeSet.foreach { case (a, b) =>
-      if (live(a) && coreSet(b)) inc(b) += 1L
-      else if (live(b) && coreSet(a)) inc(a) += 1L
-    }
-    val survDf = live.toSeq.map(c => (c, liveDeg(c).toLong))
-      .toDF("vec_id", "deg")
-    val incDf = inc.toSeq.toDF("vec_id", "inc")
-    // carried rows stream past one broadcast of the (delta-bounded)
-    // increments; converged is TRUE by construction — the carried
-    // rows were a verified fixpoint and the driver peel ran to its
-    // own fixpoint
-    Right(prevKcore.select(col("vec_id"), col("deg"))
-      .join(broadcast(incDf), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        (col("deg") + coalesce(col("inc"), lit(0L))).as("deg"))
-      .unionByName(survDf)
-      .withColumn("converged", lit(true)))
-  }
-
-  /** Incremental path. The pair delta is ADDITIONS-ONLY (pairs/ is
-    * append-only between full rebuilds — [[statsDeltaGens]]'s
-    * coverage invariant), and edge additions can only MERGE
-    * components, never split them. So the ASSIGNMENT tables need no
-    * fixpoint over any affected subgraph: contract every previous
-    * component to its label, map the delta edges' endpoints through
-    * the previous assignment (self for nodes the previous state
-    * doesn't know), and run CC over that contracted graph — an input
-    * BOUNDED BY THE DELTA regardless of how large the components it
-    * touches are. The r14 formulation re-ran star-contraction over
-    * the affected components' FULL edge sets, which degenerates to
-    * the full path whenever the delta touches a big component — the
-    * per-phase `TIMINGS` breakdown (r15) measured incremental ≈ full
-    * at ×10 probe scale for exactly that reason. Label exactness:
-    * star CC assigns the contracted group its minimum node id = min
-    * over (previous labels ∪ new ids) = the merged component's
-    * minimum node id, the full path's label.
-    *
-    * The community census then updates ARITHMETICALLY: a merged
-    * group's n_nodes = Σ previous n_nodes + its distinct new nodes,
-    * n_edges = Σ previous n_edges + its delta edges (delta pairs are
-    * globally distinct new rows — every append's pairs touch a
-    * vector no earlier generation knew). Previous clusters whose
-    * label doesn't appear in the contracted CC output carry their
-    * label unchanged (coalesce) — including clusters whose delta
-    * edges are all INTERNAL (contracted self-loops, dropped by CC
-    * but still counted into n_edges).
-    *
-    * Only the k-core PEEL still runs over the affected components'
-    * edge sets: added edges change degrees and peeling cascades, so
-    * the subgraph fixpoint is semantic there, not an implementation
-    * shortcut. The judged spec proves incremental ≡ full against a
-    * live recompute across a cluster-merging append and a
-    * compaction.
-    *
-    * Plan shape: the caller's [[ccDeltaBudget]] admission guard makes
-    * every delta-derived frame broadcast-safe, so each corpus-sized
-    * table here (the two assignment tables, prevKcore, communities)
-    * participates only in broadcast hash joins — streamed once,
-    * never shuffled. The only shuffles are over delta-bounded or
-    * affected-subgraph frames.
-    */
-  private def incrementalComponentTables(s: SparkSession, pairs: DataFrame,
-      delta: DataFrame, prevDir: String, target: String): Seq[(String, Double)] = {
-    val walls = collection.mutable.Buffer.empty[(String, Double)]
-    floorWall(walls, "cc_kcore") {
-    // ---- k-core floor (pairs/ stores only w ≥ CoreWmin rows)
-    val prevCcCore = s.read.parquet(s"$prevDir/cc_core") // (vec_id, cluster)
-    val prevKcore = s.read.parquet(s"$prevDir/kcore")    // (vec_id, deg, converged)
-    val coreEdges = Dedup.cacheSlot("gstats-core-edges",
-      pairs.filter(col("w") >= CoreWmin).select(col("id_a"), col("id_b")))
-    val prevCoreCc = prevCcCore.select(col("vec_id").as("doc_id"), col("cluster"))
-    val deltaCore = delta.filter(col("w") >= CoreWmin)
-      .select(col("id_a"), col("id_b")).persist()
-    val mergedCore = Dedup.cacheSlot("gstats-core-merged",
-      Corpus.connectedComponentsStar(
-        contractedPairs(deltaCore, prevCoreCc), "ea", "eb"))
-    val relabelCore = mergedCore
-      .select(col("doc_id").as("cluster"), col("cluster").as("nc"))
-    val affNodesC = deltaCore.select(col("id_a").as("doc_id"))
-      .union(deltaCore.select(col("id_b").as("doc_id"))).distinct().persist()
-    // every frame broadcast below is delta-bounded BY THE ADMISSION
-    // GUARD (ccDeltaBudget), so each corpus-sized table in this
-    // function is STREAMED past a broadcast hash — scanned, never
-    // shuffled; the previous-assignment lookup for the delta's
-    // endpoints is one such scan
-    val affKnownC = prevCoreCc.join(broadcast(affNodesC), "doc_id").persist()
-    val affClustersC = affKnownC.select("cluster").distinct()
-    val carriedCc = prevCoreCc
-      .join(broadcast(affClustersC), Seq("cluster"), "left_anti").persist()
-    // affected components' assignment: previous rows remapped through
-    // the contracted CC + the delta's new nodes (every new node has a
-    // non-self contracted edge — ids are unique — so it has a row)
-    val subCc = prevCoreCc.join(broadcast(affClustersC), Seq("cluster"))
-      .join(broadcast(relabelCore), Seq("cluster"), "left")
-      .select(col("doc_id"), coalesce(col("nc"), col("cluster")).as("cluster"))
-      .unionByName(affNodesC
-        .join(affKnownC.select("doc_id"), Seq("doc_id"), "left_anti")
-        .join(mergedCore, "doc_id"))
-    // ---- the k-core table: seeded bounded maintenance first
-    // ([[seededKcore]] — work bounded by the changed-degree region,
-    // the r15 verdict's top gap), witnessed declines fall back to the
-    // affected-component subpeel, ITSELF behind [[kcorePeelBudget]]
-    // (the second witnessed decline: past it the floor runs the exact
-    // full peel and records the fact, instead of wearing the
-    // incremental label at full-path cost)
-    floorWall(walls, "cc_kcore_peel") { seededKcore(s, coreEdges, prevKcore, deltaCore) match {
-      case Right(kc) =>
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(target, "KCORE_MODE"), "seeded")
-        sortedStatsWrite(kc, s"$target/kcore", col("vec_id"))
-      case Left(reason) =>
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(target, "KCORE_DECLINE"), reason)
-        // the subpeel runs over the affected components' full edge
-        // set — degree cascades are not contractible, so its cost is
-        // bounded by the touched components, and the peel budget
-        // makes that an enforced precondition
-        val subNodes = prevCoreCc.join(broadcast(affClustersC), "cluster")
-          .select("doc_id")
-          .union(affNodesC).distinct()
-        val peelBudget = kcorePeelBudget(s)
-        val overPeel = peelBudget >= Int.MaxValue.toLong - 1 ||
-          subNodes.limit(peelBudget.toInt + 1).count() > peelBudget
-        if (overPeel) {
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(target, "KCORE_MODE"), "full")
-          sortedStatsWrite(kcoreOn(coreEdges
-              .select(col("id_a").as("src"), col("id_b").as("dst"))),
-            s"$target/kcore", col("vec_id"))
-        } else {
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(target, "KCORE_MODE"), "subpeel")
-          val subEdges = coreEdges
-            .join(subNodes.select(col("doc_id").as("id_a")), "id_a")
-            .persist()
-          val subKcore = kcoreOn(
-            subEdges.select(col("id_a").as("src"), col("id_b").as("dst")))
-          // carried k-core rows = previous rows outside the affected
-          // components: an anti join against subNodes (≡ the old
-          // prevKcore ⋈ carriedCc, since kcore nodes ⊆ cc_core nodes
-          // and new nodes are never in prevKcore) — subNodes is
-          // usually small enough for AQE to broadcast, where the old
-          // form shuffled two corpus-sized tables
-          val carriedKcore = prevKcore
-            .join(subNodes.select(col("doc_id").as("vec_id")),
-              Seq("vec_id"), "left_anti")
-          // the converged attestation is GLOBAL in the full
-          // formulation (every row carries the same bit) — combine:
-          // carried rows all converged previously AND the sub peel
-          // converged now
-          val carriedBit = carriedKcore
-            .agg(coalesce(min(col("converged")), lit(true)).as("cb"))
-          val subBit = subKcore
-            .agg(coalesce(min(col("converged")), lit(true)).as("sb"))
-          sortedStatsWrite(carriedKcore.select("vec_id", "deg")
-            .unionByName(subKcore.select("vec_id", "deg"))
-            .crossJoin(broadcast(carriedBit)).crossJoin(broadcast(subBit))
-            .select(col("vec_id"), col("deg"),
-              (col("cb") && col("sb")).as("converged")),
-            s"$target/kcore", col("vec_id"))
-          subEdges.unpersist()
-          ()
-        }
-    } }
-    sortedStatsWrite(carriedCc.unionByName(subCc)
-      .select(col("doc_id").as("vec_id"), col("cluster")),
-      s"$target/cc_core", col("vec_id"))
-    carriedCc.unpersist()
-    affKnownC.unpersist(); affNodesC.unpersist(); deltaCore.unpersist()
-    }
-    floorWall(walls, "cc_comm") {
-    // ---- community floor: contracted merge + arithmetic census —
-    // no community-floor edge scan at all; every frame below is
-    // bounded by the delta or by the (row-per-cluster) census table
-    // except the one linear remap over the assignment table
-    val prevCcComm = s.read.parquet(s"$prevDir/cc_comm") // (doc_id, cluster)
-    val prevComms = s.read.parquet(s"$prevDir/communities")
-    val deltaComm = delta.filter(col("w") >= CommWmin)
-      .select(col("id_a"), col("id_b")).persist()
-    val contracted = contractedPairs(deltaComm, prevCcComm).persist()
-    val mergedComm = Dedup.cacheSlot("gstats-comm-merged",
-      Corpus.connectedComponentsStar(contracted, "ea", "eb"))
-    val relabelComm = mergedComm
-      .select(col("doc_id").as("cluster"), col("cluster").as("nc"))
-    val affNodesM = deltaComm.select(col("id_a").as("doc_id"))
-      .union(deltaComm.select(col("id_b").as("doc_id"))).distinct().persist()
-    val affKnownM = prevCcComm.join(broadcast(affNodesM), "doc_id").persist()
-    val newCcM = affNodesM
-      .join(affKnownM.select("doc_id"), Seq("doc_id"), "left_anti")
-      .join(mergedComm, "doc_id").persist()
-    // assignment: one linear remap (unaffected labels miss → carry) —
-    // a broadcast outer join, so the corpus-sized table never shuffles
-    sortedStatsWrite(
-      prevCcComm.join(broadcast(relabelComm), Seq("cluster"), "left")
-        .select(col("doc_id"), coalesce(col("nc"), col("cluster")).as("cluster"))
-        .unionByName(newCcM),
-      s"$target/cc_comm", col("doc_id"))
-    // census: every contracted group has ≥1 delta edge, so the
-    // per-group delta-edge counts are the base frame
-    val affClustersM = affKnownM.select("cluster").distinct()
-    val edgePart = contracted
-      .join(broadcast(relabelComm.select(col("cluster").as("ea"), col("nc"))),
-        Seq("ea"), "left")
-      .select(coalesce(col("nc"), col("ea")).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("de"))
-    val prevPart = prevComms.join(broadcast(affClustersM), Seq("cluster"))
-      .join(broadcast(relabelComm), Seq("cluster"), "left")
-      .select(coalesce(col("nc"), col("cluster")).as("g"),
-        col("n_nodes"), col("n_edges"))
-      .groupBy("g").agg(sum("n_nodes").as("pn"), sum("n_edges").as("pe"))
-    val newPart = newCcM.groupBy(col("cluster").as("g"))
-      .agg(count(lit(1)).as("nn"))
-    val mergedRows = edgePart
-      .join(prevPart, Seq("g"), "left").join(newPart, Seq("g"), "left")
-      .select(col("g").as("cluster"),
-        (coalesce(col("pn"), lit(0L)) + coalesce(col("nn"), lit(0L))).as("n_nodes"),
-        (coalesce(col("pe"), lit(0L)) + col("de")).as("n_edges"))
-      .select(col("cluster"), col("n_nodes"), col("n_edges"),
-        expr("(2000000 * n_edges) div (n_nodes * (n_nodes - 1))")
-          .as("density_ppm"))
-    sortedStatsWrite(
-      prevComms.join(broadcast(affClustersM), Seq("cluster"), "left_anti")
-        .unionByName(mergedRows)
-        .select("cluster", "n_nodes", "n_edges", "density_ppm"),
-      s"$target/communities", col("cluster"))
-    newCcM.unpersist(); affKnownM.unpersist(); affNodesM.unpersist()
-    contracted.unpersist(); deltaComm.unpersist()
-    ()
-    }
-    walls.toSeq
-  }
-
-  /** Delta edges with endpoints CONTRACTED through a previous
-    * assignment: (ea, eb) where each endpoint becomes its previous
-    * cluster label, or itself when the previous state doesn't know it
-    * (a node added inside the replayed gen range). CC over this frame
-    * is the merge structure of the additions — input bounded by the
-    * delta, never by the components it touches.
-    */
-  private def contractedPairs(deltaEdges: DataFrame, prevCc: DataFrame): DataFrame = {
-    // previous labels for exactly the delta's endpoints, fetched by
-    // STREAMING the corpus-sized assignment past a broadcast of the
-    // (admission-guard-bounded) endpoint set — a left join against
-    // prevCc directly would shuffle the whole assignment table twice
-    val ids = deltaEdges.select(col("id_a").as("doc_id"))
-      .union(deltaEdges.select(col("id_b").as("doc_id"))).distinct()
-    val lab = prevCc.join(broadcast(ids), "doc_id")
-    deltaEdges
-      .join(broadcast(lab.select(col("doc_id").as("id_a"), col("cluster").as("ca"))),
-        Seq("id_a"), "left")
-      .join(broadcast(lab.select(col("doc_id").as("id_b"), col("cluster").as("cb"))),
-        Seq("id_b"), "left")
-      .select(coalesce(col("ca"), col("id_a")).as("ea"),
-        coalesce(col("cb"), col("id_b")).as("eb"))
   }
 
   /** Graph-ANN serving parameters: beam width, hop BUDGET (the loop
@@ -2507,9 +1373,8 @@ object Graph {
   /** One full build of the three stratified tables from a (vec_id,
     * embedding, stratum) frame — shared by the build-once path
     * ([[ensureStratumGraph]], gen 0) and the cap-staleness rebuild
-    * ([[appendStratumGraph]]'s trigger). Writes the same content meta
-    * as [[writeGraphTables]]: generation, zeroed crossed-bucket
-    * counter, fresh build identity.
+    * ([[appendStratumGraph]]'s trigger). Writes the version's content
+    * meta: its generation and a zeroed crossed-bucket counter.
     */
   private def writeStratumTables(s: SparkSession, vecs: DataFrame,
       target: String, gen: Long): Unit = {
@@ -2572,9 +1437,6 @@ object Graph {
         .parquet(s"$target/edges")
       writeMetaLong(target, ".gen", gen)
       writeMetaLong(target, ".crossed", 0L)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(target, ".build"),
-        java.util.UUID.randomUUID().toString)
       ()
   }
 
@@ -2685,8 +1547,6 @@ object Graph {
             })
           writeMetaLong(target, ".gen", prevGen + 1)
           writeMetaLong(target, ".crossed", prevCrossed + crossedNow)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(target, ".build"), graphBuildId(prev))
           val keptKeys = newCnt
             .join(s.read.parquet(s"$target/bsizes"), key, "left")
             .filter(col("nn") + coalesce(col("n"), lit(0L)) <= Dedup.MaxBucket)
@@ -2873,8 +1733,8 @@ object Graph {
 
   /** Rewrite the stratified tables back to one sorted run per
     * directory partition and reclaim superseded versions — the
-    * [[compactKnnGraph]] discipline. Content identical: generation,
-    * crossed-bucket counter, and build identity carry through.
+    * [[compactKnnGraph]] discipline. Content identical: generation
+    * and crossed-bucket counter carry through.
     */
   def compactStratumGraph(s: SparkSession, d: String,
       onlyIfFragmented: Boolean = false): String = synchronized {
@@ -2906,8 +1766,6 @@ object Graph {
             .parquet(s"$target/edges")
           writeMetaLong(target, ".gen", graphGen(cur))
           writeMetaLong(target, ".crossed", graphCrossedBuckets(cur))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(target, ".build"), graphBuildId(cur))
         }
       }
     }
@@ -3825,8 +2683,7 @@ object Graph {
     * its predecessor — is exactly the fixed-CoreIters unroll the
     * oracle computes.
     */
-  def kcoreOn(edges: DataFrame, k: Int = CoreK,
-      edgeFloor: Option[Long] = None): DataFrame = {
+  def kcoreOn(edges: DataFrame, k: Int = CoreK): DataFrame = {
     val s = edges.sparkSession
     val und0 = edges
       .select(least(col("src"), col("dst")).as("a"),
@@ -3838,16 +2695,11 @@ object Graph {
     // bounded-round semantics below (synchronous removal rounds,
     // CoreIters cap, converged flag, deg>0 output filter) — the
     // distributed decrement loop is the past-budget scale path.
-    // edgeFloor: stored-count pre-check, the Corpus CC contract — a
-    // lower bound over the budget skips the probe collect entirely.
     val budget = Corpus.driverEdgeBudget(s)
-    if (!edgeFloor.exists(_ > budget)) {
-      val probe = und0.take(budget + 1)
-      if (probe.length <= budget) {
-        lastPeelMode = "driver"
-        return driverKcore(s, probe, k)
-      }
-      Corpus.declinedProbes.incrementAndGet()
+    val probe = und0.take(budget + 1)
+    if (probe.length <= budget) {
+      lastPeelMode = "driver"
+      return driverKcore(s, probe, k)
     }
     lastPeelMode = "distributed"
     val loopParts = Corpus.loopPartsFor(und0.count(), s.sparkContext.defaultParallelism)

@@ -46,10 +46,10 @@ object StreamingGraphIngest {
     * `statsMaxLag`: when set, each batch also keeps the derived
     * analytics artifact within that staleness budget — every graph
     * append bumps the content generation, and
-    * [[Graph.ensureGraphStats]] with a lag budget rebuilds the six
-    * stats tables only once the live graph is more than `statsMaxLag`
-    * generations ahead of the stamped version. This amortizes the
-    * full-analytics recompute across N micro-batches instead of
+    * [[Graph.ensureGraphStats]] with a lag budget recomputes the five
+    * stats tables, in full, only once the live graph is more than
+    * `statsMaxLag` generations ahead of the stamped version. This
+    * amortizes that recompute across N micro-batches instead of
     * paying it on the first analytic read after EVERY batch (the
     * rebuild-per-consumer thrash the stored graph itself eliminated
     * one layer down). None (the default) leaves stats maintenance to

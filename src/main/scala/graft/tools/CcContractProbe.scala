@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Scratch probe: the local-contraction prelude's effect on the
   * forced-distributed star CC, in both regimes —
   *
-  *  1. the CensusProbe x10 real core graph (~1.9M edges, E/V ≈ 3:
+  *  1. the core pair graph of the sf0.1 corpus replicated x10 (the
+  *     CcPathProbe fixture; ~1.9M edges, E/V ≈ 3:
   *     sparse, contraction expected to stall after one level); and
   *  2. a duplication-heavy family graph (families of 1000, degree 50,
   *     E/V ≈ 44: the boilerplate-crawl shape that actually blows the

@@ -3,8 +3,10 @@ import graft.core.Tables
 import graft.operators.{Corpus, Dedup, Graph}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-/** Scratch probe: isolate the cc_core CC term of the full stats build
-  * at CensusProbe's x10 replication.
+/** Scratch probe: the k-core peel and star CC over the core pair
+  * graph (w ≥ CoreWmin) of the sf0.1 corpus replicated ×10 (each
+  * replica's embeddings perturbed by one sign flip, so replicas land
+  * in distinct buckets), timed on the driver and distributed paths.
   */
 object CcPathProbe {
   def main(args: Array[String]): Unit = {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * [[Graph.ensureGraphStats]] call under a lag budget) with
   * `maxLagGen` 0 (strict: rebuild after every batch — what a
   * registered query demands) vs 4 (the amortizing policy), and report
-  * how many six-table stats rebuilds actually ran and what they cost
+  * how many five-table stats rebuilds actually ran and what they cost
   * in total. The policy's claim: a live stream amortizes the rebuild
   * across `maxLagGen` batches, paying ~N/(lag+1) rebuilds instead of
   * N, while any strict consumer arriving at the end pays exactly one

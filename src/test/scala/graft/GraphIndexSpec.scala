@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Corpus, Dedup, Graph}
+import graft.operators.{Dedup, Graph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,17 +29,6 @@ class GraphIndexSpec extends SparkSuite {
   private def pairSet(df: DataFrame): Set[(Long, Long, Long)] =
     df.select(col("id_a"), col("id_b"), col("w"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-
-  /** The incremental components machinery only runs past the driver
-    * edge budget (the r17 small-graph admission prefers the exact
-    * full path below it, where the driver-served loops measure at or
-    * under the replay) — the specs that exercise that machinery at
-    * sf-scale pin the budget out of the way.
-    */
-  private def pastDriverBudget[T](f: => T): T = {
-    spark.conf.set("graft.graph.driverEdgeBudget", "-1")
-    try f finally spark.conf.unset("graft.graph.driverEdgeBudget")
-  }
 
   test("append ≡ one-shot rebuild for edges and pairs") {
     val (d, heldOut) = splitDataset()
@@ -300,15 +289,13 @@ class GraphIndexSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getLong(3))).toSet
     val (e1, r1) = (edgesOf(v1), routingOf(v1))
-    val (g1, c1, b1) = (Graph.graphGen(v1), Graph.graphCrossedBuckets(v1),
-      Graph.graphBuildId(v1))
+    val (g1, c1) = (Graph.graphGen(v1), Graph.graphCrossedBuckets(v1))
     val v2 = Graph.compactStratumGraph(spark, d)
     assert(v2 !== v1)
     assert(edgesOf(v2) === e1, "compaction must preserve edge content")
     assert(routingOf(v2) === r1, "compaction must preserve routing content")
-    assert((Graph.graphGen(v2), Graph.graphCrossedBuckets(v2),
-        Graph.graphBuildId(v2)) === ((g1, c1, b1)),
-      "compaction serves identical content: generation, staleness counter, and lineage carry")
+    assert((Graph.graphGen(v2), Graph.graphCrossedBuckets(v2)) === ((g1, c1)),
+      "compaction serves identical content: generation and staleness counter carry")
     Dedup.releaseSlots()
   }
 
@@ -476,6 +463,56 @@ class GraphIndexSpec extends SparkSuite {
     val got = spark.read.parquet(s"$stats1/pagerank")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === want, "stored pagerank must equal live computation")
+    // all five served tables equal a stats build over a one-shot graph
+    // of the same vectors
+    val oneShot = tmpDir("gix1")
+    full.write.parquet(s"$oneShot/embeddings.parquet")
+    val statsOne = Graph.ensureGraphStats(spark, oneShot)
+    Dedup.releaseSlots()
+    val served = Seq("pagerank", "ppr", "triangles", "kcore", "communities")
+    for (t <- served) {
+      def rows(v: String) = spark.read.parquet(s"$v/$t").collect().toSet
+      assert(rows(stats1) === rows(statsOne),
+        s"$t after an append must equal the one-shot graph's $t")
+    }
+    // a stats version holds the served tables and its two stamps only,
+    // and a graph version holds its four tables only (no delta logs)
+    def entries(v: String) = Option(new java.io.File(v).list())
+      .getOrElse(Array.empty[String]).filterNot(_.startsWith(".")).toSet
+    assert(entries(stats1) === (served ++ Seq("GRAPH_GEN", "GRAPH_BUILD")).toSet)
+    assert(entries(Graph.ensureKnnGraph(spark, d)) ===
+      Set("edges", "pairs", "buckets", "bsizes"))
+  }
+
+  test("graph_stats never serves another build's tables: a rebuilt graph appended back to the stamped generation gets new stats") {
+    // stats stamped at gen 1 under build A; the graph artifact is
+    // destroyed and rebuilt (gen 0, build B), and one append brings it
+    // back to gen 1 — the stamped generation matches, the graph does not
+    val (d, heldOut) = splitDataset()
+    val base = graft.core.Tables.embeddings(spark, d)
+    Graph.appendKnnGraph(spark, d, heldOut.filter(col("vec_id") % 20 === 0), base)
+    val statsA = Graph.ensureGraphStats(spark, d)
+    val buildA = Graph.graphBuildId(Graph.ensureKnnGraph(spark, d))
+    assert(buildA.nonEmpty, "every full build must stamp a lineage nonce")
+    val adir = graft.core.ArtifactStore.artifactDir("knn_graph", d, Graph.GraphTag)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
+    }
+    rm(new java.io.File(adir))
+    Dedup.releaseSlots()
+    val buildB = Graph.graphBuildId(Graph.ensureKnnGraph(spark, d))
+    assert(buildB !== buildA, "a rebuild must start a fresh lineage")
+    Graph.appendKnnGraph(spark, d, heldOut.filter(col("vec_id") % 20 =!= 0), base)
+    val gdir = Graph.ensureKnnGraph(spark, d)
+    assert(Graph.graphGen(gdir) === 1L)
+    val statsB = Graph.ensureGraphStats(spark, d)
+    Dedup.releaseSlots()
+    assert(statsB !== statsA, "build A's stats must not serve build B's graph")
+    assert(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(statsB, "GRAPH_BUILD")).trim === buildB)
+    val nNodes = spark.read.parquet(s"$gdir/buckets").select("vec_id").distinct().count()
+    assert(spark.read.parquet(s"$statsB/triangles").head().getLong(0) === nNodes,
+      "the served census must count the live graph's nodes")
   }
 
   test("compaction carries the content generation — stats serve without a rebuild") {
@@ -487,7 +524,7 @@ class GraphIndexSpec extends SparkSuite {
     assert(Graph.graphGen(Graph.ensureKnnGraph(spark, d)) === genBefore,
       "compaction serves identical content: the generation must not move")
     assert(Graph.ensureGraphStats(spark, d) === stats0,
-      "a layout-only rewrite must not thrash the six-table stats rebuild")
+      "a layout-only rewrite must not thrash the five-table stats rebuild")
   }
 
   test("cap-crossing staleness is counted in the version meta and heals via the triggered rebuild") {
@@ -656,367 +693,33 @@ class GraphIndexSpec extends SparkSuite {
 
   test("full triangle census: driver greater-neighbor intersection ≡ distributed 3-way wedge join, table for table") {
     // identical corpus in two dataset dirs → two independent stats
-    // builds, one per serve path; deg/ and triangles/ must be
-    // row-identical
+    // builds, one per serve path; triangles/ must be row-identical,
+    // and neither path leaves its working degree table in the version
     val fifty = graft.core.Tables.embeddings(spark, sf0001)
       .select("vec_id", "embedding").orderBy("vec_id").limit(120)
-    def build(budget: String): (Set[(Long, Long)], Seq[Long]) = {
+    def build(budget: String): Seq[Long] = {
       val d = tmpDir("gtc")
       fifty.write.parquet(s"$d/embeddings.parquet")
       spark.conf.set("graft.graph.driverEdgeBudget", budget)
       try {
         val v = Graph.ensureGraphStats(spark, d)
         Dedup.releaseSlots()
-        val deg = spark.read.parquet(s"$v/deg")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(!new java.io.File(s"$v/deg").exists(), s"budget $budget left deg/")
         val tri = spark.read.parquet(s"$v/triangles").head()
-        (deg, (0 until 5).map(tri.getLong))
+        (0 until 5).map(tri.getLong)
       } finally spark.conf.unset("graft.graph.driverEdgeBudget")
     }
-    val (degD, triD) = build("1000000")
+    val triD = build("1000000")
     assert(Graph.lastCensusMode === "driver")
-    val (degX, triX) = build("-1")
+    val triX = build("-1")
     assert(Graph.lastCensusMode === "distributed")
-    assert(degD === degX, "deg tables diverge across census serve paths")
     assert(triD === triX, "triangle census rows diverge across serve paths")
     assert(triD(3) > 0L, "fixture must actually contain triangles")
   }
 
-  test("small-graph admission: below the driver budget a refresh prefers the exact full path, witnessed; past it the replay readmits") {
-    val (d, heldOut) = splitDataset()
-    val base = graft.core.Tables.embeddings(spark, d)
-    Graph.ensureGraphStats(spark, d)
-    Graph.appendKnnGraph(spark, d, heldOut, base)
-    // default budget: the sf-scale pair graph sits far below it, so
-    // the refresh runs the full path (driver-served loops) and says so
-    val stats1 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphStatsMode(stats1) === "full",
-      "below the budget the full path is the cheaper exact path")
-    assert(Graph.graphStatsDecline(stats1) === "small_graph",
-      "the admission must be witnessed, not inferred from timing")
-    // past the budget (forced) the same logs admit the replay — the
-    // incremental machinery is reserved for the regime it exists for.
-    // `extra` deliberately DUPLICATES an existing vec_id (a caller
-    // ledger violation the append survives): the resulting stored
-    // self-pair once contracted a zero-node comm group and divided
-    // the census by zero — the replay must drop self-pairs like the
-    // full path's CC input does (regression)
-    val extra = graft.core.Tables.embeddings(spark, sf0001)
-      .select("vec_id", "embedding")
-      .orderBy(col("vec_id").desc).limit(1)
-    Graph.appendKnnGraph(spark, d, extra,
-      base.select("vec_id", "embedding").unionByName(heldOut))
-    val stats2 = pastDriverBudget { Graph.ensureGraphStats(spark, d) }
-    Dedup.releaseSlots()
-    assert(Graph.graphStatsMode(stats2) === "incremental",
-      "past the budget the pair-delta replay readmits")
-  }
-
-  test("stored-count pre-check: a known-over-budget refresh declines every loop with zero probe collects") {
-    // r17 VERDICT #2: the first over-budget refresh pays one fused
-    // take(budget+1) collect per loop to learn "no"; the counts it
-    // OBSERVES (census n_edges, PAIR_EDGE_COUNTS) must make every
-    // subsequent same-lineage refresh's decline free — zero probe
-    // collects, witnesses unchanged.
-    val (d, heldOut) = splitDataset()
-    val base = graft.core.Tables.embeddings(spark, d)
-    Graph.ensureKnnGraph(spark, d)
-    def refresh(): (String, Long) = {
-      spark.conf.set("graft.graph.driverEdgeBudget", "1")
-      try {
-        val before = Corpus.declinedProbes.get()
-        val v = Graph.ensureGraphStats(spark, d)
-        (v, Corpus.declinedProbes.get() - before)
-      } finally spark.conf.unset("graft.graph.driverEdgeBudget")
-    }
-    val (stats1, paid1) = refresh()
-    assert(Graph.graphStatsMode(stats1) === "full")
-    assert(paid1 === 5L,
-      "first refresh has no stored counts: rank + census + peel + " +
-        s"core-cc + comm-cc must each pay one declined probe, got $paid1")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(stats1, "PAIR_EDGE_COUNTS")),
-      "the full build must record the pair counts it observed")
-    // append (same lineage, gen+1), then force BOTH incremental paths
-    // to decline so the full loops run again — now with floors
-    Graph.appendKnnGraph(spark, d, heldOut, base)
-    spark.conf.set("graft.stats.ccDeltaBudget", "0")
-    spark.conf.set("graft.census.adjBudget", "0")
-    val (stats2, paid2) = try refresh() finally {
-      spark.conf.unset("graft.stats.ccDeltaBudget")
-      spark.conf.unset("graft.census.adjBudget")
-    }
-    Dedup.releaseSlots()
-    assert(stats2 !== stats1)
-    assert(Graph.graphStatsMode(stats2) === "full")
-    assert(paid2 === 0L,
-      s"steady-state over-budget refresh must run ZERO probe collects, paid $paid2")
-    // witnesses unchanged: every loop still reports the scale path
-    assert(Graph.lastRankMode === "distributed")
-    assert(Graph.lastCensusMode === "distributed")
-    assert(Graph.lastPeelMode === "distributed")
-    assert(Corpus.lastCcMode === "distributed")
-    // and the floored distributed loops still wrote the same tables a
-    // probed distributed refresh writes: spot-check the census row
-    val t1 = spark.read.parquet(s"$stats2/triangles").head()
-    assert(t1.getLong(1) > 0L, "census n_edges must be live, not zeroed")
-  }
-
-  test("graph_stats incremental refresh: component-scoped recompute ≡ full; survives compaction via the gen-keyed pair-delta logs") {
-    pastDriverBudget {
-    import org.apache.spark.sql.functions.{expr, least, greatest}
-    val (d, heldOut) = splitDataset()
-    val base = graft.core.Tables.embeddings(spark, d)
-    val stats0 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphStatsMode(stats0) === "full",
-      "the first build has no previous version to scope against")
-    // append the held-out tenth — pairs/ gains delta files, so the
-    // next stats build can identify the delta and re-run the CC/peel
-    // fixpoints on affected components only
-    Graph.appendKnnGraph(spark, d, heldOut, base)
-    val stats1 = Graph.ensureGraphStats(spark, d)
-    assert(stats1 !== stats0)
-    assert(Graph.graphStatsMode(stats1) === "incremental",
-      "an append-only pairs delta must take the component-scoped path")
-    assert(Graph.graphKcoreMode(stats1) === "seeded",
-      "an in-budget delta must take the seeded bounded k-core path — " +
-        s"declined: '${Graph.graphKcoreDecline(stats1)}'")
-    // ≡ full: stored k-core and census equal a live recompute over the
-    // union corpus (the pagerank test's discipline, for the two tables
-    // the incremental path actually assembles from carried + sub rows)
-    val full = graft.core.Tables.embeddings(spark, sf0001)
-    val pairs = Graph.scoredPairsOn(full)
-    val wantKcore = Graph.kcoreOn(pairs
-        .filter(col("w") >= Graph.CoreWmin)
-        .select(col("id_a").as("src"), col("id_b").as("dst")))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val gotKcore = spark.read.parquet(s"$stats1/kcore")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(gotKcore === wantKcore,
-      s"incremental k-core must equal full recompute (missing ${(wantKcore -- gotKcore).take(5)}, extra ${(gotKcore -- wantKcore).take(5)})")
-    val commEdges = pairs.filter(col("w") >= Graph.CommWmin)
-      .select("id_a", "id_b")
-    val cc = Corpus.connectedComponentsStar(commEdges, "id_a", "id_b")
-    val sizes = cc.groupBy("cluster").agg(count(lit(1)).as("n_nodes"))
-    val ecount = commEdges
-      .join(cc.select(col("doc_id").as("id_a"), col("cluster")), "id_a")
-      .groupBy("cluster").agg(count(lit(1)).as("n_edges"))
-    val wantComms = sizes.join(ecount, "cluster")
-      .select(col("cluster"), col("n_nodes"), col("n_edges"),
-        expr("(2000000 * n_edges) div (n_nodes * (n_nodes - 1))").as("density_ppm"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val gotComms = spark.read.parquet(s"$stats1/communities")
-      .select("cluster", "n_nodes", "n_edges", "density_ppm")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    Dedup.releaseSlots()
-    assert(gotComms === wantComms,
-      s"incremental census must equal full recompute (missing ${(wantComms -- gotComms).take(5)}, extra ${(gotComms -- wantComms).take(5)})")
-    // the carried+sub assignment tables cover exactly the live CC
-    val wantCc = cc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val gotCc = spark.read.parquet(s"$stats1/cc_comm")
-      .select("doc_id", "cluster")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseSlots()
-    assert(gotCc === wantCc, "carried+sub assignments must equal live CC")
-    // compaction rewrites the pair FILES but hard-links the pair_delta
-    // logs forward — the gen-keyed coverage check (the r14 port off
-    // PAIR_FILES file-set identity) must keep the component path
-    // incremental across it, and incremental ≡ full must still hold
-    Graph.compactKnnGraph(spark, d)
-    import spark.implicits._
-    val emb0 = full.select("embedding").limit(1)
-    val novel = spark.range(1).select(lit(7000000L).as("vec_id"))
-      .crossJoin(emb0)
-    Graph.appendKnnGraph(spark, d, novel,
-      base.select("vec_id", "embedding").unionByName(heldOut))
-    val stats2 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphStatsMode(stats2) === "incremental",
-      "a post-compaction append must STILL take the component-scoped path " +
-        "(gen-keyed pair-delta coverage survives the file rewrite)")
-    // ≡ full across the compaction boundary: carried+sub assignments
-    // equal a live CC over the union corpus including the novel vector
-    val corpus2 = full.select("vec_id", "embedding").unionByName(novel)
-    val wantCc2 = Corpus.connectedComponentsStar(
-        Graph.scoredPairsOn(corpus2).filter(col("w") >= Graph.CommWmin)
-          .select("id_a", "id_b"), "id_a", "id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseSlots()
-    val gotCc2 = spark.read.parquet(s"$stats2/cc_comm")
-      .select("doc_id", "cluster")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(gotCc2 === wantCc2,
-      "post-compaction incremental assignments must equal live CC")
-    }
-  }
-
-  test("cc admission guard: an over-budget pair delta declines to the exact full path with its witness; restored budget readmits") {
-    pastDriverBudget {
-    val (d, heldOut) = splitDataset()
-    val base = graft.core.Tables.embeddings(spark, d)
-    Graph.ensureGraphStats(spark, d)
-    val h1 = heldOut.filter(col("vec_id") % 20 === 0)
-    val h2 = heldOut.filter(col("vec_id") % 20 =!= 0)
-    Graph.appendKnnGraph(spark, d, h1, base)
-    try {
-      // zero budget: the contracted-merge path broadcasts ONLY
-      // delta-bounded frames — that bound is the admission guard, so
-      // an over-budget delta must decline to the exact full path
-      // BEFORE anything is built or broadcast, with the witness
-      // naming the guard
-      spark.conf.set("graft.stats.ccDeltaBudget", "0")
-      val stats1 = Graph.ensureGraphStats(spark, d)
-      Dedup.releaseSlots()
-      assert(Graph.graphStatsMode(stats1) === "full",
-        "an over-budget pair delta must decline to the full path")
-      assert(Graph.graphStatsDecline(stats1) === "delta_budget",
-        "the decline must carry the delta-budget witness")
-      // the declined path is the exact full recompute
-      val corpus1 = base.select("vec_id", "embedding").unionByName(h1)
-      val wantCc = Corpus.connectedComponentsStar(
-          Graph.scoredPairsOn(corpus1).filter(col("w") >= Graph.CommWmin)
-            .select("id_a", "id_b"), "id_a", "id_b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      Dedup.releaseSlots()
-      val gotCc = spark.read.parquet(s"$stats1/cc_comm")
-        .select("doc_id", "cluster")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(gotCc === wantCc, "declined path must equal live CC")
-    } finally spark.conf.unset("graft.stats.ccDeltaBudget")
-    // restored budget: the next generation readmits the incremental
-    // path with no decline witness — the injection is config, not a
-    // mode latch (the census guard test's discipline)
-    Graph.appendKnnGraph(spark, d, h2,
-      base.select("vec_id", "embedding").unionByName(h1))
-    val stats2 = Graph.ensureGraphStats(spark, d)
-    Dedup.releaseSlots()
-    assert(Graph.graphStatsMode(stats2) === "incremental",
-      "restored budget must readmit the contracted-merge path")
-    assert(Graph.graphStatsDecline(stats2) === "",
-      "an admitted refresh must carry no decline witness")
-    }
-  }
-
-  test("triangle census replays the edge-delta logs: multi-gen incremental ≡ full, survives compaction") {
-    pastDriverBudget {
-    val (d, heldOut) = splitDataset()
-    val stats0 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphTriMode(stats0) === "full",
-      "the first build has no previous census state to carry")
-    // TWO appends between stats refreshes: the census replay must NET
-    // the generations' logs (an edge added in gen 1 and evicted in
-    // gen 2 cancels; op=-1 rows witness the eviction path)
-    val h1 = heldOut.filter(col("vec_id") % 20 === 0)
-    val h2 = heldOut.filter(col("vec_id") % 20 =!= 0)
-    var corpus = graft.core.Tables.embeddings(spark, d)
-      .select("vec_id", "embedding")
-    Graph.appendKnnGraph(spark, d, h1, corpus)
-    corpus = corpus.unionByName(h1)
-    Graph.appendKnnGraph(spark, d, h2, corpus)
-    corpus = corpus.unionByName(h2)
-    val gdir = Graph.ensureKnnGraph(spark, d)
-    val ops = spark.read.parquet(
-      s"$gdir/edge_delta/gen=1", s"$gdir/edge_delta/gen=2")
-    assert(ops.filter(col("op") === -1).count() > 0,
-      "re-rank evictions must ride the log as op=-1 rows")
-    val stats1 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphTriMode(stats1) === "incremental",
-      "covered gen range + stored census state must take the replay path")
-    // ≡ full: census row and degree state equal a from-scratch
-    // computation over the live stored edges (append ≡ rebuild is
-    // already proven for the edges themselves)
-    def expectedCensus(): (Long, Long, Long, Long, Seq[(Long, Long)]) = {
-      val ed = Graph.storedEdges(spark, d).select("src", "dst")
-      val und = ed.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b")).distinct().persist()
-      val deg = und.select(col("a").as("v"))
-        .union(und.select(col("b").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("dg")).persist()
-      val nW = deg.agg(sum(expr("dg * (dg - 1) div 2"))).collect().head.getLong(0)
-      val nT = und.as("e1").join(und.as("e2"), col("e1.b") === col("e2.a"))
-        .join(und.as("e3"),
-          col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b")).count()
-      val nE = und.count()
-      val nN = spark.read.parquet(s"${Graph.ensureKnnGraph(spark, d)}/buckets")
-        .select("vec_id").distinct().count()
-      val degSet = deg.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      und.unpersist(); deg.unpersist()
-      (nN, nE, nW, nT, degSet)
-    }
-    def check(statsDir: String): Unit = {
-      val (nN, nE, nW, nT, degSet) = expectedCensus()
-      val row = spark.read.parquet(s"$statsDir/triangles").collect().head
-      assert((row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3)) ===
-        ((nN, nE, nW, nT)),
-        s"incremental census row must equal full recompute")
-      assert(row.getLong(4) === (if (nW > 0) (3000000L * nT) / nW else 0L))
-      val gotDeg = spark.read.parquet(s"$statsDir/deg")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(gotDeg.toSet === degSet.toSet,
-        "carried degree state must equal full recompute")
-    }
-    check(stats1)
-    // compaction retains the recent logs of BOTH families (hard-linked
-    // into the new version), so a post-compaction append still replays
-    // the census AND keeps the component-scoped path incremental
-    Graph.compactKnnGraph(spark, d)
-    import spark.implicits._
-    val emb0 = graft.core.Tables.embeddings(spark, d)
-      .select("embedding").limit(1)
-    val novel = spark.range(1).select(lit(1000000L).as("vec_id"))
-      .crossJoin(emb0)
-    Graph.appendKnnGraph(spark, d, novel, corpus)
-    val stats2 = Graph.ensureGraphStats(spark, d)
-    Dedup.releaseSlots()
-    assert(Graph.graphTriMode(stats2) === "incremental",
-      "compaction must not force the census replay back to the full path")
-    assert(Graph.graphStatsMode(stats2) === "incremental",
-      "compaction must not force the component path back to full either " +
-        "(gen-keyed pair-delta logs carried forward)")
-    check(stats2)
-    }
-  }
-
-  test("census cost model declines a bulk delta: logs present and covering, yet the full path runs") {
-    // a bulk append (90% of the corpus in one generation) nets far
-    // more directed ops than the replay is cheaper for — the refresh
-    // must take the exact full join even though the logs cover the
-    // range. sf0.1's 2000 vectors make the op count decisive.
-    val sf01 = "/root/testdata/sf0.1"
-    val d = tmpDir("gcm")
-    val full = graft.core.Tables.embeddings(spark, sf01)
-    full.filter(col("vec_id") % 10 === 0)
-      .write.parquet(s"$d/embeddings.parquet")
-    val base = graft.core.Tables.embeddings(spark, d)
-    val heldOut = full.filter(col("vec_id") % 10 =!= 0)
-      .select("vec_id", "embedding")
-    val stats0 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphTriMode(stats0) === "full")
-    Graph.appendKnnGraph(spark, d, heldOut, base)
-    val gdir = Graph.ensureKnnGraph(spark, d)
-    assert(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(s"$gdir/edge_delta/gen=1")),
-      "the append must have logged its generation")
-    val stats1 = Graph.ensureGraphStats(spark, d)
-    Dedup.releaseSlots()
-    assert(Graph.graphTriMode(stats1) === "full",
-      "a bulk delta must decline to the full path by the cost model")
-    // and the row is exact regardless of path
-    val ed = Graph.storedEdges(spark, d).select("src", "dst")
-    val und = ed.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct().persist()
-    val nE = und.count()
-    val nT = und.as("e1").join(und.as("e2"), col("e1.b") === col("e2.a"))
-      .join(und.as("e3"),
-        col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b")).count()
-    und.unpersist()
-    Dedup.releaseSlots()
-    val row = spark.read.parquet(s"$stats1/triangles").collect().head
-    assert((row.getLong(1), row.getLong(3)) === ((nE, nT)))
-  }
-
   test("graph_stats participates in version GC and vacuum: stale versions reclaimed, lock skip observable") {
     import java.nio.file.{Files, Paths}
-    // tiny corpus so the six-table stats rebuild is cheap per version
+    // tiny corpus so the five-table stats rebuild is cheap per version
     val d = tmpDir("gstgc")
     val forty = graft.core.Tables.embeddings(spark, sf0001)
       .select("vec_id", "embedding").orderBy("vec_id").limit(40)
@@ -1165,123 +868,6 @@ class GraphIndexSpec extends SparkSuite {
     assert(types(spark.read.parquet(s"$dir/buckets").schema) === types(Graph.BucketsSchema))
   }
 
-  test("census budget guards fire BEFORE any driver collect: a zero adjacency budget declines with its witness, no incident materialization") {
-    val (d, heldOut) = splitDataset()
-    val base = graft.core.Tables.embeddings(spark, d)
-    val stats0 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphTriMode(stats0) === "full")
-    Graph.appendKnnGraph(spark, d, heldOut, base)
-    // inject a zero adjacency budget (session conf, not a JVM global):
-    // the guard's fused take(budget+1) fetch materializes at most
-    // budget+1 rows — here exactly 1 — sees more rows than the budget
-    // and must decline to the full path, by code order strictly before
-    // any unbounded incident-edge collect, with the TRI_DECLINE
-    // witness naming WHICH guard fired (in a kNN graph in-degree is
-    // uncapped; the r13 order collected a hub's whole in-neighborhood
-    // before checking the budget)
-    try {
-      spark.conf.set("graft.census.adjBudget", "0")
-      val stats1 = Graph.ensureGraphStats(spark, d)
-      assert(Graph.graphTriMode(stats1) === "full",
-        "an over-budget restricted adjacency must decline to the full path")
-      assert(Graph.graphTriDecline(stats1) === "adj_budget",
-        "the decline witness must name the pre-collect adjacency guard")
-      // the full path is exact regardless of why it ran
-      val ed = Graph.storedEdges(spark, d).select("src", "dst")
-      val und = ed.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b")).distinct().persist()
-      val nE = und.count(); und.unpersist()
-      Dedup.releaseSlots()
-      assert(spark.read.parquet(s"$stats1/triangles")
-        .collect().head.getLong(1) === nE)
-    } finally spark.conf.unset("graft.census.adjBudget")
-    import spark.implicits._
-    val emb0 = base.select("embedding").limit(1)
-    // a budget at or past Int.MaxValue-1 cannot be over-fetch-probed
-    // (take() counts in Int) — saturation must be an EXPLICIT decline
-    // before any fetch, never a silently truncated admit
-    val novel0 = spark.range(1).select(lit(4999999L).as("vec_id"))
-      .crossJoin(emb0)
-    Graph.appendKnnGraph(spark, d, novel0,
-      base.select("vec_id", "embedding").unionByName(heldOut))
-    try {
-      spark.conf.set("graft.census.adjBudget", Int.MaxValue.toString)
-      val statsSat = Graph.ensureGraphStats(spark, d)
-      Dedup.releaseSlots()
-      assert(Graph.graphTriMode(statsSat) === "full",
-        "a saturated adjacency budget must decline to the full path")
-      assert(Graph.graphTriDecline(statsSat) === "adj_budget",
-        "the saturation decline must carry the adjacency-guard witness")
-    } finally spark.conf.unset("graft.census.adjBudget")
-    // with the production budget restored the replay path resumes on
-    // the next generation — the injection is config, not a mode latch
-    val novel = spark.range(1).select(lit(5000000L).as("vec_id"))
-      .crossJoin(emb0)
-    Graph.appendKnnGraph(spark, d, novel,
-      base.select("vec_id", "embedding").unionByName(heldOut
-        .unionByName(novel0)))
-    val stats2 = Graph.ensureGraphStats(spark, d)
-    Dedup.releaseSlots()
-    assert(Graph.graphTriMode(stats2) === "incremental",
-      "restored budget must readmit the replay path")
-    assert(Graph.graphTriDecline(stats2) === "",
-      "an admitted replay must carry no decline witness")
-  }
-
-  test("build-lineage witness: a vacuumed-and-rebuilt graph whose generations climb back past a surviving stats stamp must NOT replay") {
-    pastDriverBudget {
-    // the ADVICE scenario: stats stamped at pg=1 under build A; the
-    // graph artifact is destroyed and rebuilt (generations restart at
-    // 0 under build B); two appends bring gv to 2 with delta logs
-    // covering (pg+1..gv) = (2..2) — every PRE-r14 coverage condition
-    // holds, but the logs belong to a different lineage and replaying
-    // them against build A's carried census/cc state would silently
-    // write wrong numbers. GRAPH_BUILD equality must force full.
-    val (d, heldOut) = splitDataset()
-    val base = graft.core.Tables.embeddings(spark, d)
-    val h1 = heldOut.filter(col("vec_id") % 20 === 0)
-    val h2 = heldOut.filter(col("vec_id") % 20 =!= 0)
-    Graph.ensureGraphStats(spark, d)
-    Graph.appendKnnGraph(spark, d, h1, base)
-    val stats1 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphTriMode(stats1) === "incremental")
-    val buildA = Graph.graphBuildId(Graph.ensureKnnGraph(spark, d))
-    assert(buildA.nonEmpty, "every full build must stamp a lineage nonce")
-    // destroy the graph artifact (vacuum-to-zero), keep the stats
-    val adir = graft.core.ArtifactStore.artifactDir("knn_graph", d, Graph.GraphTag)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-    }
-    rm(new java.io.File(adir))
-    Dedup.releaseSlots()
-    // rebuild (gen 0, build B) and append twice (gv=2, logs gen=1,2)
-    val buildB = Graph.graphBuildId(Graph.ensureKnnGraph(spark, d))
-    assert(buildB !== buildA, "a rebuild must start a fresh lineage")
-    Graph.appendKnnGraph(spark, d, h1, base)
-    Graph.appendKnnGraph(spark, d, h2,
-      base.select("vec_id", "embedding").unionByName(h1))
-    val gdir = Graph.ensureKnnGraph(spark, d)
-    assert(Graph.graphGen(gdir) === 2L)
-    val stats2 = Graph.ensureGraphStats(spark, d)
-    assert(Graph.graphTriMode(stats2) === "full",
-      "cross-lineage delta logs must never replay against carried census state")
-    assert(Graph.graphStatsMode(stats2) === "full",
-      "cross-lineage pair-delta logs must never scope the component refresh")
-    // and the full recompute is exact over the rebuilt graph
-    val ed = Graph.storedEdges(spark, d).select("src", "dst")
-    val und = ed.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct().persist()
-    val nE = und.count()
-    val nT = und.as("e1").join(und.as("e2"), col("e1.b") === col("e2.a"))
-      .join(und.as("e3"),
-        col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b")).count()
-    und.unpersist()
-    Dedup.releaseSlots()
-    val row = spark.read.parquet(s"$stats2/triangles").collect().head
-    assert((row.getLong(1), row.getLong(3)) === ((nE, nT)))
-    }
-  }
-
   test("append is bounded: candidates come from the routing table, not a corpus pair scan") {
     val (d, heldOut) = splitDataset()
     val base = graft.core.Tables.embeddings(spark, d)
@@ -1304,129 +890,5 @@ class GraphIndexSpec extends SparkSuite {
       s"one-vector append touched ${changedSrcs.size} of ${allSrcs.size} srcs")
     assert(after.exists(_._1 == oneId),
       "appended vector should gain out-edges (it has same-corpus candidates)")
-  }
-
-  test("seededKcore ≡ full peel: the closure promotes an old node NOT adjacent to the delta, anchors carry boundary degrees, dead endpoints stay out") {
-    import spark.implicits._
-    // old graph: the {1,2,3,4} clique is the 3-core; x=10 (full deg 2)
-    // and y=11 (deg 3 but its support collapses once x peels) are out
-    val oldE = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L), (1L, 10L), (2L, 11L), (3L, 11L), (10L, 11L))
-      .toDF("id_a", "id_b")
-    val prev = Graph.kcoreOn(
-      oldE.select(col("id_a").as("src"), col("id_b").as("dst")))
-    assert(prev.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L, 4L),
-      "fixture: the old 3-core must be exactly the clique")
-    // delta: new node 20 anchors into the clique and reaches x=10;
-    // node 30 is a dead endpoint (full degree 1). y=11 is NOT a delta
-    // endpoint and NOT adjacent to any new vector — it joins only
-    // because the closure expands THROUGH candidate x (the
-    // completeness case simple "neighbors of the delta" misses)
-    val delta = Seq((1L, 20L), (4L, 20L), (10L, 20L), (20L, 30L))
-      .toDF("id_a", "id_b")
-    val all = oldE.unionByName(delta)
-    val got = Graph.seededKcore(spark, all, prev, delta)
-    assert(got.isRight, s"seeded path must admit, got $got")
-    val gotSet = got.toOption.get.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val want = Graph.kcoreOn(
-        all.select(col("id_a").as("src"), col("id_b").as("dst")))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(gotSet === want,
-      s"seeded maintenance must equal the full peel (missing ${want -- gotSet}, extra ${gotSet -- want})")
-    assert(gotSet.exists(_._1 == 11L),
-      "y must be promoted through the candidate chain")
-    assert(gotSet.contains((1L, 5L, true)),
-      "node 1's carried degree must gain BOTH its surviving-candidate edges (clique 3 + x + 20)")
-    assert(!gotSet.exists(_._1 == 30L), "a full-degree-<k endpoint never joins")
-  }
-
-  test("seededKcore declines with witnesses: core-core delta, unconverged or empty carry, budget, saturation") {
-    import spark.implicits._
-    val oldE = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L)).toDF("id_a", "id_b")
-    val prev = Graph.kcoreOn(
-      oldE.select(col("id_a").as("src"), col("id_b").as("dst")))
-    // a delta pair between two stored-core nodes violates the append
-    // invariant this path keys its increment arithmetic on
-    val ccDelta = Seq((1L, 2L)).toDF("id_a", "id_b")
-    assert(Graph.seededKcore(spark, oldE.unionByName(ccDelta), prev, ccDelta)
-      === Left("core_core_delta"))
-    // an unconverged carry is NOT the old k-core — decline
-    val prevBad = prev.select(col("vec_id"), col("deg"),
-      lit(false).as("converged"))
-    assert(Graph.seededKcore(spark, oldE, prevBad, ccDelta)
-      === Left("prev_unconverged"))
-    // empty carry is indistinguishable from unconverged-empty
-    assert(Graph.seededKcore(spark, oldE, prev.limit(0), ccDelta)
-      === Left("prev_empty"))
-    val d2 = Seq((1L, 20L)).toDF("id_a", "id_b")
-    try {
-      spark.conf.set("graft.stats.kcoreDeltaBudget", "0")
-      assert(Graph.seededKcore(spark, oldE.unionByName(d2), prev, d2)
-        === Left("edge_budget"))
-      // take() counts in Int — a saturated budget cannot be
-      // over-fetch-probed, so it declines explicitly (the census
-      // guards' discipline)
-      spark.conf.set("graft.stats.kcoreDeltaBudget", Int.MaxValue.toString)
-      assert(Graph.seededKcore(spark, oldE.unionByName(d2), prev, d2)
-        === Left("budget_saturated"))
-    } finally spark.conf.unset("graft.stats.kcoreDeltaBudget")
-  }
-
-  test("k-core floor decline chain: budget-declined seeded → subpeel; peel budget → exact full peel, all witnessed") {
-    pastDriverBudget {
-    val (d, heldOut) = splitDataset()
-    val base = graft.core.Tables.embeddings(spark, d)
-    Graph.ensureGraphStats(spark, d)
-    val h1 = heldOut.filter(col("vec_id") % 20 === 0)
-    val h2 = heldOut.filter(col("vec_id") % 20 =!= 0)
-    Graph.appendKnnGraph(spark, d, h1, base)
-    def wantKcoreOf(corpus: DataFrame): Set[(Long, Long, Boolean)] = {
-      val w = Graph.kcoreOn(Graph.scoredPairsOn(corpus)
-          .filter(col("w") >= Graph.CoreWmin)
-          .select(col("id_a").as("src"), col("id_b").as("dst")))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      Dedup.releaseSlots(); w
-    }
-    def gotKcoreOf(stats: String): Set[(Long, Long, Boolean)] =
-      spark.read.parquet(s"$stats/kcore")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val corpus1 = base.select("vec_id", "embedding").unionByName(h1)
-    try {
-      // zero seeded budget: the floor falls back to the
-      // affected-component subpeel, refresh stays incremental, and
-      // BOTH the sub-mode and the seeded decline are witnessed
-      spark.conf.set("graft.stats.kcoreDeltaBudget", "0")
-      val stats1 = Graph.ensureGraphStats(spark, d)
-      assert(Graph.graphStatsMode(stats1) === "incremental")
-      assert(Graph.graphKcoreMode(stats1) === "subpeel",
-        "a declined seeded path must fall back to the subpeel")
-      assert(Graph.graphKcoreDecline(stats1) === "edge_budget")
-      assert(gotKcoreOf(stats1) === wantKcoreOf(corpus1),
-        "the subpeel fallback must stay exact")
-    } finally spark.conf.unset("graft.stats.kcoreDeltaBudget")
-    Graph.appendKnnGraph(spark, d, h2, corpus1)
-    try {
-      // zero peel budget on top: the subpeel's cost is an ENFORCED
-      // precondition (r15 ADVICE) — past it the floor runs the exact
-      // full peel and says so, while the rest of the refresh stays
-      // incremental
-      spark.conf.set("graft.stats.kcoreDeltaBudget", "0")
-      spark.conf.set("graft.stats.kcorePeelBudget", "0")
-      val stats2 = Graph.ensureGraphStats(spark, d)
-      assert(Graph.graphStatsMode(stats2) === "incremental",
-        "the assignment/census floors stay incremental — only the peel escalates")
-      assert(Graph.graphKcoreMode(stats2) === "full",
-        "an over-budget subpeel must escalate to the honestly-labeled full peel")
-      assert(Graph.graphKcoreDecline(stats2) === "edge_budget")
-      assert(gotKcoreOf(stats2) ===
-        wantKcoreOf(corpus1.unionByName(h2.select("vec_id", "embedding"))),
-        "the escalated full peel must be exact")
-    } finally {
-      spark.conf.unset("graft.stats.kcoreDeltaBudget")
-      spark.conf.unset("graft.stats.kcorePeelBudget")
-    }
-    }
   }
 }

@@ -568,49 +568,6 @@ class GraphSpec extends SparkSuite {
       "seeds are the id-ordered representatives, never the overflow tail")
   }
 
-  test("seededKcore ≡ full peel on random graphs with append-shaped random deltas (property)") {
-    val rnd = new scala.util.Random(777L)
-    var admitted = 0
-    for (trial <- 1 to 5) {
-      val nOld = 10 + rnd.nextInt(12)
-      val oldE = (0 until (3 * nOld)).map { _ =>
-        val a = rnd.nextInt(nOld).toLong
-        val b = (a + 1 + rnd.nextInt(nOld - 1)) % nOld
-        (math.min(a, b), math.max(a, b))
-      }.distinct.toDF("id_a", "id_b")
-      // append-shaped delta: every pair touches a NEW node (the
-      // invariant appendKnnGraph guarantees), old endpoints uniform
-      val newIds = Seq(100L, 101L, 102L)
-      val delta = (0 until (4 + rnd.nextInt(8))).map { _ =>
-        val u = newIds(rnd.nextInt(newIds.size))
-        val v = if (rnd.nextBoolean()) newIds(rnd.nextInt(newIds.size))
-          else rnd.nextInt(nOld).toLong
-        (math.min(u, v), math.max(u, v))
-      }.filter(t => t._1 != t._2).distinct.toDF("id_a", "id_b")
-      val prev = Graph.kcoreOn(
-        oldE.select(col("id_a").as("src"), col("id_b").as("dst")))
-      val all = oldE.unionByName(delta)
-      Graph.seededKcore(spark, all, prev, delta) match {
-        case Right(df) =>
-          admitted += 1
-          val got = df.collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-          val want = Graph.kcoreOn(
-              all.select(col("id_a").as("src"), col("id_b").as("dst")))
-            .collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-          assert(got === want,
-            s"trial $trial: seeded ≠ full (missing ${want -- got}, extra ${got -- want})")
-        case Left(reason) =>
-          // the only legitimate declines under this fixture shape
-          assert(Set("prev_empty", "prev_unconverged").contains(reason),
-            s"trial $trial: unexpected decline '$reason'")
-      }
-      Dedup.releaseSlots()
-    }
-    assert(admitted >= 3, s"fixture too degenerate: only $admitted of 5 trials admitted")
-  }
-
   test("fused rank loop ≡ separate pageRankOn / pprOn, on a known graph and on the corpus pairs") {
     // synthetic: the 2-cycle + star + isolated fixture with seed = 1
     val nodes = Seq(1L, 2L, 10L, 11L, 12L, 13L, 99L).toDF("vec_id")

@@ -79,10 +79,6 @@ class StreamingGraphIngestSpec extends SparkSuite {
     assert(stats1 !== stats0, "a strict read past the appends must rebuild")
     assert(Graph.ensureGraphStats(spark, d) === stats1,
       "a second strict read must serve the fresh version")
-    // the amortized rebuild replays the three micro-batches' edge-delta
-    // logs for the census (small deltas — the cost model accepts)
-    assert(Graph.graphTriMode(stats1) === "incremental",
-      "a micro-batch stream's deferred stats rebuild must take the census replay")
     // the rebuilt pagerank equals a live computation over the full corpus
     val full = graft.core.Tables.embeddings(spark, sf0001)
     val want = Graph.pageRankOn(full.select("vec_id"), Graph.knnGraphEdgesOn(full))
