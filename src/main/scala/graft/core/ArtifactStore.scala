@@ -50,6 +50,18 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * re-checks `CURRENT` under it — so a slow duplicate build can
   * neither tear a read nor flip the pointer over a version that
   * locked maintenance has since appended to.
+  *
+  * Every stored index maintains itself through two calls, so the lock,
+  * the under-lock re-resolve and the vacuum are written once:
+  *  - [[append]] (lock + [[appendVersion]]): the kNN and stratum graphs
+  *    (`Graph.appendGraph`), the lex index (`Hybrid.appendLexIndex`),
+  *    the sig index (`Dedup.appendSigIndex`) and the four `Indexed`
+  *    code tables (`appendDelta`);
+  *  - [[rewriteOrKeep]] (lock + re-resolve + optional publish, then
+  *    [[gcVersions]]): every compaction (graphs, lex, sig, `Indexed`'s
+  *    `compactTable`), the graphs' cap-crossing self-heal rebuild, the
+  *    graph-stats refresh (`Graph.ensureGraphStats`) and
+  *    `Indexed.removeFromIndexes`.
   */
 /** Outcome of a [[ArtifactStore.vacuumAll]] sweep: version dirs
   * reclaimed per swept artifact, and artifacts the sweep could NOT
@@ -192,6 +204,42 @@ object ArtifactStore {
       writeDelta(target)
     }
 
+  /** Locked append: under the maintenance lock, publish an
+    * [[appendVersion]] on top of the live version. `writeDelta` gets
+    * (live version, new version dir) — the live one for meta the delta
+    * carries forward, read under the same lock. Returns the new live
+    * version. Appends reclaim nothing; the kind's compaction (a
+    * [[rewriteOrKeep]]) or [[vacuumAll]] does.
+    */
+  def append(dir: String)(writeDelta: (String, String) => Unit): String =
+    withMaintenanceLock(dir) {
+      val live = current(dir).getOrElse(
+        throw new IllegalStateException(s"nothing to append to: $dir"))
+      appendVersion(dir)(writeDelta(live, _))
+    }
+
+  /** Locked rewrite-or-keep: under the maintenance lock, `step` sees the
+    * version that is current NOW (None if unbuilt) — a decision taken
+    * before the lock is re-checked here, so two processes that both
+    * saw a threshold crossed rewrite once — and returns None to keep
+    * it, or the writer of a replacement version, which is published in
+    * its place. [[gcVersions]] then runs outside the lock (the OS file
+    * lock is not reentrant). A writer that throws leaves `CURRENT`
+    * unchanged and reclaims nothing. Returns the live version.
+    */
+  def rewriteOrKeep(dir: String)(step: Option[String] => Option[String => Unit]): String = {
+    val live = withMaintenanceLock(dir) {
+      val cur = current(dir)
+      step(cur) match {
+        case Some(write) => publish(dir)(write)
+        case None => cur.getOrElse(
+          throw new IllegalStateException(s"nothing to keep: $dir"))
+      }
+    }
+    gcVersions(dir)
+    live
+  }
+
   /** Recursively hard-link (or copy) `src`'s data entries into `dst`,
     * recreating subdirectories — so [[appendVersion]] carries forward
     * partitioned/nested version layouts intact, not just flat ones.
@@ -218,12 +266,17 @@ object ArtifactStore {
     } finally files.close()
   }
 
-  /** Number of data files in a version dir — the compaction trigger's
-    * measure of append-history fragmentation.
+  /** Number of data files under a version dir (or one of its tables),
+    * counted recursively through partition dirs with [[linkTree]]'s
+    * rule: Spark metadata (`_SUCCESS`) and dotfiles (checksums, version
+    * meta) are not data — every compaction trigger's measure of
+    * append-history fragmentation.
     */
   def dataFileCount(versionDir: String): Int =
     Option(new java.io.File(versionDir).listFiles()).getOrElse(Array.empty)
-      .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .map(f => if (f.isDirectory) dataFileCount(f.getPath) else if (f.isFile) 1 else 0)
+      .sum
 
   /** Garbage-collect superseded versions: delete version dirs that are
     * (a) not the `CURRENT` target and (b) not among the `keep` most

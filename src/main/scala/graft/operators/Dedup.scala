@@ -805,20 +805,13 @@ object Dedup {
     */
   val SigCompactFiles = 24
 
-  private def sigFileCount(bandsDir: String): Int =
-    Option(new java.io.File(bandsDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-      .map(b => Option(b.listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && f.getName.endsWith(".parquet")))
-      .sum
-
   /** Delta-append a new batch's band signatures onto the live index —
-    * a publish ([[graft.core.ArtifactStore.appendVersion]]: hard-link
+    * a locked publish ([[graft.core.ArtifactStore.append]]: hard-link
     * carry-forward + atomic pointer flip), shuffling only the BATCH's
     * band rows. Auto-compacts past [[SigCompactFiles]] fragment files;
     * the threshold probe runs outside the maintenance lock (not
     * reentrant) and `onlyIfFragmented` re-checks under compaction's own
-    * lock, so a concurrent loser no-ops.
+    * lock, so a concurrent loser keeps the version.
     *
     * This is the other half of the d16 ingest story: the increment is
     * near-dup-CHECKED against the index (d16), then its signatures
@@ -827,116 +820,109 @@ object Dedup {
   def appendSigIndex(s: SparkSession, d: String, newDocs: DataFrame): String = synchronized {
     ensureSigIndex(s, d)
     val adir = graft.core.ArtifactStore.artifactDir("minhash_bands", d, SigTag)
-    graft.core.ArtifactStore.withMaintenanceLock(adir) {
-      graft.core.ArtifactStore.appendVersion(adir) { target =>
-        val delta = bandRowsOf(newDocs)
-          .withColumn("bucket", pmod(xxhash64(col("bh")), lit(SigBuckets.toLong)).cast("int"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          delta.repartition(col("bucket"))
-            .sortWithinPartitions("bucket", "band", "bh")
-            .write.partitionBy("bucket").mode("append").parquet(s"$target/bands")
-          // Refresh the capped view for TOUCHED dir-buckets only (the
-          // delta's distinct `bucket` values — ≤ SigBuckets, a tiny
-          // collect): a dynamic partition overwrite replaces exactly
-          // those bucket dirs' carried-forward links with the merged
-          // view, leaving untouched buckets' hard links (and every
-          // prior version) intact.
-          //
-          // The refresh is INCREMENTAL — its inputs are the PRIOR
-          // version's capped view (carried forward by the publish)
-          // plus the delta, never the corpus-sized `bands` table.
-          // Correct because per (band, bh):
-          //  - the new MaxBucket-lowest id set ⊆ (old capped ∪ delta):
-          //    an old beyond-cap id exceeds every old capped id, so ≥
-          //    MaxBucket smaller ids already exist in the union and it
-          //    can never enter the new cap;
-          //  - bsz' = old bsz + |delta rows in the group| (the stored
-          //    bsz is the group's FULL size, constant on its rows);
-          //  - bmin' = min over (old capped ∪ delta): the old capped
-          //    rows contain the old group min (its rank-1 row).
-          // Groups the delta does not touch pass through verbatim, so
-          // the rank window runs over delta-hit groups only — append
-          // COMPUTE is delta-proportional; append I/O is the touched
-          // dir-buckets' capped rows (the partition-overwrite unit —
-          // a partition's file set is replaced whole, so the
-          // production scale knob is [[SigBuckets]]: file-size-bound
-          // like Hybrid.LexBuckets, keeping the per-bucket rewrite
-          // flat as the corpus grows). Probe-time parity with a
-          // from-scratch rebuild stays structural (SigIndexSpec pins
-          // append == one-shot for bands AND bands_capped incl.
-          // bsz/bmin; DedupPropertySpec randomizes the split).
-          val touched = delta.select("bucket").distinct()
-            .collect().map(_.getInt(0)).sorted
-          if (touched.nonEmpty) {
-            val oldCap = s.read.schema(sigCappedSchema)
-              .parquet(s"$target/bands_capped")
-              .filter(col("bucket").isin(
-                touched.map(Integer.valueOf).toIndexedSeq: _*))
-            val dkeys = delta.select("band", "bh").distinct()
-            val pass = oldCap
-              .join(broadcast(dkeys), Seq("band", "bh"), "left_anti")
-              .select("doc_id", "band", "bh", "bucket", "bsz", "bmin")
-            val hit = oldCap
-              .join(broadcast(dkeys), Seq("band", "bh"), "left_semi")
-            val unioned = hit
-              .select("doc_id", "band", "bh", "bucket")
-              .withColumn("__d", lit(0L))
-              .unionByName(delta.select("doc_id", "band", "bh", "bucket")
-                .withColumn("__d", lit(1L)))
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("band", "bh")
-            val merged = unioned
-              .withColumn("rn", row_number().over(w.orderBy(col("doc_id").asc)))
-              .withColumn("__dn", sum(col("__d")).over(w))
-              .withColumn("__umin", min(col("doc_id")).over(w))
-              .filter(col("rn") <= MaxBucket)
-              .join(hit.groupBy("band", "bh").agg(max(col("bsz")).as("__obsz")),
-                Seq("band", "bh"), "left")
-              .withColumn("bsz", coalesce(col("__obsz"), lit(0L)) + col("__dn"))
-              .withColumn("bmin", col("__umin"))
-              .select("doc_id", "band", "bh", "bucket", "bsz", "bmin")
-            writeCapped(pass.unionByName(merged), target, dynamic = true)
-          }
-          newDocs.select(col("doc_id")).distinct()
-            .coalesce(1).sortWithinPartitions("doc_id")
-            .write.mode("append").parquet(s"$target/docs")
-        } finally { delta.unpersist(); () }
-      }
+    val live = graft.core.ArtifactStore.append(adir) { (_, target) =>
+      val delta = bandRowsOf(newDocs)
+        .withColumn("bucket", pmod(xxhash64(col("bh")), lit(SigBuckets.toLong)).cast("int"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        delta.repartition(col("bucket"))
+          .sortWithinPartitions("bucket", "band", "bh")
+          .write.partitionBy("bucket").mode("append").parquet(s"$target/bands")
+        // Refresh the capped view for TOUCHED dir-buckets only (the
+        // delta's distinct `bucket` values — ≤ SigBuckets, a tiny
+        // collect): a dynamic partition overwrite replaces exactly
+        // those bucket dirs' carried-forward links with the merged
+        // view, leaving untouched buckets' hard links (and every
+        // prior version) intact.
+        //
+        // The refresh is INCREMENTAL — its inputs are the PRIOR
+        // version's capped view (carried forward by the publish)
+        // plus the delta, never the corpus-sized `bands` table.
+        // Correct because per (band, bh):
+        //  - the new MaxBucket-lowest id set ⊆ (old capped ∪ delta):
+        //    an old beyond-cap id exceeds every old capped id, so ≥
+        //    MaxBucket smaller ids already exist in the union and it
+        //    can never enter the new cap;
+        //  - bsz' = old bsz + |delta rows in the group| (the stored
+        //    bsz is the group's FULL size, constant on its rows);
+        //  - bmin' = min over (old capped ∪ delta): the old capped
+        //    rows contain the old group min (its rank-1 row).
+        // Groups the delta does not touch pass through verbatim, so
+        // the rank window runs over delta-hit groups only — append
+        // COMPUTE is delta-proportional; append I/O is the touched
+        // dir-buckets' capped rows (the partition-overwrite unit —
+        // a partition's file set is replaced whole, so the
+        // production scale knob is [[SigBuckets]]: file-size-bound
+        // like Hybrid.LexBuckets, keeping the per-bucket rewrite
+        // flat as the corpus grows). Probe-time parity with a
+        // from-scratch rebuild stays structural (SigIndexSpec pins
+        // append == one-shot for bands AND bands_capped incl.
+        // bsz/bmin; DedupPropertySpec randomizes the split).
+        val touched = delta.select("bucket").distinct()
+          .collect().map(_.getInt(0)).sorted
+        if (touched.nonEmpty) {
+          val oldCap = s.read.schema(sigCappedSchema)
+            .parquet(s"$target/bands_capped")
+            .filter(col("bucket").isin(
+              touched.map(Integer.valueOf).toIndexedSeq: _*))
+          val dkeys = delta.select("band", "bh").distinct()
+          val pass = oldCap
+            .join(broadcast(dkeys), Seq("band", "bh"), "left_anti")
+            .select("doc_id", "band", "bh", "bucket", "bsz", "bmin")
+          val hit = oldCap
+            .join(broadcast(dkeys), Seq("band", "bh"), "left_semi")
+          val unioned = hit
+            .select("doc_id", "band", "bh", "bucket")
+            .withColumn("__d", lit(0L))
+            .unionByName(delta.select("doc_id", "band", "bh", "bucket")
+              .withColumn("__d", lit(1L)))
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy("band", "bh")
+          val merged = unioned
+            .withColumn("rn", row_number().over(w.orderBy(col("doc_id").asc)))
+            .withColumn("__dn", sum(col("__d")).over(w))
+            .withColumn("__umin", min(col("doc_id")).over(w))
+            .filter(col("rn") <= MaxBucket)
+            .join(hit.groupBy("band", "bh").agg(max(col("bsz")).as("__obsz")),
+              Seq("band", "bh"), "left")
+            .withColumn("bsz", coalesce(col("__obsz"), lit(0L)) + col("__dn"))
+            .withColumn("bmin", col("__umin"))
+            .select("doc_id", "band", "bh", "bucket", "bsz", "bmin")
+          writeCapped(pass.unionByName(merged), target, dynamic = true)
+        }
+        newDocs.select(col("doc_id")).distinct()
+          .coalesce(1).sortWithinPartitions("doc_id")
+          .write.mode("append").parquet(s"$target/docs")
+      } finally { delta.unpersist(); () }
     }
-    val live = graft.core.ArtifactStore.current(adir).get
-    if (sigFileCount(s"$live/bands") > SigCompactFiles)
+    if (graft.core.ArtifactStore.dataFileCount(s"$live/bands") > SigCompactFiles)
       compactSigIndex(s, d, onlyIfFragmented = true)
     else live
   }
 
   /** Rewrite the bands back to one sorted file run per bucket and
-    * reclaim superseded versions past the reader-retention window.
+    * reclaim superseded versions past the reader-retention window
+    * ([[graft.core.ArtifactStore.rewriteOrKeep]]).
     */
   def compactSigIndex(s: SparkSession, d: String,
       onlyIfFragmented: Boolean = false): String = synchronized {
     val adir = graft.core.ArtifactStore.artifactDir("minhash_bands", d, SigTag)
-    val compacted = graft.core.ArtifactStore.withMaintenanceLock(adir) {
-      val cur = graft.core.ArtifactStore.current(adir).getOrElse(
+    graft.core.ArtifactStore.rewriteOrKeep(adir) { cur =>
+      val live = cur.getOrElse(
         throw new IllegalStateException(s"nothing to compact: minhash_bands for $d"))
-      if (onlyIfFragmented && sigFileCount(s"$cur/bands") <= SigCompactFiles) cur
-      else {
-        val bands = s.read.schema(sigBandsSchema).parquet(s"$cur/bands")
-        val docs = s.read.schema(sigDocsSchema).parquet(s"$cur/docs")
-        graft.core.ArtifactStore.publish(adir) { target =>
-          bands.repartition(col("bucket"))
-            .sortWithinPartitions("bucket", "band", "bh")
-            .write.partitionBy("bucket").mode("overwrite").parquet(s"$target/bands")
-          writeCapped(cappedBandsOf(
-            s.read.schema(sigBandsSchema).parquet(s"$target/bands")), target)
-          docs.distinct()
-            .coalesce(1).sortWithinPartitions("doc_id")
-            .write.mode("overwrite").parquet(s"$target/docs")
-        }
+      if (onlyIfFragmented &&
+          graft.core.ArtifactStore.dataFileCount(s"$live/bands") <= SigCompactFiles) None
+      else Some { target =>
+        s.read.schema(sigBandsSchema).parquet(s"$live/bands").repartition(col("bucket"))
+          .sortWithinPartitions("bucket", "band", "bh")
+          .write.partitionBy("bucket").mode("overwrite").parquet(s"$target/bands")
+        writeCapped(cappedBandsOf(
+          s.read.schema(sigBandsSchema).parquet(s"$target/bands")), target)
+        s.read.schema(sigDocsSchema).parquet(s"$live/docs").distinct()
+          .coalesce(1).sortWithinPartitions("doc_id")
+          .write.mode("overwrite").parquet(s"$target/docs")
       }
     }
-    graft.core.ArtifactStore.gcVersions(adir)
-    compacted
   }
 
   /** D16: ingest-time near-dup check — the incoming batch (t6 md5

@@ -559,7 +559,7 @@ object Graph {
     * layout rewrite serving identical content, so consumers keyed on
     * the generation (the stats artifact) survive it without a
     * rebuild, where the old version-dir-name stamp thrashed them.
-    * Stored as a dotfile so [[graft.core.ArtifactStore.appendVersion]]'s
+    * Stored as a dotfile so [[graft.core.ArtifactStore.append]]'s
     * hard-link carry-forward skips it: every mutation writes its own
     * (a linked meta file would alias the previous version's inode and
     * an in-place rewrite would corrupt history).
@@ -601,10 +601,10 @@ object Graph {
     *  - `bsizes/`  (tbl, bkt, n) — bucket occupancy, so an append
     *    applies the SAME total-size cap the build would.
     *
-    * Lifecycle is the `ensureSigIndex` discipline (`Dedup.scala`):
-    * build-once via [[graft.core.ArtifactStore.ensure]], delta appends
-    * via [[appendKnnGraph]], compaction + version GC via
-    * [[compactKnnGraph]] / `vacuumAll`.
+    * Lifecycle: build-once via [[graft.core.ArtifactStore.ensure]],
+    * delta appends via [[appendKnnGraph]], compaction + version GC via
+    * [[compactKnnGraph]] / `vacuumAll` — the shared [[appendGraph]] /
+    * [[compactGraph]] over [[KnnKind]].
     */
   /** One full build of the four graph tables from a (vec_id,
     * embedding) frame into a version dir — shared by the build-once
@@ -690,7 +690,7 @@ object Graph {
 
   /** The rebuild-decline witness on a version dir, if any — written
     * when the cap-crossing self-heal found artifact ids it could not
-    * cover (see [[recoveredMissingVecs]]); stored as a dot-file so appendVersion
+    * cover (see [[recoveredMissingVecs]]); stored as a dot-file so an append
     * does NOT hard-link it onto later versions that made no decline
     * decision. The staleness counter is
     * left intact so a later append re-triggers the heal.
@@ -725,30 +725,111 @@ object Graph {
     s.read.parquet(s"${ensureKnnGraph(s, d)}/pairs")
       .select("id_a", "id_b", "w")
 
-  /** Append-fragmentation trigger: auto-compact when the version's
-    * data-file count exceeds 2x the expected POST-COMPACT layout
-    * (edges partitions + pairs parallelism + bucket tables + bsizes).
-    * A fixed constant is wrong here — the freshly-built layout itself
-    * scales with the session's parallelism, and a threshold below it
-    * would make every append pay a compaction that cannot shrink
-    * anything.
+  /** What the shared append and compaction ([[appendGraph]],
+    * [[compactGraph]]) need to know about one stored graph kind — the
+    * kNN graph and the label-stratified graph differ only here:
+    *
+    *  - `name`/`tag`: the artifact dir ([[graft.core.ArtifactStore.artifactDir]]);
+    *  - `prefix`: key columns ahead of (tbl, bkt) in every key, which
+    *    also prefix the directory partitions (`bucket=k` vs
+    *    `stratum=s/bucket=k`); `prefixCols` derives them from a
+    *    caller's vector frame;
+    *  - `hasPairs`: whether the version keeps a `pairs/` table;
+    *  - `build`: the kind's full build into a version dir at a
+    *    generation (the gen-0 build and the self-heal rebuild);
+    *  - `compactAt`: the data-file count past which an append compacts.
     */
-  private def graphCompactTrigger(s: SparkSession): Int =
-    2 * (EdgeBuckets + s.sparkContext.defaultParallelism + Dedup.SrpTables + 1)
+  private[graft] final case class GraphKind(name: String, tag: String,
+      prefix: Seq[String], prefixCols: Seq[Column], hasPairs: Boolean,
+      build: (SparkSession, DataFrame, String, Long) => Unit,
+      compactAt: (SparkSession, String) => Int)
 
-  private def graphFileCount(versionDir: String): Int = {
-    def cnt(f: java.io.File): Int =
-      Option(f.listFiles()).getOrElse(Array.empty).map { c =>
-        if (c.isDirectory) cnt(c)
-        else if (c.isFile && c.getName.endsWith(".parquet")) 1 else 0
-      }.sum
-    cnt(new java.io.File(versionDir))
+  /** The kNN graph. Compaction fires past 2x the expected POST-COMPACT
+    * layout (edges partitions + pairs parallelism + bucket tables +
+    * bsizes). A fixed constant is wrong here — the freshly-built layout
+    * itself scales with the session's parallelism, and a threshold
+    * below it would make every append pay a compaction that cannot
+    * shrink anything.
+    */
+  private[graft] lazy val KnnKind = GraphKind("knn_graph", GraphTag, Nil, Nil,
+    hasPairs = true, writeGraphTables,
+    (s, _) => 2 * (EdgeBuckets + s.sparkContext.defaultParallelism + Dedup.SrpTables + 1))
+
+  /** The stratified graph. Its one-sorted-run baseline scales with the
+    * stratum count (one run per (stratum, bucket) edge directory plus
+    * per-stratum buckets/bsizes runs), so compaction fires at 2x that
+    * baseline — the same "appends have roughly doubled the file count"
+    * intent as the kNN graph's.
+    */
+  private[graft] lazy val StratumKind = GraphKind("stratum_graph", StratumGraphTag,
+    Seq("stratum"), Seq(col(StratumCol).cast("long").as("stratum")),
+    hasPairs = false, writeStratumTables, { (_, versionDir) =>
+      val strata = Option(new java.io.File(s"$versionDir/edges").listFiles())
+        .getOrElse(Array.empty).count(f => f.isDirectory &&
+          f.getName.startsWith("stratum="))
+      2 * (math.max(strata, 1) * (EdgeBuckets + 2) + 1)
+    })
+
+  /** A version's content meta: generation, crossed-bucket counter and —
+    * for a kind with a build lineage (the kNN graph's `.build`) — the
+    * lineage nonce.
+    */
+  private def writeContentMeta(target: String, gen: Long, crossed: Long,
+      build: String): Unit = {
+    writeMetaLong(target, ".gen", gen)
+    writeMetaLong(target, ".crossed", crossed)
+    if (build.nonEmpty)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(target, ".build"), build)
   }
 
-  /** Delta-append new vectors into the stored graph — a publish
-    * ([[graft.core.ArtifactStore.appendVersion]]: hard-link
+  // one sorted run per directory partition of each table — the
+  // layouts the full builds write, shared by append and compaction
+  private def writeRouting(b: DataFrame, pk: Seq[String], path: String,
+      mode: SaveMode): Unit =
+    b.repartition((pk :+ "tbl").map(col): _*)
+      .sortWithinPartitions((pk ++ Seq("tbl", "bkt", "vec_id")).map(col): _*)
+      .select((Seq("vec_id", "tbl", "bkt") ++ pk).map(col): _*)
+      .write.partitionBy(pk: _*).mode(mode).parquet(path)
+
+  private def writeSizes(sz: DataFrame, pk: Seq[String], path: String): Unit =
+    (if (pk.isEmpty) sz.coalesce(1) else sz.repartition(pk.map(col): _*))
+      .sortWithinPartitions((pk ++ Seq("tbl", "bkt")).map(col): _*)
+      .select((Seq("tbl", "bkt", "n") ++ pk).map(col): _*)
+      .write.partitionBy(pk: _*).mode("overwrite").parquet(path)
+
+  private def writeEdges(ed: DataFrame, pk: Seq[String], path: String): Unit =
+    ed.repartition((pk :+ "bucket").map(col): _*)
+      .sortWithinPartitions((pk ++ Seq("bucket", "src", "rk")).map(col): _*)
+      .select((Seq("src", "dst", "w", "rk", "dvec") ++ pk :+ "bucket").map(col): _*)
+      .write.partitionBy(pk :+ "bucket": _*).mode("overwrite").parquet(path)
+
+  /** Delta-append new vectors into the stored kNN graph — see
+    * [[appendGraph]], shared with [[appendStratumGraph]].
+    */
+  def appendKnnGraph(s: SparkSession, d: String, newVecs: DataFrame,
+      corpusVecs: DataFrame,
+      rebuildCrossedFrac: Double = CrossedRebuildFrac): String = synchronized {
+    ensureKnnGraph(s, d)
+    appendGraph(KnnKind, s, d, newVecs, corpusVecs, rebuildCrossedFrac)
+  }
+
+  /** Rewrite the kNN graph's tables back to one sorted run per
+    * directory — see [[compactGraph]].
+    */
+  def compactKnnGraph(s: SparkSession, d: String,
+      onlyIfFragmented: Boolean = false): String = synchronized {
+    compactGraph(KnnKind, s, d, onlyIfFragmented)
+  }
+
+  /** Delta-append new vectors into a stored graph of kind `k` — a
+    * locked publish ([[graft.core.ArtifactStore.append]]: hard-link
     * carry-forward + atomic pointer flip) whose work is bounded by the
-    * DELTA, not the corpus:
+    * DELTA, not the corpus. Every key below is `k.prefix ++ (tbl,
+    * bkt)`, so for the stratified graph the cap rule applies per
+    * (stratum, tbl, bkt), candidates never cross strata, and a delta
+    * labeled entirely stratum 3 touches zero bytes of any other
+    * stratum's partitions (a stratum unseen at build time materializes
+    * as a new directory partition, its delta new×new only):
     *
     *  1. the increment's bucket rows join `bsizes` and keep buckets
     *     whose TOTAL (old + new) occupancy respects [[Dedup.MaxBucket]]
@@ -767,16 +848,19 @@ object Graph {
     * `corpusVecs` must supply (vec_id, embedding) for every id the
     * graph already holds (for the base artifact that is the dataset's
     * embeddings table; an ingest pipeline unions its accepted store —
-    * the [[graft.streaming.StreamingNearDup]] corpusText convention).
+    * the [[graft.streaming.StreamingNearDup]] corpusText convention);
+    * `newVecs` also carries the columns `k.prefixCols` reads. The old
+    * vectors' prefix keys live in the artifact's own routing table.
     * Idempotence is the CALLER's ledger concern, as in the streaming
     * ingest path.
     *
     * Exactness contract: append ≡ one-shot rebuild (proven in
-    * GraphIndexSpec) whenever no bucket's REPRESENTATIVE SET changes as
-    * the delta lands (the r18 rule: a rebuild re-selects each over-cap
-    * bucket's [[Dedup.MaxBucket]] lowest ids and re-pairs them, which
-    * an append can neither generate nor retract). That staleness is
-    * OBSERVABLE and SELF-HEALING: every append counts the buckets whose
+    * GraphIndexSpec, per stratum for the stratified kind) whenever no
+    * bucket's REPRESENTATIVE SET changes as the delta lands (the r18
+    * rule: a rebuild re-selects each over-cap bucket's
+    * [[Dedup.MaxBucket]] lowest ids and re-pairs them, which an append
+    * can neither generate nor retract). That staleness is OBSERVABLE
+    * and SELF-HEALING: every append counts the buckets whose
     * representatives a rebuild would pick differently — two shapes,
     * matching the code below: (1) the delta pushes a bucket ACROSS the
     * cap (old occupancy ≤ MaxBucket, old+new past it — including old
@@ -789,271 +873,272 @@ object Graph {
     * and when the cumulative crossings exceed `rebuildCrossedFrac` of
     * the populated buckets the append triggers a full rebuild into a
     * fresh version (generation bumped, counter reset) — restoring
-    * exactness without an operator in the loop. Each append also bumps the content generation
-    * ([[graphGen]]) that the stats artifact keys its freshness on.
+    * exactness without an operator in the loop. Each append also bumps
+    * the content generation ([[graphGen]]) that the stats artifact
+    * keys its freshness on. Fragmentation past `k.compactAt` runs
+    * [[compactGraph]].
     */
-  def appendKnnGraph(s: SparkSession, d: String, newVecs: DataFrame,
-      corpusVecs: DataFrame,
-      rebuildCrossedFrac: Double = CrossedRebuildFrac): String = synchronized {
-    ensureKnnGraph(s, d)
-    val adir = graft.core.ArtifactStore.artifactDir("knn_graph", d, GraphTag)
-    val out = graft.core.ArtifactStore.withMaintenanceLock(adir) {
-      val prev = graft.core.ArtifactStore.current(adir).get
-      val prevGen = graphGen(prev)
-      val prevCrossed = graphCrossedBuckets(prev)
-      graft.core.ArtifactStore.appendVersion(adir) { target =>
-        val nv = newVecs.select(col("vec_id"), col("embedding")).persist()
-        val newB = bucketRowsOf(nv).persist()
+  private def appendGraph(k: GraphKind, s: SparkSession, d: String,
+      newVecs: DataFrame, corpusVecs: DataFrame,
+      rebuildCrossedFrac: Double): String = {
+    val adir = graft.core.ArtifactStore.artifactDir(k.name, d, k.tag)
+    val pk = k.prefix
+    val key = pk ++ Seq("tbl", "bkt")
+    def cols(names: Seq[String]): Seq[Column] = names.map(col)
+    val out = graft.core.ArtifactStore.append(adir) { (prev, target) =>
+      val nv = newVecs.select(Seq(col("vec_id"), col("embedding")) ++ k.prefixCols: _*)
+        .persist()
+      val newB = nv.select(cols("vec_id" +: pk) :+
+        posexplode(graft.functions.SrpKernel.srpBuckets(
+          col("embedding"), Dedup.SrpProj)).as(Seq("tbl", "bkt")): _*).persist()
+      try {
+        val newCnt = newB.groupBy(cols(key): _*)
+          .agg(count(lit(1)).as("nn"), min("vec_id").as("mn"))
+        // cap-crossing staleness witness under the r18 representative
+        // semantics (a rebuild re-selects and re-pairs each over-cap
+        // bucket's MaxBucket lowest ids, which an append can neither
+        // generate nor retract). Two stale shapes:
+        //  1. the delta pushes a bucket ACROSS the cap — its reps
+        //     change from "everyone" to "the lowest MaxBucket", and
+        //     the append generated none of the new pairs;
+        //  2. an ALREADY-over-cap bucket receives an id BELOW its
+        //     rep boundary (the cap-th smallest stored id) — the new
+        //     id would displace a representative in a rebuild. New
+        //     ids at or above the boundary change nothing (the
+        //     monotone-id ingest case) and are NOT counted — without
+        //     the boundary check every over-cap append re-healed
+        //     spuriously (probe: 4 s appends became ~80 s).
+        // Shape 1 and the shape-2 trigger come from ONE aggregate
+        // over the bsizes-joined delta keys (the single job a
+        // healthy corpus pays, as before); the boundary job — a
+        // window over the affected buckets' stored rows only — runs
+        // only when an over-cap delta key exists.
+        val keyed = newCnt.join(s.read.parquet(s"$target/bsizes"), key, "left")
+          .select(cols(key) ++ Seq(col("nn"), col("mn"),
+            coalesce(col("n"), lit(0L)).as("old_n")): _*)
+        val shapes = keyed.agg(
+          sum(when(col("old_n") <= Dedup.MaxBucket &&
+            col("nn") + col("old_n") > Dedup.MaxBucket, 1L)
+            .otherwise(0L)).as("newly"),
+          sum(when(col("old_n") > Dedup.MaxBucket, 1L).otherwise(0L))
+            .as("over")).head()
+        val crossedNow = (if (shapes.isNullAt(0)) 0L else shapes.getLong(0)) + (
+          if (shapes.isNullAt(1) || shapes.getLong(1) == 0L) 0L
+          else {
+            val overKeys = keyed.filter(col("old_n") > Dedup.MaxBucket)
+              .select(cols(key) :+ col("mn"): _*)
+            val bound = s.read.parquet(s"$target/buckets")
+              .join(overKeys.select(cols(key): _*), key)
+              .withColumn("rn", row_number().over(
+                Window.partitionBy(cols(key): _*).orderBy(col("vec_id").asc)))
+              .filter(col("rn") === Dedup.MaxBucket)
+              .select(cols(key) :+ col("vec_id").as("bnd"): _*)
+            overKeys.join(bound, key)
+              .filter(col("mn") < col("bnd")).count()
+          })
+        // append = same lineage: the build identity carries forward
+        writeContentMeta(target, graphGen(prev) + 1,
+          graphCrossedBuckets(prev) + crossedNow, graphBuildId(prev))
+        val keptKeys = newCnt
+          .join(s.read.parquet(s"$target/bsizes"), key, "left")
+          .filter(col("nn") + coalesce(col("n"), lit(0L)) <= Dedup.MaxBucket)
+          .select(cols(key): _*)
+        val keptNewB = newB.join(keptKeys, key)
+        val oldInKept = s.read.parquet(s"$target/buckets").join(keptKeys, key)
+        val cand = keptNewB.select(cols(key) :+ col("vec_id").as("u"): _*)
+          .join(oldInKept.select(cols(key) :+ col("vec_id").as("v2"): _*), key)
+          .select(cols(pk) ++ cols(Seq("u", "v2")): _*)
+          .union(keptNewB.select(cols(key) :+ col("vec_id").as("u"): _*)
+            .join(keptNewB.select(cols(key) :+ col("vec_id").as("v2"): _*), key)
+            .filter(col("u") < col("v2"))
+            .select(cols(pk) ++ cols(Seq("u", "v2")): _*))
+          .distinct()
+        val allVecs = corpusVecs.select(col("vec_id"), col("embedding"))
+          .unionByName(nv.select("vec_id", "embedding"))
+        // freeze the scored delta durably BEFORE any directory this
+        // computation reads gets mutated below (buckets/bsizes/edges
+        // appends + swaps): a cache-loss recompute of a live lineage
+        // would re-list the just-appended routing table and pair new
+        // ids with themselves — the staged re-read's lineage is the
+        // staging files alone
+        cand
+          .join(allVecs.select(col("vec_id").as("u"), col("embedding").as("e_a")), "u")
+          .join(allVecs.select(col("vec_id").as("v2"), col("embedding").as("e_b")), "v2")
+          .select(cols(pk) ++ Seq(col("u"), col("v2"),
+            intDot(col("e_a"), col("e_b")).as("w")): _*)
+          .write.mode("overwrite").parquet(s"$target/delta_scored")
+        val scored = s.read.parquet(s"$target/delta_scored")
         try {
-          val newCnt = newB.groupBy("tbl", "bkt")
-            .agg(count(lit(1)).as("nn"), min("vec_id").as("mn"))
-          // cap-crossing staleness witness under the r18 representative
-          // semantics (a rebuild re-selects and re-pairs each over-cap
-          // bucket's MaxBucket lowest ids, which an append can neither
-          // generate nor retract). Two stale shapes:
-          //  1. the delta pushes a bucket ACROSS the cap — its reps
-          //     change from "everyone" to "the lowest MaxBucket", and
-          //     the append generated none of the new pairs;
-          //  2. an ALREADY-over-cap bucket receives an id BELOW its
-          //     rep boundary (the cap-th smallest stored id) — the new
-          //     id would displace a representative in a rebuild. New
-          //     ids at or above the boundary change nothing (the
-          //     monotone-id ingest case) and are NOT counted — without
-          //     the boundary check every over-cap append re-healed
-          //     spuriously (probe: 4 s appends became ~80 s).
-          // Shape 1 and the shape-2 trigger come from ONE aggregate
-          // over the bsizes-joined delta keys (the single job a
-          // healthy corpus pays, as before); the boundary job — a
-          // window over the affected buckets' stored rows only — runs
-          // only when an over-cap delta key exists.
-          val oldBsz = s.read.parquet(s"$target/bsizes")
-          val keyed = newCnt.join(oldBsz, Seq("tbl", "bkt"), "left")
-            .select(col("tbl"), col("bkt"), col("nn"), col("mn"),
-              coalesce(col("n"), lit(0L)).as("old_n"))
-          val shapes = keyed.agg(
-            sum(when(col("old_n") <= Dedup.MaxBucket &&
-              col("nn") + col("old_n") > Dedup.MaxBucket, 1L)
-              .otherwise(0L)).as("newly"),
-            sum(when(col("old_n") > Dedup.MaxBucket, 1L).otherwise(0L))
-              .as("over")).head()
-          val crossedNow = (if (shapes.isNullAt(0)) 0L else shapes.getLong(0)) + (
-            if (shapes.isNullAt(1) || shapes.getLong(1) == 0L) 0L
-            else {
-              val overKeys = keyed.filter(col("old_n") > Dedup.MaxBucket)
-                .select("tbl", "bkt", "mn")
-              val bound = s.read.parquet(s"$target/buckets")
-                .join(overKeys.select("tbl", "bkt"), Seq("tbl", "bkt"))
-                .withColumn("rn", row_number().over(
-                  Window.partitionBy("tbl", "bkt").orderBy(col("vec_id").asc)))
-                .filter(col("rn") === Dedup.MaxBucket)
-                .select(col("tbl"), col("bkt"), col("vec_id").as("bnd"))
-              overKeys.join(bound, Seq("tbl", "bkt"))
-                .filter(col("mn") < col("bnd")).count()
-            })
-          writeMetaLong(target, ".gen", prevGen + 1)
-          writeMetaLong(target, ".crossed", prevCrossed + crossedNow)
-          // append = same lineage: carry the build identity forward
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(target, ".build"), graphBuildId(prev))
-          val keptKeys = newCnt
-            .join(s.read.parquet(s"$target/bsizes"), Seq("tbl", "bkt"), "left")
-            .filter(col("nn") + coalesce(col("n"), lit(0L)) <= Dedup.MaxBucket)
-            .select("tbl", "bkt")
-          val keptNewB = newB.join(keptKeys, Seq("tbl", "bkt"))
-          val oldInKept = s.read.parquet(s"$target/buckets")
-            .join(keptKeys, Seq("tbl", "bkt"))
-          val cand = keptNewB.select(col("tbl"), col("bkt"), col("vec_id").as("u"))
-            .join(oldInKept.select(col("tbl"), col("bkt"), col("vec_id").as("v2")),
-              Seq("tbl", "bkt"))
-            .select("u", "v2")
-            .union(keptNewB.select(col("tbl"), col("bkt"), col("vec_id").as("u"))
-              .join(keptNewB.select(col("tbl"), col("bkt"), col("vec_id").as("v2")),
-                Seq("tbl", "bkt"))
-              .filter(col("u") < col("v2"))
-              .select("u", "v2"))
-            .distinct()
-          val allVecs = corpusVecs.select(col("vec_id"), col("embedding"))
-            .unionByName(nv)
-          // freeze the scored delta durably BEFORE any directory this
-          // computation reads gets mutated below (buckets/bsizes/edges
-          // appends + swaps): a cache-loss recompute of a live lineage
-          // would re-list the just-appended routing table and pair new
-          // ids with themselves — the staged re-read's lineage is the
-          // staging files alone
-          cand
-            .join(allVecs.select(col("vec_id").as("u"), col("embedding").as("e_a")), "u")
-            .join(allVecs.select(col("vec_id").as("v2"), col("embedding").as("e_b")), "v2")
-            .select(col("u"), col("v2"), intDot(col("e_a"), col("e_b")).as("w"))
-            .write.mode("overwrite").parquet(s"$target/delta_scored")
-          val scored = s.read.parquet(s"$target/delta_scored")
-          try {
-            // delta pair files keep the table's sorted-by-w layout
-            // (one sorted run per append) so the CoreWmin/CommWmin
-            // threshold filters' row-group pruning stays effective on
-            // an append-heavy artifact, not only post-compaction
+          // delta pair files keep the table's sorted-by-w layout
+          // (one sorted run per append) so the CoreWmin/CommWmin
+          // threshold filters' row-group pruning stays effective on
+          // an append-heavy artifact, not only post-compaction
+          if (k.hasPairs)
             scored
               .select(least(col("u"), col("v2")).as("id_a"),
                 greatest(col("u"), col("v2")).as("id_b"), col("w"))
               .filter(col("w") >= CoreWmin)
               .sortWithinPartitions(col("w").desc, col("id_a").asc)
               .write.mode(SaveMode.Append).parquet(s"$target/pairs")
-            newB.repartition(col("tbl")).sortWithinPartitions("tbl", "bkt", "vec_id")
-              .write.mode(SaveMode.Append).parquet(s"$target/buckets")
-            // bsizes: buckets-count sized — rewrite via staging now,
-            // DIRECTORY SWAP DEFERRED to the very end: several later
-            // plans' lineage still reads the old bsizes files (cache
-            // retention is best-effort, so a post-swap recompute would
-            // hit deleted files — the StreamingNearDup staging lesson)
-            s.read.parquet(s"$target/bsizes")
-              .join(newCnt, Seq("tbl", "bkt"), "full")
-              .select(col("tbl"), col("bkt"),
-                (coalesce(col("n"), lit(0L)) + coalesce(col("nn"), lit(0L))).as("n"))
-              .coalesce(1).sortWithinPartitions("tbl", "bkt")
-              .write.mode("overwrite").parquet(s"$target/bsizes_new")
-            // edges: re-rank affected srcs, swap only their partitions.
-            // Delta edges pick up the dst vector (the stored layout's
-            // denormalized `dvec`) from the same union frame the
-            // scoring join read; surviving stored edges keep theirs.
-            val sym = scored.select(col("u").as("src"), col("v2").as("dst"), col("w"))
-              .union(scored.select(col("v2").as("src"), col("u").as("dst"), col("w")))
-              .join(allVecs.select(col("vec_id").as("dst"),
-                col("embedding").as("dvec")), "dst")
-              .select("src", "dst", "w", "dvec")
-              .persist()
-            val affected = sym.select("src").distinct().persist()
-            // ≤ EdgeBuckets distinct ints — bounded driver collect
-            val affBuckets = affected.select(edgeBucketOf(col("src")).as("bucket"))
-              .distinct().collect().map(_.getInt(0))
-            if (affBuckets.nonEmpty) {
-              val oldPart = s.read.parquet(s"$target/edges")
-                .filter(col("bucket").isin(affBuckets.map(Integer.valueOf).toIndexedSeq: _*))
-              val rer = oldPart.join(affected, Seq("src"))
-                .select("src", "dst", "w", "dvec")
-                .unionByName(sym)
-                .withColumn("rk", row_number().over(
-                  Window.partitionBy("src").orderBy(col("w").desc, col("dst").asc)))
-                .filter(col("rk") <= GraphTopG)
-              // materialize the replacement partitions BEFORE touching
-              // the directories they were computed from
-              oldPart.join(affected, Seq("src"), "left_anti")
-                .select("src", "dst", "w", "rk", "dvec")
-                .unionByName(rer.select("src", "dst", "w", "rk", "dvec"))
-                .withColumn("bucket", edgeBucketOf(col("src")))
-                .repartition(col("bucket"))
-                .sortWithinPartitions("bucket", "src", "rk")
-                .select("src", "dst", "w", "rk", "dvec", "bucket")
-                .write.partitionBy("bucket").mode("overwrite")
-                .parquet(s"$target/edges_new")
+          writeRouting(newB, pk, s"$target/buckets", SaveMode.Append)
+          // bsizes: buckets-count sized — rewrite via staging now,
+          // DIRECTORY SWAP DEFERRED to the very end: several later
+          // plans' lineage still reads the old bsizes files (cache
+          // retention is best-effort, so a post-swap recompute would
+          // hit deleted files — the StreamingNearDup staging lesson)
+          writeSizes(s.read.parquet(s"$target/bsizes")
+            .join(newCnt, key, "full")
+            .select(cols(key) :+ (coalesce(col("n"), lit(0L)) +
+              coalesce(col("nn"), lit(0L))).as("n"): _*),
+            pk, s"$target/bsizes_new")
+          // edges: re-rank affected srcs, swap only their partitions.
+          // Delta edges pick up the dst vector (the stored layout's
+          // denormalized `dvec`) from the same union frame the
+          // scoring join read; surviving stored edges keep theirs.
+          val sym = scored.select(cols(pk) ++ Seq(col("u").as("src"),
+              col("v2").as("dst"), col("w")): _*)
+            .union(scored.select(cols(pk) ++ Seq(col("v2").as("src"),
+              col("u").as("dst"), col("w")): _*))
+            .join(allVecs.select(col("vec_id").as("dst"),
+              col("embedding").as("dvec")), "dst")
+            .select(cols(pk ++ Seq("src", "dst", "w", "dvec")): _*)
+            .persist()
+          val affected = sym.select(cols(pk :+ "src"): _*).distinct().persist()
+          // ≤ (strata ·) EdgeBuckets partitions — bounded driver collect
+          val partCols = pk :+ "bucket"
+          val affParts = affected
+            .select(cols(pk) :+ edgeBucketOf(col("src")).as("bucket"): _*)
+            .distinct().collect()
+            .map(r => partCols.indices.map(i => partCols(i) -> r.get(i)))
+          if (affParts.nonEmpty) {
+            // a disjunction over partition columns — pruned at
+            // planning to exactly the affected directories
+            val oldPart = s.read.parquet(s"$target/edges").filter(affParts
+              .map(_.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
+              .reduce(_ || _))
+            val rer = oldPart.join(affected, pk :+ "src")
+              .select(cols(pk ++ Seq("src", "dst", "w", "dvec")): _*)
+              .unionByName(sym)
+              .withColumn("rk", row_number().over(
+                Window.partitionBy("src").orderBy(col("w").desc, col("dst").asc)))
+              .filter(col("rk") <= GraphTopG)
+            // materialize the replacement partitions BEFORE touching
+            // the directories they were computed from
+            val edgeCols = cols(pk ++ Seq("src", "dst", "w", "rk", "dvec"))
+            writeEdges(oldPart.join(affected, pk :+ "src", "left_anti")
+                .select(edgeCols: _*)
+                .unionByName(rer.select(edgeCols: _*))
+                .withColumn("bucket", edgeBucketOf(col("src"))),
+              pk, s"$target/edges_new")
+          }
+          // every plan has executed — now the directory swaps (the
+          // only destructive steps, and nothing reads after them)
+          rmTree(s"$target/bsizes")
+          java.nio.file.Files.move(
+            java.nio.file.Paths.get(s"$target/bsizes_new"),
+            java.nio.file.Paths.get(s"$target/bsizes"))
+          affParts.foreach { p =>
+            val part = p.map { case (c, v) => s"$c=$v" }.mkString("/")
+            rmTree(s"$target/edges/$part")
+            val np = java.nio.file.Paths.get(s"$target/edges_new/$part")
+            if (java.nio.file.Files.isDirectory(np)) {
+              val dst = java.nio.file.Paths.get(s"$target/edges/$part")
+              java.nio.file.Files.createDirectories(dst.getParent)
+              java.nio.file.Files.move(np, dst)
             }
-            // every plan has executed — now the directory swaps (the
-            // only destructive steps, and nothing reads after them)
-            rmTree(s"$target/bsizes")
-            java.nio.file.Files.move(
-              java.nio.file.Paths.get(s"$target/bsizes_new"),
-              java.nio.file.Paths.get(s"$target/bsizes"))
-            affBuckets.foreach { k =>
-              rmTree(s"$target/edges/bucket=$k")
-              val np = java.nio.file.Paths.get(s"$target/edges_new/bucket=$k")
-              if (java.nio.file.Files.isDirectory(np))
-                java.nio.file.Files.move(np,
-                  java.nio.file.Paths.get(s"$target/edges/bucket=$k"))
-            }
-            if (affBuckets.nonEmpty) rmTree(s"$target/edges_new")
-            sym.unpersist()
-            affected.unpersist()
-          } finally rmTree(s"$target/delta_scored")
-        } finally { newB.unpersist(); nv.unpersist() }
-      }
+          }
+          if (affParts.nonEmpty) rmTree(s"$target/edges_new")
+          sym.unpersist()
+          affected.unpersist()
+        } finally rmTree(s"$target/delta_scored")
+      } finally { newB.unpersist(); nv.unpersist() }
     }
     // the append extended the served corpus (the ingest convention:
     // callers hand over the grown vector set) — drop the TTL-cached
     // corpus stamp so the NEXT serve's mode selection re-censuses
     // against the corpus as it is now instead of waiting out the TTL
     invalidateCorpusStamp(d)
-    val live = graft.core.ArtifactStore.current(adir).get
-    val crossed = graphCrossedBuckets(live)
-    val populated = s.read.parquet(s"$live/bsizes").count()
-    if (crossed > rebuildCrossedFrac * populated) {
+    def stale(v: String): Boolean = graphCrossedBuckets(v) >
+      rebuildCrossedFrac * s.read.parquet(s"$v/bsizes").count()
+    if (stale(out))
       // cumulative cap-crossing staleness past the budget: rebuild the
       // whole artifact from the live corpus (what the append path has
       // been maintaining incrementally), restoring append ≡ rebuild
-      // exactness. Runs AFTER the append lock releases (gcVersions
-      // takes the same file lock; a nested same-JVM FileLock throws).
-      val allVecs = corpusVecs.select(col("vec_id"), col("embedding"))
-        .unionByName(newVecs.select(col("vec_id"), col("embedding")))
-      val rebuilt = graft.core.ArtifactStore.withMaintenanceLock(adir) {
+      // exactness
+      graft.core.ArtifactStore.rewriteOrKeep(adir) { cur =>
         // RE-READ inside the lock: the decision above used state read
         // after the append lock released, so a cross-process append
         // can land in between. The generation must be derived from
         // the version that is current NOW, and a concurrent rebuild
         // that already reset the counter must not be repeated (a
         // stale rebuild would publish over it with fewer vectors).
-        val fresh = graft.core.ArtifactStore.current(adir).get
-        if (graphCrossedBuckets(fresh) <= rebuildCrossedFrac *
-            s.read.parquet(s"$fresh/bsizes").count()) fresh
-        else recoveredMissingVecs(s, fresh, allVecs) match {
-          case None =>
-            // an artifact id is covered by neither the caller's frames
-            // nor the edge table's denormalized vectors (an in-edge-less
-            // isolate from a cross-process append): publishing would
-            // silently drop it. Decline — witnessed, counter intact, so
-            // the next append (whose caller reads the fuller corpus)
-            // re-triggers the heal.
-            java.nio.file.Files.writeString(java.nio.file.Paths.get(
-              fresh, ".rebuild_decline"), "uncovered_ids")
-            fresh
-          case Some(rec) => graft.core.ArtifactStore.publish(adir) { target =>
-            writeGraphTables(s, allVecs.unionByName(rec), target,
-              gen = graphGen(fresh) + 1)
+        val fresh = cur.get
+        if (!stale(fresh)) None
+        else {
+          // the stratified kind's labels: old vectors' prefix keys
+          // come from the artifact's OWN routing table (the label is
+          // part of the artifact's identity), so `corpusVecs` keeps
+          // the (vec_id, embedding) convention for every kind
+          val oldKeys = s.read.parquet(s"$fresh/buckets")
+            .select(col("vec_id") +: pk.map(c => col(c).cast("long").as(c)): _*)
+            .distinct()
+          def keyed(v: DataFrame) = if (pk.isEmpty) v else v.join(oldKeys, "vec_id")
+          val base = keyed(corpusVecs.select(col("vec_id"), col("embedding")))
+            .unionByName(newVecs.select(Seq(col("vec_id"), col("embedding")) ++
+              k.prefixCols: _*))
+          recoveredMissingVecs(s, fresh, base) match {
+            case None =>
+              // an artifact id is covered by neither the caller's
+              // frames nor the edge table's denormalized vectors (an
+              // in-edge-less isolate from a cross-process append):
+              // publishing would silently drop it. Decline —
+              // witnessed, counter intact, so the next append (whose
+              // caller reads the fuller corpus) re-triggers the heal.
+              java.nio.file.Files.writeString(java.nio.file.Paths.get(
+                fresh, ".rebuild_decline"), "uncovered_ids")
+              None
+            case Some(rec) => Some(target =>
+              k.build(s, base.unionByName(keyed(rec).select(base.columns.map(col): _*)),
+                target, graphGen(fresh) + 1))
           }
         }
       }
-      graft.core.ArtifactStore.gcVersions(adir)
-      rebuilt
-    } else if (graphFileCount(live) > graphCompactTrigger(s))
-      compactKnnGraph(s, d, onlyIfFragmented = true)
+    else if (graft.core.ArtifactStore.dataFileCount(out) > k.compactAt(s, out))
+      compactGraph(k, s, d, onlyIfFragmented = true)
     else out
   }
 
-  /** Rewrite every table back to one sorted run per directory and
-    * reclaim superseded versions past the reader-retention window —
-    * the `compactSigIndex` discipline.
+  /** Rewrite a graph's tables back to one sorted run per directory
+    * partition and reclaim superseded versions past the reader-retention
+    * window (a [[graft.core.ArtifactStore.rewriteOrKeep]]). With
+    * `onlyIfFragmented` (the auto-compact path) the live file count is
+    * re-checked under the lock, so a concurrent loser keeps the version.
+    * Compaction serves IDENTICAL content: generation, crossed-bucket
+    * counter and build lineage carry through unchanged, so gen-keyed
+    * consumers (the stats artifact) don't rebuild.
     */
-  def compactKnnGraph(s: SparkSession, d: String,
-      onlyIfFragmented: Boolean = false): String = synchronized {
-    val adir = graft.core.ArtifactStore.artifactDir("knn_graph", d, GraphTag)
-    val compacted = graft.core.ArtifactStore.withMaintenanceLock(adir) {
-      val cur = graft.core.ArtifactStore.current(adir).getOrElse(
-        throw new IllegalStateException(s"nothing to compact: knn_graph for $d"))
-      if (onlyIfFragmented && graphFileCount(cur) <= graphCompactTrigger(s)) cur
-      else {
-        val b = s.read.parquet(s"$cur/buckets")
-        val sz = s.read.parquet(s"$cur/bsizes")
-        val ed = s.read.parquet(s"$cur/edges")
-        val pr = s.read.parquet(s"$cur/pairs")
-        graft.core.ArtifactStore.publish(adir) { target =>
-          b.repartition(col("tbl")).sortWithinPartitions("tbl", "bkt", "vec_id")
-            .write.mode("overwrite").parquet(s"$target/buckets")
-          sz.coalesce(1).sortWithinPartitions("tbl", "bkt")
-            .write.mode("overwrite").parquet(s"$target/bsizes")
-          ed.repartition(col("bucket"))
-            .sortWithinPartitions("bucket", "src", "rk")
-            .write.partitionBy("bucket").mode("overwrite").parquet(s"$target/edges")
-          pr.repartition(s.sparkContext.defaultParallelism)
+  private def compactGraph(k: GraphKind, s: SparkSession, d: String,
+      onlyIfFragmented: Boolean): String = {
+    val adir = graft.core.ArtifactStore.artifactDir(k.name, d, k.tag)
+    val pk = k.prefix
+    graft.core.ArtifactStore.rewriteOrKeep(adir) { cur =>
+      val live = cur.getOrElse(
+        throw new IllegalStateException(s"nothing to compact: ${k.name} for $d"))
+      if (onlyIfFragmented &&
+          graft.core.ArtifactStore.dataFileCount(live) <= k.compactAt(s, live)) None
+      else Some { target =>
+        writeRouting(s.read.parquet(s"$live/buckets"), pk, s"$target/buckets",
+          SaveMode.Overwrite)
+        writeSizes(s.read.parquet(s"$live/bsizes"), pk, s"$target/bsizes")
+        writeEdges(s.read.parquet(s"$live/edges"), pk, s"$target/edges")
+        if (k.hasPairs)
+          s.read.parquet(s"$live/pairs").repartition(s.sparkContext.defaultParallelism)
             .sortWithinPartitions(col("w").desc, col("id_a").asc)
             .write.mode("overwrite").parquet(s"$target/pairs")
-          // compaction serves IDENTICAL content: generation and the
-          // crossed-bucket staleness counter carry through unchanged,
-          // so gen-keyed consumers (the stats artifact) don't rebuild
-          writeMetaLong(target, ".gen", graphGen(cur))
-          writeMetaLong(target, ".crossed", graphCrossedBuckets(cur))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(target, ".build"), graphBuildId(cur))
-        }
+        writeContentMeta(target, graphGen(live), graphCrossedBuckets(live),
+          graphBuildId(live))
       }
     }
-    graft.core.ArtifactStore.gcVersions(adir)
-    compacted
   }
 
   // ------------------------------------- stored analytics (graph_stats)
@@ -1106,18 +1191,10 @@ object Graph {
         stampOf(ver).exists(gs => gs <= gv && gv - gs <= maxLagGen)
     graft.core.ArtifactStore.current(adir) match {
       case Some(cur) if freshEnough(cur) => cur
-      case _ =>
-        val out = graft.core.ArtifactStore.withMaintenanceLock(adir) {
-          graft.core.ArtifactStore.current(adir) match {
-            case Some(cur) if freshEnough(cur) => cur // lost race, fresh
-            case _ =>
-              graft.core.ArtifactStore.publish(adir) { target =>
-                writeGraphStatsTables(s, graphDir, gv, build, target)
-              }
-          }
-        }
-        graft.core.ArtifactStore.gcVersions(adir)
-        out
+      case _ => graft.core.ArtifactStore.rewriteOrKeep(adir) {
+        case Some(cur) if freshEnough(cur) => None // lost race, fresh
+        case _ => Some(writeGraphStatsTables(s, graphDir, gv, build, _))
+      }
     }
   }
 
@@ -1357,8 +1434,8 @@ object Graph {
     * apply per (stratum, tbl, bkt) — the graph IS the slice's graph,
     * bit-identical to building [[ensureKnnGraph]] on the filtered
     * corpus. Build-once per corpus+layout like the main graph's gen-0;
-    * a mutating corpus appends with [[appendStratumGraph]] (the main
-    * append's discipline with the stratum carried through every key).
+    * appends and compaction are the main graph's ([[appendGraph]],
+    * [[compactGraph]]) over [[StratumKind]].
     */
   def ensureStratumGraph(s: SparkSession, d: String): String = synchronized {
     graft.core.ArtifactStore.ensure(
@@ -1459,318 +1536,24 @@ object Graph {
       .filter(col("stratum") === stratum)
       .select("tbl", "bkt", "n")
 
-  /** Delta-append labeled vectors into the STRATIFIED graph —
-    * [[appendKnnGraph]]'s discipline with the stratum carried through
-    * every key, in ONE pass (no per-stratum loop): the delta's bucket
-    * rows meet only their own stratum's occupancy/buckets (the cap
-    * rule applies per (stratum, tbl, bkt)), candidates never cross
-    * strata, only affected srcs re-rank their top-G, and only the
-    * (stratum, bucket) edge directories holding an affected src are
-    * rewritten — a delta labeled entirely stratum 3 touches zero
-    * bytes of any other stratum's partitions. A stratum unseen at
-    * build time materializes as a new directory partition (its delta
-    * is new×new only).
-    *
-    * Same exactness contract as the main append: append ≡ one-shot
-    * [[ensureStratumGraph]] rebuild on the union corpus while no
-    * (stratum, tbl, bkt) occupancy crosses the cap as the delta lands
-    * (spec-pinned per stratum against the filtered-corpus build).
-    * `corpusVecs` must supply (vec_id, embedding) for every id the
-    * artifact already holds — the [[appendKnnGraph]] convention.
-    * Publication is an [[graft.core.ArtifactStore.appendVersion]]
-    * (hard-link carry-forward + atomic pointer flip), so readers see
-    * pre- or post-append, never a torn delta.
-    *
-    * Lifecycle parity with the main graph (r16): cap-crossing
-    * staleness is counted per (stratum, tbl, bkt) and accumulated in
-    * the version meta ([[graphCrossedBuckets]]); past
-    * `rebuildCrossedFrac` of the populated keys the append triggers a
-    * full stratified rebuild (old vectors' strata recovered from the
-    * artifact's own routing table), restoring exactness with the
-    * counter reset — without this, a long-lived stratified artifact
-    * under trickle ingest silently degrades recall in exactly the
-    * low-selectivity band it exists to fix. Fragmentation past the
-    * compact trigger runs [[compactStratumGraph]].
+  /** Delta-append labeled vectors (`newVecs` carries [[StratumCol]])
+    * into the stratified graph — [[appendGraph]] with the stratum in
+    * every key; exactness is per stratum against the filtered-corpus
+    * build.
     */
   def appendStratumGraph(s: SparkSession, d: String, newVecs: DataFrame,
       corpusVecs: DataFrame,
       rebuildCrossedFrac: Double = CrossedRebuildFrac): String = synchronized {
     ensureStratumGraph(s, d)
-    val adir =
-      graft.core.ArtifactStore.artifactDir("stratum_graph", d, StratumGraphTag)
-    val out = graft.core.ArtifactStore.withMaintenanceLock(adir) {
-      val prev = graft.core.ArtifactStore.current(adir).get
-      val prevGen = graphGen(prev)
-      val prevCrossed = graphCrossedBuckets(prev)
-      graft.core.ArtifactStore.appendVersion(adir) { target =>
-        val key = Seq("stratum", "tbl", "bkt")
-        val nv = newVecs.select(col("vec_id"), col("embedding"),
-          col(StratumCol).cast("long").as("stratum")).persist()
-        val newB = nv.select(col("vec_id"), col("stratum"),
-          posexplode(graft.functions.SrpKernel.srpBuckets(
-            col("embedding"), Dedup.SrpProj)).as(Seq("tbl", "bkt"))).persist()
-        try {
-          val newCnt = newB.groupBy(key.map(col): _*)
-            .agg(count(lit(1)).as("nn"), min("vec_id").as("mn"))
-          // cap-crossing staleness witness, per (stratum, tbl, bkt) —
-          // the main append's r18 two-shape rule with the stratum in
-          // the key: (1) the delta pushes a bucket across the cap;
-          // (2) an already-over-cap bucket receives an id below its
-          // rep boundary (cap-th smallest stored id) — monotone-id
-          // over-cap appends count nothing and trigger no spurious
-          // heal. See the main append for the full rationale.
-          val keyed = newCnt
-            .join(s.read.parquet(s"$target/bsizes"), key, "left")
-            .select(col("stratum"), col("tbl"), col("bkt"), col("nn"),
-              col("mn"), coalesce(col("n"), lit(0L)).as("old_n"))
-          val shapes = keyed.agg(
-            sum(when(col("old_n") <= Dedup.MaxBucket &&
-              col("nn") + col("old_n") > Dedup.MaxBucket, 1L)
-              .otherwise(0L)).as("newly"),
-            sum(when(col("old_n") > Dedup.MaxBucket, 1L).otherwise(0L))
-              .as("over")).head()
-          val crossedNow = (if (shapes.isNullAt(0)) 0L else shapes.getLong(0)) + (
-            if (shapes.isNullAt(1) || shapes.getLong(1) == 0L) 0L
-            else {
-              val overKeys = keyed.filter(col("old_n") > Dedup.MaxBucket)
-                .select(col("stratum"), col("tbl"), col("bkt"), col("mn"))
-              val bound = s.read.parquet(s"$target/buckets")
-                .join(overKeys.select(key.map(col): _*), key)
-                .withColumn("rn", row_number().over(
-                  Window.partitionBy(key.map(col): _*)
-                    .orderBy(col("vec_id").asc)))
-                .filter(col("rn") === Dedup.MaxBucket)
-                .select(col("stratum"), col("tbl"), col("bkt"),
-                  col("vec_id").as("bnd"))
-              overKeys.join(bound, key)
-                .filter(col("mn") < col("bnd")).count()
-            })
-          writeMetaLong(target, ".gen", prevGen + 1)
-          writeMetaLong(target, ".crossed", prevCrossed + crossedNow)
-          val keptKeys = newCnt
-            .join(s.read.parquet(s"$target/bsizes"), key, "left")
-            .filter(col("nn") + coalesce(col("n"), lit(0L)) <= Dedup.MaxBucket)
-            .select(key.map(col): _*)
-          val keptNewB = newB.join(keptKeys, key)
-          val oldInKept = s.read.parquet(s"$target/buckets").join(keptKeys, key)
-          val cand = keptNewB
-            .select(col("stratum"), col("tbl"), col("bkt"), col("vec_id").as("u"))
-            .join(oldInKept
-              .select(col("stratum"), col("tbl"), col("bkt"), col("vec_id").as("v2")),
-              key)
-            .select("stratum", "u", "v2")
-            .union(keptNewB
-              .select(col("stratum"), col("tbl"), col("bkt"), col("vec_id").as("u"))
-              .join(keptNewB
-                .select(col("stratum"), col("tbl"), col("bkt"), col("vec_id").as("v2")),
-                key)
-              .filter(col("u") < col("v2"))
-              .select("stratum", "u", "v2"))
-            .distinct()
-          val allVecs = corpusVecs.select(col("vec_id"), col("embedding"))
-            .unionByName(nv.select("vec_id", "embedding"))
-          // freeze the scored delta durably before any directory this
-          // computation reads is mutated (the appendKnnGraph staging
-          // rule: a cache-loss recompute must re-read staging files,
-          // not post-append live directories)
-          cand
-            .join(allVecs.select(col("vec_id").as("u"), col("embedding").as("e_a")), "u")
-            .join(allVecs.select(col("vec_id").as("v2"), col("embedding").as("e_b")), "v2")
-            .select(col("stratum"), col("u"), col("v2"),
-              intDot(col("e_a"), col("e_b")).as("w"))
-            .write.mode("overwrite").parquet(s"$target/delta_scored")
-          val scored = s.read.parquet(s"$target/delta_scored")
-          try {
-            newB.repartition(col("stratum"), col("tbl"))
-              .sortWithinPartitions("stratum", "tbl", "bkt", "vec_id")
-              .select("vec_id", "tbl", "bkt", "stratum")
-              .write.partitionBy("stratum").mode(SaveMode.Append)
-              .parquet(s"$target/buckets")
-            // bsizes: staged rewrite, directory swap deferred to the
-            // end with the edge swaps (later plans read the old files)
-            s.read.parquet(s"$target/bsizes")
-              .join(newCnt, key, "full")
-              .select(col("stratum"), col("tbl"), col("bkt"),
-                (coalesce(col("n"), lit(0L)) + coalesce(col("nn"), lit(0L))).as("n"))
-              .repartition(col("stratum"))
-              .sortWithinPartitions("stratum", "tbl", "bkt")
-              .write.partitionBy("stratum").mode("overwrite")
-              .parquet(s"$target/bsizes_new")
-            val sym = scored
-              .select(col("stratum"), col("u").as("src"), col("v2").as("dst"), col("w"))
-              .union(scored
-                .select(col("stratum"), col("v2").as("src"), col("u").as("dst"), col("w")))
-              .join(allVecs.select(col("vec_id").as("dst"),
-                col("embedding").as("dvec")), "dst")
-              .select("stratum", "src", "dst", "w", "dvec")
-              .persist()
-            val affected = sym.select("stratum", "src").distinct().persist()
-            // ≤ strata · EdgeBuckets pairs — bounded driver collect
-            val affParts = affected
-              .select(col("stratum"), edgeBucketOf(col("src")).as("bucket"))
-              .distinct().collect()
-              .map(r => (r.getLong(0), r.getInt(1)))
-            if (affParts.nonEmpty) {
-              // a disjunction over partition columns — pruned at
-              // planning to exactly the affected directories
-              val partPred = affParts
-                .map { case (st, bk) =>
-                  col("stratum") === st && col("bucket") === bk }
-                .reduce(_ || _)
-              val oldPart = s.read.parquet(s"$target/edges").filter(partPred)
-              val rer = oldPart.join(affected, Seq("stratum", "src"))
-                .select("stratum", "src", "dst", "w", "dvec")
-                .unionByName(sym)
-                .withColumn("rk", row_number().over(
-                  Window.partitionBy("src").orderBy(col("w").desc, col("dst").asc)))
-                .filter(col("rk") <= GraphTopG)
-              oldPart.join(affected, Seq("stratum", "src"), "left_anti")
-                .select("stratum", "src", "dst", "w", "rk", "dvec")
-                .unionByName(rer.select("stratum", "src", "dst", "w", "rk", "dvec"))
-                .withColumn("bucket", edgeBucketOf(col("src")))
-                .repartition(col("stratum"), col("bucket"))
-                .sortWithinPartitions("stratum", "bucket", "src", "rk")
-                .select("src", "dst", "w", "rk", "dvec", "stratum", "bucket")
-                .write.partitionBy("stratum", "bucket").mode("overwrite")
-                .parquet(s"$target/edges_new")
-              affParts.foreach { case (st, bk) =>
-                rmTree(s"$target/edges/stratum=$st/bucket=$bk")
-                val np = java.nio.file.Paths.get(
-                  s"$target/edges_new/stratum=$st/bucket=$bk")
-                if (java.nio.file.Files.isDirectory(np)) {
-                  java.nio.file.Files.createDirectories(
-                    java.nio.file.Paths.get(s"$target/edges/stratum=$st"))
-                  java.nio.file.Files.move(np,
-                    java.nio.file.Paths.get(
-                      s"$target/edges/stratum=$st/bucket=$bk"))
-                }
-              }
-              rmTree(s"$target/edges_new")
-            }
-            rmTree(s"$target/bsizes")
-            java.nio.file.Files.move(
-              java.nio.file.Paths.get(s"$target/bsizes_new"),
-              java.nio.file.Paths.get(s"$target/bsizes"))
-            sym.unpersist(); affected.unpersist()
-          } finally rmTree(s"$target/delta_scored")
-        } finally { newB.unpersist(); nv.unpersist() }
-      }
-    }
-    // the append extended the served corpus (the ingest convention:
-    // callers hand over the grown vector set) — drop the TTL-cached
-    // corpus stamp so the NEXT serve's mode selection re-censuses
-    // against the corpus as it is now instead of waiting out the TTL
-    invalidateCorpusStamp(d)
-    val live = graft.core.ArtifactStore.current(adir).get
-    val crossed = graphCrossedBuckets(live)
-    val populated = s.read.parquet(s"$live/bsizes").count()
-    if (crossed > rebuildCrossedFrac * populated) {
-      // cumulative cap-crossing staleness past the budget: rebuild the
-      // stratified artifact from the live corpus, restoring append ≡
-      // rebuild exactness per stratum (the main graph's self-heal,
-      // ported). Old vectors' strata come from the artifact's OWN
-      // routing table — the label is part of the artifact's identity,
-      // so `corpusVecs` keeps the main append's (vec_id, embedding)
-      // convention unchanged.
-      val rebuilt = graft.core.ArtifactStore.withMaintenanceLock(adir) {
-        // RE-READ inside the lock (the main self-heal's discipline):
-        // the trigger decision used post-lock state, so a concurrent
-        // append's routing rows — the label memory the rebuild needs —
-        // must come from the version that is current NOW, and a
-        // rebuild another process already ran must not be repeated.
-        val fresh = graft.core.ArtifactStore.current(adir).get
-        if (graphCrossedBuckets(fresh) <= rebuildCrossedFrac *
-            s.read.parquet(s"$fresh/bsizes").count()) fresh
-        else {
-          val oldLabels = s.read.parquet(s"$fresh/buckets")
-            .select(col("vec_id"), col("stratum").cast("long").as("stratum"))
-            .distinct()
-          val base = corpusVecs.select(col("vec_id"), col("embedding"))
-            .join(oldLabels, "vec_id")
-            .unionByName(newVecs.select(col("vec_id"), col("embedding"),
-              col(StratumCol).cast("long").as("stratum")))
-          // the main self-heal's coverage discipline: ids the
-          // artifact's routing table holds but the caller's frames
-          // miss (a cross-process append between trigger and lock)
-          // are recovered from the edge table's `dvec`; their strata
-          // come from the routing table itself. Unrecoverable ids →
-          // witnessed decline, counter intact.
-          recoveredMissingVecs(s, fresh, base) match {
-            case None =>
-              java.nio.file.Files.writeString(java.nio.file.Paths.get(
-                fresh, ".rebuild_decline"), "uncovered_ids")
-              fresh
-            case Some(rec) =>
-              val allVecs = base.unionByName(rec.join(oldLabels, "vec_id")
-                .select(col("vec_id"), col("embedding"), col("stratum")))
-              graft.core.ArtifactStore.publish(adir) { target =>
-                writeStratumTables(s, allVecs, target,
-                  gen = graphGen(fresh) + 1)
-              }
-          }
-        }
-      }
-      graft.core.ArtifactStore.gcVersions(adir)
-      rebuilt
-    } else if (graphFileCount(live) > stratumCompactTrigger(live))
-      compactStratumGraph(s, d, onlyIfFragmented = true)
-    else out
-  }
-
-  /** Append-fragmentation trigger for the STRATIFIED artifact: the
-    * main trigger is calibrated for the flat layout, but here the
-    * one-sorted-run baseline scales with the stratum count (one run
-    * per (stratum, bucket) edge directory plus per-stratum
-    * buckets/bsizes runs), so compaction fires at 2× that baseline —
-    * the same "appends have roughly doubled the file count" intent.
-    */
-  private def stratumCompactTrigger(versionDir: String): Int = {
-    val strata = Option(new java.io.File(s"$versionDir/edges").listFiles())
-      .getOrElse(Array.empty).count(f => f.isDirectory &&
-        f.getName.startsWith("stratum="))
-    2 * (math.max(strata, 1) * (EdgeBuckets + 2) + 1)
+    appendGraph(StratumKind, s, d, newVecs, corpusVecs, rebuildCrossedFrac)
   }
 
   /** Rewrite the stratified tables back to one sorted run per
-    * directory partition and reclaim superseded versions — the
-    * [[compactKnnGraph]] discipline. Content identical: generation
-    * and crossed-bucket counter carry through.
+    * (stratum, bucket) partition — [[compactGraph]].
     */
   def compactStratumGraph(s: SparkSession, d: String,
       onlyIfFragmented: Boolean = false): String = synchronized {
-    val adir =
-      graft.core.ArtifactStore.artifactDir("stratum_graph", d, StratumGraphTag)
-    val compacted = graft.core.ArtifactStore.withMaintenanceLock(adir) {
-      val cur = graft.core.ArtifactStore.current(adir).getOrElse(
-        throw new IllegalStateException(s"nothing to compact: stratum_graph for $d"))
-      if (onlyIfFragmented && graphFileCount(cur) <= stratumCompactTrigger(cur)) cur
-      else {
-        val b = s.read.parquet(s"$cur/buckets")
-        val sz = s.read.parquet(s"$cur/bsizes")
-        val ed = s.read.parquet(s"$cur/edges")
-        graft.core.ArtifactStore.publish(adir) { target =>
-          b.repartition(col("stratum"), col("tbl"))
-            .sortWithinPartitions("stratum", "tbl", "bkt", "vec_id")
-            .select("vec_id", "tbl", "bkt", "stratum")
-            .write.partitionBy("stratum").mode("overwrite")
-            .parquet(s"$target/buckets")
-          sz.repartition(col("stratum"))
-            .sortWithinPartitions("stratum", "tbl", "bkt")
-            .select("tbl", "bkt", "n", "stratum")
-            .write.partitionBy("stratum").mode("overwrite")
-            .parquet(s"$target/bsizes")
-          ed.repartition(col("stratum"), col("bucket"))
-            .sortWithinPartitions("stratum", "bucket", "src", "rk")
-            .select("src", "dst", "w", "rk", "dvec", "stratum", "bucket")
-            .write.partitionBy("stratum", "bucket").mode("overwrite")
-            .parquet(s"$target/edges")
-          writeMetaLong(target, ".gen", graphGen(cur))
-          writeMetaLong(target, ".crossed", graphCrossedBuckets(cur))
-        }
-      }
-    }
-    graft.core.ArtifactStore.gcVersions(adir)
-    compacted
+    compactGraph(StratumKind, s, d, onlyIfFragmented)
   }
 
   /** Seeded beam-search entries: for each query, EVERY vec_id sharing

@@ -195,24 +195,14 @@ object Hybrid {
     }
   }
 
-  /** Total postings data files across the bucket dirs — the
-    * append-fragmentation measure that triggers auto-compaction.
-    */
-  private def lexFileCount(postingsDir: String): Int =
-    Option(new java.io.File(postingsDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-      .map(b => Option(b.listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")))
-      .sum
-
   /** Auto-compaction threshold (files across all buckets). */
   val LexCompactFiles: Int = 4 * LexBuckets
 
   /** Incremental index maintenance: append the postings of a batch of
     * NEW documents (caller contract, as for the ANN appends: the batch's
     * doc_ids are not already indexed — the upsert path's anti-join
-    * guarantees it upstream). The append is a PUBLISH
-    * ([[graft.core.ArtifactStore.appendVersion]]): live postings carry
+    * guarantees it upstream). The append is a locked PUBLISH
+    * ([[graft.core.ArtifactStore.append]]): live postings carry
     * forward as hard links, the delta's bucket files land beside them,
     * and the 1-row stats are REPLACED with (old + delta) counters — a
     * reader resolves the old or the new index, never a mix, and the
@@ -225,10 +215,9 @@ object Hybrid {
   def appendLexIndex(s: SparkSession, d: String, newDocs: DataFrame): String = synchronized {
     ensureLexIndex(s, d)
     val adir = graft.core.ArtifactStore.artifactDir("lex_postings", d, LexTag)
-    graft.core.ArtifactStore.withMaintenanceLock(adir) {
-      val live = graft.core.ArtifactStore.current(adir).get
+    val live = graft.core.ArtifactStore.append(adir) { (prev, target) =>
       val pd = docTokens(newDocs)
-      val old = s.read.parquet(s"$live/meta").head()
+      val old = s.read.parquet(s"$prev/meta").head()
       val add = pd.agg(count(lit(1)).cast("long"), sum("dl").cast("long")).head()
       // BOTH sides need the sum-over-zero-rows null guard: an index
       // built over an EMPTY corpus stores t_tokens = NULL (sum of no
@@ -237,49 +226,38 @@ object Hybrid {
       val nDocs = old.getLong(0) + add.getLong(0)
       val tToks = (if (old.isNullAt(1)) 0L else old.getLong(1)) +
         (if (add.isNullAt(1)) 0L else add.getLong(1))
-      graft.core.ArtifactStore.appendVersion(adir) { target =>
-        writePostings(postingsOf(pd), s"$target/postings", "append")
-        import s.implicits._
-        Seq((nDocs, tToks)).toDF("n_docs", "t_tokens")
-          .coalesce(1).write.mode("overwrite").parquet(s"$target/meta")
-      }
+      writePostings(postingsOf(pd), s"$target/postings", "append")
+      import s.implicits._
+      Seq((nDocs, tToks)).toDF("n_docs", "t_tokens")
+        .coalesce(1).write.mode("overwrite").parquet(s"$target/meta")
     }
-    val live = graft.core.ArtifactStore.current(adir).get
-    // The threshold probe runs OUTSIDE the maintenance lock (the OS
-    // file lock is not reentrant), so two appending processes can both
-    // observe an over-threshold count; onlyIfFragmented re-checks the
-    // LIVE count inside compaction's own lock, so the loser no-ops
-    // instead of re-compacting an already-compacted index.
-    if (lexFileCount(s"$live/postings") > LexCompactFiles)
+    // the threshold probe runs outside the maintenance lock; the
+    // compaction re-checks the live count under its own
+    if (graft.core.ArtifactStore.dataFileCount(s"$live/postings") > LexCompactFiles)
       compactLexIndex(s, d, onlyIfFragmented = true)
     else live
   }
 
   /** Rewrite the postings back to one term-sorted file run per bucket
     * and reclaim superseded versions past the reader-retention window
-    * (the compactTable discipline; separate lock scope — the OS file
-    * lock is not reentrant). With `onlyIfFragmented` (the auto-compact
-    * path) the live file count is RE-CHECKED under the lock and the
-    * compaction no-ops if a concurrent process already collapsed it.
+    * ([[graft.core.ArtifactStore.rewriteOrKeep]]). With
+    * `onlyIfFragmented` (the auto-compact path) the live file count is
+    * RE-CHECKED under the lock and the compaction keeps the version if
+    * a concurrent process already collapsed it.
     */
   def compactLexIndex(s: SparkSession, d: String,
       onlyIfFragmented: Boolean = false): String = synchronized {
     val adir = graft.core.ArtifactStore.artifactDir("lex_postings", d, LexTag)
-    val compacted = graft.core.ArtifactStore.withMaintenanceLock(adir) {
-      val cur = graft.core.ArtifactStore.current(adir).getOrElse(
+    graft.core.ArtifactStore.rewriteOrKeep(adir) { cur =>
+      val live = cur.getOrElse(
         throw new IllegalStateException(s"nothing to compact: lex_postings for $d"))
-      if (onlyIfFragmented && lexFileCount(s"$cur/postings") <= LexCompactFiles) cur
-      else {
-        val posts = s.read.parquet(s"$cur/postings")
-        val meta = s.read.parquet(s"$cur/meta")
-        graft.core.ArtifactStore.publish(adir) { target =>
-          writePostings(posts, s"$target/postings", "overwrite")
-          meta.coalesce(1).write.mode("overwrite").parquet(s"$target/meta")
-        }
+      if (onlyIfFragmented &&
+          graft.core.ArtifactStore.dataFileCount(s"$live/postings") <= LexCompactFiles) None
+      else Some { target =>
+        writePostings(s.read.parquet(s"$live/postings"), s"$target/postings", "overwrite")
+        s.read.parquet(s"$live/meta").coalesce(1).write.mode("overwrite").parquet(s"$target/meta")
       }
     }
-    graft.core.ArtifactStore.gcVersions(adir)
-    compacted
   }
 
   /** H5: BM25 top-k SERVED from the stored inverted index — output

@@ -327,7 +327,7 @@ object Indexed {
     * the bulk build (`cluster` for probe-pruned tables, `vec_id` hash
     * otherwise, [[BuildTasks]] sorted writers — a bulk backfill routed
     * through `append*` parallelizes exactly like a rebuild), and the
-    * append itself is a PUBLISH: [[graft.core.ArtifactStore.appendVersion]]
+    * append itself is a locked PUBLISH: [[graft.core.ArtifactStore.append]]
     * carries the live files forward (hard links, metadata-only) into a
     * fresh version beside the delta files and flips the pointer, so a
     * reader never sees a half-committed batch and concurrent
@@ -344,20 +344,22 @@ object Indexed {
 
   private def appendDelta(s: SparkSession, name: String, d: String, tag: String,
       partCol: String, sortCols: Seq[String], encoded: DataFrame): String = {
-    val adir = ArtifactStore.artifactDir(name, d, tag)
-    ArtifactStore.withMaintenanceLock(adir) {
-      ArtifactStore.appendVersion(adir) { target =>
-        encoded
-          .repartition(BuildTasks, col(partCol))
-          .sortWithinPartitions(sortCols.map(col): _*)
-          .write.mode("append").parquet(target)
-      }
+    val live = ArtifactStore.append(ArtifactStore.artifactDir(name, d, tag)) { (_, target) =>
+      writeLayout(encoded, partCol, sortCols, "append")(target)
     }
-    val live = ArtifactStore.current(adir).get
     if (ArtifactStore.dataFileCount(live) > CompactFileThreshold)
-      compactTable(s, name, d, tag, partCol, sortCols)
+      compactTable(s, name, d, tag, partCol, sortCols, onlyIfFragmented = true)
     else live
   }
+
+  /** The bulk build's layout: [[BuildTasks]] writers shuffled on
+    * `partCol`, each sorted on `sortCols`.
+    */
+  private def writeLayout(df: DataFrame, partCol: String, sortCols: Seq[String],
+      mode: String)(target: String): Unit =
+    df.repartition(BuildTasks, col(partCol))
+      .sortWithinPartitions(sortCols.map(col): _*)
+      .write.mode(mode).parquet(target)
 
   def appendAssignments(s: SparkSession, d: String, delta: DataFrame): String = synchronized {
     val cents = ensureCentroids(s, d)
@@ -389,26 +391,22 @@ object Indexed {
     * artifact store). At 100 TB this is the periodic maintenance job
     * that keeps serve-many scans sharp under continuous ingest;
     * `CompactionSpec` proves content identity and file-count collapse.
+    * Compaction is also the natural vacuum point: as a
+    * [[graft.core.ArtifactStore.rewriteOrKeep]] it reclaims superseded
+    * versions past the reader-retention window, so continuous ingest
+    * bounds STORAGE as well as file count. With `onlyIfFragmented` (the
+    * auto-compact path) the file count is re-checked under the lock, so
+    * two appenders that both saw the threshold crossed rewrite once.
     */
   private def compactTable(s: SparkSession, name: String, d: String, tag: String,
-      partCol: String, sortCols: Seq[String]): String = synchronized {
-    val adir = ArtifactStore.artifactDir(name, d, tag)
-    val compacted = ArtifactStore.withMaintenanceLock(adir) {
-      val cur = ArtifactStore.current(adir).getOrElse(
+      partCol: String, sortCols: Seq[String],
+      onlyIfFragmented: Boolean = false): String = synchronized {
+    ArtifactStore.rewriteOrKeep(ArtifactStore.artifactDir(name, d, tag)) { cur =>
+      val live = cur.getOrElse(
         throw new IllegalStateException(s"nothing to compact: $name for $d"))
-      val df = s.read.parquet(cur)
-      ArtifactStore.publish(adir) { target =>
-        df.repartition(BuildTasks, col(partCol))
-          .sortWithinPartitions(sortCols.map(col): _*)
-          .write.parquet(target)
-      }
+      if (onlyIfFragmented && ArtifactStore.dataFileCount(live) <= CompactFileThreshold) None
+      else Some(writeLayout(s.read.parquet(live), partCol, sortCols, "error"))
     }
-    // compaction is the natural vacuum point: superseded versions past
-    // the reader-retention window are reclaimed here, so continuous
-    // ingest bounds STORAGE as well as file count. (Separate lock
-    // scope — the OS file lock is not reentrant.)
-    ArtifactStore.gcVersions(adir)
-    compacted
   }
 
   def compactAssignments(s: SparkSession, d: String): String =
@@ -434,6 +432,8 @@ object Indexed {
     * (quality). Deletion is rewrite-based, not tombstone-based: the
     * simplicity is paid once per (batched) delete, and a deferred
     * variant would just move the anti-join into the serving plans.
+    * Each rewrite is a [[graft.core.ArtifactStore.rewriteOrKeep]], so a
+    * delete also reclaims superseded versions past the retention window.
     *
     * Cross-artifact consistency (the store's pointers are per-table, so
     * a concurrent reader can resolve mid-sequence): safe by join
@@ -453,18 +453,13 @@ object Indexed {
     val del = ids.select("vec_id")
     def rewrite(name: String, tag: String, cur: String, partCol: String,
         sortCols: Seq[String]): Unit = {
-      val adir = ArtifactStore.artifactDir(name, d, tag)
-      ArtifactStore.withMaintenanceLock(adir) {
-        // re-resolve under the lock: `cur` was read before acquisition
-        // and a concurrent append/compact may have published since
-        val live = ArtifactStore.current(adir).getOrElse(cur)
-        val kept = s.read.parquet(live).join(del, Seq("vec_id"), "left_anti")
-        ArtifactStore.publish(adir) { target =>
-          kept.repartition(BuildTasks, col(partCol))
-            .sortWithinPartitions(sortCols.map(col): _*)
-            .write.parquet(target)
-        }
+      // re-resolved under the lock: `cur` was read before acquisition
+      // and a concurrent append/compact may have published since
+      ArtifactStore.rewriteOrKeep(ArtifactStore.artifactDir(name, d, tag)) { live =>
+        Some(writeLayout(s.read.parquet(live.getOrElse(cur))
+          .join(del, Seq("vec_id"), "left_anti"), partCol, sortCols, "error"))
       }
+      ()
     }
     rewrite("v10_assign", AssignTag, ensureAssignments(s, d), "cluster",
       Seq("cluster", "vec_id"))

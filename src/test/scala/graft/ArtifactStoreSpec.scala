@@ -112,6 +112,56 @@ class ArtifactStoreSpec extends AnyFunSuite {
       "writer metadata is not data — not carried forward")
     assert(Files.readString(Paths.get(v1, "part=1", "file-a")) === "a1",
       "pre-append snapshot must be immutable")
+    assert((ArtifactStore.dataFileCount(v1), ArtifactStore.dataFileCount(v2)) === ((1, 2)),
+      "the file count descends into partition dirs and skips writer metadata")
+  }
+
+  test("rewriteOrKeep: an under-lock check that finds the version compact publishes nothing") {
+    import java.nio.file.{Files, Paths}
+    val dir = freshDir()
+    def put(target: String, name: String): Unit = {
+      Files.createDirectories(Paths.get(target))
+      Files.writeString(Paths.get(target, name), name)
+    }
+    ArtifactStore.publish(dir)(put(_, "part-0"))
+    val live = ArtifactStore.appendVersion(dir)(put(_, "part-1"))
+    val log = Files.readString(Paths.get(dir, "VERSIONS"))
+    var writes = 0
+    val kept = ArtifactStore.rewriteOrKeep(dir) { cur =>
+      assert(cur.contains(live), "the step must see the version current under the lock")
+      if (ArtifactStore.dataFileCount(cur.get) <= 2) None
+      else Some { t => writes += 1; put(t, "part-all") }
+    }
+    assert(kept === live && writes === 0)
+    assert(ArtifactStore.current(dir).contains(live), "CURRENT must not move")
+    assert(Files.readString(Paths.get(dir, "VERSIONS")) === log,
+      "a kept version must not append to the publication log")
+  }
+
+  test("rewriteOrKeep: a writer that throws leaves CURRENT unchanged and reclaims nothing") {
+    import java.nio.file.{Files, Paths}
+    val dir = freshDir()
+    // five published generations: a vacuum after the rewrite would
+    // reclaim the two oldest (keep = 2 besides CURRENT)
+    val versions = (0 until 5).map { i =>
+      ArtifactStore.publish(dir) { t =>
+        Files.createDirectories(Paths.get(t))
+        Files.writeString(Paths.get(t, s"gen$i"), "x")
+      }
+    }
+    intercept[RuntimeException] {
+      ArtifactStore.rewriteOrKeep(dir) { _ =>
+        Some { t =>
+          Files.createDirectories(Paths.get(t))
+          Files.writeString(Paths.get(t, "part-half"), "partial")
+          throw new RuntimeException("rewrite died")
+        }
+      }
+    }
+    assert(ArtifactStore.current(dir).contains(versions.last),
+      "pointer must not move when the rewrite throws")
+    assert(versions.forall(v => Files.isDirectory(Paths.get(v))),
+      "a failed rewrite must not run the vacuum")
   }
 
   test("gcVersions honors retention for pre-log versions (upgrade path)") {

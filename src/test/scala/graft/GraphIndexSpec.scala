@@ -58,6 +58,68 @@ class GraphIndexSpec extends SparkSuite {
     assert(pairSet(Graph.storedPairs(spark, d)) === wantPairs)
   }
 
+  /** Trickle-append 10-vector batches onto a graph of `kind` built over
+    * the first 100 vectors until the live file count falls (the
+    * append's auto-compaction fired); then the file count must be
+    * within the kind's threshold and `content` must equal a one-shot
+    * build over the same vectors. Shuffle partitions are not coalesced
+    * meanwhile, so each append writes one file per shuffle partition
+    * (as on a wider cluster) and the threshold is reached in a few
+    * appends instead of dozens.
+    */
+  private def trickleCompacts(kind: Graph.GraphKind, ensure: String => String,
+      append: (String, DataFrame, DataFrame) => String,
+      content: String => Set[Seq[Any]]): Unit = {
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val full = graft.core.Tables.embeddings(spark, sf0001)
+      val d = tmpDir("gtrickle")
+      full.filter(col("vec_id") < 100).write.parquet(s"$d/embeddings.parquet")
+      var corpus = graft.core.Tables.embeddings(spark, d)
+      var prev = ensure(d)
+      var compacted = false
+      var hi = 100L
+      var appends = 0
+      while (!compacted && hi < 500L) {
+        val batch = full.filter(col("vec_id") >= hi && col("vec_id") < hi + 10)
+        val live = append(d, batch, corpus)
+        corpus = corpus.unionByName(batch)
+        val (before, after) = (graft.core.ArtifactStore.dataFileCount(prev),
+          graft.core.ArtifactStore.dataFileCount(live))
+        compacted = after < before
+        prev = live
+        hi += 10
+        appends += 1
+      }
+      Dedup.releaseSlots()
+      info(s"auto-compacted after $appends appends")
+      assert(compacted, s"trickle ingest up to vec_id $hi never auto-compacted")
+      assert(graft.core.ArtifactStore.dataFileCount(prev) <= kind.compactAt(spark, prev))
+      val oneShot = tmpDir("gtrickle-full")
+      full.filter(col("vec_id") < hi).write.parquet(s"$oneShot/embeddings.parquet")
+      val want = content(ensure(oneShot))
+      assert(content(prev) === want, "trickled and compacted graph must equal a one-shot build")
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+  }
+
+  private def rowSet(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  test("kNN graph: trickle appends auto-compact at the threshold; content ≡ one-shot build") {
+    trickleCompacts(Graph.KnnKind, Graph.ensureKnnGraph(spark, _),
+      (d, batch, corpus) => Graph.appendKnnGraph(spark, d, batch, corpus),
+      v => rowSet(spark.read.parquet(s"$v/edges").select("src", "dst", "w", "rk")) ++
+        rowSet(spark.read.parquet(s"$v/pairs").select("id_a", "id_b", "w")) ++
+        rowSet(spark.read.parquet(s"$v/bsizes")))
+  }
+
+  test("stratum graph: trickle appends auto-compact at the threshold; content ≡ one-shot build") {
+    trickleCompacts(Graph.StratumKind, Graph.ensureStratumGraph(spark, _),
+      (d, batch, corpus) => Graph.appendStratumGraph(spark, d, batch, corpus),
+      v => rowSet(spark.read.parquet(s"$v/edges")
+          .select("src", "dst", "w", "rk", "stratum")) ++
+        rowSet(spark.read.parquet(s"$v/bsizes").select("stratum", "tbl", "bkt", "n")))
+  }
+
   test("serve plans read the stored artifact — no SRP kernel, no pair scoring") {
     val d = sf0001
     Graph.ensureKnnGraph(spark, d)
