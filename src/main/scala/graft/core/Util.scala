@@ -49,15 +49,20 @@ object Util {
     df.write.mode(SaveMode.Overwrite).json(path)
 
   /** A literal (lineage-free) frame over already-collected rows — the
-    * materialize-in-span idiom shared by the timed v19 legs, the timed
-    * g-serve final phase, and the rebuild self-heal: values and schema
-    * identical to the source plan, but an action on the result touches
-    * only local rows (the distributed work was paid where the rows
-    * were collected, inside whatever instrumented section owns it).
+    * materialize-in-span idiom shared by the timed v19 legs, the g-serve
+    * final phase, the range and similarity searches, and the rebuild
+    * self-heal: values and schema identical to the source plan, but an
+    * action on the result touches only local rows (the distributed work
+    * was paid where the rows were collected, inside whatever
+    * instrumented section owns it). Installs [[LocalRelationFold]] on
+    * the session, so a caller's sort, de-duplication, filter, limit or
+    * projection over the frame runs no job either.
     */
   def literalFrame(spark: SparkSession, rows: Array[org.apache.spark.sql.Row],
-      schema: StructType): DataFrame =
+      schema: StructType): DataFrame = {
+    LocalRelationFold.setup(spark)
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
   /** Import a JSON dump, enforcing the expected schema (the analogue of
     * RxDB's schema-hash check on importJSON: a dump taken under a

@@ -2,8 +2,12 @@ package graft.operators
 
 import graft.core.Tables._
 import graft.functions.VectorFunctions._
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** kNN search — the reference's core query surface
   * (`/root/reference/src/search.ts`), re-expressed as declarative Spark
@@ -31,10 +35,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    buckets and re-ranks exactly. With the table partitioned by
   *    `cluster` this prunes whole partitions at planning time.
   *
-  * All strategies keep the candidate set fully distributed — union,
-  * dedup, re-rank and top-k all happen on executors (the reference
-  * materializes candidates in browser memory, `src/search.ts:21-48`,
-  * which is the one thing SURVEY §7.4 forbids at scale).
+  * Every strategy reads the table once per search and moves no vector
+  * to the driver. Exact and IVF search compile to one
+  * TakeOrderedAndProject. Range and similarity search run one job whose
+  * tasks keep bounded per-partition top lists of (id, distances), which
+  * the driver merges, de-duplicates, re-ranks and cuts to k
+  * ([[oneScanTopK]]); their driver state is bounded by the lists' sizes,
+  * the candidate set the reference holds in browser memory
+  * (`src/search.ts:21-48`), never by the table.
   */
 object Knn {
 
@@ -91,24 +99,22 @@ object Knn {
     piv.map(euclideanOfLiterals(_, q))
 
   /** Pivot-range kNN over any (id, embedding) DataFrame
-    * (`vectorSearchIndexRange`, `src/search.ts:19-54`).
+    * (`vectorSearchIndexRange`, `src/search.ts:19-54`): one scan keeping
+    * the rows inside any pivot's band (the same id set as a union of the
+    * per-pivot range scans, read once), each partition's nearest k
+    * distinct ids merged on the driver ([[oneScanTopK]]). An id that
+    * occurs in several band rows counts once, at its nearest row.
     */
   def indexRangeKnnOn(v: DataFrame, idCol: String, embCol: String, q: Column,
       pivots: Seq[Column], k: Int, eps: Double): DataFrame = {
     val qDists = qPivotDists(pivots, q)
-    // one scan keeping a row inside ANY pivot's band — the same id set
-    // as a union of the per-pivot range scans, without re-reading the
-    // table once per pivot
     val inAnyBand = pivots.indices.map { i =>
       val di = euclidean(col(embCol), pivots(i))
       di > qDists(i) * (1 - eps) && di < qDists(i) * (1 + eps)
     }.reduce(_ || _)
-    v.filter(inAnyBand).select(idCol, embCol)
-      .dropDuplicates(idCol)
-      .withColumn("dist", euclidean(col(embCol), q))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(idCol, "dist")
+    val proj = v.filter(inAnyBand)
+      .select(col(idCol), euclidean(col(embCol), q).as("dist"))
+    oneScanTopK(proj, Seq(TopList.Spec(k, 1, asc = true, byId = true, None)), k)
   }
 
   /** Pivot-range kNN: one scan keeping the rows inside any of the five
@@ -122,8 +128,7 @@ object Knn {
     * `docsPerIndexSide = 100`): for each pivot, take the `perSide`
     * rows on each side of the query's own position in that pivot's
     * distance order (the "neighborhood of the insertion point"), union
-    * all 2·P bands, dedup, exact re-rank. Each side compiles to
-    * TakeOrderedAndProject — per-partition heaps, no global sort.
+    * all 2·P bands, dedup, exact re-rank.
     */
   def indexSimilarityKnn(s: SparkSession, d: String, q: Column, k: Int,
       perSide: Int): DataFrame =
@@ -131,25 +136,61 @@ object Knn {
       pivotLits(s, d), k, perSide)
 
   /** Per-side pivot-neighborhood kNN over any (id, embedding) DataFrame
-    * (`vectorSearchIndexSimilarity`, `src/search.ts:56-108`).
+    * (`vectorSearchIndexSimilarity`, `src/search.ts:56-108`), in one
+    * scan ([[oneScanTopK]]): the scan projects each row's distance to
+    * the query and to every pivot, and keeps 2·P lists, the `perSide`
+    * rows ordered by (dᵢ desc, id) at or below the query's own pivot
+    * distance and by (dᵢ asc, id) above it. Rows tied on (dᵢ, id), which
+    * only a repeated id can give, are cut nearest first. The union of
+    * the lists is de-duplicated by id at each id's nearest row.
     */
   def indexSimilarityKnnOn(v: DataFrame, idCol: String, embCol: String,
       q: Column, pivots: Seq[Column], k: Int, perSide: Int): DataFrame = {
     val qDists = qPivotDists(pivots, q)
-    val branches = pivots.indices.flatMap { i =>
-      val di = euclidean(col(embCol), pivots(i))
-      val below = v.withColumn("di", di).filter(col("di") <= qDists(i))
-        .orderBy(col("di").desc, col(idCol).asc).limit(perSide)
-      val above = v.withColumn("di", di).filter(col("di") > qDists(i))
-        .orderBy(col("di").asc, col(idCol).asc).limit(perSide)
-      Seq(below, above).map(_.select(idCol, embCol))
+    val p = pivots.size
+    val di = pivots.indices.map(i => euclidean(col(embCol), pivots(i)))
+    // field 2+i: dᵢ; field 2+P+i: dᵢ > the query's dᵢ, null on a null vector
+    val proj = v.select(Seq(col(idCol), euclidean(col(embCol), q).as("dist")) ++
+      di.zipWithIndex.map { case (c, i) => c.as(s"d$i") } ++
+      di.zipWithIndex.map { case (c, i) => (c > qDists(i)).as(s"above$i") }: _*)
+    val specs = pivots.indices.flatMap { i =>
+      Seq(TopList.Spec(perSide, 2 + i, asc = false, byId = false, Some((2 + p + i, false))),
+        TopList.Spec(perSide, 2 + i, asc = true, byId = false, Some((2 + p + i, true))))
     }
-    branches.reduce(_ union _)
-      .dropDuplicates(idCol)
-      .withColumn("dist", euclidean(col(embCol), q))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(idCol, "dist")
+    oneScanTopK(proj, specs, k)
+  }
+
+  /** One search in one Spark job, over `proj` = (id, dist, ...) with no
+    * vectors. Every partition keeps one bounded [[TopList]] per spec,
+    * and the driver merges each partition's lists as it finishes (a
+    * `runJob` result handler, the way `RDD.takeOrdered` merges), so it
+    * holds at most the lists' entries plus one partition's lists. The
+    * union of the merged lists is de-duplicated by id at each id's
+    * nearest row, ranked by (dist, id) and cut to `k`, and returned as a
+    * local frame of (id, dist). All values come from the projection's
+    * Catalyst expressions; every order is Catalyst's own
+    * (`InterpretedOrdering`), so ties and NaN order as Spark's sort
+    * orders them.
+    */
+  private def oneScanTopK(proj: DataFrame, specs: Seq[TopList.Spec], k: Int): DataFrame = {
+    val schema = proj.schema
+    val idType = schema(0).dataType
+    val lists = specs.map(_.make(idType))
+    proj.sparkSession.sparkContext.runJob(proj.queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => {
+        val local = specs.map(_.make(idType))
+        it.foreach(r => local.foreach(_.offer(r)))
+        local.map(_.rows.toArray).toArray
+      },
+      (_: Int, part: Array[Array[InternalRow]]) =>
+        lists.zip(part).foreach { case (l, rows) => rows.foreach(l.offer) })
+    val nearest = TopList.Spec(k, 1, asc = true, byId = true, None).make(idType)
+    lists.foreach(_.rows.foreach(nearest.offer))
+    val toId = CatalystTypeConverters.createToScalaConverter(idType)
+    graft.core.Util.literalFrame(proj.sparkSession,
+      nearest.rows.sorted(nearest.ord).map(r => Row(toId(r.get(0, idType)),
+        if (r.isNullAt(1)) null else r.getDouble(1))).toArray,
+      StructType(Seq(schema(0), schema(1))))
   }
 
   /** IVF ANN: assign every vector to its nearest pivot (coarse
@@ -186,18 +227,11 @@ object Knn {
     */
   def searchIndexed(s: SparkSession, indexPath: String, pivots: Seq[Seq[Float]],
       q: Array[Float], k: Int, nprobe: Int, eps: Double = 0.5): DataFrame = {
-    def dist(a: Seq[Float]): Double = {
-      var i = 0; var sum = 0.0
-      while (i < a.length && i < q.length) {
-        val dd = a(i).toDouble - q(i).toDouble; sum += dd * dd; i += 1
-      }
-      math.sqrt(sum)
-    }
-    val qDists = pivots.map(dist)
+    val qDists = qPivotDists(pivots.map(typedlit(_)), typedlit(q.toSeq))
     val probes = qDists.zipWithIndex.sortBy { case (dd, pid) => (dd, pid) }
       .take(nprobe).map(_._2)
     val lo = qDists.head * (1 - eps); val hi = qDists.head * (1 + eps)
-    s.read.parquet(indexPath)
+    graft.core.Util.readParquet(s, indexPath)
       .filter(col("cluster").isin(probes: _*))       // partition pruning
       .filter(col("dist0") > lo && col("dist0") < hi) // row-group stats pruning
       .withColumn("dist", euclidean(col("embedding"), typedlit(q.toSeq)))
@@ -659,4 +693,54 @@ object Knn {
          |FROM documents JOIN topk t ON doc_id = t.vec_id
          |ORDER BY t.dist ASC, doc_id ASC""".stripMargin,
   )
+}
+
+/** The `size` least rows under `ord` that pass `admit`, in a max-heap
+  * that grows as rows are kept, so a size of the corpus or
+  * `Int.MaxValue` costs only what is kept. A row is copied only when
+  * kept. With `byId`, an id (field 0) holds one row, its least.
+  */
+private[operators] final class TopList(size: Int, val ord: Ordering[InternalRow],
+    admit: InternalRow => Boolean, idType: Option[DataType]) {
+  private val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
+  private val ofId = scala.collection.mutable.HashMap.empty[Any, InternalRow]
+
+  def offer(r: InternalRow): Unit =
+    if (size > 0 && admit(r) && (heap.size < size || ord.lt(r, heap.peek))) idType match {
+      case None =>
+        heap.add(r.copy())
+        if (heap.size > size) heap.poll()
+        ()
+      case Some(t) =>
+        val kept = ofId.get(r.get(0, t))
+        if (kept.forall(ord.lt(r, _))) {
+          kept.foreach(heap.remove)
+          val c = r.copy()
+          heap.add(c); ofId(c.get(0, t)) = c
+          if (heap.size > size) ofId.remove(heap.poll().get(0, t))
+        }
+    }
+
+  def rows: Seq[InternalRow] = heap.toArray(Array.empty[InternalRow]).toSeq
+}
+
+private[operators] object TopList {
+  /** A list over the rows (id, dist, ...): `size` rows ordered by field
+    * `key` (`asc` or desc), then id, then dist; admitted where the
+    * boolean field `test._1` is non-null and equals `test._2`.
+    */
+  final case class Spec(size: Int, key: Int, asc: Boolean, byId: Boolean,
+      test: Option[(Int, Boolean)]) {
+    def make(idType: DataType): TopList = {
+      def by(field: Int, t: DataType, up: Boolean) =
+        SortOrder(BoundReference(field, t, nullable = true), if (up) Ascending else Descending)
+      val ord = new InterpretedOrdering(Seq(by(key, DoubleType, asc), by(0, idType, up = true)) ++
+        (if (key == 1) Nil else Seq(by(1, DoubleType, up = true))))
+      val admit: InternalRow => Boolean = test match {
+        case None => _ => true
+        case Some((f, want)) => r => !r.isNullAt(f) && r.getBoolean(f) == want
+      }
+      new TopList(size, ord, admit, if (byId) Some(idType) else None)
+    }
+  }
 }

@@ -922,6 +922,43 @@ class GraphIndexSpec extends SparkSuite {
     }
   }
 
+  test("a caller's sort and casts over the walk's result run no job after the last hop round") {
+    val d = sf0001
+    Graph.ensureKnnGraph(spark, d)
+    val e = graft.core.Tables.embeddings(spark, d)
+    val edges = Graph.storedEdgesPartitioned(spark, d)
+    val routing = Graph.storedBuckets(spark, d)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(Option(j.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+        ()
+      }
+    }
+    def serve() = Graph.graphAnnBatchOn(e, edges, routing, col("vec_id") === 7L).orderBy("rk")
+      .select(col("vec_id"), col("visited_n").cast("long"), col("hops_n").cast("long"))
+      .collect()
+    spark.conf.set("graft.gserve.timings", "true")
+    val first = serve()
+    Thread.sleep(500)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      jobs.clear()
+      val rows = serve()
+      // listener delivery is async; the serve's own jobs are done here
+      Thread.sleep(1000)
+      val groups = jobs.toArray.toSeq.map(_.toString)
+      val lastHop = groups.lastIndexWhere(_.endsWith(":hops"))
+      assert(lastHop >= 0, s"no hop job among $groups")
+      assert(groups.drop(lastHop + 1).isEmpty,
+        s"jobs after the last hop round: ${groups.drop(lastHop + 1)}")
+      assert(rows.toSeq === first.toSeq && rows.nonEmpty)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("graft.gserve.timings", "false")
+    }
+  }
+
   test("stored edges and routing tables are read with the schemas a build writes") {
     val dir = Graph.ensureKnnGraph(spark, sf0001)
     def types(t: org.apache.spark.sql.types.StructType) =

@@ -48,6 +48,35 @@ class IndexedSearchSpec extends SparkSuite {
     assert(got.size === 10)
   }
 
+  test("a second searchIndexed over an unchanged table runs one job: no schema inference") {
+    val out = tmpDir("serve-ivf-jobs") + "/vectors"
+    val e = HashingEmbedder(dims = 64)
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("doc_id").cast("string").as("id"), col("text"))
+    val sample = graft.embed.Embedder.embedText(docs.limit(100), "text", e)
+      .select("id", "embedding")
+    val pivots = Pivots.fromSample(sample, "id", "embedding", 5)
+    IndexBuild.buildFromDocuments(docs, "id", "text", e, pivots, out)
+    val q = e.embedOne("spark table scan merge")
+    def serve() = Knn.searchIndexed(spark, out, pivots, q, 10, nprobe = 2, eps = 1.0).collect()
+    val first = serve()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Thread.sleep(500)
+    spark.sparkContext.addSparkListener(listener)
+    val second = try serve() finally {
+      // listener delivery is async; the serve's own jobs are done here
+      Thread.sleep(1000)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(second.toSeq === first.toSeq && second.length === 10)
+    assert(jobs.get() === 1, s"a repeat serve ran ${jobs.get()} jobs")
+  }
+
   test("q_v9_indexed_range: served-from-index result == raw-table recomputation") {
     import graft.operators.Indexed
     val got = Indexed.v9IndexedRange(spark, sf0001)

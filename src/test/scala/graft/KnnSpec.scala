@@ -84,48 +84,166 @@ class KnnSpec extends SparkSuite {
     assert(meanRecall >= 0.8)
   }
 
+  // ---------------------------------------------------- one-scan searches
+  // The reference forms below are the plans the one-scan searches
+  // replaced, de-duplicated by the stated rule: an id that occurs in
+  // several candidate rows counts once, at its nearest row (`dist`, as
+  // row_number over (dist) per id). With distinct ids that is exactly the
+  // replaced plan's result.
+
+  private def nearestPerId(c: org.apache.spark.sql.DataFrame, k: Int) = {
+    import org.apache.spark.sql.expressions.Window
+    c.withColumn("rn", row_number().over(Window.partitionBy("id").orderBy(col("dist").asc)))
+      .filter(col("rn") === 1)
+      .orderBy(col("dist").asc, col("id").asc)
+      .limit(k)
+      .select("id", "dist")
+  }
+
+  /** Random fixtures: small integer coordinates, so many vectors share a
+    * distance to the query and to each pivot; some vectors are exact
+    * duplicates under a new id, and some ids repeat (with their own
+    * vector). Returns rows (id, vector), the pivots and the query.
+    */
+  private def fixture(seed: Long): (Seq[(Long, Seq[Float])], Seq[Seq[Float]], Seq[Float]) = {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val genVec: Gen[Seq[Float]] = Gen.listOfN(4, Gen.choose(-2, 2).map(_.toFloat))
+    (for {
+      n <- Gen.choose(20, 60)
+      vs <- Gen.listOfN(n, genVec)
+      dupes <- Gen.choose(1, 6)
+      repeats <- Gen.listOfN(n / 4, Gen.zip(Gen.choose(0, n - 1), genVec))
+      ps <- Gen.listOfN(5, genVec)
+      qv <- Gen.oneOf(genVec, Gen.oneOf(vs))
+    } yield {
+      val base = vs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
+      val copies = vs.take(dupes).zipWithIndex.map { case (x, i) => ((n + i).toLong, x) }
+      val again = repeats.map { case (i, x) => (i.toLong, x) }
+      (base ++ copies ++ again, ps, qv)
+    }).apply(Gen.Parameters.default, Seed(seed))
+      .getOrElse(fail(s"generator exhausted at seed $seed"))
+  }
+
+  /** The fixture as a 3-partition frame with long or string ids: the
+    * repartition keeps the frame's plan from folding to a local relation,
+    * so both forms run distributed, over several partitions.
+    */
+  private def frame(rows: Seq[(Long, Seq[Float])], stringIds: Boolean) = {
+    import spark.implicits._
+    val df = rows.toDF("id", "embedding").repartition(3)
+    if (stringIds) df.withColumn("id", concat(lit("d"), col("id"))) else df
+  }
+
+  private def result(df: org.apache.spark.sql.DataFrame): Seq[(Any, Double)] =
+    df.collect().map(r => (r.get(0), r.getDouble(1))).toSeq
+
+  private val seeds = Seq(3L, 17L, 20261019L)
+
   test("pivot range as one OR-filtered scan ≡ the union of per-pivot range scans (property, with ties)") {
     import graft.functions.VectorFunctions.euclidean
     import org.apache.spark.sql.{Column, DataFrame}
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    import spark.implicits._
     // the pre-rewrite form: one filtered scan per pivot, union, dedup
     def unionForm(v: DataFrame, q: Column, pivots: Seq[Column], k: Int,
         eps: Double): DataFrame = {
       val qd = pivots.map(p => v.limit(1).select(euclidean(p, q)).head().getDouble(0))
-      pivots.indices.map { i =>
+      nearestPerId(pivots.indices.map { i =>
         val di = euclidean(col("embedding"), pivots(i))
-        v.filter(di > qd(i) * (1 - eps) && di < qd(i) * (1 + eps)).select("id", "embedding")
-      }.reduce(_ union _)
-        .dropDuplicates("id")
-        .withColumn("dist", euclidean(col("embedding"), q))
-        .orderBy(col("dist").asc, col("id").asc)
-        .limit(k)
-        .select("id", "dist")
+        v.filter(di > qd(i) * (1 - eps) && di < qd(i) * (1 + eps))
+          .select(col("id"), euclidean(col("embedding"), q).as("dist"))
+      }.reduce(_ union _), k)
     }
-    // small integer coordinates: many vectors share a distance to the
-    // query and to each pivot, and some are exact duplicates
-    val genVec: Gen[Seq[Float]] = Gen.listOfN(4, Gen.choose(-2, 2).map(_.toFloat))
-    for (seed <- Seq(3L, 17L, 20261019L)) {
-      val (vecs, pivs, q, eps) = (for {
-        n <- Gen.choose(20, 60)
-        vs <- Gen.listOfN(n, genVec)
-        ps <- Gen.listOfN(5, genVec)
-        qv <- Gen.oneOf(genVec, Gen.oneOf(vs))
-        e <- Gen.oneOf(0.0, 0.05, 0.3, 1.0)
-      } yield (vs, ps, qv, e)).apply(Gen.Parameters.default, Seed(seed))
-        .getOrElse(fail(s"generator exhausted at seed $seed"))
-      val v = vecs.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF("id", "embedding")
+    for (seed <- seeds; eps <- Seq(0.0, 0.05, 0.3, 1.0); stringIds <- Seq(false, true)) {
+      val (rows, pivs, q) = fixture(seed)
+      val v = frame(rows, stringIds)
       val pivots = pivs.map(typedlit(_))
-      for (k <- Seq(3, vecs.size)) {
-        def rows(df: DataFrame) =
-          df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val got = rows(Knn.indexRangeKnnOn(v, "id", "embedding", typedlit(q), pivots, k, eps))
-        val want = rows(unionForm(v, typedlit(q), pivots, k, eps))
-        assert(got === want, s"seed $seed, k $k, eps $eps")
+      for (k <- Seq(3, rows.size)) {
+        val got = result(Knn.indexRangeKnnOn(v, "id", "embedding", typedlit(q), pivots, k, eps))
+        val want = result(unionForm(v, typedlit(q), pivots, k, eps))
+        assert(got === want, s"seed $seed, k $k, eps $eps, string ids $stringIds")
       }
     }
   }
-}
 
+  /** The replaced similarity plan: one top-`perSide` scan per (pivot,
+    * side), ten branches, union, de-duplication, re-rank, top k. Rows
+    * tied on (dᵢ, id), which only a repeated id gives, are cut nearest
+    * first, as the one-scan search cuts them.
+    */
+  private def tenBranchSimilarity(v: org.apache.spark.sql.DataFrame,
+      q: org.apache.spark.sql.Column, pivots: Seq[org.apache.spark.sql.Column], k: Int,
+      perSide: Int) = {
+    import graft.functions.VectorFunctions.euclidean
+    val qd = Knn.qPivotDists(pivots, q)
+    val branches = pivots.indices.flatMap { i =>
+      val scored = v.withColumn("di", euclidean(col("embedding"), pivots(i)))
+        .withColumn("dist", euclidean(col("embedding"), q))
+      Seq(scored.filter(col("di") <= qd(i))
+          .orderBy(col("di").desc, col("id").asc, col("dist").asc).limit(perSide),
+        scored.filter(col("di") > qd(i))
+          .orderBy(col("di").asc, col("id").asc, col("dist").asc).limit(perSide))
+        .map(_.select("id", "dist"))
+    }
+    nearestPerId(branches.reduce(_ union _), k)
+  }
+
+  test("similarity as one scan with per-partition top lists ≡ the ten-branch union (property, with ties and repeated ids)") {
+    for (seed <- seeds; stringIds <- Seq(false, true)) {
+      val (rows, pivs, q) = fixture(seed)
+      val v = frame(rows, stringIds)
+      val pivots = pivs.map(typedlit(_))
+      val n = rows.size
+      for (perSide <- Seq(1, 7, n, Int.MaxValue); k <- Seq(3, n)) {
+        val got = result(Knn.indexSimilarityKnnOn(v, "id", "embedding", typedlit(q), pivots,
+          k, perSide))
+        val want = result(tenBranchSimilarity(v, typedlit(q), pivots, k, perSide))
+        assert(got === want, s"seed $seed, perSide $perSide, k $k, string ids $stringIds")
+      }
+    }
+  }
+
+  test("vectorSearchIndexSimilarity with a Mango selector ≡ the ten-branch union over the selected rows") {
+    import spark.implicits._
+    val (rows, pivs, q) = fixture(5L)
+    val coll = graft.api.GraftDb(spark, tmpDir("knn-sim")).collection("items")
+    coll.bulkInsert(rows.zipWithIndex.map { case ((id, x), i) => (s"d$id", x, i % 4) }
+      .toDF("id", "embedding", "tag"))
+    for (perSide <- Seq(1, 7, rows.size)) {
+      val got = result(coll.vectorSearchIndexSimilarity(q, pivs, perSide, 5,
+        selector = Map("tag" -> Map("$gte" -> 2))))
+      val want = result(tenBranchSimilarity(coll.toDf.filter(col("tag") >= 2),
+        typedlit(q), pivs.map(typedlit(_)), 5, perSide))
+      assert(got.nonEmpty && got === want, s"perSide $perSide")
+    }
+  }
+
+  test("range and similarity searches each run one Spark job of one stage") {
+    val v = graft.core.Tables.embeddings(spark, sf0001)
+    val pivots = v.filter(col("vec_id").isin(Knn.PivotIds: _*)).orderBy("vec_id")
+      .select("embedding").collect().map(r => typedlit(r.getSeq[Float](0))).toSeq
+    val q = queryVec
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(j.stageInfos.size); ()
+      }
+    }
+    def stagesPerJob(search: => org.apache.spark.sql.DataFrame): Seq[Int] = {
+      search.collect() // warm: the table's schema and the code paths
+      Thread.sleep(500)
+      jobs.clear()
+      val rows = search.collect()
+      assert(rows.length === 10)
+      // listener delivery is async; the search's own jobs are done here
+      Thread.sleep(1000)
+      jobs.toArray.toSeq.map(_.asInstanceOf[Int])
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(stagesPerJob(Knn.indexRangeKnnOn(v, "vec_id", "embedding", q, pivots, 10, 1.0)
+        .orderBy("dist")) === Seq(1))
+      assert(stagesPerJob(Knn.indexSimilarityKnnOn(v, "vec_id", "embedding", q, pivots, 10, 100)
+        .orderBy("dist")) === Seq(1))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+}
