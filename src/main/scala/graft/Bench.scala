@@ -76,18 +76,6 @@ object Bench {
       .config("spark.sql.files.openCostInBytes", "1m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // v19 has been the sweep's biggest wall and noisiest row since r14
-    // (r17 VERDICT #3): run it with its per-leg instrumentation on, so
-    // every bench artifact carries the six-serve-legs + baseline split
-    // and a cross-round move is attributable to a leg. Total work is
-    // unchanged — the legs are 1-row frames the union ran once anyway,
-    // just serialized instead of interleaved.
-    spark.conf.set("graft.v19.timings", "true")
-    // r19 (r18 VERDICT #3): the g-serve family — five of r18's ten
-    // slowest rows, on the noise watch since r16 — gets the same
-    // per-phase split: seed / seed_score / per-hop walls plus Spark
-    // job/task attribution, emitted per g-serve query below.
-    spark.conf.set("graft.gserve.timings", "true")
 
     // Process-CPU time alongside wall time (r9 verdict #1): on a shared
     // sandbox, wall time alone cannot distinguish "the code got slower"
@@ -339,14 +327,45 @@ object Bench {
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted; if (s.isEmpty) 0.0 else s(s.size / 2)
     }
-    // per-query g-serve phase maps for the artifact (cleared before
-    // each query so a row is attributed only to the query that ran it)
-    val gserve = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Double]]
+    // Each timed run is profiled: the listener attaches before and the
+    // bus drains after `force`'s timed interval. v19 has been the
+    // sweep's biggest wall and noisiest row since r14, and the g-serve
+    // family five of r18's ten slowest rows, so the artifact carries
+    // v19's per-leg split and each g-serve query's per-phase split:
+    // a span's wall under its name, its Spark job wall under `_job`
+    // and its executor run time under `_task` (a wall that moves while
+    // `_task` stays flat was queueing, not work — v19's legs run
+    // concurrently, so their walls are not additive).
+    def split(key: String, sp: Seq[core.QueryProfile.Span]): Seq[(String, Double)] =
+      Seq(key -> sp.map(_.wallS).sum, s"${key}_job" -> sp.map(_.jobWallS).sum,
+        s"${key}_task" -> sp.map(_.taskS).sum)
+    def v19Split(p: core.QueryProfile): Seq[(String, Double)] =
+      Seq("baseline", "v10_ivf", "v12_pq_adc", "v13_sq8", "v14_ivfpq",
+        "v16_filtered", "v18_ivfadc").filter(p.spans.contains)
+        .flatMap(l => split(l, Seq(p.spans(l))))
+    // seed, seed_score, hop<k>, their `hops` total and executed
+    // `hops_rounds`, final; plus the four phases' _job/_task
+    def gserveSplit(p: core.QueryProfile): Seq[(String, Double)] = {
+      val hops = p.spans.toSeq.filter(_._1.matches("hop[0-9]+"))
+        .sortBy(_._1.drop(3).toInt)
+      def phase(g: String): Seq[core.QueryProfile.Span] =
+        if (g == "hops") hops.map(_._2) else p.spans.get(g).toSeq
+      val walls = Seq("seed", "seed_score").flatMap(g => phase(g).map(g -> _.wallS)) ++
+        hops.map { case (h, sp) => h -> sp.wallS } ++
+        Seq("hops" -> phase("hops").map(_.wallS).sum,
+          "hops_rounds" -> phase("hops").map(_.calls).sum.toDouble) ++
+        phase("final").map("final" -> _.wallS)
+      walls ++ Seq("seed", "seed_score", "hops", "final")
+        .flatMap(g => split(g, phase(g)).tail)
+    }
+    // per-query g-serve phase splits for the artifact, and v19's legs
+    val gserve = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Double)]]
+    var v19Legs = Seq.empty[(String, Double)]
     val results = names.zipWithIndex.map { case (n, i) =>
       if (i % CalibEvery == 0) calibrate(i)
       hygiene()
-      operators.Graph.lastGServeTimings = Map.empty
-      val (t1, c1) = force(n)
+      val ((t1, c1), p1) = core.QueryProfile.run(spark)(force(n))
+      var prof = p1
       val med = median(kept.toSeq)
       val (t, cpu) =
         if (t1 > 1.0 && kept.size >= 8 && t1 > 2 * med) {
@@ -362,7 +381,8 @@ object Bench {
           // per-JVM compile amortizes to zero); fast → the first number
           // was compile/GC noise, and keep-min records steady state.
           operators.Dedup.releaseSlots()
-          val (t2, c2) = force(n)
+          val ((t2, c2), p2) = core.QueryProfile.run(spark)(force(n))
+          prof = p2
           reruns(n) = (t1, t2)
           if (t2 >= 0 && t2 < t1) (t2, c2) else (t1, c1)
         } else (t1, c1)
@@ -372,13 +392,15 @@ object Bench {
       // the per-query record survives even when the big combined line
       // below is truncated (the r7 artifact lost its first ~28 queries).
       println(s"""{"q":"$n","sec":${r3(t)},"cpu":${r3(cpu)}}""")
-      if (n == "q_v19_recall_grid" && operators.Indexed.lastV19Timings.nonEmpty)
-        println(operators.Indexed.lastV19Timings.map { case (k, v) =>
+      if (n == "q_v19_recall_grid" && prof.spans.nonEmpty) {
+        v19Legs = v19Split(prof)
+        println(v19Legs.map { case (k, v) =>
           "\"" + k + "\":" + r3(v)
         }.mkString("""{"v19_legs":{""", ",", "}}"))
-      if (operators.Graph.lastGServeTimings.nonEmpty) {
-        gserve(n) = operators.Graph.lastGServeTimings
-        println(operators.Graph.lastGServeTimings.map { case (k, v) =>
+      }
+      if (prof.spans.contains("seed")) {
+        gserve(n) = gserveSplit(prof)
+        println(gserve(n).map { case (k, v) =>
           "\"" + k + "\":" + r3(v)
         }.mkString(s"""{"gserve":"$n","phases":{""", ",", "}}"))
       }
@@ -551,7 +573,7 @@ object Bench {
       .orElse(prior.map(_._1).minOption)
     val bestCmp = bestPrior.map(v => r3(math.min(v, total))).getOrElse(r3(total))
 
-    val v19Legs = operators.Indexed.lastV19Timings.map { case (k, v) =>
+    val v19LegsJson = v19Legs.map { case (k, v) =>
       "\"" + k + "\":" + r3(v)
     }.mkString("{", ",", "}")
     val gserveJson = gserve.map { case (q, m) =>
@@ -559,7 +581,7 @@ object Bench {
         .mkString("{", ",", "}")
     }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"cpu":$cpus_,"reruns":$rr,"calibration":$calibJson,"env_suspect":$envSuspect,"sat_floor":${r3(satFloor)},"sat_prewait":${r3(satPrewait)},"quiet_wait_s":$quietWaited,"pipeline":$ps,"latency":$latJson,"v19_legs":$v19Legs,"gserve":$gserveJson,"code":"$codeFp","best_comparable":$bestCmp,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"cpu":$cpus_,"reruns":$rr,"calibration":$calibJson,"env_suspect":$envSuspect,"sat_floor":${r3(satFloor)},"sat_prewait":${r3(satPrewait)},"quiet_wait_s":$quietWaited,"pipeline":$ps,"latency":$latJson,"v19_legs":$v19LegsJson,"gserve":$gserveJson,"code":"$codeFp","best_comparable":$bestCmp,"sf":"$sfDir"}"""
     println(full)
     // Belt-and-braces: the complete itemized record also goes to a file
     // in the repo (the driver commits the working tree each round, so

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.QueryProfile
 import graft.core.Tables._
 import graft.functions.RepetitionKernel
 import org.apache.spark.sql.expressions.Window
@@ -108,9 +109,9 @@ object Corpus {
     * 1.9M edges including Spark overhead, tools/CcPathProbe) is
     * sized for the 8g-driver convention, where the driver solve
     * still measured ~2x under the distributed rounds at that size;
-    * [[lastCcMode]] witnesses which path served
-    * a call (diagnostic only — both paths are exact and emit the
-    * identical min-label assignment, spec-pinned in CorpusSpec).
+    * [[ccServed]] notes which path served a call (diagnostic only —
+    * both paths are exact and emit the identical min-label
+    * assignment, spec-pinned in CorpusSpec).
     *
     * Shared by every pair-graph fixpoint loop (CC here, the k-core
     * peel and rank loops in [[graft.operators.Graph]]) — one knob,
@@ -148,20 +149,15 @@ object Corpus {
           maxHeapBytes() / DriverBytesPerEdge).toInt
     }
 
-  /** Which path served the most recent successfully-COMPLETED CC call
-    * in this JVM, paired atomically with how many contraction levels
-    * that call ran (r17 ADVICE: two separate volatile vars updated
-    * across Spark jobs let a concurrent reader observe a mode from
-    * one call with a level count from another). One immutable value,
-    * written exactly once per call at its return point — a reader
-    * always sees a consistent (mode, levels) pair; a call that throws
-    * (non-convergence) leaves the previous call's witness in place.
-    * Diagnostic for specs/probes only — results are path-independent.
+  /** Notes, at a CC call's return, which path served it (`cc_mode`:
+    * "driver", "driver_contracted" or "distributed") and how many
+    * contraction levels it ran (`cc_contract_levels`) in the active
+    * [[QueryProfile]]. A call that throws notes nothing.
     */
-  final case class CcWitness(mode: String, contractLevels: Int)
-  @volatile private[graft] var lastCcWitness: CcWitness = CcWitness("", 0)
-  private[graft] def lastCcMode: String = lastCcWitness.mode
-  private[graft] def lastCcContractLevels: Int = lastCcWitness.contractLevels
+  private def ccServed(s: SparkSession, mode: String, levels: Int): Unit = {
+    QueryProfile.note(s, "cc_mode", mode)
+    QueryProfile.note(s, "cc_contract_levels", levels.toString)
+  }
 
   /** In-driver union-find over a collected canonical edge list.
     * Union-by-min keeps every root the component MINIMUM, so the
@@ -289,11 +285,9 @@ object Corpus {
       .truncated(true)
     val budget = driverEdgeBudget(pairs.sparkSession)
     val probe = cn.take(budget + 1)
-    // witness level count is 0 on BOTH paths: lastCcWitness's contract
-    // is "the most recent CC call of either algorithm", and this
-    // variant never contracts
+    // this variant never contracts: 0 levels on both paths
     if (probe.length <= budget) {
-      lastCcWitness = CcWitness("driver", 0)
+      ccServed(pairs.sparkSession, "driver", 0)
       return driverUnionFind(pairs.sparkSession, probe)
     }
     // LOCAL-CHECKPOINT, not persist: each round's labels plan embeds the
@@ -355,7 +349,7 @@ object Corpus {
     require(converged,
       s"connected components did not converge within $MaxCcIters rounds " +
         "— pair-graph diameter exceeds the cap; raise MaxCcIters")
-    lastCcWitness = CcWitness("distributed", 0)
+    ccServed(pairs.sparkSession, "distributed", 0)
     labels.select(col("doc_id"), col("lbl").as("cluster"))
   }
 
@@ -422,7 +416,7 @@ object Corpus {
     * runs first (knob: [[ccLocalContract]]): each level shrinks the
     * edge set toward the node count for one shuffle, re-probing the
     * budget after every level — so a duplication-heavy graph usually
-    * ends in the driver solve anyway (`lastCcMode =
+    * ends in the driver solve anyway (`cc_mode =
     * "driver_contracted"`) and only a genuinely node-rich graph pays
     * star rounds, on the contracted forest instead of the raw pairs.
     */
@@ -441,7 +435,7 @@ object Corpus {
     val budget = driverEdgeBudget(pairs.sparkSession)
     val probe = raw.take(budget + 1)
     if (probe.length <= budget) {
-      lastCcWitness = CcWitness("driver", 0)
+      ccServed(pairs.sparkSession, "driver", 0)
       return driverUnionFind(pairs.sparkSession, probe)
     }
     val s = pairs.sparkSession
@@ -475,7 +469,7 @@ object Corpus {
           .truncated(true)
         val nextCount = next.count()
         if (budget >= 0 && nextCount <= budget) {
-          lastCcWitness = CcWitness("driver_contracted", levels + 1)
+          ccServed(s, "driver_contracted", levels + 1)
           return driverUnionFind(s, next.collect())
         }
         // >= so the empty graph and the already-a-forest graph (next
@@ -550,7 +544,7 @@ object Corpus {
     }
     require(converged,
       s"star connected components did not converge within $MaxStarIters rounds")
-    lastCcWitness = CcWitness("distributed", levels)
+    ccServed(s, "distributed", levels)
     // at the fixpoint the edge set IS the component assignment: every
     // non-root points straight at its component minimum (checkpointed
     // RDDs of dropped rounds are reclaimed by the ContextCleaner)

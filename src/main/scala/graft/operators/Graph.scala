@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.QueryProfile
 import graft.core.Tables._
 import graft.operators.Corpus.TruncOps
 import org.apache.spark.sql.expressions.Window
@@ -295,6 +296,7 @@ object Graph {
     * rank columns, with per-column arithmetic IDENTICAL to
     * [[pageRankOn]] / [[pprOn]] (spec-pinned equal — the g2/g6
     * oracles unroll the separate formulations and still hash-match).
+    * Notes the serving path as `rank_mode` ([[QueryProfile.note]]).
     */
   def rankTablesOn(nodes: DataFrame, edges: DataFrame,
       isSeed: Column): (DataFrame, DataFrame) = {
@@ -314,10 +316,10 @@ object Graph {
     val budget = Corpus.driverEdgeBudget(s)
     val eprobe = edges.select(col("src"), col("dst")).take(budget + 1)
     if (eprobe.length <= budget) {
-      lastRankMode = "driver"
+      QueryProfile.note(s, "rank_mode", "driver")
       return driverRankTables(s, nodes, isSeed, eprobe)
     }
-    lastRankMode = "distributed"
+    QueryProfile.note(s, "rank_mode", "distributed")
     val ed = edges.select(col("src"), col("dst"))
       .join(edges.groupBy("src").agg(count(lit(1)).as("od")), "src")
       .truncated(true)
@@ -351,13 +353,6 @@ object Graph {
     (ranks.select(col("vec_id"), col("rank")),
       ranks.select(col("vec_id"), col("rank_s").as("rank")))
   }
-
-  /** Which path served the most recent rank-table / k-core-peel call
-    * in this JVM: "driver" or "distributed". Diagnostic witnesses for
-    * specs/probes only — results are path-independent.
-    */
-  @volatile private[graft] var lastRankMode: String = ""
-  @volatile private[graft] var lastPeelMode: String = ""
 
   /** The rank rounds in the driver over a collected edge list — see
     * [[rankTablesOn]]. Holds only the edge subgraph (≤ budget rows);
@@ -1253,15 +1248,10 @@ object Graph {
     df.repartitionByRange(by: _*).sortWithinPartitions(by: _*)
       .write.mode("overwrite").parquet(path)
 
-  /** Which path served the most recent triangle census in this JVM:
-    * "driver" or "distributed". Diagnostic witness only.
-    */
-  @volatile private[graft] var lastCensusMode: String = ""
-
   /** Triangle census: the g3 formulation over the stored edges
     * (undirected distinct pairs → degrees → wedge fold → triangle
     * count), node count from the routing set, written as the one-row
-    * `triangles/` table.
+    * `triangles/` table. Notes the serving path as `census_mode`.
     */
   private def fullCensus(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, target: String): Unit = {
@@ -1280,7 +1270,7 @@ object Graph {
     val budget = Corpus.driverEdgeBudget(s)
     val probe = und.take(budget + 1)
     if (probe.length <= budget) {
-      lastCensusMode = "driver"
+      QueryProfile.note(s, "census_mode", "driver")
       val deg = new java.util.HashMap[Long, Long]()
       val adj = new java.util.HashMap[Long, java.util.HashSet[Long]]()
       probe.foreach { r =>
@@ -1314,7 +1304,7 @@ object Graph {
         .write.mode("overwrite").parquet(s"$target/triangles")
       return
     }
-    lastCensusMode = "distributed"
+    QueryProfile.note(s, "census_mode", "distributed")
     // the degree table is a working step, read back by the wedge fold
     // and both orientation joins, and removed once the row is written
     sortedStatsWrite(und.select(col("a").as("v"))
@@ -1709,21 +1699,6 @@ object Graph {
     */
   val GannBatchQ = 8L
 
-  /** Per-phase timing split of the most recent [[graphAnnBatchOn]]
-    * walk in this JVM (seconds), populated only when the session conf
-    * `graft.gserve.timings` is true: `seed` (query-vector collect and
-    * LSH seed selection), `seed_score` (the seed-scoring point fetch),
-    * per-hop `hop<k>` walls and their `hops` total, `hops_rounds`
-    * (executed rounds), `final` (the driver-side top-K selection plus
-    * the `allowed` point fetch, if any), plus `<phase>_job`/
-    * `<phase>_task` Spark-side splits from
-    * [[graft.core.JobGroupMetrics]] — 0 for a phase that ran no job (a
-    * phase whose wall inflates while `_task` stays flat was queued,
-    * not working). Bench enables the conf and emits the map after each
-    * g-serve query.
-    */
-  @volatile private[graft] var lastGServeTimings: Map[String, Double] = Map.empty
-
   /** Most queries one [[graphAnnBatchOn]] call serves: the query
     * vectors are held on the driver and shipped with every hop task.
     */
@@ -1829,6 +1804,9 @@ object Graph {
     *    from the visited scores it already holds; only an `allowed`
     *    predicate costs a job (one point fetch over the visited ids).
     *
+    * Under a [[QueryProfile]] the phases are the spans `seed`,
+    * `seed_score`, `hop<k>` for round k, and `final`.
+    *
     * Each beam starts at its query's [[seededEntries]] seeds and hops
     * until ITS OWN fixpoint: a beam whose top-B survives a round
     * unchanged can never change again (the next pool is a function of
@@ -1856,31 +1834,7 @@ object Graph {
       stableK: Option[Int] = None): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    val timed = s.conf.get("graft.gserve.timings", "false").toBoolean
-    val phaseWalls = collection.mutable.LinkedHashMap.empty[String, Double]
-    val phaseMetrics = if (timed)
-      Some(new graft.core.JobGroupMetrics(s.sparkContext, "gserve:")) else None
-    // wallKey: where the span accumulates; group: the Spark job-group
-    // bucket (per-hop walls share one "hops" group so the job/task
-    // split stays per-phase, not per-round)
-    def span[T](wallKey: String, group: String)(f: => T): T =
-      if (!timed) f
-      else {
-        s.sparkContext.setJobGroup(
-          phaseMetrics.fold("gserve:" + group)(_.group(group)),
-          "gserve " + group)
-        val t0 = System.nanoTime()
-        try f
-        finally {
-          phaseWalls(wallKey) =
-            phaseWalls.getOrElse(wallKey, 0.0) + (System.nanoTime() - t0) / 1e9
-          s.sparkContext.clearJobGroup()
-        }
-      }
-    // the walk body, wrapped so a failing phase cannot leave the
-    // metrics listener registered for the session's lifetime
-    def walk(): DataFrame = {
-    val (qvs, seeds) = span("seed", "seed") {
+    val (qvs, seeds) = QueryProfile.span(s, "seed") {
       val qvs = queryVectors(e, isQuery)
       (qvs, seededEntries(qvs, routing))
     }
@@ -1905,7 +1859,7 @@ object Graph {
       else e.join(broadcast(seedIds.toDF("vec_id")), Seq("vec_id"), "left_semi")
     val seedQids = seedPairs.groupBy(_._2).map { case (v, ps) => v -> ps.map(_._1).toArray }
     val pool = collection.mutable.Map.empty[Long, List[(Long, Long)]]
-    if (seedPairs.nonEmpty) for ((qid, vid, sc) <- span("seed_score", "seed_score") {
+    if (seedPairs.nonEmpty) for ((qid, vid, sc) <- QueryProfile.span(s, "seed_score") {
         eSeeds.select(col("vec_id"), col("vec_id"),
             col("embedding").cast("array<double>"))
           .queryExecution.toRdd
@@ -1957,7 +1911,7 @@ object Graph {
       val frontier = pairs.groupBy(_._2).map { case (src, ps) => src -> ps.map(_._1).toArray }
       val qActive = qq.filter { case (q, _) => active(q) }
       // the hop job: partition-pruned expand + score, one pass
-      val scored = span(s"hop$k", "hops") {
+      val scored = QueryProfile.span(s, s"hop$k") {
         val parts: Seq[Int] = layout.fold[Seq[Int]](edgeRows.partitions.indices) { l =>
           l.indices.filter(i => l(i).exists(bkts))
         }
@@ -1994,11 +1948,6 @@ object Graph {
       active = stillActive.toSet
     }
     hopsOf ++= active.map(_ -> hops.toLong)
-    if (timed) {
-      phaseWalls("hops") =
-        phaseWalls.collect { case (key, w) if key.startsWith("hop") => w }.sum
-      phaseWalls("hops_rounds") = k.toDouble
-    }
     // final selection on the driver over the attested visited score
     // set. A predicate (g9) constrains the RESULT, not the walk:
     // traversal is predicate-agnostic (connectivity must not depend on
@@ -2007,7 +1956,7 @@ object Graph {
     // by an id-pushdown point fetch over the VISITED ids only (≤
     // Q·(seeds+hops·beam·G)) — the seed-fetch discipline, never a
     // corpus-wide label scan on the serve path.
-    val rows = span("final", "final") {
+    val rows = QueryProfile.span(s, "final") {
       val keep: Long => Boolean = allowed.fold((_: Long) => true) { pred =>
         val ids = visitedSc.keys.map(_._2).toSeq.distinct.sorted
         // isin (row-group-pruning pushdown on the sorted table) while
@@ -2028,21 +1977,7 @@ object Graph {
           }
       }
     }
-    phaseMetrics.foreach { m =>
-      val split = m.finishAndDetach()
-      for (g <- Seq("seed", "seed_score", "hops", "final")) {
-        val (job, task) = split.getOrElse(g, (0.0, 0.0))
-        phaseWalls(g + "_job") = job
-        phaseWalls(g + "_task") = task
-      }
-      lastGServeTimings = phaseWalls.toMap
-    }
     graft.core.Util.literalFrame(s, rows.toArray, GannSchema)
-    }
-    try walk()
-    catch { case t: Throwable =>
-      phaseMetrics.foreach(_.finishAndDetach(0)); throw t
-    }
   }
 
   /** [[graphAnnBatchOn]]'s result schema. */
@@ -2151,14 +2086,6 @@ object Graph {
     s.conf.get("graft.ann.autoExactMaxRows",
       AutoExactMaxRowsDefault.toString).toLong
 
-  /** Recall-tolerance knob for [[filteredAnnAutoBatch]]'s post-filter
-    * band: ON (default) serves the g12 top-K-prefix adaptive exit
-    * (measured −24% wall at recall 9.63/10 on the shipped config);
-    * OFF pins the full-fixpoint walk for recall-headline serves.
-    */
-  private[graft] def autoAdaptivePostfilter(s: SparkSession): Boolean =
-    s.conf.get("graft.ann.autoAdaptive", "true").toBoolean
-
   /** Eligibility-census memo for [[filteredAnnAutoBatch]], keyed by
     * (dataset, predicate, stratum, corpus stamp): mode selection
     * depends only on the corpus and the predicate, so repeat serves
@@ -2234,8 +2161,8 @@ object Graph {
     *     = the slice, `hops_n` = 0);
     *  2. eligible fraction ≥ [[AutoPostFilterMinFrac]] → POST-FILTER
     *     walk on the full graph (g9/g11 discipline), with the g12
-    *     top-K-prefix adaptive exit by default
-    *     ([[autoAdaptivePostfilter]] pins the fixpoint walk back);
+    *     top-K-prefix adaptive exit by default (`adaptive = false`
+    *     pins the fixpoint walk back);
     *  3. else, with a stratum conjunct the census proves CONSISTENT
     *     (every eligible row inside the stratum) → the STRATUM walk
     *     (g13);
@@ -2247,13 +2174,13 @@ object Graph {
     *
     * Returns (mode, frame); all modes share the batch output shape
     * (qid, vec_id, sc, rk, visited_n, hops_n). The decision depends
-    * only on the corpus, the predicate, and the adaptive knob, so a
+    * only on the corpus, the predicate, and `adaptive`, so a
     * registered query's mode — and therefore its oracle — is
     * deterministic per dataset.
     */
   def filteredAnnAutoBatch(s: SparkSession, d: String, isQuery: Column,
       pred: Column, stratum: Option[Long] = None,
-      adaptive: Option[Boolean] = None): (String, DataFrame) = {
+      adaptive: Boolean = true): (String, DataFrame) = {
     val e = embeddings(s, d)
     // census memoized per (corpus version, predicate, stratum): the
     // cold call pays one column-pruned aggregate; every repeat serve
@@ -2276,14 +2203,10 @@ object Graph {
       eligCensusMemo.put(key, v)
       v
     }
-    // post-filter band: the g12 adaptive exit by default (session
-    // knob [[autoAdaptivePostfilter]]; `adaptive` pins it per call —
-    // a REGISTERED query is a fixed operator+oracle pair, so q_g15
-    // passes Some(true) and a session override can never make the
-    // served walk diverge from its oracle's unroll) — the mode
-    // string says which ran
-    val stableK = if (adaptive.getOrElse(autoAdaptivePostfilter(s)))
-      Some(GannTopK) else None
+    // post-filter band: the g12 adaptive exit unless the caller pins
+    // the fixpoint walk (measured −24% wall at recall 9.63/10 on the
+    // shipped config) — the mode string says which ran
+    val stableK = if (adaptive) Some(GannTopK) else None
     val pfMode = if (stableK.isDefined) "postfilter_adaptive" else "postfilter"
     def postFilter = graphAnnBatchOn(e, storedEdgesPartitioned(s, d),
       storedBuckets(s, d), isQuery,
@@ -2340,14 +2263,13 @@ object Graph {
     * gate scale, so the census lands in band 2), serving the g12
     * top-K-prefix adaptive exit the selector now defaults to
     * (measured −24% wall at recall 9.63/10; a recall-headline caller
-    * flips [[autoAdaptivePostfilter]] off). The oracle unrolls the
+    * passes `adaptive = false`). The oracle unrolls the
     * SAME adaptive walk with the predicate on each query's final
     * selection — the g11 and g12 oracle parameterizations composed.
     */
   lazy val g15GannAutoPostfilter: Relational.Q = (s, d) =>
     filteredAnnAutoBatch(s, d, col("vec_id") < GannBatchQ,
-      col("label").isin(Indexed.FilterLabels: _*),
-      adaptive = Some(true))._2
+      col("label").isin(Indexed.FilterLabels: _*))._2
       .orderBy("qid", "rk")
 
   /** G10: graph-ANN recall audit — the [[Indexed.v19RecallGrid]]
@@ -2464,7 +2386,8 @@ object Graph {
     * each, measured at sf0.1). The result — including the
     * `converged` bit, which compares the LAST executed round against
     * its predecessor — is exactly the fixed-CoreIters unroll the
-    * oracle computes.
+    * oracle computes. Notes the serving path as `peel_mode`
+    * ([[QueryProfile.note]]).
     */
   def kcoreOn(edges: DataFrame, k: Int = CoreK): DataFrame = {
     val s = edges.sparkSession
@@ -2481,10 +2404,10 @@ object Graph {
     val budget = Corpus.driverEdgeBudget(s)
     val probe = und0.take(budget + 1)
     if (probe.length <= budget) {
-      lastPeelMode = "driver"
+      QueryProfile.note(s, "peel_mode", "driver")
       return driverKcore(s, probe, k)
     }
-    lastPeelMode = "distributed"
+    QueryProfile.note(s, "peel_mode", "distributed")
     val loopParts = Corpus.loopPartsFor(und0.count(), s.sparkContext.defaultParallelism)
     // DEGREE-DECREMENT peel (r16): the edge set is never rebuilt.
     // The symmetric adjacency materializes ONCE; each round removes

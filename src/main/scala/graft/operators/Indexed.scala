@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Tables._
-import graft.core.{ArtifactStore, OracleDataset}
+import graft.core.{ArtifactStore, OracleDataset, QueryProfile}
 import graft.functions.VectorFunctions._
 import graft.index.{IndexBuild, Pivots}
 import org.apache.spark.sql.functions._
@@ -1229,46 +1229,12 @@ object Indexed {
     * q_v1x queries run — evaluated == served, nothing re-derived. At
     * 100 TB this is the recurring index-quality job that decides
     * nprobe/topn retuning after drift or re-clustering.
-    */
-  /** Per-leg timing split of the most recent [[v19RecallGrid]] call in
-    * this JVM (seconds), populated only when the session conf
-    * `graft.v19.timings` is true: for each of the six serve legs plus
-    * "baseline" (the exact top-K scans + probe selection), the leg's
-    * driver-side WALL span under its key, plus `<leg>_job` (summed
-    * Spark job wall inside the leg's job group) and `<leg>_task`
-    * (summed executor task run time — on-core work, no queueing). v19
-    * has been the sweep's biggest wall AND its noisiest row since r14
-    * (2.5–4.4 s band, r17 VERDICT #3) — without a sub-split every
-    * cross-round move was unattributable to a leg. Bench enables the
-    * conf and emits this map per run.
     *
-    * CAVEAT (r18 ADVICE): the timed legs run on concurrent threads
-    * sharing one executor pool, so each wall includes scheduler
-    * contention from the other five and the walls are NON-ADDITIVE.
-    * That is what the `_task` split resolves: a leg whose wall moves
-    * across rounds while its `_task` stays flat was co-scheduling /
-    * environment, not code.
+    * The legs run when the query is built, each under a
+    * [[QueryProfile]] span named after its variant; `baseline` covers
+    * the exact top-K scans and the probe selection.
     */
-  @volatile private[graft] var lastV19Timings: Map[String, Double] = Map.empty
-
   val v19RecallGrid: Relational.Q = (s, d) => {
-    val timed = s.conf.get("graft.v19.timings", "false").toBoolean
-    val walls = collection.mutable.LinkedHashMap.empty[String, Double]
-    val metrics = if (timed)
-      Some(new graft.core.JobGroupMetrics(s.sparkContext, "v19:")) else None
-    def legGroup(name: String): String =
-      metrics.fold("v19:" + name)(_.group(name))
-    def leg[T](name: String)(f: => T): T =
-      if (!timed) f
-      else {
-        s.sparkContext.setJobGroup(legGroup(name), "v19 leg " + name)
-        val t0 = System.nanoTime()
-        try f
-        finally {
-          walls(name) = (System.nanoTime() - t0) / 1e9
-          s.sparkContext.clearJobGroup()
-        }
-      }
     val q = Knn.embeddingLit(s, d, Knn.QueryId)
     // the exact baselines collect as K-row id sets (bounded by K=10,
     // never corpus-sized): five of the six grid legs score against
@@ -1284,7 +1250,7 @@ object Indexed {
       .withColumn("dist", euclidean(col("embedding"), q))
       .orderBy(col("dist").asc, col("vec_id").asc).limit(K).select("vec_id")
       .collect().map(_.getLong(0)).toSeq
-    val (exact, exactF, probes2, probes4) = leg("baseline") {
+    val (exact, exactF, probes2, probes4) = QueryProfile.span(s, "baseline") {
       val e = exactTop(embeddings(s, d))
       val ef = exactTop(embeddings(s, d).filter(col("label").isin(FilterLabels: _*)))
       // probe sets exactly as the serving plans select them
@@ -1326,57 +1292,30 @@ object Indexed {
       ("v16_filtered", () => row("v16_filtered", pc4f, topNCap, v16FilteredIvf(s, d), exactF)),
       ("v18_ivfadc", () => row("v18_ivfadc", pr2, topNCap, v18IvfAdcResidual(s, d), exact)),
     )
-    // detach-on-failure: a throwing leg must not leave the metrics
-    // listener registered for the session's lifetime
-    var metricsDone = false
-    def legFramesTimed(): Seq[DataFrame] = {
-        // each leg frame is exactly ONE row: materialize it inside its
-        // own timed span and hand the union a literal. Spans run on
-        // CONCURRENT threads (Spark schedules jobs from separate
-        // threads in parallel), so the measured total keeps the
-        // overlap the plain union plan gets from parallel stage
-        // scheduling — a sequential first cut measured v19 +0.7-1.4 s
-        // of pure lost overlap — while a stalling leg still shows its
-        // own inflated span for attribution.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(legs.size)
-        try {
-          val futs = legs.map { case (name, mk) =>
-            name -> pool.submit(
-              new java.util.concurrent.Callable[(DataFrame, Double)] {
-                def call(): (DataFrame, Double) = {
-                  s.sparkContext.setJobGroup(legGroup(name), "v19 leg " + name)
-                  try {
-                    val t0 = System.nanoTime()
-                    val df = mk()
-                    val rows = df.collect()
-                    val w = (System.nanoTime() - t0) / 1e9
-                    (graft.core.Util.literalFrame(s, rows, df.schema), w)
-                  } finally s.sparkContext.clearJobGroup()
-                }
-              })
+    // each leg frame is exactly one row: collect it under its own
+    // span and hand the union a literal. The legs run on concurrent
+    // threads (Spark schedules jobs from separate threads in parallel),
+    // keeping the overlap the stages of one union plan would get — a
+    // sequential first cut measured +0.7-1.4 s of lost overlap — while
+    // a stalling leg still shows in its own span. A leg's wall includes
+    // queueing behind the other five; its task seconds do not.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(legs.size)
+    val legFrames = try {
+      legs.map { case (name, mk) =>
+        pool.submit(new java.util.concurrent.Callable[DataFrame] {
+          def call(): DataFrame = QueryProfile.span(s, name) {
+            val df = mk()
+            graft.core.Util.literalFrame(s, df.collect(), df.schema)
           }
-          futs.map { case (name, f) =>
-            // unwrap: the leg's real failure, not the pool's envelope
-            val (df, w) = try f.get() catch {
-              case ee: java.util.concurrent.ExecutionException =>
-                throw Option(ee.getCause).getOrElse(ee)
-            }
-            walls(name) = w; df
-          }
-        } finally { pool.shutdown(); () }
-    }
-    val legFrames: Seq[DataFrame] =
-      try { if (timed) legFramesTimed() else legs.map(_._2()) }
-      finally if (timed && !metricsDone) {
-        metricsDone = true
-        metrics.foreach { m =>
-          for ((nm, (job, task)) <- m.finishAndDetach()) {
-            walls(nm + "_job") = job
-            walls(nm + "_task") = task
-          }
+        })
+      }.map { f =>
+        // unwrap: the leg's real failure, not the pool's envelope
+        try f.get() catch {
+          case ee: java.util.concurrent.ExecutionException =>
+            throw Option(ee.getCause).getOrElse(ee)
         }
-        lastV19Timings = walls.toMap
       }
+    } finally { pool.shutdown(); () }
     legFrames.reduce(_ union _).orderBy("variant")
   }
 

@@ -230,10 +230,15 @@ object Knn {
     val qDists = qPivotDists(pivots.map(typedlit(_)), typedlit(q.toSeq))
     val probes = qDists.zipWithIndex.sortBy { case (dd, pid) => (dd, pid) }
       .take(nprobe).map(_._2)
+    // the dist0 band is relative to the query's distance to pivot 0: a
+    // query ON pivot 0 has a zero-width band that would admit nothing,
+    // so it is scanned with no band and the probed clusters alone bound
+    // the scan
     val lo = qDists.head * (1 - eps); val hi = qDists.head * (1 + eps)
+    val band = if (qDists.head > 0) col("dist0") > lo && col("dist0") < hi else lit(true)
     graft.core.Util.readParquet(s, indexPath)
-      .filter(col("cluster").isin(probes: _*))       // partition pruning
-      .filter(col("dist0") > lo && col("dist0") < hi) // row-group stats pruning
+      .filter(col("cluster").isin(probes: _*)) // partition pruning
+      .filter(band)                             // row-group stats pruning
       .withColumn("dist", euclidean(col("embedding"), typedlit(q.toSeq)))
       .orderBy(col("dist").asc, col("id").asc)
       .limit(k)

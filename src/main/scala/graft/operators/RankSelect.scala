@@ -15,7 +15,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * EACH WHOLE GROUP in a single task at any scale — at 100 TB a
   * billion-row `l_returnflag` group is one task's sort, and the whole
   * input crosses the network into |groups| partitions. Measured at
-  * sf0.1 (JobTimelineProbe): the two window-branch jobs of
+  * sf0.1 (graft.tools.Profile): the two window-branch jobs of
   * q_agg_approx_percentile ran 3 tasks each at ~1.1 task-seconds —
   * the suite's #1 row (2.4 s) with an 8→32-core scaling ratio ≈ 1
   * (serial).
@@ -52,7 +52,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * data-proportional collect (a first, fully-lazy cut kept these
   * decisions in-plan via broadcast joins; its 19-job / 4-broadcast
   * plan cost ~0.7 s of pure driver planning per query at sf0.1, 2×
-  * the whole data work — measured with JobTimelineProbe, same
+  * the whole data work — measured with graft.tools.Profile, same
   * numbers in its scaladoc's history). Construction is therefore
   * eager (the d16 `probeSigIndex` contract): building the returned
   * plan runs the two summary jobs.

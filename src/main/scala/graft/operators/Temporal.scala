@@ -135,7 +135,7 @@ object Temporal {
   /** Opt r21 (both JSON projections): the events table reads as 2
     * scan splits, so the per-row JSON parse ran in 2 tasks — and the
     * final orderBy's range-sampling pass re-evaluated the parse over
-    * every row (2 serial ~0.3 s jobs measured with JobTimelineProbe).
+    * every row (2 serial ~0.3 s jobs measured with graft.tools.Profile).
     * Range-repartitioning on the SORT KEY before the projection makes
     * the sampling pass read raw rows only (the parse sits above the
     * exchange) and the parse itself run once on every core; the final

@@ -26,7 +26,7 @@ object TextAnalysis {
   /** `documents` fanned out for per-row tokenizer/kernel work (opt
     * r21): the sf-scale documents.parquet is ONE row group, so however
     * small `maxPartitionBytes` is, an un-repartitioned scan runs the
-    * whole tokenize pass in ONE task — JobTimelineProbe measured
+    * whole tokenize pass in ONE task — graft.tools.Profile measured
     * 0.2-0.6 s single-task jobs inside every text query (q_t1's two
     * range-sort passes were 2 × 0.24 s serial). The d2/d8 idiom: one
     * explicit exchange of the raw text parallelizes every kernel

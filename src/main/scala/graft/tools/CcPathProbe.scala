@@ -1,5 +1,5 @@
 package graft.tools
-import graft.core.Tables
+import graft.core.{QueryProfile, Tables}
 import graft.operators.{Corpus, Dedup, Graph}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -32,23 +32,21 @@ object CcPathProbe {
     val pairs = spark.read.parquet(s"$g/pairs").select("id_a", "id_b", "w")
     val core = pairs.filter(col("w") >= Graph.CoreWmin).select("id_a", "id_b").cache()
     println("core_edges=" + core.count())
-    def time[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(s"$tag: ${(System.nanoTime()-t0)/1e9}s"); r }
+    // wall and the serving path's note (peel_mode / cc_mode)
+    def time(tag: String)(f: => Long): Unit = {
+      val (_, p) = QueryProfile.run(spark)(f)
+      println(s"$tag: ${p.wallS}s ${p.notes.filter(_._1.endsWith("_mode")).mkString(" ")}")
+    }
     time("kcore") { Graph.kcoreOn(
       core.select(col("id_a").as("src"), col("id_b").as("dst"))).count() }
-    println("peelMode=" + Graph.lastPeelMode)
     time("ccstar1") { Corpus.connectedComponentsStar(core, "id_a", "id_b").count() }
-    println("ccMode=" + Corpus.lastCcMode)
     time("ccstar2") { Corpus.connectedComponentsStar(core, "id_a", "id_b").count() }
     // raised budget: does the driver path still win (and stay safe)
     // at ~1.9M edges on the 8g driver convention?
     spark.conf.set("graft.graph.driverEdgeBudget", "4000000")
     time("ccstar_drv") { Corpus.connectedComponentsStar(core, "id_a", "id_b").count() }
-    println("ccMode=" + Corpus.lastCcMode)
     time("kcore_drv") { Graph.kcoreOn(
       core.select(col("id_a").as("src"), col("id_b").as("dst"))).count() }
-    println("peelMode=" + Graph.lastPeelMode)
     val rt = Runtime.getRuntime
     println("heap_used_mb=" + (rt.totalMemory - rt.freeMemory) / 1048576)
     spark.stop()

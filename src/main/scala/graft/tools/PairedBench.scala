@@ -121,11 +121,6 @@ object PairedBench {
       .config("spark.sql.files.openCostInBytes", "1m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // each side reproduces its OWN canonical Bench methodology: the
-    // confs are read by the fingerprints that have the instrumentation
-    // and ignored by older ones
-    spark.conf.set("graft.v19.timings", "true")
-    spark.conf.set("graft.gserve.timings", "true")
 
     val fp = codeFp
     // Human-pinned side identity (e.g. "r18-final@6f68545-clean"): a

@@ -18,9 +18,9 @@ class CorpusSpec extends SparkSuite {
     for ((budget, wantMode) <- Seq(("1000000", "driver"), ("-1", "distributed"))) {
       spark.conf.set("graft.graph.driverEdgeBudget", budget)
       try {
-        val got = Corpus.connectedComponents(pairs, "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(Corpus.lastCcMode === wantMode, s"budget $budget")
+        val (got, notes) = withNotes(Corpus.connectedComponents(pairs, "a", "b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+        assert(notes.get("cc_mode") === Some(wantMode), s"budget $budget")
         assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L,
           5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L), s"mode $wantMode")
       } finally spark.conf.unset("graft.graph.driverEdgeBudget")
@@ -141,21 +141,23 @@ class CorpusSpec extends SparkSuite {
       a <- 0L until 50L; b <- (a + 1) until 50L
     } yield (a, b)).toDF("a", "b")
     val expect = (0L until 50L).map(_ -> 0L).toMap
-    def run(): Map[Long, Long] =
-      Corpus.connectedComponentsStar(k50, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def run(): (Map[Long, Long], Map[String, String]) =
+      withNotes(Corpus.connectedComponentsStar(k50, "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     spark.conf.set("graft.graph.driverEdgeBudget", "400")
     try {
-      assert(run() === expect)
-      assert(Corpus.lastCcMode === "driver_contracted",
+      val (got, notes) = run()
+      assert(got === expect)
+      assert(notes.get("cc_mode") === Some("driver_contracted"),
         "1225 edges over budget 400 must contract (≤392 forest edges) and re-admit")
-      assert(Corpus.lastCcContractLevels === 1)
+      assert(notes.get("cc_contract_levels") === Some("1"))
       spark.conf.set("graft.graph.ccLocalContract", "false")
       try {
-        assert(run() === expect)
-        assert(Corpus.lastCcMode === "distributed",
+        val (got2, notes2) = run()
+        assert(got2 === expect)
+        assert(notes2.get("cc_mode") === Some("distributed"),
           "knob off: the star loop must serve")
-        assert(Corpus.lastCcContractLevels === 0)
+        assert(notes2.get("cc_contract_levels") === Some("0"))
       } finally spark.conf.unset("graft.graph.ccLocalContract")
     } finally spark.conf.unset("graft.graph.driverEdgeBudget")
   }
@@ -166,15 +168,16 @@ class CorpusSpec extends SparkSuite {
       .select("doc_a", "doc_b")
     def runBoth(f: => org.apache.spark.sql.DataFrame)
         : (Map[Long, Long], Map[Long, Long]) = {
-      spark.conf.set("graft.graph.driverEdgeBudget", "1000000")
-      val drv = try f.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def served(budget: String) = {
+        spark.conf.set("graft.graph.driverEdgeBudget", budget)
+        try withNotes(f.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
         finally spark.conf.unset("graft.graph.driverEdgeBudget")
-      assert(Corpus.lastCcMode === "driver",
+      }
+      val (drv, drvNotes) = served("1000000")
+      assert(drvNotes.get("cc_mode") === Some("driver"),
         "inside the budget the fused take must admit the driver path")
-      spark.conf.set("graft.graph.driverEdgeBudget", "-1")
-      val dist = try f.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        finally spark.conf.unset("graft.graph.driverEdgeBudget")
-      assert(Corpus.lastCcMode === "distributed",
+      val (dist, distNotes) = served("-1")
+      assert(distNotes.get("cc_mode") === Some("distributed"),
         "over the budget the loop must serve — the scale path")
       (drv, dist)
     }
@@ -249,21 +252,21 @@ class CorpusSpec extends SparkSuite {
     Corpus.maxHeapBytes = () => 4L * 1024 * 1024
     try {
       assert(Corpus.driverEdgeBudget(spark) === 1024)
-      val got = Corpus.connectedComponentsStar(k50, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val (got, notes) = withNotes(Corpus.connectedComponentsStar(k50, "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(got === expect)
-      assert(Corpus.lastCcMode !== "driver",
+      assert(notes.get("cc_mode") !== Some("driver"),
         "1225 edges must overflow the heap-derived 1024 budget")
       // contraction gets K50 under 1024, so the admitted form is the
       // budget-sized contracted forest, not the raw collect
-      assert(Corpus.lastCcMode === "driver_contracted")
+      assert(notes.get("cc_mode") === Some("driver_contracted"))
       // with the prelude off, the same graph runs fully distributed
       spark.conf.set("graft.graph.ccLocalContract", "false")
       try {
-        val got2 = Corpus.connectedComponentsStar(k50, "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val (got2, notes2) = withNotes(Corpus.connectedComponentsStar(k50, "a", "b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
         assert(got2 === expect)
-        assert(Corpus.lastCcMode === "distributed")
+        assert(notes2.get("cc_mode") === Some("distributed"))
       } finally spark.conf.unset("graft.graph.ccLocalContract")
       // an EXPLICIT conf is an operator override and wins verbatim,
       // even over the heap derivation

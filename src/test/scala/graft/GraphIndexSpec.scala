@@ -145,26 +145,20 @@ class GraphIndexSpec extends SparkSuite {
       s"g1 must not re-score edges:\n${p1.take(2000)}")
   }
 
-  test("timed g-serve: identical rows to untimed, with the final phase measured (r20)") {
-    // r20: under graft.gserve.timings the walk executes its final
-    // top-K + attestation in-span (own job group) and returns a
-    // LITERAL frame — values must be bit-identical to the lazy plan,
-    // and the timing map must carry the measured final/_job (the
-    // 40-45% of wall that was only ever a residual before)
+  test("g-serve: same rows with or without a profile, and every phase has a span") {
     val d = sf0001
     Graph.ensureKnnGraph(spark, d)
     def rows() = SparkEntry.queries("q_g8_graph_ann_batch")(spark, d)
       .collect().map(_.toString).toSeq
-    val untimed = rows()
-    spark.conf.set("graft.gserve.timings", "true")
-    val timed = try rows() finally
-      spark.conf.set("graft.gserve.timings", "false")
-    assert(timed === untimed, "timed serve changed the served rows")
-    val m = Graph.lastGServeTimings
-    assert(m.contains("final") && m.contains("final_job"),
-      s"final phase not measured: ${m.keys.toSeq.sorted}")
-    assert(m.contains("seed") && m.contains("seed_job") && m.contains("hops"),
-      s"phase map incomplete: ${m.keys.toSeq.sorted}")
+    val plain = rows()
+    val (profiled, p) = graft.core.QueryProfile.run(spark)(rows())
+    assert(profiled === plain, "the profile changed the served rows")
+    for (k <- Seq("seed", "seed_score", "hop1", "final"))
+      assert(p.spans.get(k).exists(_.calls == 1), s"phase $k: ${p.spans.keys.toSeq.sorted}")
+    // every job the walk ran belongs to one of its phases
+    val phases = p.spans.keySet
+    assert(p.jobs.nonEmpty && p.jobs.forall(j => phases(j.span)),
+      s"jobs outside the walk's phases: ${p.jobs.filterNot(j => phases(j.span))}")
     Dedup.releaseSlots()
   }
 
@@ -416,18 +410,15 @@ class GraphIndexSpec extends SparkSuite {
         stableK = Some(Graph.GannTopK))
       assert(rows(r3) === rows(directP),
         "post-filter band must serve the adaptive full-graph walk's result")
-      // the recall knob pins the full-fixpoint walk back
-      try {
-        spark.conf.set("graft.ann.autoAdaptive", "false")
-        val (m3f, r3f) = Graph.filteredAnnAutoBatch(spark, d, isQ, predP,
-          Some(Graph.StratumServeLabel.toLong))
-        assert(m3f === "postfilter")
-        val directFix = Graph.graphAnnBatchOn(e,
-          Graph.storedEdgesPartitioned(spark, d), Graph.storedBuckets(spark, d),
-          isQ, allowed = Some(predP))
-        assert(rows(r3f) === rows(directFix),
-          "knob-off must serve the fixpoint walk's result")
-      } finally spark.conf.unset("graft.ann.autoAdaptive")
+      // adaptive = false pins the full-fixpoint walk back
+      val (m3f, r3f) = Graph.filteredAnnAutoBatch(spark, d, isQ, predP,
+        Some(Graph.StratumServeLabel.toLong), adaptive = false)
+      assert(m3f === "postfilter")
+      val directFix = Graph.graphAnnBatchOn(e,
+        Graph.storedEdgesPartitioned(spark, d), Graph.storedBuckets(spark, d),
+        isQ, allowed = Some(predP))
+      assert(rows(r3f) === rows(directFix),
+        "adaptive = false must serve the fixpoint walk's result")
       // ~9% with NO stratum conjunct: the measured fallback is still
       // the post-filter walk (wider beams plateau; no better operator)
       val predF = pmod(col("vec_id"), lit(11)) === 0
@@ -759,22 +750,22 @@ class GraphIndexSpec extends SparkSuite {
     // and neither path leaves its working degree table in the version
     val fifty = graft.core.Tables.embeddings(spark, sf0001)
       .select("vec_id", "embedding").orderBy("vec_id").limit(120)
-    def build(budget: String): Seq[Long] = {
+    def build(budget: String): (Seq[Long], Map[String, String]) = {
       val d = tmpDir("gtc")
       fifty.write.parquet(s"$d/embeddings.parquet")
       spark.conf.set("graft.graph.driverEdgeBudget", budget)
       try {
-        val v = Graph.ensureGraphStats(spark, d)
+        val (v, notes) = withNotes(Graph.ensureGraphStats(spark, d))
         Dedup.releaseSlots()
         assert(!new java.io.File(s"$v/deg").exists(), s"budget $budget left deg/")
         val tri = spark.read.parquet(s"$v/triangles").head()
-        (0 until 5).map(tri.getLong)
+        ((0 until 5).map(tri.getLong), notes)
       } finally spark.conf.unset("graft.graph.driverEdgeBudget")
     }
-    val triD = build("1000000")
-    assert(Graph.lastCensusMode === "driver")
-    val triX = build("-1")
-    assert(Graph.lastCensusMode === "distributed")
+    val (triD, notesD) = build("1000000")
+    assert(notesD.get("census_mode") === Some("driver"))
+    val (triX, notesX) = build("-1")
+    assert(notesX.get("census_mode") === Some("distributed"))
     assert(triD === triX, "triangle census rows diverge across serve paths")
     assert(triD(3) > 0L, "fixture must actually contain triangles")
   }
@@ -826,31 +817,17 @@ class GraphIndexSpec extends SparkSuite {
     // path graph a-b-c-d with k=2 peels in 3 counted rounds:
     // {ab,bc,cd} → {bc} → {} → {} (fixpoint detected)
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    // the async listener bus delivers QUEUED events from earlier
-    // tests' jobs to listeners registered later — gate on submission
-    // time so only jobs submitted after this point count
-    val t0 = System.currentTimeMillis()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // count LOOP actions (checkpoint/count call sites) — broadcast
-        // exchanges run as separate thread-pool jobs in any variant of
-        // the loop and would drown the signal
-        if (j.time >= t0 && j.stageInfos.exists(si =>
-            si.name.contains("Graph.scala") || si.name.contains("Corpus.scala")))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     // AQE materializes every exchange as its own job, decoupling job
     // count from action count — switch it off so one action == one job
     // and the budget assertion measures the LOOP's actions
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val core = Graph.kcoreOn(edges)
-      // listener delivery is async; the loop's own jobs are done here
-      Thread.sleep(1000)
+      val (core, p) = graft.core.QueryProfile.run(spark)(Graph.kcoreOn(edges))
+      // count LOOP actions (checkpoint/count call sites) — broadcast
+      // exchanges run as separate thread-pool jobs in any variant of
+      // the loop and would drown the signal
+      val loopJobs = p.jobs.count(_.callSites.exists(cs =>
+        cs.contains("Graph.scala") || cs.contains("Corpus.scala")))
       // loop-action budget: eager base truncation + its count + the
       // one-time symmetric-adjacency materialization (r16: the
       // degree-decrement peel never rebuilds the edge set, so the
@@ -859,14 +836,11 @@ class GraphIndexSpec extends SparkSuite {
       // edge-restriction loop paid ~4 edge-set shuffles per round
       // inside its one action; this one joins the cached adjacency
       // against the (usually tiny) removal set.
-      assert(jobs.get() <= 6,
-        s"k-core loop ran ${jobs.get()} loop-action jobs for a 3-round " +
+      assert(loopJobs <= 6,
+        s"k-core loop ran $loopJobs loop-action jobs for a 3-round " +
           "peel — expected one job per round plus the base materializations")
       assert(core.collect().isEmpty, "a path graph has no 2-core")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("g8 batch walk: one job per executed hop round, none for the final selection, the session's AQE setting never written") {
@@ -875,51 +849,28 @@ class GraphIndexSpec extends SparkSuite {
     val e = graft.core.Tables.embeddings(spark, d)
     val edges = Graph.storedEdgesPartitioned(spark, d)
     val routing = Graph.storedBuckets(spark, d)
-    // (job group, spark.sql.adaptive.enabled) per job: SQL jobs carry the
-    // session's explicitly-set spark.* confs as job properties, so a walk
-    // that flipped AQE would start some of them with "false"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).foreach { p =>
-          jobs.add((p.getProperty("spark.jobGroup.id", ""),
-            p.getProperty("spark.sql.adaptive.enabled", "")))
-          ()
-        }
-    }
-    // the jobs of one timed walk, with its phase map
-    def walk(allowed: Option[org.apache.spark.sql.Column]) = {
-      Thread.sleep(500)
-      jobs.clear()
-      Graph.graphAnnBatchOn(e, edges, routing, col("vec_id") < Graph.GannBatchQ,
-        allowed = allowed)
-      // listener delivery is async; the walk's own jobs are done here
-      Thread.sleep(1000)
-      (jobs.toArray.toSeq.map(_.asInstanceOf[(String, String)])
-        .filter(_._1.startsWith("gserve:")), Graph.lastGServeTimings)
-    }
+    // the jobs of one profiled walk. SQL jobs carry the session's
+    // explicitly-set spark.* confs as job properties, so a walk that
+    // flipped AQE would start some of them with "false"
+    def walk(allowed: Option[org.apache.spark.sql.Column]) =
+      graft.core.QueryProfile.run(spark)(
+        Graph.graphAnnBatchOn(e, edges, routing, col("vec_id") < Graph.GannBatchQ,
+          allowed = allowed))._2
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("graft.gserve.timings", "true")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (g8, m) = walk(None)
-      val rounds = m("hops_rounds").toInt
-      val hopJobs = g8.count(_._1.endsWith(":hops"))
-      val finalJobs = g8.count(_._1.endsWith(":final"))
-      assert(rounds >= 2, s"the fixture walk should take several rounds, took $rounds")
-      assert(hopJobs === rounds, s"$hopJobs hop jobs for $rounds executed rounds")
-      assert(finalJobs === 0 && m("final_job") === 0.0,
-        s"the final selection ran $finalJobs jobs")
-      // the g11 form adds the predicate's point fetch, a SQL job
-      val (g11, _) = walk(Some(col("label").isin(graft.operators.Indexed.FilterLabels: _*)))
-      val aqe = (g8 ++ g11).map(_._2).filter(_.nonEmpty)
-      assert(aqe.nonEmpty && aqe.forall(_ == "true"),
-        s"walk SQL jobs saw spark.sql.adaptive.enabled = ${aqe.distinct}")
-      assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("graft.gserve.timings", "false")
-    }
+    val g8 = walk(None)
+    val rounds = g8.spans.keys.count(_.startsWith("hop"))
+    val hopJobs = g8.jobs.count(_.span.startsWith("hop"))
+    val finalJobs = g8.jobs.count(_.span == "final")
+    assert(rounds >= 2, s"the fixture walk should take several rounds, took $rounds")
+    assert(hopJobs === rounds, s"$hopJobs hop jobs for $rounds executed rounds")
+    assert(finalJobs === 0 && g8.spans("final").jobWallS === 0.0,
+      s"the final selection ran $finalJobs jobs")
+    // the g11 form adds the predicate's point fetch, a SQL job
+    val g11 = walk(Some(col("label").isin(graft.operators.Indexed.FilterLabels: _*)))
+    val aqe = (g8.jobs ++ g11.jobs).map(_.adaptive).filter(_.nonEmpty)
+    assert(aqe.nonEmpty && aqe.forall(_ == "true"),
+      s"walk SQL jobs saw spark.sql.adaptive.enabled = ${aqe.distinct}")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
   }
 
   test("a caller's sort and casts over the walk's result run no job after the last hop round") {
@@ -928,35 +879,17 @@ class GraphIndexSpec extends SparkSuite {
     val e = graft.core.Tables.embeddings(spark, d)
     val edges = Graph.storedEdgesPartitioned(spark, d)
     val routing = Graph.storedBuckets(spark, d)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.add(Option(j.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
-        ()
-      }
-    }
     def serve() = Graph.graphAnnBatchOn(e, edges, routing, col("vec_id") === 7L).orderBy("rk")
       .select(col("vec_id"), col("visited_n").cast("long"), col("hops_n").cast("long"))
       .collect()
-    spark.conf.set("graft.gserve.timings", "true")
     val first = serve()
-    Thread.sleep(500)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      jobs.clear()
-      val rows = serve()
-      // listener delivery is async; the serve's own jobs are done here
-      Thread.sleep(1000)
-      val groups = jobs.toArray.toSeq.map(_.toString)
-      val lastHop = groups.lastIndexWhere(_.endsWith(":hops"))
-      assert(lastHop >= 0, s"no hop job among $groups")
-      assert(groups.drop(lastHop + 1).isEmpty,
-        s"jobs after the last hop round: ${groups.drop(lastHop + 1)}")
-      assert(rows.toSeq === first.toSeq && rows.nonEmpty)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("graft.gserve.timings", "false")
-    }
+    val (rows, p) = graft.core.QueryProfile.run(spark)(serve())
+    val spans = p.jobs.map(_.span)
+    val lastHop = spans.lastIndexWhere(_.startsWith("hop"))
+    assert(lastHop >= 0, s"no hop job among $spans")
+    assert(spans.drop(lastHop + 1).isEmpty,
+      s"jobs after the last hop round: ${spans.drop(lastHop + 1)}")
+    assert(rows.toSeq === first.toSeq && rows.nonEmpty)
   }
 
   test("stored edges and routing tables are read with the schemas a build writes") {

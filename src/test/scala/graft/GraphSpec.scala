@@ -261,21 +261,16 @@ class GraphSpec extends SparkSuite {
       .toDF("src", "dst", "w", "rk", "dvec")
     def serve() = Graph.graphAnnBatchOn(e, edges, routing,
       col("vec_id") === 1L).collect().map(_.toString).sorted.toSeq
-    val untimed = serve()
-    spark.conf.set("graft.gserve.timings", "true")
-    try {
-      val timed = serve()
-      assert(timed === untimed, "instrumentation must not change the served rows")
-      val ph = Graph.lastGServeTimings
-      for (k <- Seq("seed", "seed_score", "hop1", "hops", "hops_rounds"))
-        assert(ph.contains(k), s"missing phase $k in $ph")
-      assert(ph("hops_rounds") === 1.0, "this fixture fixpoints on hop 1")
-      // Spark-side attribution arrived for each phase group
-      for (g <- Seq("seed", "seed_score", "hops")) {
-        assert(ph.contains(g + "_job"), s"missing ${g}_job in $ph")
-        assert(ph.contains(g + "_task"), s"missing ${g}_task in $ph")
-      }
-    } finally spark.conf.set("graft.gserve.timings", "false")
+    val plain = serve()
+    val (profiled, p) = graft.core.QueryProfile.run(spark)(serve())
+    assert(profiled === plain, "the profile must not change the served rows")
+    for (k <- Seq("seed", "seed_score", "hop1", "final"))
+      assert(p.spans.contains(k), s"missing phase $k in ${p.spans.keys}")
+    assert(p.spans.keys.count(_.startsWith("hop")) === 1, "this fixture fixpoints on hop 1")
+    // Spark-side attribution arrived for each phase that runs a job
+    for (g <- Seq("seed", "seed_score", "hop1"))
+      assert(p.spans(g).jobs >= 1 && p.spans(g).taskS >= 0.0, s"$g: ${p.spans(g)}")
+    assert(p.spans("final").jobs === 0, "no predicate: the final selection runs no job")
   }
 
   test("graph ANN: entrant-only expansion ≡ full re-expansion reference on random graphs") {
@@ -386,9 +381,9 @@ class GraphSpec extends SparkSuite {
       spark.conf.set("graft.graph.driverEdgeBudget", budget)
       try {
         val df = es.toSeq.toDF("src", "dst")
-        val got = Graph.kcoreOn(df, k = 2).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-        assert(Graph.lastPeelMode === wantMode)
+        val (got, notes) = withNotes(Graph.kcoreOn(df, k = 2).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))))
+        assert(notes.get("peel_mode") === Some(wantMode))
         val (wantDeg, wantConv) = refKcore(es, 2)
         assert(got.map(t => (t._1, t._2)).toMap === wantDeg,
           s"degrees diverge from the restriction reference on $es ($wantMode)")
@@ -425,9 +420,9 @@ class GraphSpec extends SparkSuite {
       for ((budget, wantMode) <- Seq(("1000000", "driver"), ("-1", "distributed"))) {
         spark.conf.set("graft.graph.driverEdgeBudget", budget)
         try {
-          val (pr, ppr) = Graph.rankTablesOn(nodes, edges, seed)
+          val ((pr, ppr), notes) = withNotes(Graph.rankTablesOn(nodes, edges, seed))
           val gotPr = m(pr); val gotPpr = m(ppr)
-          assert(Graph.lastRankMode === wantMode)
+          assert(notes.get("rank_mode") === Some(wantMode))
           assert(gotPr === wantPr, s"trial $trial PageRank ($wantMode)")
           assert(gotPpr === wantPpr, s"trial $trial PPR ($wantMode)")
           assert(gotPr.keySet.contains(900L) && !gotPr.keySet.contains(777L),
@@ -458,11 +453,12 @@ class GraphSpec extends SparkSuite {
         spark.conf.set("graft.graph.ccLocalContract", contract)
         try {
           val lp = got(graft.operators.Corpus.connectedComponents(pairs, "a", "b"))
-          val st = got(graft.operators.Corpus.connectedComponentsStar(pairs, "a", "b"))
+          val (st, notes) = withNotes(
+            got(graft.operators.Corpus.connectedComponentsStar(pairs, "a", "b")))
           assert(lp === st,
             s"trial $trial: label-prop ≠ star at budget $budget contract $contract")
           if (budget == "-1" && contract == "true")
-            assert(graft.operators.Corpus.lastCcContractLevels >= 1,
+            assert(notes.get("cc_contract_levels").exists(_.toInt >= 1),
               s"trial $trial: forced-distributed star must have contracted")
           ref match {
             case None => ref = Some(lp)
@@ -501,10 +497,11 @@ class GraphSpec extends SparkSuite {
         for (contract <- Seq("true", "false")) {
           spark.conf.set("graft.graph.ccLocalContract", contract)
           try {
-            val st = got(graft.operators.Corpus.connectedComponentsStar(pairs, "a", "b"))
+            val (st, notes) = withNotes(
+              got(graft.operators.Corpus.connectedComponentsStar(pairs, "a", "b")))
             assert(st === want,
               s"chain trial $trial: star ≠ reference at contract $contract")
-            assert(graft.operators.Corpus.lastCcMode === "distributed")
+            assert(notes.get("cc_mode") === Some("distributed"))
           } finally spark.conf.unset("graft.graph.ccLocalContract")
         }
         val e = intercept[IllegalArgumentException] {
@@ -596,9 +593,9 @@ class GraphSpec extends SparkSuite {
     for ((budget, wantMode) <- Seq(("1000000", "driver"), ("-1", "distributed"))) {
       spark.conf.set("graft.graph.driverEdgeBudget", budget)
       try {
-        val (cPr, cPpr) = Graph.rankTablesOn(nd, ce, seed)
+        val ((cPr, cPpr), notes) = withNotes(Graph.rankTablesOn(nd, ce, seed))
         val gotPr = m(cPr); val gotPpr = m(cPpr)
-        assert(Graph.lastRankMode === wantMode)
+        assert(notes.get("rank_mode") === Some(wantMode))
         assert(gotPr === wantPr, s"PageRank diverges on the $wantMode path")
         assert(gotPpr === wantPpr, s"PPR diverges on the $wantMode path")
       } finally spark.conf.unset("graft.graph.driverEdgeBudget")

@@ -48,6 +48,27 @@ class IndexedSearchSpec extends SparkSuite {
     assert(got.size === 10)
   }
 
+  test("searchIndexed with the query on pivot 0, every cluster probed and eps 1e9 == brute-force top-k") {
+    val out = tmpDir("serve-ivf-pivot0") + "/vectors"
+    val e = HashingEmbedder(dims = 64)
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("doc_id").cast("string").as("id"), col("text"))
+    val sample = graft.embed.Embedder.embedText(docs.limit(100), "text", e)
+      .select("id", "embedding")
+    val pivots = Pivots.fromSample(sample, "id", "embedding", 5)
+    IndexBuild.buildFromDocuments(docs, "id", "text", e, pivots, out)
+    // the query's distance to pivot 0 is 0, so its dist0 band has zero width
+    val q = pivots.head.toArray
+    val got = Knn.searchIndexed(spark, out, pivots, q, 10, nprobe = pivots.size, eps = 1e9)
+      .select("id", "dist").collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    val want = spark.read.parquet(out)
+      .withColumn("dist", euclidean(col("embedding"), typedlit(q.toSeq)))
+      .orderBy(col("dist").asc, col("id").asc).limit(10)
+      .select("id", "dist").collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    assert(want.size === 10 && want.head._2 === 0.0)
+    assert(got === want)
+  }
+
   test("a second searchIndexed over an unchanged table runs one job: no schema inference") {
     val out = tmpDir("serve-ivf-jobs") + "/vectors"
     val e = HashingEmbedder(dims = 64)
@@ -60,21 +81,9 @@ class IndexedSearchSpec extends SparkSuite {
     val q = e.embedOne("spark table scan merge")
     def serve() = Knn.searchIndexed(spark, out, pivots, q, 10, nprobe = 2, eps = 1.0).collect()
     val first = serve()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    Thread.sleep(500)
-    spark.sparkContext.addSparkListener(listener)
-    val second = try serve() finally {
-      // listener delivery is async; the serve's own jobs are done here
-      Thread.sleep(1000)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    val (second, p) = graft.core.QueryProfile.run(spark)(serve())
     assert(second.toSeq === first.toSeq && second.length === 10)
-    assert(jobs.get() === 1, s"a repeat serve ran ${jobs.get()} jobs")
+    assert(p.jobs.size === 1, s"a repeat serve ran ${p.jobs.size} jobs")
   }
 
   test("q_v9_indexed_range: served-from-index result == raw-table recomputation") {

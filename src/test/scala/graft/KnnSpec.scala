@@ -222,28 +222,15 @@ class KnnSpec extends SparkSuite {
     val pivots = v.filter(col("vec_id").isin(Knn.PivotIds: _*)).orderBy("vec_id")
       .select("embedding").collect().map(r => typedlit(r.getSeq[Float](0))).toSeq
     val q = queryVec
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.add(j.stageInfos.size); ()
-      }
-    }
     def stagesPerJob(search: => org.apache.spark.sql.DataFrame): Seq[Int] = {
       search.collect() // warm: the table's schema and the code paths
-      Thread.sleep(500)
-      jobs.clear()
-      val rows = search.collect()
+      val (rows, p) = graft.core.QueryProfile.run(spark)(search.collect())
       assert(rows.length === 10)
-      // listener delivery is async; the search's own jobs are done here
-      Thread.sleep(1000)
-      jobs.toArray.toSeq.map(_.asInstanceOf[Int])
+      p.jobs.map(_.callSites.size)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(stagesPerJob(Knn.indexRangeKnnOn(v, "vec_id", "embedding", q, pivots, 10, 1.0)
-        .orderBy("dist")) === Seq(1))
-      assert(stagesPerJob(Knn.indexSimilarityKnnOn(v, "vec_id", "embedding", q, pivots, 10, 100)
-        .orderBy("dist")) === Seq(1))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stagesPerJob(Knn.indexRangeKnnOn(v, "vec_id", "embedding", q, pivots, 10, 1.0)
+      .orderBy("dist")) === Seq(1))
+    assert(stagesPerJob(Knn.indexSimilarityKnnOn(v, "vec_id", "embedding", q, pivots, 10, 100)
+      .orderBy("dist")) === Seq(1))
   }
 }

@@ -61,12 +61,6 @@ class LocalRelationFoldSpec extends SparkSuite {
   }
 
   test("each query over a local frame ≡ the same query over its rows read from parquet, with no job") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     for (seed <- Seq(1L, 2L, 3L)) {
       val data = rows(seed)
       val local = Util.literalFrame(spark, data.toArray, schema)
@@ -74,15 +68,8 @@ class LocalRelationFoldSpec extends SparkSuite {
       local.coalesce(1).write.parquet(path)
       val stored = spark.read.parquet(path)
       for ((name, q) <- queries) {
-        Thread.sleep(200)
-        spark.sparkContext.addSparkListener(listener)
-        jobs.set(0)
-        val got = try q(local).collect() finally {
-          // listener delivery is async
-          Thread.sleep(500)
-          spark.sparkContext.removeSparkListener(listener)
-        }
-        assert(jobs.get() === 0, s"seed $seed, $name: ${jobs.get()} jobs")
+        val (got, p) = graft.core.QueryProfile.run(spark)(q(local).collect())
+        assert(p.jobs.isEmpty, s"seed $seed, $name: ${p.jobs.size} jobs")
         val want = q(stored).collect()
         assert(got.map(canonical).toSeq === want.map(canonical).toSeq, s"seed $seed, $name")
       }

@@ -38,25 +38,19 @@ class RecallGridSpec extends SparkSuite {
       s"probed variants must scan fewer than all $n code rows")
   }
 
-  test("timed mode: per-leg walls plus job/task split, same rows as untimed") {
-    val untimed = Indexed.v19RecallGrid(spark, sf0001).collect().map(_.toString).sorted
-    spark.conf.set("graft.v19.timings", "true")
-    try {
-      val timed = Indexed.v19RecallGrid(spark, sf0001).collect().map(_.toString).sorted
-      assert(timed.toSeq === untimed.toSeq,
-        "timed instrumentation must not change the query result")
-      val walls = Indexed.lastV19Timings
-      val legs = Seq("baseline", "v10_ivf", "v12_pq_adc", "v13_sq8",
-        "v14_ivfpq", "v16_filtered", "v18_ivfadc")
-      for (l <- legs) assert(walls.contains(l), s"missing wall for leg $l")
-      // every leg runs at least one Spark job, so the job-group
-      // listener must have attributed job wall AND task run time to it
-      // (the queue-vs-run split the concurrent walls alone can't give)
-      for (l <- legs) {
-        assert(walls.contains(l + "_job"), s"missing _job split for $l")
-        assert(walls.contains(l + "_task"), s"missing _task split for $l")
-        assert(walls(l + "_task") >= 0.0)
-      }
-    } finally spark.conf.set("graft.v19.timings", "false")
+  test("same rows with or without a profile, and every phase has a span") {
+    def grid() = Indexed.v19RecallGrid(spark, sf0001).collect().map(_.toString).sorted.toSeq
+    val plain = grid()
+    val (profiled, p) = graft.core.QueryProfile.run(spark)(grid())
+    assert(profiled === plain, "the profile must not change the query result")
+    // every leg runs at least one Spark job on its own pool thread, so
+    // jobs, job wall and task run time must be attributed to its span
+    // (the queue-vs-run split the concurrent walls alone can't give)
+    for (l <- Seq("baseline", "v10_ivf", "v12_pq_adc", "v13_sq8",
+        "v14_ivfpq", "v16_filtered", "v18_ivfadc")) {
+      val sp = p.spans.get(l)
+      assert(sp.exists(x => x.calls == 1 && x.jobs >= 1 && x.taskS >= 0.0),
+        s"leg $l: $sp")
+    }
   }
 }

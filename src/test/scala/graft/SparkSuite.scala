@@ -25,4 +25,12 @@ trait SparkSuite extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `f`'s value with the notes its operators recorded (which path
+    * served a CC, rank, peel or census call).
+    */
+  def withNotes[T](f: => T): (T, Map[String, String]) = {
+    val (v, p) = graft.core.QueryProfile.run(spark)(f)
+    (v, p.notes)
+  }
 }

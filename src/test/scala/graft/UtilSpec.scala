@@ -44,18 +44,8 @@ class UtilSpec extends SparkSuite {
     val dir = tmpDir("readpq") + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.partitionBy("v").parquet(dir)
     val first = Util.readParquet(spark, dir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val t0 = System.currentTimeMillis()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.time >= t0) { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val again = try Util.readParquet(spark, dir) finally {
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    assert(jobs.get() === 0, "the re-read inferred its schema again")
+    val (again, p) = graft.core.QueryProfile.run(spark)(Util.readParquet(spark, dir))
+    assert(p.jobs.isEmpty, "the re-read inferred its schema again")
     assert(again.schema === first.schema && again.schema === spark.read.parquet(dir).schema)
     assert(again.orderBy("id").collect().toSeq === first.orderBy("id").collect().toSeq)
     // an append with a new column changes the listing: the new column shows
