@@ -51,15 +51,19 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * neither tear a read nor flip the pointer over a version that
   * locked maintenance has since appended to.
   *
-  * Every stored index maintains itself through two calls, so the lock,
-  * the under-lock re-resolve and the vacuum are written once:
+  * Every stored index maintains itself through three calls, so the
+  * lock, the under-lock re-resolve and the vacuum are written once:
   *  - [[append]] (lock + [[appendVersion]]): the kNN and stratum graphs
   *    (`Graph.appendGraph`), the lex index (`Hybrid.appendLexIndex`),
   *    the sig index (`Dedup.appendSigIndex`) and the four `Indexed`
-  *    code tables (`appendDelta`);
+  *    code tables (`appendCodes`);
+  *  - [[compact]] (a [[rewriteOrKeep]] that re-checks fragmentation
+  *    under the lock): every compaction — `Graph.compactGraph`,
+  *    `Hybrid.compactLexIndex`, `Dedup.compactSigIndex` and
+  *    `Indexed.compactCodes`, each passing only its fragmentation test
+  *    and its rewrite;
   *  - [[rewriteOrKeep]] (lock + re-resolve + optional publish, then
-  *    [[gcVersions]]): every compaction (graphs, lex, sig, `Indexed`'s
-  *    `compactTable`), the graphs' cap-crossing self-heal rebuild, the
+  *    [[gcVersions]]): the graphs' cap-crossing self-heal rebuild, the
   *    graph-stats refresh (`Graph.ensureGraphStats`) and
   *    `Indexed.removeFromIndexes`.
   */
@@ -208,8 +212,8 @@ object ArtifactStore {
     * [[appendVersion]] on top of the live version. `writeDelta` gets
     * (live version, new version dir) — the live one for meta the delta
     * carries forward, read under the same lock. Returns the new live
-    * version. Appends reclaim nothing; the kind's compaction (a
-    * [[rewriteOrKeep]]) or [[vacuumAll]] does.
+    * version. Appends reclaim nothing; the kind's [[compact]] or
+    * [[vacuumAll]] does.
     */
   def append(dir: String)(writeDelta: (String, String) => Unit): String =
     withMaintenanceLock(dir) {
@@ -239,6 +243,24 @@ object ArtifactStore {
     gcVersions(dir)
     live
   }
+
+  /** Locked compaction, the one rule every stored index compacts by (a
+    * [[rewriteOrKeep]]): under the lock, the live version is re-resolved
+    * (an unbuilt artifact is an error — nothing to compact); with
+    * `onlyIfFragmented` (the auto-compact path, whose caller saw the
+    * threshold crossed before taking the lock) it is kept unless
+    * `fragmented(live)` still holds NOW, so two appenders that both saw
+    * the threshold crossed rewrite once; otherwise `rewrite(live,
+    * target)` writes the replacement, which is published. The GC
+    * follows. Returns the live version.
+    */
+  def compact(dir: String, onlyIfFragmented: Boolean)(fragmented: String => Boolean)(
+      rewrite: (String, String) => Unit): String =
+    rewriteOrKeep(dir) { cur =>
+      val live = cur.getOrElse(
+        throw new IllegalStateException(s"nothing to compact: $dir"))
+      if (onlyIfFragmented && !fragmented(live)) None else Some(rewrite(live, _))
+    }
 
   /** Recursively hard-link (or copy) `src`'s data entries into `dst`,
     * recreating subdirectories — so [[appendVersion]] carries forward
@@ -359,7 +381,7 @@ object ArtifactStore {
   /** Standalone retention sweep for one dataset: run [[gcVersions]]
     * over EVERY artifact dir whose name encodes dataset `d` (the
     * `_<basename>_<abshash>_` segment [[artifactDir]] writes). Closes
-    * the lifecycle gap where GC ran only inside `compactTable` — an
+    * the lifecycle gap where GC ran only inside a compaction — an
     * append-only artifact that never crosses the compaction threshold
     * would otherwise accumulate superseded versions forever. Each
     * artifact is swept under its own maintenance lock; the per-artifact

@@ -127,26 +127,23 @@ object Corpus {
   /** The 2M ceiling the 8g-driver convention was probed at. */
   val DriverEdgeBudgetCeiling = 2000000L
 
-  /** Heap supplier — a hook only so a spec can drive the small-driver
-    * degradation without forking a tiny `-Xmx` JVM.
+  /** The default budget for a driver heap of `heapBytes`:
+    * min(2M, heapBytes / 4KB-per-edge), so a driver smaller than the
+    * 8g sizing convention degrades to a witnessed distributed-path
+    * decline instead of an OOM (r17 VERDICT #7). On the bench rig
+    * (≥8g driver) it is the probed 2M ceiling exactly.
     */
-  @volatile private[graft] var maxHeapBytes: () => Long =
-    () => Runtime.getRuntime.maxMemory
+  private[graft] def defaultEdgeBudget(heapBytes: Long): Int =
+    math.min(DriverEdgeBudgetCeiling, heapBytes / DriverBytesPerEdge).toInt
 
   /** An EXPLICIT session conf wins verbatim (operator override — the
-    * spec/probe contract); the DEFAULT is derived from the driver's
-    * real heap, min(2M, maxMemory / 4KB-per-edge), so a driver
-    * smaller than the 8g sizing convention degrades to a witnessed
-    * distributed-path decline instead of an OOM (r17 VERDICT #7). On
-    * the bench rig (≥8g driver) the derived default is the probed 2M
-    * ceiling exactly.
+    * spec/probe contract); the default derives from the driver's real
+    * heap ([[defaultEdgeBudget]]).
     */
   private[graft] def driverEdgeBudget(s: org.apache.spark.sql.SparkSession): Int =
     s.conf.getOption("graft.graph.driverEdgeBudget") match {
       case Some(v) => v.toInt
-      case None =>
-        math.min(DriverEdgeBudgetCeiling,
-          maxHeapBytes() / DriverBytesPerEdge).toInt
+      case None => defaultEdgeBudget(Runtime.getRuntime.maxMemory)
     }
 
   /** Notes, at a CC call's return, which path served it (`cc_mode`:
@@ -214,18 +211,14 @@ object Corpus {
           org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
-  /** Partition-local contraction before the distributed star loop
-    * (default on; session conf — CorpusSpec drives both settings).
-    * Applies ONLY to [[connectedComponentsStar]], the declared scale
-    * path: [[connectedComponents]] stays a pure min-label fixpoint so
-    * the two distributed algorithms remain INDEPENDENT
-    * cross-validation references for each other (the same reason
-    * pageRankOn/pprOn carry no driver fast path).
-    */
-  private[graft] def ccLocalContract(s: SparkSession): Boolean =
-    s.conf.get("graft.graph.ccLocalContract", "true").toBoolean
-
-  /** Contraction levels cap, and the stall ratio past which another
+  /** Partition-local contraction runs before the distributed star loop
+    * of [[connectedComponentsStar]] only, the declared scale path:
+    * [[connectedComponents]] stays a pure min-label fixpoint so the two
+    * distributed algorithms remain INDEPENDENT cross-validation
+    * references for each other (the same reason pageRankOn/pprOn carry
+    * no driver fast path).
+    *
+    * Contraction levels cap, and the stall ratio past which another
     * level is not worth its shuffle: a level that keeps more than
     * [[ContractStallRatio]] of its input edges (a graph that is
     * already mostly forest — E ≈ V) hands over to the star loop,
@@ -413,7 +406,7 @@ object Corpus {
     * configured (see TruncOps).
     *
     * Over the driver budget, a [[localForest]] contraction prelude
-    * runs first (knob: [[ccLocalContract]]): each level shrinks the
+    * runs first: each level shrinks the
     * edge set toward the node count for one shuffle, re-probing the
     * budget after every level — so a duplication-heavy graph usually
     * ends in the driver solve anyway (`cc_mode =
@@ -454,45 +447,40 @@ object Corpus {
     // distributed spec/probe setting) skips the re-probe, never the
     // contraction — the asymptote path is contraction + star loop.
     var levels = 0
-    if (ccLocalContract(s)) {
-      var stalled = false
-      while (!stalled && levels < MaxContractLevels) {
-        // UNKEYED round-robin repartition: localForest is partitioning-
-        // agnostic (any partition's forest preserves connectivity), and
-        // keying by an endpoint would funnel a hub node's entire edge
-        // list into one task — round-robin is what actually enforces
-        // the LoopEdgesPerPartition per-task memory bound the
-        // union-find's HashMap relies on
-        val next = localForest(
-            work.repartition(loopPartsFor(workCount, par)))
-          .distinct()
-          .truncated(true)
-        val nextCount = next.count()
-        if (budget >= 0 && nextCount <= budget) {
-          ccServed(s, "driver_contracted", levels + 1)
-          return driverUnionFind(s, next.collect())
-        }
-        // >= so the empty graph and the already-a-forest graph (next
-        // == work) both stall on their first level
-        stalled = nextCount >= workCount * ContractStallRatio
-        levels += 1
-        // a stalled level's forest still replaces the input (it is
-        // never larger and the work is already spent)
-        work = next
-        workCount = nextCount
+    var stalled = false
+    while (!stalled && levels < MaxContractLevels) {
+      // UNKEYED round-robin repartition: localForest is partitioning-
+      // agnostic (any partition's forest preserves connectivity), and
+      // keying by an endpoint would funnel a hub node's entire edge
+      // list into one task — round-robin is what actually enforces
+      // the LoopEdgesPerPartition per-task memory bound the
+      // union-find's HashMap relies on
+      val next = localForest(
+          work.repartition(loopPartsFor(workCount, par)))
+        .distinct()
+        .truncated(true)
+      val nextCount = next.count()
+      if (budget >= 0 && nextCount <= budget) {
+        ccServed(s, "driver_contracted", levels + 1)
+        return driverUnionFind(s, next.collect())
       }
+      // >= so the empty graph and the already-a-forest graph (next
+      // == work) both stall on their first level
+      stalled = nextCount >= workCount * ContractStallRatio
+      levels += 1
+      // a stalled level's forest still replaces the input (it is
+      // never larger and the work is already spent)
+      work = next
+      workCount = nextCount
     }
     val loopParts = loopPartsFor(workCount, par)
     var edges = work.repartition(loopParts, col("u"))
-      // EAGER only when the prelude did NOT run: sym and the probe each
-      // reference the edge set twice, and a lazy checkpoint lets both
-      // consumers race to compute partitions before the cache fills
-      // (measured +0.5s vs eager). When the prelude DID run, `work` is
-      // already an eager checkpoint of the final contraction level, so
-      // the second eager materialization here was pure redundancy (r17
-      // ADVICE): truncate lazily — the round-0 convergence probe fills
-      // the cache from one cheap shuffle read of checkpointed blocks.
-      .truncated(eager = levels == 0)
+      // lazy: `work` is already an eager checkpoint of the final
+      // contraction level, so a second eager materialization here is
+      // pure redundancy (r17 ADVICE) — the round-0 convergence probe
+      // fills the cache from one cheap shuffle read of checkpointed
+      // blocks.
+      .truncated(eager = false)
     // star forest ⟺ fixpoint (see scaladoc): no root also hangs as a
     // child, AND every child hangs on exactly one root. The second
     // conjunct is part of the star-forest definition, not an

@@ -895,33 +895,31 @@ object Dedup {
           .write.mode("append").parquet(s"$target/docs")
       } finally { delta.unpersist(); () }
     }
-    if (graft.core.ArtifactStore.dataFileCount(s"$live/bands") > SigCompactFiles)
-      compactSigIndex(s, d, onlyIfFragmented = true)
+    if (sigFragmented(live)) compactSigIndex(s, d, onlyIfFragmented = true)
     else live
   }
 
-  /** Rewrite the bands back to one sorted file run per bucket and
-    * reclaim superseded versions past the reader-retention window
-    * ([[graft.core.ArtifactStore.rewriteOrKeep]]).
+  private def sigFragmented(live: String): Boolean =
+    graft.core.ArtifactStore.dataFileCount(s"$live/bands") > SigCompactFiles
+
+  /** Rewrite the bands back to one sorted file run per bucket
+    * ([[graft.core.ArtifactStore.compact]]: under the lock, and with
+    * `onlyIfFragmented` only while the live version is still
+    * fragmented).
     */
   def compactSigIndex(s: SparkSession, d: String,
       onlyIfFragmented: Boolean = false): String = synchronized {
-    val adir = graft.core.ArtifactStore.artifactDir("minhash_bands", d, SigTag)
-    graft.core.ArtifactStore.rewriteOrKeep(adir) { cur =>
-      val live = cur.getOrElse(
-        throw new IllegalStateException(s"nothing to compact: minhash_bands for $d"))
-      if (onlyIfFragmented &&
-          graft.core.ArtifactStore.dataFileCount(s"$live/bands") <= SigCompactFiles) None
-      else Some { target =>
-        s.read.schema(sigBandsSchema).parquet(s"$live/bands").repartition(col("bucket"))
-          .sortWithinPartitions("bucket", "band", "bh")
-          .write.partitionBy("bucket").mode("overwrite").parquet(s"$target/bands")
-        writeCapped(cappedBandsOf(
-          s.read.schema(sigBandsSchema).parquet(s"$target/bands")), target)
-        s.read.schema(sigDocsSchema).parquet(s"$live/docs").distinct()
-          .coalesce(1).sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(s"$target/docs")
-      }
+    graft.core.ArtifactStore.compact(
+        graft.core.ArtifactStore.artifactDir("minhash_bands", d, SigTag),
+        onlyIfFragmented)(sigFragmented) { (live, target) =>
+      s.read.schema(sigBandsSchema).parquet(s"$live/bands").repartition(col("bucket"))
+        .sortWithinPartitions("bucket", "band", "bh")
+        .write.partitionBy("bucket").mode("overwrite").parquet(s"$target/bands")
+      writeCapped(cappedBandsOf(
+        s.read.schema(sigBandsSchema).parquet(s"$target/bands")), target)
+      s.read.schema(sigDocsSchema).parquet(s"$live/docs").distinct()
+        .coalesce(1).sortWithinPartitions("doc_id")
+        .write.mode("overwrite").parquet(s"$target/docs")
     }
   }
 

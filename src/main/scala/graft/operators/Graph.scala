@@ -1098,41 +1098,36 @@ object Graph {
           }
         }
       }
-    else if (graft.core.ArtifactStore.dataFileCount(out) > k.compactAt(s, out))
-      compactGraph(k, s, d, onlyIfFragmented = true)
+    else if (graphFragmented(k, s)(out)) compactGraph(k, s, d, onlyIfFragmented = true)
     else out
   }
 
+  private def graphFragmented(k: GraphKind, s: SparkSession)(live: String): Boolean =
+    graft.core.ArtifactStore.dataFileCount(live) > k.compactAt(s, live)
+
   /** Rewrite a graph's tables back to one sorted run per directory
-    * partition and reclaim superseded versions past the reader-retention
-    * window (a [[graft.core.ArtifactStore.rewriteOrKeep]]). With
-    * `onlyIfFragmented` (the auto-compact path) the live file count is
-    * re-checked under the lock, so a concurrent loser keeps the version.
-    * Compaction serves IDENTICAL content: generation, crossed-bucket
-    * counter and build lineage carry through unchanged, so gen-keyed
-    * consumers (the stats artifact) don't rebuild.
+    * partition ([[graft.core.ArtifactStore.compact]]: under the lock,
+    * and with `onlyIfFragmented` only while the live version is still
+    * fragmented, so a concurrent loser keeps the version). Compaction
+    * serves IDENTICAL content: generation, crossed-bucket counter and
+    * build lineage carry through unchanged, so gen-keyed consumers (the
+    * stats artifact) don't rebuild.
     */
   private def compactGraph(k: GraphKind, s: SparkSession, d: String,
       onlyIfFragmented: Boolean): String = {
-    val adir = graft.core.ArtifactStore.artifactDir(k.name, d, k.tag)
     val pk = k.prefix
-    graft.core.ArtifactStore.rewriteOrKeep(adir) { cur =>
-      val live = cur.getOrElse(
-        throw new IllegalStateException(s"nothing to compact: ${k.name} for $d"))
-      if (onlyIfFragmented &&
-          graft.core.ArtifactStore.dataFileCount(live) <= k.compactAt(s, live)) None
-      else Some { target =>
-        writeRouting(s.read.parquet(s"$live/buckets"), pk, s"$target/buckets",
-          SaveMode.Overwrite)
-        writeSizes(s.read.parquet(s"$live/bsizes"), pk, s"$target/bsizes")
-        writeEdges(s.read.parquet(s"$live/edges"), pk, s"$target/edges")
-        if (k.hasPairs)
-          s.read.parquet(s"$live/pairs").repartition(s.sparkContext.defaultParallelism)
-            .sortWithinPartitions(col("w").desc, col("id_a").asc)
-            .write.mode("overwrite").parquet(s"$target/pairs")
-        writeContentMeta(target, graphGen(live), graphCrossedBuckets(live),
-          graphBuildId(live))
-      }
+    graft.core.ArtifactStore.compact(graft.core.ArtifactStore.artifactDir(k.name, d, k.tag),
+        onlyIfFragmented)(graphFragmented(k, s)) { (live, target) =>
+      writeRouting(s.read.parquet(s"$live/buckets"), pk, s"$target/buckets",
+        SaveMode.Overwrite)
+      writeSizes(s.read.parquet(s"$live/bsizes"), pk, s"$target/bsizes")
+      writeEdges(s.read.parquet(s"$live/edges"), pk, s"$target/edges")
+      if (k.hasPairs)
+        s.read.parquet(s"$live/pairs").repartition(s.sparkContext.defaultParallelism)
+          .sortWithinPartitions(col("w").desc, col("id_a").asc)
+          .write.mode("overwrite").parquet(s"$target/pairs")
+      writeContentMeta(target, graphGen(live), graphCrossedBuckets(live),
+        graphBuildId(live))
     }
   }
 
@@ -2108,17 +2103,12 @@ object Graph {
     * files on an object store) that walk would dominate the cheap
     * serve bands the memo exists to protect. The TTL's only effect
     * is that a corpus rewrite takes up to the TTL to be seen by MODE
-    * selection — results always come from the live tables. The TTL
-    * is a session conf (`graft.ann.stampTtlSec`, default 10) so a
-    * deployment whose corpus rewrites must surface faster — or whose
-    * file-metadata walks are expensive enough to warrant a longer
-    * memo — tunes it without a rebuild; ingest paths that mutate the
-    * corpus in-process bypass the TTL entirely via
-    * [[invalidateCorpusStamp]] (called by the graph append/rebuild
+    * selection — results always come from the live tables. Ingest
+    * paths that mutate the corpus in-process bypass the TTL entirely
+    * via [[invalidateCorpusStamp]] (called by the graph append/rebuild
     * lifecycle, whose callers hand over the grown corpus).
     */
-  private def stampTtlNanos(s: SparkSession): Long =
-    1000L * 1000 * 1000 * s.conf.get("graft.ann.stampTtlSec", "10").toLong
+  private[graft] val StampTtlNanos: Long = 10L * 1000 * 1000 * 1000
   private val stampCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
@@ -2131,10 +2121,10 @@ object Graph {
     */
   def invalidateCorpusStamp(d: String): Unit = { stampCache.remove(d); () }
 
-  private[graft] def corpusStamp(s: SparkSession, d: String): String = {
+  private[graft] def corpusStamp(d: String): String = {
     val now = System.nanoTime()
     Option(stampCache.get(d)) match {
-      case Some((st, at)) if now - at < stampTtlNanos(s) => st
+      case Some((st, at)) if now - at < StampTtlNanos => st
       case _ =>
         val md = java.security.MessageDigest.getInstance("MD5")
         def fold(f: java.io.File): Unit =
@@ -2185,7 +2175,7 @@ object Graph {
     // census memoized per (corpus version, predicate, stratum): the
     // cold call pays one column-pruned aggregate; every repeat serve
     // of the same predicate reads three longs
-    val key = (d, pred.toString, stratum.fold("")(_.toString), corpusStamp(s, d))
+    val key = (d, pred.toString, stratum.fold("")(_.toString), corpusStamp(d))
     val (n, elig, eligSt) = Option(eligCensusMemo.get(key)).getOrElse {
       val stratumHit = stratum.fold(lit(false))(st =>
         col(StratumCol) === st)

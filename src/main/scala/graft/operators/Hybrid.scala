@@ -233,30 +233,25 @@ object Hybrid {
     }
     // the threshold probe runs outside the maintenance lock; the
     // compaction re-checks the live count under its own
-    if (graft.core.ArtifactStore.dataFileCount(s"$live/postings") > LexCompactFiles)
-      compactLexIndex(s, d, onlyIfFragmented = true)
+    if (lexFragmented(live)) compactLexIndex(s, d, onlyIfFragmented = true)
     else live
   }
 
+  private def lexFragmented(live: String): Boolean =
+    graft.core.ArtifactStore.dataFileCount(s"$live/postings") > LexCompactFiles
+
   /** Rewrite the postings back to one term-sorted file run per bucket
-    * and reclaim superseded versions past the reader-retention window
-    * ([[graft.core.ArtifactStore.rewriteOrKeep]]). With
-    * `onlyIfFragmented` (the auto-compact path) the live file count is
-    * RE-CHECKED under the lock and the compaction keeps the version if
-    * a concurrent process already collapsed it.
+    * ([[graft.core.ArtifactStore.compact]]: under the lock, and with
+    * `onlyIfFragmented` only while the live version is still
+    * fragmented).
     */
   def compactLexIndex(s: SparkSession, d: String,
       onlyIfFragmented: Boolean = false): String = synchronized {
-    val adir = graft.core.ArtifactStore.artifactDir("lex_postings", d, LexTag)
-    graft.core.ArtifactStore.rewriteOrKeep(adir) { cur =>
-      val live = cur.getOrElse(
-        throw new IllegalStateException(s"nothing to compact: lex_postings for $d"))
-      if (onlyIfFragmented &&
-          graft.core.ArtifactStore.dataFileCount(s"$live/postings") <= LexCompactFiles) None
-      else Some { target =>
-        writePostings(s.read.parquet(s"$live/postings"), s"$target/postings", "overwrite")
-        s.read.parquet(s"$live/meta").coalesce(1).write.mode("overwrite").parquet(s"$target/meta")
-      }
+    graft.core.ArtifactStore.compact(
+        graft.core.ArtifactStore.artifactDir("lex_postings", d, LexTag),
+        onlyIfFragmented)(lexFragmented) { (live, target) =>
+      writePostings(s.read.parquet(s"$live/postings"), s"$target/postings", "overwrite")
+      s.read.parquet(s"$live/meta").coalesce(1).write.mode("overwrite").parquet(s"$target/meta")
     }
   }
 

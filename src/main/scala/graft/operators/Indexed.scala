@@ -90,43 +90,77 @@ object Indexed {
     */
   val BuildTasks = 8
 
-  private val learnedCentroids =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Float]]]
+  /** One stored artifact of this module: its warehouse name and layout
+    * tag. Every path — serving's, the specs' and the oracle's — is
+    * resolved from here.
+    */
+  private[graft] sealed abstract class Stored(val name: String, val tag: String) {
+    def dir(d: String): String = ArtifactStore.artifactDir(name, d, tag)
 
-  private def resolve(name: String, d: String, tag: String): String = {
-    val a = ArtifactStore.artifactDir(name, d, tag)
-    ArtifactStore.current(a).getOrElse(a)
+    /** The live version dir (the bare artifact dir while unbuilt). */
+    def path(d: String): String = ArtifactStore.current(dir(d)).getOrElse(dir(d))
+
+    /** Oracle-side path resolution: the dumped SQL reads the LIVE
+      * version for [[graft.core.OracleDataset]] — the dataset Verify was
+      * invoked on, set once at process start. A pure function of that
+      * dataset: no per-artifact mutable path state to cross-wire when
+      * several datasets are ensured in one JVM.
+      *
+      * When no live version exists at dump time — an `ensure*` build
+      * failed earlier in the run, or a subset run never built this
+      * artifact — the emitted path carries an explicit
+      * `__MISSING_ARTIFACT__` marker: the affected query's oracle fails
+      * loudly AT THAT QUERY with the artifact name in the error, while
+      * the dump itself (and every other query's compare) completes.
+      * Throwing here instead would kill the whole oracle_sql.json for
+      * one bad artifact — one failed build must cost one query's
+      * compare, not the round's correctness signal. The version-less
+      * bare dir is never emitted (it could glob stale files under an
+      * old layout).
+      */
+    def oPath: String = {
+      val a = ArtifactStore.artifactDir(name, OracleDataset.dir, tag)
+      ArtifactStore.current(a).getOrElse(
+        s"$a/__MISSING_ARTIFACT__-$name-unbuilt-for-${OracleDataset.dir}")
+    }
   }
 
-  /** The live version dir serving (and the oracle) read the learned
-    * centroids from — the one piece of shared state between the engines
-    * (the whole point: same stored centroids on both sides).
+  /** A learned structure: trained once per dataset by `learn`, published
+    * as the one-file table `rows` makes, and read back by `load` when a
+    * previous process already published it — so serving literals and
+    * delta encodes come from the STORED values, never a retrain that
+    * could drift from what the oracle reads. Training stays outside the
+    * compared computation. One memo per structure, per JVM.
     */
-  def centroidPath(d: String): String = resolve("v10_centroids", d, CentTag)
+  private[graft] final class Learned[T](name: String, tag: String)(
+      learn: (SparkSession, String) => T,
+      rows: (SparkSession, T) => DataFrame,
+      load: DataFrame => T) extends Stored(name, tag) {
+    private val memo = scala.collection.concurrent.TrieMap.empty[String, T]
 
-  /** Oracle-side path resolution: the dumped SQL reads the LIVE version
-    * of each artifact for [[graft.core.OracleDataset]] — the dataset
-    * Verify was invoked on, set once at process start. A pure function
-    * of that dataset: no per-artifact mutable path state to cross-wire
-    * when several datasets are ensured in one JVM.
-    *
-    * When no live version exists at dump time — an `ensure*` build
-    * failed earlier in the run, or a subset run never built this
-    * artifact — the emitted path carries an explicit
-    * `__MISSING_ARTIFACT__` marker: the affected query's oracle fails
-    * loudly AT THAT QUERY with the artifact name in the error, while
-    * the dump itself (and every other query's compare) completes.
-    * Throwing here instead would kill the whole oracle_sql.json for
-    * one bad artifact — one failed build must cost one query's
-    * compare, not the round's correctness signal. The version-less
-    * bare dir is never emitted (it could glob stale files under an
-    * old layout).
-    */
-  private def oPath(name: String, tag: String): String = {
-    val a = ArtifactStore.artifactDir(name, OracleDataset.dir, tag)
-    ArtifactStore.current(a).getOrElse(
-      s"$a/__MISSING_ARTIFACT__-$name-unbuilt-for-${OracleDataset.dir}")
+    def apply(s: SparkSession, d: String): T = Indexed.synchronized {
+      memo.getOrElseUpdate(dir(d), ArtifactStore.current(dir(d)) match {
+        case Some(cur) => load(s.read.parquet(cur))
+        case None =>
+          val v = learn(s, d)
+          ArtifactStore.publish(dir(d))(rows(s, v).coalesce(1).write.parquet(_))
+          v
+      })
+    }
   }
+
+  /** A stored code table: its layout key (the shuffle key of every
+    * write — `cluster` for probe-pruned tables, `vec_id` hash
+    * otherwise), its per-file sort, and its ONE encode of (vec_id,
+    * embedding) rows with the FROZEN learned structures — the kernel
+    * the bulk build and every delta append share. `encode(s, d)` loads
+    * the structures (learning them on first use) and returns the
+    * row encode.
+    */
+  private[graft] final class CodeTable(name: String, tag: String,
+      val layoutKey: String, val sortCols: Seq[String],
+      val encode: (SparkSession, String) => DataFrame => DataFrame)
+      extends Stored(name, tag)
 
   /** Build the pivot-distance index for an sf dir once (durable across
     * processes; the testdata is immutable and the layout tag isolates
@@ -141,65 +175,49 @@ object Indexed {
     }
   }
 
-  /** Learn centroids once and materialize them (cid + array<float>
-    * centroid). Returned in cid order for literal-based serving. If a
-    * previous process already published the artifact, serving literals
-    * (and delta encodes) come from the STORED floats — never a retrain
-    * that could drift from what the oracle reads.
+  /** The learned coarse centroids, (cid, centroid) rows; returned in
+    * cid order for literal-based serving — the one piece of shared
+    * state between the engines (same stored centroids on both sides).
     */
-  def ensureCentroids(s: SparkSession, d: String): Seq[Seq[Float]] = synchronized {
-    val adir = ArtifactStore.artifactDir("v10_centroids", d, CentTag)
-    learnedCentroids.getOrElseUpdate(adir, {
-      ArtifactStore.current(adir) match {
-        case Some(cur) =>
-          s.read.parquet(cur).orderBy("cid").collect()
-            .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toIndexedSeq)
-            .toIndexedSeq
-        case None =>
-          val centers = Pivots.learnKMeans(embeddings(s, d), "embedding", CentroidK)
-          ArtifactStore.publish(adir) { target =>
-            import s.implicits._
-            centers.zipWithIndex.map { case (c, i) => (i, c) }
-              .toDF("cid", "centroid")
-              .coalesce(1).write.parquet(target)
-          }
-          centers
-      }
-    })
-  }
+  private[graft] val Centroids = new Learned[Seq[Seq[Float]]]("v10_centroids", CentTag)(
+    (s, d) => Pivots.learnKMeans(embeddings(s, d), "embedding", CentroidK),
+    (s, cents) => {
+      import s.implicits._
+      cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "centroid")
+    },
+    _.orderBy("cid").collect()
+      .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toIndexedSeq).toIndexedSeq)
+
+  def ensureCentroids(s: SparkSession, d: String): Seq[Seq[Float]] = Centroids(s, d)
 
   // --------------------------------------- v10: stored cluster assignment
 
-  /** The live version dir of the `(vec_id, cluster)` assignment table. */
-  def assignPath(d: String): String = resolve("v10_assign", d, AssignTag)
-
-  /** Materialize the `(vec_id, cluster)` assignment table once
-    * (durable, cross-process) — the index column the reference persists at write time
-    * (`/root/reference/src/database.ts:195-198`). The per-row argmin over
-    * the stored centroids runs ONCE here, at build; serving (and the
-    * oracle) read the stored integers. Sorted by (cluster, vec_id) so a
-    * probe filter prunes row groups via parquet min/max stats.
+  /** Coarse-assignment expression against the FROZEN centroids (ties
+    * break to the lowest cid).
     */
-  /** Coarse-assignment expression against the FROZEN centroids — the
-    * one encode kernel shared by the bulk build and the delta append
-    * (ties break to the lowest cid on both paths by construction).
-    */
-  private[graft] def assignExpr(cents: Seq[Seq[Float]]): org.apache.spark.sql.Column = {
+  private def assignExpr(cents: Seq[Seq[Float]]): org.apache.spark.sql.Column = {
     val centLits = cents.map(c => typedlit(c))
     val distArr = array(centLits.map(c => euclidean(col("embedding"), c)): _*)
     (array_position(distArr, array_min(distArr)) - 1).cast("int")
   }
 
-  def ensureAssignments(s: SparkSession, d: String): String = synchronized {
-    val cents = ensureCentroids(s, d)
-    ArtifactStore.ensure(ArtifactStore.artifactDir("v10_assign", d, AssignTag)) { target =>
-      embeddings(s, d)
-        .select(col("vec_id"), assignExpr(cents).as("cluster"))
-        .repartition(BuildTasks, col("cluster"))
-        .sortWithinPartitions("cluster", "vec_id")
-        .write.parquet(target)
-    }
-  }
+  /** The `(vec_id, cluster)` assignment table — the index column the
+    * reference persists at write time (`src/database.ts:195-198`).
+    * The per-row argmin over the stored centroids runs once per row at
+    * build or append; serving (and the oracle) read the stored integers.
+    * Sorted by (cluster, vec_id) so a probe filter prunes row groups via
+    * parquet min/max stats.
+    */
+  private[graft] val Assign = new CodeTable("v10_assign", AssignTag,
+    "cluster", Seq("cluster", "vec_id"), (s, d) => {
+      val cluster = assignExpr(Centroids(s, d)).as("cluster")
+      _.select(col("vec_id"), cluster)
+    })
+
+  def ensureAssignments(s: SparkSession, d: String): String = ensureCodes(s, d, Assign)
+
+  /** The live version dir of the `(vec_id, cluster)` assignment table. */
+  def assignPath(d: String): String = Assign.path(d)
 
   // ------------------------------------------------- v12: PQ codebooks
 
@@ -224,91 +242,206 @@ object Indexed {
 
   private val PqCbTag = s"l1m${PqM}k$PqK"
 
-  private val learnedCodebooks =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Seq[Float]]]]
-
-  /** The live version dir of the (m, code, centroid) codebook table. */
-  def pqPath(d: String): String = resolve("v12_codebook", d, PqCbTag)
-
-  /** Load a stored (m, code, centroid) codebook back into the nested
-    * per-subspace shape (shared by the raw-vector and residual books).
+  /** Learn [[PqM]] sub-codebooks of [[PqK]] centroids over column `c`
+    * of `vecs`, subspace m seeded `seed + m` (the raw-vector and the
+    * residual books).
     */
-  private def loadCodebook(s: SparkSession, cur: String): Seq[Seq[Seq[Float]]] = {
-    val rows = s.read.parquet(cur).orderBy("m", "code").collect()
+  private def learnCodebook(s: SparkSession, d: String, vecs: DataFrame, c: String,
+      seed: Long): Seq[Seq[Seq[Float]]] = {
+    val dims = embeddings(s, d).select(size(col("embedding"))).head().getInt(0)
+    require(dims % PqM == 0, s"embedding dim $dims not divisible into $PqM subspaces")
+    val sub = dims / PqM
+    (0 until PqM).map { m =>
+      Pivots.learnKMeans(vecs.select(slice(col(c), m * sub + 1, sub).as("sub")),
+        "sub", PqK, seed = seed + m)
+    }
+  }
+
+  /** A codebook as stored: (m, code, centroid) rows. */
+  private def codebookRows(s: SparkSession, cb: Seq[Seq[Seq[Float]]]): DataFrame = {
+    import s.implicits._
+    cb.zipWithIndex.flatMap { case (cents, m) =>
+      cents.zipWithIndex.map { case (c, code) => (m, code, c) }
+    }.toDF("m", "code", "centroid")
+  }
+
+  private def loadCodebook(df: DataFrame): Seq[Seq[Seq[Float]]] = {
+    val rows = df.orderBy("m", "code").collect()
       .map(r => (r.getInt(r.fieldIndex("m")),
         r.getSeq[Float](r.fieldIndex("centroid")).toIndexedSeq))
     (0 until PqM).map(m => rows.filter(_._1 == m).map(_._2).toIndexedSeq)
   }
 
-  private def writeCodebook(s: SparkSession, cb: Seq[Seq[Seq[Float]]],
-      target: String): Unit = {
-    import s.implicits._
-    cb.zipWithIndex.flatMap { case (cents, m) =>
-      cents.zipWithIndex.map { case (c, code) => (m, code, c) }
-    }.toDF("m", "code", "centroid")
-      .coalesce(1).write.parquet(target)
+  /** The PqM sub-codebooks over the raw vectors. */
+  private[graft] val PqBook = new Learned[Seq[Seq[Seq[Float]]]]("v12_codebook", PqCbTag)(
+    (s, d) => learnCodebook(s, d, embeddings(s, d), "embedding", 42L),
+    codebookRows, loadCodebook)
+
+  /** Per-subspace argmin codes of column `in` against a FROZEN
+    * codebook, named `<prefix>0..<prefix>M-1`.
+    */
+  private def subCodeCols(cb: Seq[Seq[Seq[Float]]], in: String,
+      prefix: String): Seq[org.apache.spark.sql.Column] = {
+    val subDim = cb.head.head.size
+    (0 until PqM).map { m =>
+      val sub = slice(col(in), m * subDim + 1, subDim)
+      val dists = array(cb(m).map(c => euclidean(sub, typedlit(c))): _*)
+      (array_position(dists, array_min(dists)) - 1).cast("int").as(s"$prefix$m")
+    }
   }
 
-  /** Learn the PqM sub-codebooks once and materialize them as
-    * (m, code, centroid) rows — the oracle reads the same stored
-    * floats, so KMeans training stays outside the compared computation
-    * (the v10 discipline). A previously published artifact is loaded,
-    * not retrained.
+  /** The `(vec_id, code0..codeM-1)` PQ codes table: the per-subspace
+    * argmin (the expensive encode) runs once per row; serving scans
+    * [[PqM]] small integers per row and the oracle reads the same stored
+    * codes — at 100 TB this table is ~64× smaller than the raw
+    * embeddings and the ADC scan touches no float vector at all.
     */
-  def ensureCodebook(s: SparkSession, d: String): Seq[Seq[Seq[Float]]] = synchronized {
-    val adir = ArtifactStore.artifactDir("v12_codebook", d, PqCbTag)
-    learnedCodebooks.getOrElseUpdate(adir, {
-      ArtifactStore.current(adir) match {
-        case Some(cur) => loadCodebook(s, cur)
-        case None =>
-          val e = embeddings(s, d)
-          val dims = e.select(size(col("embedding"))).head().getInt(0)
-          require(dims % PqM == 0, s"embedding dim $dims not divisible into $PqM subspaces")
-          val sub = dims / PqM
-          val cb = (0 until PqM).map { m =>
-            Pivots.learnKMeans(
-              e.select(slice(col("embedding"), m * sub + 1, sub).as("sub")),
-              "sub", PqK, seed = 42L + m)
-          }
-          ArtifactStore.publish(adir)(writeCodebook(s, cb, _))
-          cb
-      }
+  private[graft] val PqCodes = new CodeTable("v12_codes", PqCbTag,
+    "vec_id", Seq("vec_id"), (s, d) => {
+      val codes = subCodeCols(PqBook(s, d), "embedding", "code")
+      _.select(col("vec_id") +: codes: _*)
+    })
+
+  // ------------------------------------- v18: residual (IVFADC) codebooks
+
+  /** The per-row residual against the stored coarse centroids —
+    * `x − centroid(cluster(x))`, the quantity IVFADC quantizes
+    * (Jégou et al. TPAMI'11 §IV-B: encoding residuals instead of raw
+    * vectors concentrates the distribution each sub-codebook must
+    * cover, which is what keeps PQ distortion low as nlist grows).
+    * Float subtraction: the residual is BUILD-side state, consumed
+    * only by training and the one-time encode — both engines read the
+    * stored integer codes, so its float convention never crosses the
+    * oracle boundary.
+    */
+  private def residual(cents: Seq[Seq[Float]]): org.apache.spark.sql.Column =
+    zip_with(col("embedding"), element_at(typedlit(cents), col("cluster") + 1),
+      (x, c) => x - c)
+
+  /** The residual codebook's training rows: the corpus joined to its
+    * stored assignments.
+    */
+  private def residDf(s: SparkSession, d: String): DataFrame = {
+    val cents = Centroids(s, d)
+    val assign = ensureAssignments(s, d)
+    embeddings(s, d).join(s.read.parquet(assign), "vec_id")
+      .withColumn("resid", residual(cents))
+  }
+
+  private val RCbTag = s"l1m${PqM}k${PqK}r"
+
+  /** The residual sub-codebooks, seeded apart from the raw-vector v12
+    * books.
+    */
+  private[graft] val ResidBook = new Learned[Seq[Seq[Seq[Float]]]]("v18_rcodebook", RCbTag)(
+    (s, d) => learnCodebook(s, d, residDf(s, d), "resid", 142L),
+    codebookRows, loadCodebook)
+
+  /** The `(vec_id, cluster, rcode0..3)` residual-codes table: each row
+    * coarse-assigned with the frozen centroids and residual-encoded
+    * with the frozen residual codebook. Cluster rides along so the
+    * probe filter prunes THIS scan directly (sorted by (cluster,
+    * vec_id) for row-group stats), and serving never joins the
+    * assignment table.
+    */
+  private[graft] val ResidCodes = new CodeTable("v18_rcodes", RCbTag,
+    "cluster", Seq("cluster", "vec_id"), (s, d) => {
+      val cents = Centroids(s, d)
+      val codes = subCodeCols(ResidBook(s, d), "resid", "rcode")
+      _.withColumn("cluster", assignExpr(cents))
+        .withColumn("resid", residual(cents))
+        .select(col("vec_id") +: col("cluster") +: codes: _*)
+    })
+
+  // ------------------------------------------------- v13: SQ8 bounds
+
+  /** Scalar-quantization geometry (the SQ8 sibling of v12's PQ): each
+    * dimension is affinely mapped to an 8-bit code via the corpus
+    * per-dimension [min, max], so a vector becomes `dims` bytes — 4×
+    * smaller than float32 — and the approximate distance is an INTEGER
+    * sum of squared code deltas (exact on both engines; the float→code
+    * mapping is the only float step, and both engines floor the same
+    * stored-bounds doubles). Top [[PqTopN]] by integer distance pay the
+    * exact re-rank. At 100 TB the scan reads byte codes and does
+    * integer arithmetic only.
+    */
+  private val Sq8Tag = "l1b256"
+
+  /** Corpus per-dimension bounds as (dim, mn, mx) rows — FROZEN
+    * between retrains; deltas clamp.
+    */
+  private[graft] val Sq8Bounds = new Learned[(Seq[Double], Seq[Double])]("v13_sq8", Sq8Tag)(
+    (s, d) => {
+      val rows = embeddings(s, d)
+        .select(posexplode(col("embedding")).as(Seq("dim", "x")))
+        .groupBy("dim").agg(min("x").as("mn"), max("x").as("mx"))
+        .orderBy("dim").collect()
+      (rows.map(_.getFloat(1).toDouble).toIndexedSeq,
+        rows.map(_.getFloat(2).toDouble).toIndexedSeq)
+    },
+    (s, b) => {
+      import s.implicits._
+      val (mn, mx) = b
+      mn.indices.map(i => (i, mn(i), mx(i))).toDF("dim", "mn", "mx")
+    },
+    df => {
+      val rows = df.orderBy("dim").collect()
+      (rows.map(_.getDouble(1)).toIndexedSeq, rows.map(_.getDouble(2)).toIndexedSeq)
+    })
+
+  /** SQ8 encode expression against the FROZEN per-dimension bounds.
+    * Out-of-range delta values clamp to 0/255 (bounds do not move
+    * between retrains, the same contract as the frozen codebook).
+    */
+  private def sq8CodeExpr(mn: Seq[Double], mx: Seq[Double]): org.apache.spark.sql.Column = {
+    val mnLit = typedlit(mn)
+    val mxLit = typedlit(mx)
+    transform(col("embedding"), (x, i) => {
+      val mnI = element_at(mnLit, i + 1)
+      val mxI = element_at(mxLit, i + 1)
+      when(mxI === mnI, lit(0)).otherwise(
+        least(greatest(floor((x.cast("double") - mnI) * 255.0 / (mxI - mnI)),
+          lit(0.0)), lit(255.0)).cast("int"))
     })
   }
 
-  /** The live version dir of the `(vec_id, code0..3)` PQ codes table. */
-  def pqCodesPath(d: String): String = resolve("v12_codes", d, PqCbTag)
-
-  /** Materialize the `(vec_id, code0..codeM-1)` PQ codes table once per
-    * JVM per sf dir. The per-subspace argmin (the expensive encode) runs
-    * ONCE here; serving scans [[PqM]] small integers per row and the
-    * oracle reads the same stored codes — at 100 TB this table is ~64×
-    * smaller than the raw embeddings and the ADC scan touches no float
-    * vector at all.
+  /** The `(vec_id, codes array<int>)` SQ8 table: each vector quantized
+    * against the stored bounds once. Serving and the oracle both read
+    * the stored byte-range codes — the scan is pure integer arithmetic
+    * over a table 4× smaller than the float corpus (the reference's
+    * persisted-index-field discipline, `src/database.ts:195-198`).
     */
-  /** Per-subspace PQ encode expressions against the FROZEN codebook —
-    * shared by the bulk build and the delta append.
-    */
-  private[graft] def pqCodeCols(cb: Seq[Seq[Seq[Float]]]): Seq[org.apache.spark.sql.Column] = {
-    val subDim = cb.head.head.size
-    (0 until PqM).map { m =>
-      val sub = slice(col("embedding"), m * subDim + 1, subDim)
-      val dists = array(cb(m).map(c => euclidean(sub, typedlit(c))): _*)
-      (array_position(dists, array_min(dists)) - 1).cast("int").as(s"code$m")
-    }
-  }
+  private[graft] val Sq8Codes = new CodeTable("v13_codes", Sq8Tag,
+    "vec_id", Seq("vec_id"), (s, d) => {
+      val (mn, mx) = Sq8Bounds(s, d)
+      val codes = sq8CodeExpr(mn, mx).as("codes")
+      _.select(col("vec_id"), codes)
+    })
 
-  def ensurePqCodes(s: SparkSession, d: String): String = synchronized {
-    val cb = ensureCodebook(s, d)
-    ArtifactStore.ensure(ArtifactStore.artifactDir("v12_codes", d, PqCbTag)) { target =>
-      embeddings(s, d)
-        .select(col("vec_id") +: pqCodeCols(cb): _*)
-        .repartition(BuildTasks, col("vec_id")).sortWithinPartitions("vec_id")
-        .write.parquet(target)
-    }
-  }
+  /** Every stored code table, in the order maintenance and the v20
+    * audit visit them.
+    */
+  private[graft] val CodeTables: Seq[CodeTable] = Seq(Assign, PqCodes, Sq8Codes, ResidCodes)
 
   // ------------------------------------- incremental index maintenance
+
+  /** The bulk layout every write of `t` uses: [[BuildTasks]] writers
+    * shuffled on its layout key, each sorted on its sort columns.
+    */
+  private def writeLayout(df: DataFrame, t: CodeTable, mode: String)(target: String): Unit =
+    df.repartition(BuildTasks, col(t.layoutKey))
+      .sortWithinPartitions(t.sortCols.map(col): _*)
+      .write.mode(mode).parquet(target)
+
+  /** Materialize a code table once (durable, cross-process): the
+    * table's encode over the whole corpus, in its bulk layout.
+    */
+  private[graft] def ensureCodes(s: SparkSession, d: String, t: CodeTable): String = synchronized {
+    val encode = t.encode(s, d)
+    ArtifactStore.ensure(t.dir(d)) { target =>
+      writeLayout(encode(embeddings(s, d)), t, "error")(target)
+    }
+  }
 
   /** Incremental refresh of the stored ANN tables: encode ONLY a delta
     * of new vectors with the FROZEN learned structures (centroids /
@@ -323,100 +456,61 @@ object Indexed {
     * (`/root/reference/src/database.ts:195-198`); this is the batched
     * analogue. `IndexRefreshSpec` proves append ≡ all-at-once build.
     *
-    * Each delta batch encodes through the SAME layout-key shuffle as
-    * the bulk build (`cluster` for probe-pruned tables, `vec_id` hash
-    * otherwise, [[BuildTasks]] sorted writers — a bulk backfill routed
-    * through `append*` parallelizes exactly like a rebuild), and the
-    * append itself is a locked PUBLISH: [[graft.core.ArtifactStore.append]]
-    * carries the live files forward (hard links, metadata-only) into a
-    * fresh version beside the delta files and flips the pointer, so a
-    * reader never sees a half-committed batch and concurrent
-    * maintenance from another process serializes through the store's
-    * file lock. When the append history fragments the table past
-    * [[CompactFileThreshold]] data files, the matching `compact*` runs
-    * automatically — continuous ingest keeps row-group pruning sharp
-    * without a manual maintenance job (the reference's analogue runs
-    * its pipeline automatically on the change feed,
-    * `/root/reference/src/rx-pipeline.js`-style; here the policy is a
-    * file-count threshold checked on the ingest path itself).
+    * Each delta batch runs the build's own encode and layout (a bulk
+    * backfill routed through an append parallelizes exactly like a
+    * rebuild), and the append itself is a locked PUBLISH:
+    * [[graft.core.ArtifactStore.append]] carries the live files forward
+    * (hard links, metadata-only) into a fresh version beside the delta
+    * files and flips the pointer, so a reader never sees a
+    * half-committed batch and concurrent maintenance from another
+    * process serializes through the store's file lock. When the append
+    * history fragments the table past [[CompactFileThreshold]] data
+    * files, [[compactCodes]] runs automatically — continuous ingest
+    * keeps row-group pruning sharp without a manual maintenance job
+    * (the reference's analogue runs its pipeline automatically on the
+    * change feed, `src/rx-pipeline.js`-style; here the
+    * policy is a file-count threshold checked on the ingest path
+    * itself).
     */
   val CompactFileThreshold: Int = 4 * BuildTasks
 
-  private def appendDelta(s: SparkSession, name: String, d: String, tag: String,
-      partCol: String, sortCols: Seq[String], encoded: DataFrame): String = {
-    val live = ArtifactStore.append(ArtifactStore.artifactDir(name, d, tag)) { (_, target) =>
-      writeLayout(encoded, partCol, sortCols, "append")(target)
+  private def fragmented(live: String): Boolean =
+    ArtifactStore.dataFileCount(live) > CompactFileThreshold
+
+  private[graft] def appendCodes(s: SparkSession, d: String, t: CodeTable,
+      delta: DataFrame): String = synchronized {
+    val encode = t.encode(s, d)
+    ensureCodes(s, d, t)
+    val live = ArtifactStore.append(t.dir(d)) { (_, target) =>
+      writeLayout(encode(delta), t, "append")(target)
     }
-    if (ArtifactStore.dataFileCount(live) > CompactFileThreshold)
-      compactTable(s, name, d, tag, partCol, sortCols, onlyIfFragmented = true)
-    else live
+    if (fragmented(live)) compactCodes(s, d, t, onlyIfFragmented = true) else live
   }
 
-  /** The bulk build's layout: [[BuildTasks]] writers shuffled on
-    * `partCol`, each sorted on `sortCols`.
+  def appendAssignments(s: SparkSession, d: String, delta: DataFrame): String =
+    appendCodes(s, d, Assign, delta)
+
+  /** Compaction: each delta append lands as one small sorted file per
+    * writer, so a long append history gradually inflates file counts
+    * and blunts the (cluster, vec_id) row-group pruning the bulk layout
+    * provides. This rewrites the LIVE version into the bulk layout and
+    * publishes it through [[graft.core.ArtifactStore.compact]] — the
+    * store's one compaction rule: concurrent readers of the old version
+    * are never disturbed, superseded versions past the reader-retention
+    * window are reclaimed (continuous ingest bounds STORAGE as well as
+    * file count), and with `onlyIfFragmented` (the auto-compact path)
+    * the file count is re-checked under the lock, so two appenders that
+    * both saw the threshold crossed rewrite once. At 100 TB this is the
+    * periodic maintenance job that keeps serve-many scans sharp under
+    * continuous ingest; `IndexRefreshSpec` proves row-set identity and
+    * file-count collapse for every table.
     */
-  private def writeLayout(df: DataFrame, partCol: String, sortCols: Seq[String],
-      mode: String)(target: String): Unit =
-    df.repartition(BuildTasks, col(partCol))
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(mode).parquet(target)
-
-  def appendAssignments(s: SparkSession, d: String, delta: DataFrame): String = synchronized {
-    val cents = ensureCentroids(s, d)
-    ensureAssignments(s, d)
-    appendDelta(s, "v10_assign", d, AssignTag, "cluster", Seq("cluster", "vec_id"),
-      delta.select(col("vec_id"), assignExpr(cents).as("cluster")))
-  }
-
-  /** PQ sibling of [[appendAssignments]]: delta rows encoded with the
-    * stored codebook, appended to the codes table.
-    */
-  def appendPqCodes(s: SparkSession, d: String, delta: DataFrame): String = synchronized {
-    val cb = ensureCodebook(s, d)
-    ensurePqCodes(s, d)
-    appendDelta(s, "v12_codes", d, PqCbTag, "vec_id", Seq("vec_id"),
-      delta.select(col("vec_id") +: pqCodeCols(cb): _*))
-  }
-
-  // --------------------------------------------------- index compaction
-
-  /** Compaction: each delta append lands as one small sorted file, so a
-    * long append history gradually inflates file counts and blunts the
-    * (cluster, vec_id) row-group pruning the bulk layout provides.
-    * `compact*` rewrites the LIVE version into the canonical bulk
-    * layout — same partitioning and sort as the original build — and
-    * publishes it as a NEW version through the store's atomic pointer
-    * flip, so concurrent readers of the old version are never disturbed
-    * (the [[graft.operators.Layout]] rewrite discipline applied to the
-    * artifact store). At 100 TB this is the periodic maintenance job
-    * that keeps serve-many scans sharp under continuous ingest;
-    * `CompactionSpec` proves content identity and file-count collapse.
-    * Compaction is also the natural vacuum point: as a
-    * [[graft.core.ArtifactStore.rewriteOrKeep]] it reclaims superseded
-    * versions past the reader-retention window, so continuous ingest
-    * bounds STORAGE as well as file count. With `onlyIfFragmented` (the
-    * auto-compact path) the file count is re-checked under the lock, so
-    * two appenders that both saw the threshold crossed rewrite once.
-    */
-  private def compactTable(s: SparkSession, name: String, d: String, tag: String,
-      partCol: String, sortCols: Seq[String],
-      onlyIfFragmented: Boolean = false): String = synchronized {
-    ArtifactStore.rewriteOrKeep(ArtifactStore.artifactDir(name, d, tag)) { cur =>
-      val live = cur.getOrElse(
-        throw new IllegalStateException(s"nothing to compact: $name for $d"))
-      if (onlyIfFragmented && ArtifactStore.dataFileCount(live) <= CompactFileThreshold) None
-      else Some(writeLayout(s.read.parquet(live), partCol, sortCols, "error"))
+  private[graft] def compactCodes(s: SparkSession, d: String, t: CodeTable,
+      onlyIfFragmented: Boolean): String = synchronized {
+    ArtifactStore.compact(t.dir(d), onlyIfFragmented)(fragmented) { (live, target) =>
+      writeLayout(s.read.parquet(live), t, "error")(target)
     }
   }
-
-  def compactAssignments(s: SparkSession, d: String): String =
-    compactTable(s, "v10_assign", d, AssignTag, "cluster", Seq("cluster", "vec_id"))
-  def compactPqCodes(s: SparkSession, d: String): String =
-    compactTable(s, "v12_codes", d, PqCbTag, "vec_id", Seq("vec_id"))
-  def compactSq8Codes(s: SparkSession, d: String): String =
-    compactTable(s, "v13_codes", d, Sq8Tag, "vec_id", Seq("vec_id"))
-  def compactResidCodes(s: SparkSession, d: String): String =
-    compactTable(s, "v18_rcodes", d, RCbTag, "cluster", Seq("cluster", "vec_id"))
 
   /** Deletion from the stored index tables — the index-side half of
     * the reference's remove-by-selector (`GraftDb.remove`; the
@@ -427,7 +521,7 @@ object Indexed {
     * their snapshot and the serve-many plans simply stop seeing the
     * rows. One anti-join per table on integer ids — a keyed shuffle at
     * 100 TB, floats untouched. Completes the maintenance lifecycle:
-    * append (ingest) / removeFromIndexes (delete) / compact* (layout) /
+    * append (ingest) / removeFromIndexes (delete) / compaction (layout) /
     * v20 (audit, whose orphan count this drives back to zero) / v19
     * (quality). Deletion is rewrite-based, not tombstone-based: the
     * simplicity is paid once per (batched) delete, and a deferred
@@ -451,221 +545,16 @@ object Indexed {
     */
   def removeFromIndexes(s: SparkSession, d: String, ids: DataFrame): String = synchronized {
     val del = ids.select("vec_id")
-    def rewrite(name: String, tag: String, cur: String, partCol: String,
-        sortCols: Seq[String]): Unit = {
-      // re-resolved under the lock: `cur` was read before acquisition
+    CodeTables.foreach { t =>
+      val built = ensureCodes(s, d, t)
+      // re-resolved under the lock: `built` was read before acquisition
       // and a concurrent append/compact may have published since
-      ArtifactStore.rewriteOrKeep(ArtifactStore.artifactDir(name, d, tag)) { live =>
-        Some(writeLayout(s.read.parquet(live.getOrElse(cur))
-          .join(del, Seq("vec_id"), "left_anti"), partCol, sortCols, "error"))
+      ArtifactStore.rewriteOrKeep(t.dir(d)) { live =>
+        Some(writeLayout(s.read.parquet(live.getOrElse(built))
+          .join(del, Seq("vec_id"), "left_anti"), t, "error"))
       }
-      ()
     }
-    rewrite("v10_assign", AssignTag, ensureAssignments(s, d), "cluster",
-      Seq("cluster", "vec_id"))
-    rewrite("v12_codes", PqCbTag, ensurePqCodes(s, d), "vec_id", Seq("vec_id"))
-    rewrite("v13_codes", Sq8Tag, ensureSq8Codes(s, d), "vec_id", Seq("vec_id"))
-    rewrite("v18_rcodes", RCbTag, ensureResidCodes(s, d), "cluster",
-      Seq("cluster", "vec_id"))
     assignPath(d)
-  }
-
-  // ------------------------------------- v18: residual (IVFADC) codebooks
-
-  /** The per-row residual against the stored coarse centroids —
-    * `x − centroid(cluster(x))`, the quantity IVFADC quantizes
-    * (Jégou et al. TPAMI'11 §IV-B: encoding residuals instead of raw
-    * vectors concentrates the distribution each sub-codebook must
-    * cover, which is what keeps PQ distortion low as nlist grows).
-    * Float subtraction: the residual is BUILD-side state, consumed
-    * only by training and the one-time encode — both engines read the
-    * stored integer codes, so its float convention never crosses the
-    * oracle boundary.
-    */
-  private def residDf(s: SparkSession, d: String): DataFrame = {
-    val cents = ensureCentroids(s, d)
-    val assign = ensureAssignments(s, d)
-    embeddings(s, d).join(s.read.parquet(assign), "vec_id")
-      .withColumn("resid", zip_with(col("embedding"),
-        element_at(typedlit(cents), col("cluster") + 1), (x, c) => x - c))
-  }
-
-  private val RCbTag = s"l1m${PqM}k${PqK}r"
-
-  private val learnedResidCodebooks =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Seq[Float]]]]
-
-  /** The live version dir of the residual (m, code, centroid) table. */
-  def residCbPath(d: String): String = resolve("v18_rcodebook", d, RCbTag)
-
-  /** Learn the residual sub-codebooks once (seeded apart from the
-    * raw-vector v12 books) and materialize them as (m, code, centroid)
-    * rows the oracle reads back; a previously published artifact is
-    * loaded, not retrained.
-    */
-  def ensureResidCodebook(s: SparkSession, d: String): Seq[Seq[Seq[Float]]] = synchronized {
-    val adir = ArtifactStore.artifactDir("v18_rcodebook", d, RCbTag)
-    learnedResidCodebooks.getOrElseUpdate(adir, {
-      ArtifactStore.current(adir) match {
-        case Some(cur) => loadCodebook(s, cur)
-        case None =>
-          val r = residDf(s, d)
-          val dims = embeddings(s, d).select(size(col("embedding"))).head().getInt(0)
-          require(dims % PqM == 0, s"embedding dim $dims not divisible into $PqM subspaces")
-          val sub = dims / PqM
-          val cb = (0 until PqM).map { m =>
-            Pivots.learnKMeans(
-              r.select(slice(col("resid"), m * sub + 1, sub).as("sub")),
-              "sub", PqK, seed = 142L + m)
-          }
-          ArtifactStore.publish(adir)(writeCodebook(s, cb, _))
-          cb
-      }
-    })
-  }
-
-  /** The live version dir of the `(vec_id, cluster, rcode0..3)` table. */
-  def residCodesPath(d: String): String = resolve("v18_rcodes", d, RCbTag)
-
-  /** Materialize the `(vec_id, cluster, rcode0..3)` residual-codes
-    * table once (durable, cross-process) — cluster rides along so the probe
-    * filter prunes THIS scan directly (sorted by (cluster, vec_id) for
-    * row-group stats), and serving never joins the assignment table.
-    */
-  /** Per-subspace residual-encode expressions against the FROZEN
-    * residual codebook — shared by the bulk build and the delta append.
-    */
-  private[graft] def residCodeCols(cb: Seq[Seq[Seq[Float]]]): Seq[org.apache.spark.sql.Column] = {
-    val subDim = cb.head.head.size
-    (0 until PqM).map { m =>
-      val sub = slice(col("resid"), m * subDim + 1, subDim)
-      val dists = array(cb(m).map(c => euclidean(sub, typedlit(c))): _*)
-      (array_position(dists, array_min(dists)) - 1).cast("int").as(s"rcode$m")
-    }
-  }
-
-  def ensureResidCodes(s: SparkSession, d: String): String = synchronized {
-    val cb = ensureResidCodebook(s, d)
-    ArtifactStore.ensure(ArtifactStore.artifactDir("v18_rcodes", d, RCbTag)) { target =>
-      residDf(s, d)
-        .select(col("vec_id") +: col("cluster") +: residCodeCols(cb): _*)
-        .repartition(BuildTasks, col("cluster"))
-        .sortWithinPartitions("cluster", "vec_id")
-        .write.parquet(target)
-    }
-  }
-
-  /** Residual sibling of [[appendAssignments]]: delta rows are coarse-
-    * assigned with the frozen centroids, residual-encoded with the
-    * frozen residual codebook, and appended to the cluster-carrying
-    * codes table.
-    */
-  def appendResidCodes(s: SparkSession, d: String, delta: DataFrame): String = synchronized {
-    val cents = ensureCentroids(s, d)
-    val rcb = ensureResidCodebook(s, d)
-    ensureResidCodes(s, d)
-    appendDelta(s, "v18_rcodes", d, RCbTag, "cluster", Seq("cluster", "vec_id"),
-      delta
-        .withColumn("cluster", assignExpr(cents))
-        .withColumn("resid", zip_with(col("embedding"),
-          element_at(typedlit(cents), col("cluster") + 1), (x, c) => x - c))
-        .select(col("vec_id") +: col("cluster") +: residCodeCols(rcb): _*))
-  }
-
-  // ------------------------------------------------- v13: SQ8 bounds
-
-  /** Scalar-quantization geometry (the SQ8 sibling of v12's PQ): each
-    * dimension is affinely mapped to an 8-bit code via the corpus
-    * per-dimension [min, max], so a vector becomes `dims` bytes — 4×
-    * smaller than float32 — and the approximate distance is an INTEGER
-    * sum of squared code deltas (exact on both engines; the float→code
-    * mapping is the only float step, and both engines floor the same
-    * stored-bounds doubles). Top [[PqTopN]] by integer distance pay the
-    * exact re-rank. At 100 TB the scan reads byte codes and does
-    * integer arithmetic only.
-    */
-  private val Sq8Tag = "l1b256"
-
-  private val learnedBounds =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[Double], Seq[Double])]
-
-  /** The live version dir of the (dim, mn, mx) bounds table. */
-  def sq8Path(d: String): String = resolve("v13_sq8", d, Sq8Tag)
-
-  /** Corpus per-dimension bounds, computed once and materialized as
-    * (dim, mn, mx) rows the oracle reads back — the stored-codebook
-    * discipline of v10/v12. A previously published artifact is loaded,
-    * not recomputed (bounds are FROZEN between retrains; deltas clamp).
-    */
-  def ensureSq8Bounds(s: SparkSession, d: String): (Seq[Double], Seq[Double]) = synchronized {
-    val adir = ArtifactStore.artifactDir("v13_sq8", d, Sq8Tag)
-    learnedBounds.getOrElseUpdate(adir, {
-      ArtifactStore.current(adir) match {
-        case Some(cur) =>
-          val rows = s.read.parquet(cur).orderBy("dim").collect()
-          (rows.map(_.getDouble(1)).toIndexedSeq, rows.map(_.getDouble(2)).toIndexedSeq)
-        case None =>
-          val rows = embeddings(s, d)
-            .select(posexplode(col("embedding")).as(Seq("dim", "x")))
-            .groupBy("dim").agg(min("x").as("mn"), max("x").as("mx"))
-            .orderBy("dim").collect()
-          val mn = rows.map(_.getFloat(1).toDouble).toIndexedSeq
-          val mx = rows.map(_.getFloat(2).toDouble).toIndexedSeq
-          ArtifactStore.publish(adir) { target =>
-            import s.implicits._
-            mn.indices.map(i => (i, mn(i), mx(i))).toDF("dim", "mn", "mx")
-              .coalesce(1).write.parquet(target)
-          }
-          (mn, mx)
-      }
-    })
-  }
-
-  /** The live version dir of the `(vec_id, codes)` SQ8 table. */
-  def sq8CodesPath(d: String): String = resolve("v13_codes", d, Sq8Tag)
-
-  /** Materialize the `(vec_id, codes array<int>)` SQ8 table once
-    * (durable, cross-process): each vector quantized against the stored
-    * bounds ONCE at build. Serving and the oracle both read the stored byte-range codes
-    * — the scan is pure integer arithmetic over a table 4× smaller than
-    * the float corpus (the reference's persisted-index-field discipline,
-    * `/root/reference/src/database.ts:195-198`).
-    */
-  /** SQ8 encode expression against the FROZEN per-dimension bounds —
-    * shared by the bulk build and the delta append. Out-of-range delta
-    * values clamp to 0/255 (bounds do not move between retrains, the
-    * same contract as the frozen codebook).
-    */
-  private[graft] def sq8CodeExpr(mn: Seq[Double], mx: Seq[Double]): org.apache.spark.sql.Column = {
-    val mnLit = typedlit(mn)
-    val mxLit = typedlit(mx)
-    transform(col("embedding"), (x, i) => {
-      val mnI = element_at(mnLit, i + 1)
-      val mxI = element_at(mxLit, i + 1)
-      when(mxI === mnI, lit(0)).otherwise(
-        least(greatest(floor((x.cast("double") - mnI) * 255.0 / (mxI - mnI)),
-          lit(0.0)), lit(255.0)).cast("int"))
-    })
-  }
-
-  def ensureSq8Codes(s: SparkSession, d: String): String = synchronized {
-    val (mn, mx) = ensureSq8Bounds(s, d)
-    ArtifactStore.ensure(ArtifactStore.artifactDir("v13_codes", d, Sq8Tag)) { target =>
-      embeddings(s, d)
-        .select(col("vec_id"), sq8CodeExpr(mn, mx).as("codes"))
-        .repartition(BuildTasks, col("vec_id")).sortWithinPartitions("vec_id")
-        .write.parquet(target)
-    }
-  }
-
-  /** SQ8 sibling of [[appendAssignments]]: delta rows quantized with
-    * the stored bounds, appended to the codes table.
-    */
-  def appendSq8Codes(s: SparkSession, d: String, delta: DataFrame): String = synchronized {
-    val (mn, mx) = ensureSq8Bounds(s, d)
-    ensureSq8Codes(s, d)
-    appendDelta(s, "v13_codes", d, Sq8Tag, "vec_id", Seq("vec_id"),
-      delta.select(col("vec_id"), sq8CodeExpr(mn, mx).as("codes")))
   }
 
   /** The shared quantizer: floor((x−mn)·255/(mx−mn)) clamped to
@@ -682,8 +571,8 @@ object Indexed {
     * join (broadcast of the candidate ids prunes the big side).
     */
   val v13Sq8: Relational.Q = (s, d) => {
-    val (mn, mx) = ensureSq8Bounds(s, d)
-    val codesPath = ensureSq8Codes(s, d)
+    val (mn, mx) = Sq8Bounds(s, d)
+    val codesPath = ensureCodes(s, d, Sq8Codes)
     val qv = embeddings(s, d).filter(col("vec_id") === Knn.QueryId)
       .select("embedding").head().getSeq[Float](0)
     val qCodes: Seq[Int] = qv.indices.map(i => sq8Code(qv(i).toDouble, mn(i), mx(i)))
@@ -771,7 +660,7 @@ object Indexed {
   }
 
   /** V12: ADC serve from the STORED `(vec_id, code0..3)` table
-    * ([[ensurePqCodes]]). The encode argmin ran once at build; at query
+    * ([[PqCodes]]). The encode argmin ran once at build; at query
     * time the scan reads PqM small integers per row and sums PqM lookup
     * terms from the query's precomputed distance table — no float-vector
     * arithmetic before the [[PqTopN]]-row exact re-rank join. The ADC
@@ -837,8 +726,8 @@ object Indexed {
     }.reduceLeft(_ + _))
 
   val v12PqAdc: Relational.Q = (s, d) => {
-    val cb = ensureCodebook(s, d)
-    val codesPath = ensurePqCodes(s, d)
+    val cb = PqBook(s, d)
+    val codesPath = ensureCodes(s, d, PqCodes)
     val qd2 = pqQueryTable(s, d, cb)
     val approx = adcApprox(qd2)
     val q = Knn.embeddingLit(s, d, Knn.QueryId)
@@ -862,7 +751,7 @@ object Indexed {
     * reads STORED integer tables only: the `(vec_id, cluster)`
     * assignment ([[ensureAssignments]]) filtered to the [[NProbe]]
     * probed clusters joins the `(vec_id, code0..3)` codes table
-    * ([[ensurePqCodes]]) by vec_id, ADC-scores the survivors, and only
+    * ([[PqCodes]]) by vec_id, ADC-scores the survivors, and only
     * the [[PqTopN]] best pay the exact float re-rank. At 100 TB the
     * probe filter prunes the assignment scan via row-group stats
     * (sorted by cluster at build), the codes join moves ~nprobe/nlist
@@ -875,8 +764,8 @@ object Indexed {
   val v14IvfPq: Relational.Q = (s, d) => {
     val cents = ensureCentroids(s, d)
     val assign = ensureAssignments(s, d)
-    val cb = ensureCodebook(s, d)
-    val codesPath = ensurePqCodes(s, d)
+    val cb = PqBook(s, d)
+    val codesPath = ensureCodes(s, d, PqCodes)
     val centLits = cents.map(c => typedlit(c))
     val qdC = queryDists(s, d, centLits)
     val probes = qdC.zipWithIndex.sortBy { case (dd, cid) => (dd, cid) }
@@ -920,8 +809,8 @@ object Indexed {
   val v16FilteredIvf: Relational.Q = (s, d) => {
     val cents = ensureCentroids(s, d)
     val assign = ensureAssignments(s, d)
-    val cb = ensureCodebook(s, d)
-    val codesPath = ensurePqCodes(s, d)
+    val cb = PqBook(s, d)
+    val codesPath = ensureCodes(s, d, PqCodes)
     val centLits = cents.map(c => typedlit(c))
     val qdC = queryDists(s, d, centLits)
     val probes = qdC.zipWithIndex.sortBy { case (dd, cid) => (dd, cid) }
@@ -968,21 +857,16 @@ object Indexed {
     */
   val v17BatchIvfPq: Relational.Q = (s, d) => {
     import s.implicits._
+    import org.apache.spark.sql.expressions.Window
     // ONE job fetches every query vector; probes and ADC tables are
     // then pure driver arithmetic (a per-query Spark job here cost the
     // batch ~2 s of scheduling at |Q|=5 — and would cost |Q|× that).
     // Quantified (r7 verdict): the driver work is |Q|·C·dims distance
     // terms + |Q|·M·K ADC entries — at |Q|=1e5, C=4096, dims=384
     // that's ~1.6e11 flops ≈ tens of seconds single-threaded, so the
-    // collect-and-compute shape holds through eval-set sizes; past
-    // [[BatchDriverMaxQ]] the registered query would dispatch to
-    // [[v17BatchIvfPqDistributed]], where probe selection runs as a
-    // queries ⋈ broadcast-structures job feeding the SAME serving plan.
-    require(BatchQids.size <= BatchDriverMaxQ,
-      s"driver-side probe selection capped at $BatchDriverMaxQ queries — " +
-        "use v17BatchIvfPqDistributed for larger batches")
+    // collect-and-compute shape holds through eval-set sizes.
     val cents = ensureCentroids(s, d)
-    val cb = ensureCodebook(s, d)
+    val cb = PqBook(s, d)
     val qVecs: Seq[(Long, Seq[Float])] = embeddings(s, d)
       .filter(col("vec_id").isin(BatchQids: _*))
       .select("vec_id", "embedding").collect()
@@ -992,100 +876,13 @@ object Indexed {
         .sortBy { case (dd, cid) => (dd, cid) }
         .take(NProbe).map { case (_, cid) => (qid, cid) }
     }
-    // query vectors held driver-side (the one collect above), like
-    // embeddingLit for the single-query family — keeps the float
-    // corpus scan count at 1
-    v17Serve(s, d,
-      qVecs.toDF("qid", "qe"),
-      probePairs.toDF("qid", "cluster"),
-      qVecs.map { case (qid, qv) => (qid, pqQueryTableOf(cb, qv)) }.toDF("qid", "qtab"),
-      probePairs.map(_._2).distinct)
-  }
-
-  /** Driver ceiling for batch probe selection: below it the probe/ADC
-    * tables are driver arithmetic (collect-and-compute, [[v17BatchIvfPq]]);
-    * above it they come from [[batchProbeTablesDistributed]]. The value
-    * sits under the quantified ~1.6e11-flop point where single-threaded
-    * table construction stops being negligible.
-    */
-  val BatchDriverMaxQ = 10000
-
-  /** Distributed probe selection + ADC-table construction for batches
-    * past the driver ceiling: the (qid, embedding) set STAYS a Dataset
-    * and each partition runs, against the broadcast frozen
-    * centroids/codebook, the very same scalar kernels the driver path
-    * runs ([[euclideanOf]] / [[pqQueryTableOf]] — double accumulation
-    * in index order, so the two paths are bit-identical and the probe
-    * sets/prune boundaries cannot differ). This is the queries ⋈
-    * broadcast-structures job: work is |Q|-parallel across executors,
-    * the driver never materializes a per-query row, and the output
-    * tables feed [[v17Serve]] unchanged.
-    */
-  private[graft] def batchProbeTablesDistributed(s: SparkSession,
-      queries: DataFrame, cents: Seq[Seq[Float]], cb: Seq[Seq[Seq[Float]]])
-      : (DataFrame, DataFrame) = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast((cents, cb))
-    val qds = queries.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
-    val probes = qds.mapPartitions { it =>
-      val cs = bc.value._1
-      it.flatMap { case (qid, qv) =>
-        cs.map(euclideanOf(qv, _)).zipWithIndex
-          .sortBy { case (dd, cid) => (dd, cid) }
-          .take(NProbe).map { case (_, cid) => (qid, cid) }
-      }
-    }.toDF("qid", "cluster")
-    val qtabs = qds.mapPartitions { it =>
-      val cbv = bc.value._2
-      it.map { case (qid, qv) => (qid, pqQueryTableOf(cbv, qv)) }
-    }.toDF("qid", "qtab")
-    (probes, qtabs)
-  }
-
-  /** [[v17BatchIvfPq]] for batches past [[BatchDriverMaxQ]]: identical
-    * serving plan, probe/ADC tables from the distributed job.
-    */
-  private[graft] def v17BatchIvfPqDistributed(s: SparkSession, d: String,
-      qids: Seq[Int]): DataFrame = {
-    val cents = ensureCentroids(s, d)
-    val cb = ensureCodebook(s, d)
-    // Cache the query set and both derived tables (slot-managed, like
-    // the dedup working sets): each is consumed more than once — the
-    // probes by the allProbes collect AND the serving broadcast, the
-    // queries by the probe job, the qtab job AND the re-rank broadcast.
-    // Without the persists every consumer re-runs the corpus scan +
-    // per-query kernels — four redundant scans in the very path that
-    // exists for |Q| large enough that one scan matters.
-    val queries = Dedup.cacheSlot("v17_batch_queries",
-      embeddings(s, d).filter(col("vec_id").isin(qids: _*))
-        .select("vec_id", "embedding"))
-    val (probes0, qtab0) = batchProbeTablesDistributed(s, queries, cents, cb)
-    val probesDf = Dedup.cacheSlot("v17_batch_probes", probes0)
-    val qtabDf = Dedup.cacheSlot("v17_batch_qtabs", qtab0)
-    // the pushed `cluster IN (∪ probes)` list: ≤ CentroidK integers by
-    // construction (distinct CLUSTERS, not per-query rows) — bounded by
-    // the index geometry, never by |Q|, so this collect stays tiny
-    val allProbes = probesDf.select("cluster").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    v17Serve(s, d,
-      queries.select(col("vec_id").as("qid"), col("embedding").as("qe")),
-      probesDf, qtabDf, allProbes)
-  }
-
-  /** The shared v17 serving plan — identical whichever front-end built
-    * the probe/ADC tables: pushed union-prune on the assignment scan,
-    * broadcast probe fan-out, ADC TopN window per query, broadcast
-    * float re-rank.
-    */
-  private def v17Serve(s: SparkSession, d: String, qs: DataFrame,
-      probesDf: DataFrame, qtabDf: DataFrame, allProbes: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    val qtabDf = qVecs.map { case (qid, qv) => (qid, pqQueryTableOf(cb, qv)) }
+      .toDF("qid", "qtab")
     val assign = ensureAssignments(s, d)
-    val codesPath = ensurePqCodes(s, d)
+    val codesPath = ensureCodes(s, d, PqCodes)
     val probed = s.read.parquet(assign)
-      .filter(col("cluster").isin(allProbes: _*)) // pushed: one union prune
-      .join(broadcast(probesDf), Seq("cluster"))  // fan out to probing queries
+      .filter(col("cluster").isin(probePairs.map(_._2).distinct: _*)) // pushed: one union prune
+      .join(broadcast(probePairs.toDF("qid", "cluster")), Seq("cluster")) // fan out to probing queries
     val scored = s.read.parquet(codesPath)
       .join(probed, "vec_id")
       .join(broadcast(qtabDf), "qid")
@@ -1097,10 +894,13 @@ object Indexed {
       .filter(col("rnA") <= PqTopN)
       .select("qid", "vec_id", "cluster", "approx")
     val wD = Window.partitionBy("qid").orderBy(col("dist").asc, col("vec_id").asc)
+    // query vectors held driver-side (the one collect above), like
+    // embeddingLit for the single-query family — keeps the float
+    // corpus scan count at 1
     embeddings(s, d)
       .select("vec_id", "embedding")
       .join(broadcast(cand), "vec_id")
-      .join(broadcast(qs), "qid")
+      .join(broadcast(qVecs.toDF("qid", "qe")), "qid")
       .withColumn("dist", euclidean(col("embedding"), col("qe")))
       .withColumn("rn", row_number().over(wD).cast("long"))
       .filter(col("rn") <= K)
@@ -1127,8 +927,8 @@ object Indexed {
   val v18IvfAdcResidual: Relational.Q = (s, d) => {
     import s.implicits._
     val cents = ensureCentroids(s, d)
-    val rcb = ensureResidCodebook(s, d)
-    val rcodesPath = ensureResidCodes(s, d)
+    val rcb = ResidBook(s, d)
+    val rcodesPath = ensureCodes(s, d, ResidCodes)
     val qv = embeddings(s, d).filter(col("vec_id") === Knn.QueryId)
       .select("embedding").head().getSeq[Float](0)
     val probes = cents.map(euclideanOf(qv, _)).zipWithIndex
@@ -1262,9 +1062,9 @@ object Indexed {
     }
 
     val assign = s.read.parquet(ensureAssignments(s, d))
-    val codes = s.read.parquet(ensurePqCodes(s, d))
-    val rcodes = s.read.parquet(ensureResidCodes(s, d))
-    val sq8 = s.read.parquet(ensureSq8Codes(s, d))
+    val codes = s.read.parquet(ensureCodes(s, d, PqCodes))
+    val rcodes = s.read.parquet(ensureCodes(s, d, ResidCodes))
+    val sq8 = s.read.parquet(ensureCodes(s, d, Sq8Codes))
     val allowed = embeddings(s, d)
       .filter(col("label").isin(FilterLabels: _*)).select("vec_id")
 
@@ -1284,13 +1084,14 @@ object Indexed {
         .select(lit(variant).as("variant"), col("code_reads"),
           docReads.cast("long").as("doc_reads"), col("recall10"))
 
-    val legs = Seq[(String, () => DataFrame)](
-      ("v10_ivf", () => row("v10_ivf", pc2, col("code_reads"), v10IvfKmeans(s, d), exact)),
-      ("v12_pq_adc", () => row("v12_pq_adc", reads(codes), topNCap, v12PqAdc(s, d), exact)),
-      ("v13_sq8", () => row("v13_sq8", reads(sq8), topNCap, v13Sq8(s, d), exact)),
-      ("v14_ivfpq", () => row("v14_ivfpq", pc2, topNCap, v14IvfPq(s, d), exact)),
-      ("v16_filtered", () => row("v16_filtered", pc4f, topNCap, v16FilteredIvf(s, d), exactF)),
-      ("v18_ivfadc", () => row("v18_ivfadc", pr2, topNCap, v18IvfAdcResidual(s, d), exact)),
+    // each leg's frame is built from its variant name on its own thread
+    val legs = Seq[(String, String => DataFrame)](
+      ("v10_ivf", row(_, pc2, col("code_reads"), v10IvfKmeans(s, d), exact)),
+      ("v12_pq_adc", row(_, reads(codes), topNCap, v12PqAdc(s, d), exact)),
+      ("v13_sq8", row(_, reads(sq8), topNCap, v13Sq8(s, d), exact)),
+      ("v14_ivfpq", row(_, pc2, topNCap, v14IvfPq(s, d), exact)),
+      ("v16_filtered", row(_, pc4f, topNCap, v16FilteredIvf(s, d), exactF)),
+      ("v18_ivfadc", row(_, pr2, topNCap, v18IvfAdcResidual(s, d), exact)),
     )
     // each leg frame is exactly one row: collect it under its own
     // span and hand the union a literal. The legs run on concurrent
@@ -1304,7 +1105,7 @@ object Indexed {
       legs.map { case (name, mk) =>
         pool.submit(new java.util.concurrent.Callable[DataFrame] {
           def call(): DataFrame = QueryProfile.span(s, name) {
-            val df = mk()
+            val df = mk(name)
             graft.core.Util.literalFrame(s, df.collect(), df.schema)
           }
         })
@@ -1326,7 +1127,7 @@ object Indexed {
     * integer ids — two keyed shuffles per table at 100 TB, no floats
     * touched — and `0 / 0` everywhere is the steady-state invariant a
     * scheduler alerts on. Complements [[v19RecallGrid]] (quality) and
-    * `compact*` (layout) as the third maintenance primitive.
+    * [[compactCodes]] (layout) as the third maintenance primitive.
     */
   val v20IndexCoverage: Relational.Q = (s, d) => {
     val corpus = embeddings(s, d).select("vec_id")
@@ -1340,12 +1141,8 @@ object Indexed {
         .select(lit(table).as("table"), col("n_rows"), col("n_missing"),
           col("n_orphan"))
     }
-    Seq(
-      cov("v10_assign", ensureAssignments(s, d)),
-      cov("v12_codes", ensurePqCodes(s, d)),
-      cov("v13_codes", ensureSq8Codes(s, d)),
-      cov("v18_rcodes", ensureResidCodes(s, d)),
-    ).reduce(_ union _).orderBy("table")
+    CodeTables.map(t => cov(t.name, ensureCodes(s, d, t)))
+      .reduce(_ union _).orderBy("table")
   }
 
   /** Probe widths for the v21 curve (1 → all cells: the last point is
@@ -1447,9 +1244,9 @@ object Indexed {
     * clean).
     */
   val v23QuantError: Relational.Q = (s, d) => {
-    val cb = ensureCodebook(s, d)
+    val cb = PqBook(s, d)
     val subDim = cb.head.head.size
-    val codes = s.read.parquet(ensurePqCodes(s, d))
+    val codes = s.read.parquet(ensureCodes(s, d, PqCodes))
     val errs = (0 until PqM).map { m =>
       val sub = slice(col("embedding"), m * subDim + 1, subDim)
       val cent = element_at(array(cb(m).map(c => typedlit(c)): _*), col(s"code$m") + 1)
@@ -1503,8 +1300,8 @@ object Indexed {
     val codeMatch = (0 until PqM)
       .map(m => s"(cb.m = $m AND cb.code = j.code$m)").mkString(" OR ")
     val codeCols = (0 until PqM).map(m => s"c.code$m").mkString(", ")
-    s"""WITH cb AS (SELECT m, code, centroid FROM read_parquet('${oPath("v12_codebook", PqCbTag)}/*.parquet')),
-       |codes AS (SELECT * FROM read_parquet('${oPath("v12_codes", PqCbTag)}/*.parquet')),
+    s"""WITH cb AS (SELECT m, code, centroid FROM read_parquet('${PqBook.oPath}/*.parquet')),
+       |codes AS (SELECT * FROM read_parquet('${PqCodes.oPath}/*.parquet')),
        |sd AS (SELECT len(centroid) AS sub FROM cb LIMIT 1),
        |j AS (
        |  SELECT e.vec_id, e.embedding, $codeCols
@@ -1531,7 +1328,7 @@ object Indexed {
   private def v22OracleSql: String =
     s"""WITH sz AS (
        |  SELECT cluster, count(*) AS sz
-       |  FROM read_parquet('${oPath("v10_assign", AssignTag)}/*.parquet')
+       |  FROM read_parquet('${Assign.oPath}/*.parquet')
        |  GROUP BY 1
        |),
        |tot AS (SELECT sum(sz) AS n_total FROM sz),
@@ -1578,14 +1375,14 @@ object Indexed {
        |    FROM dist_all) t
        |  WHERE rn <= $K
        |),
-       |cent AS (SELECT cid, centroid FROM read_parquet('${oPath("v10_centroids", CentTag)}/*.parquet')),
+       |cent AS (SELECT cid, centroid FROM read_parquet('${Centroids.oPath}/*.parquet')),
        |qc AS (
        |  SELECT cid, sqrt(sum((a-b)*(a-b))) AS qd
        |  FROM (SELECT cid, unnest(centroid)::DOUBLE AS a, unnest(q.qe)::DOUBLE AS b
        |        FROM cent CROSS JOIN q) z
        |  GROUP BY cid
        |),
-       |assign AS (SELECT vec_id, cluster FROM read_parquet('${oPath("v10_assign", AssignTag)}/*.parquet')),
+       |assign AS (SELECT vec_id, cluster FROM read_parquet('${Assign.oPath}/*.parquet')),
        |$blocks
        |SELECT * FROM (
        |$rows
@@ -1605,12 +1402,7 @@ object Indexed {
          |       (SELECT count(*) FROM read_parquet('$path/*.parquet') t
          |        WHERE NOT EXISTS (
          |          SELECT 1 FROM embeddings e WHERE e.vec_id = t.vec_id)) AS n_orphan""".stripMargin
-    Seq(
-      block("v10_assign", oPath("v10_assign", AssignTag)),
-      block("v12_codes", oPath("v12_codes", PqCbTag)),
-      block("v13_codes", oPath("v13_codes", Sq8Tag)),
-      block("v18_rcodes", oPath("v18_rcodes", RCbTag)),
-    ).mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) c ORDER BY \"table\"")
+    CodeTables.map(t => block(t.name, t.oPath)).mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) c ORDER BY \"table\"")
   }
 
   private def oracleSqlBase: Map[String, String] = Map(
@@ -1672,7 +1464,7 @@ object Indexed {
     // outside the compared computation.
     "q_v10_ivf_kmeans" ->
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${Knn.QueryId}),
-         |cent AS (SELECT cid, centroid FROM read_parquet('${oPath("v10_centroids", CentTag)}/*.parquet')),
+         |cent AS (SELECT cid, centroid FROM read_parquet('${Centroids.oPath}/*.parquet')),
          |qp AS (
          |  SELECT cid, sqrt(sum((a-b)*(a-b))) AS qd
          |  FROM (SELECT cid, unnest(centroid)::DOUBLE AS a, unnest(q.qe)::DOUBLE AS b
@@ -1680,7 +1472,7 @@ object Indexed {
          |  GROUP BY cid
          |),
          |assign AS (
-         |  SELECT vec_id, cluster FROM read_parquet('${oPath("v10_assign", AssignTag)}/*.parquet')
+         |  SELECT vec_id, cluster FROM read_parquet('${Assign.oPath}/*.parquet')
          |),
          |probes AS (
          |  SELECT cid FROM (
@@ -1713,9 +1505,9 @@ object Indexed {
         .mkString("\n  ")
       val adcSum = (0 until PqM).map(m => s"q$m.qd2").mkString(" + ")
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${Knn.QueryId}),
-         |cb AS (SELECT m, code, centroid FROM read_parquet('${oPath("v12_codebook", PqCbTag)}/*.parquet')),
+         |cb AS (SELECT m, code, centroid FROM read_parquet('${PqBook.oPath}/*.parquet')),
          |codes AS (
-         |  SELECT * FROM read_parquet('${oPath("v12_codes", PqCbTag)}/*.parquet')
+         |  SELECT * FROM read_parquet('${PqCodes.oPath}/*.parquet')
          |),
          |sd AS (SELECT len(centroid) AS sub FROM cb LIMIT 1),
          |qp AS (
@@ -1761,7 +1553,7 @@ object Indexed {
         .mkString("\n  ")
       val adcSum = (0 until PqM).map(m => s"q$m.qd2").mkString(" + ")
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${Knn.QueryId}),
-         |cent AS (SELECT cid, centroid FROM read_parquet('${oPath("v10_centroids", CentTag)}/*.parquet')),
+         |cent AS (SELECT cid, centroid FROM read_parquet('${Centroids.oPath}/*.parquet')),
          |qc AS (
          |  SELECT cid, sqrt(sum((a-b)*(a-b))) AS qd
          |  FROM (SELECT cid, unnest(centroid)::DOUBLE AS a, unnest(q.qe)::DOUBLE AS b
@@ -1774,14 +1566,14 @@ object Indexed {
          |  WHERE rn <= $NProbe
          |),
          |assign AS (
-         |  SELECT vec_id, cluster FROM read_parquet('${oPath("v10_assign", AssignTag)}/*.parquet')
+         |  SELECT vec_id, cluster FROM read_parquet('${Assign.oPath}/*.parquet')
          |),
          |probed AS (
          |  SELECT a.vec_id, a.cluster FROM assign a JOIN probes p ON a.cluster = p.cid
          |),
-         |cb AS (SELECT m, code, centroid FROM read_parquet('${oPath("v12_codebook", PqCbTag)}/*.parquet')),
+         |cb AS (SELECT m, code, centroid FROM read_parquet('${PqBook.oPath}/*.parquet')),
          |codes AS (
-         |  SELECT * FROM read_parquet('${oPath("v12_codes", PqCbTag)}/*.parquet')
+         |  SELECT * FROM read_parquet('${PqCodes.oPath}/*.parquet')
          |),
          |sd AS (SELECT len(centroid) AS sub FROM cb LIMIT 1),
          |qp AS (
@@ -1828,7 +1620,7 @@ object Indexed {
       val adcSum = (0 until PqM).map(m => s"q$m.qd2").mkString(" + ")
       s"""WITH qs AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
          |            WHERE vec_id IN (${BatchQids.mkString(",")})),
-         |cent AS (SELECT cid, centroid FROM read_parquet('${oPath("v10_centroids", CentTag)}/*.parquet')),
+         |cent AS (SELECT cid, centroid FROM read_parquet('${Centroids.oPath}/*.parquet')),
          |qc AS (
          |  SELECT qid, cid, sqrt(sum((a-b)*(a-b))) AS qd
          |  FROM (SELECT qs.qid, cid, unnest(centroid)::DOUBLE AS a,
@@ -1844,15 +1636,15 @@ object Indexed {
          |  WHERE rn <= $NProbe
          |),
          |assign AS (
-         |  SELECT vec_id, cluster FROM read_parquet('${oPath("v10_assign", AssignTag)}/*.parquet')
+         |  SELECT vec_id, cluster FROM read_parquet('${Assign.oPath}/*.parquet')
          |),
          |probed AS (
          |  SELECT p.qid, a.vec_id, a.cluster FROM assign a
          |  JOIN probes p ON a.cluster = p.cid
          |),
-         |cb AS (SELECT m, code, centroid FROM read_parquet('${oPath("v12_codebook", PqCbTag)}/*.parquet')),
+         |cb AS (SELECT m, code, centroid FROM read_parquet('${PqBook.oPath}/*.parquet')),
          |codes AS (
-         |  SELECT * FROM read_parquet('${oPath("v12_codes", PqCbTag)}/*.parquet')
+         |  SELECT * FROM read_parquet('${PqCodes.oPath}/*.parquet')
          |),
          |sd AS (SELECT len(centroid) AS sub FROM cb LIMIT 1),
          |qp AS (
@@ -1904,7 +1696,7 @@ object Indexed {
         .mkString("\n  ")
       val adcSum = (0 until PqM).map(m => s"q$m.qd2").mkString(" + ")
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${Knn.QueryId}),
-         |cent AS (SELECT cid, centroid FROM read_parquet('${oPath("v10_centroids", CentTag)}/*.parquet')),
+         |cent AS (SELECT cid, centroid FROM read_parquet('${Centroids.oPath}/*.parquet')),
          |qc AS (
          |  SELECT cid, sqrt(sum((a-b)*(a-b))) AS qd
          |  FROM (SELECT cid, unnest(centroid)::DOUBLE AS a, unnest(q.qe)::DOUBLE AS b
@@ -1916,9 +1708,9 @@ object Indexed {
          |    SELECT cid, row_number() OVER (ORDER BY qd ASC, cid ASC) AS rn FROM qc) t
          |  WHERE rn <= $NProbe
          |),
-         |cb AS (SELECT m, code, centroid FROM read_parquet('${oPath("v18_rcodebook", RCbTag)}/*.parquet')),
+         |cb AS (SELECT m, code, centroid FROM read_parquet('${ResidBook.oPath}/*.parquet')),
          |codes AS (
-         |  SELECT * FROM read_parquet('${oPath("v18_rcodes", RCbTag)}/*.parquet')
+         |  SELECT * FROM read_parquet('${ResidCodes.oPath}/*.parquet')
          |),
          |sd AS (SELECT len(centroid) AS sub FROM cb LIMIT 1),
          |qp AS (
@@ -1967,7 +1759,7 @@ object Indexed {
         .mkString("\n  ")
       val adcSum = (0 until PqM).map(m => s"q$m.qd2").mkString(" + ")
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${Knn.QueryId}),
-         |cent AS (SELECT cid, centroid FROM read_parquet('${oPath("v10_centroids", CentTag)}/*.parquet')),
+         |cent AS (SELECT cid, centroid FROM read_parquet('${Centroids.oPath}/*.parquet')),
          |qc AS (
          |  SELECT cid, sqrt(sum((a-b)*(a-b))) AS qd
          |  FROM (SELECT cid, unnest(centroid)::DOUBLE AS a, unnest(q.qe)::DOUBLE AS b
@@ -1980,7 +1772,7 @@ object Indexed {
          |  WHERE rn <= $FilteredNProbe
          |),
          |assign AS (
-         |  SELECT vec_id, cluster FROM read_parquet('${oPath("v10_assign", AssignTag)}/*.parquet')
+         |  SELECT vec_id, cluster FROM read_parquet('${Assign.oPath}/*.parquet')
          |),
          |probed AS (
          |  SELECT a.vec_id, a.cluster FROM assign a JOIN probes p ON a.cluster = p.cid
@@ -1989,9 +1781,9 @@ object Indexed {
          |  SELECT vec_id, label FROM embeddings
          |  WHERE label IN (${FilterLabels.mkString(",")})
          |),
-         |cb AS (SELECT m, code, centroid FROM read_parquet('${oPath("v12_codebook", PqCbTag)}/*.parquet')),
+         |cb AS (SELECT m, code, centroid FROM read_parquet('${PqBook.oPath}/*.parquet')),
          |codes AS (
-         |  SELECT * FROM read_parquet('${oPath("v12_codes", PqCbTag)}/*.parquet')
+         |  SELECT * FROM read_parquet('${PqCodes.oPath}/*.parquet')
          |),
          |sd AS (SELECT len(centroid) AS sub FROM cb LIMIT 1),
          |qp AS (
@@ -2034,7 +1826,7 @@ object Indexed {
     // list_cosine_similarity over ::DOUBLE[] matches the Catalyst
     // cosine kernel bit-for-bit (the proven d5 pattern)
     "q_d12_semdedup" ->
-      s"""WITH a AS (SELECT vec_id, cluster FROM read_parquet('${oPath("v10_assign", AssignTag)}/*.parquet')),
+      s"""WITH a AS (SELECT vec_id, cluster FROM read_parquet('${Assign.oPath}/*.parquet')),
          |e AS (SELECT vec_id, embedding::DOUBLE[] AS ed FROM embeddings),
          |v AS (SELECT e.vec_id, a.cluster, e.ed FROM e JOIN a USING (vec_id)),
          |p AS (
@@ -2054,11 +1846,11 @@ object Indexed {
     // arithmetic — exact on both engines.
     "q_v13_sq8" ->
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${Knn.QueryId}),
-         |b AS (SELECT dim, mn, mx FROM read_parquet('${oPath("v13_sq8", Sq8Tag)}/*.parquet')),
+         |b AS (SELECT dim, mn, mx FROM read_parquet('${Sq8Bounds.oPath}/*.parquet')),
          |enc AS (
          |  SELECT vec_id, unnest(codes) AS c,
          |         unnest(range(0, len(codes))) AS dim
-         |  FROM read_parquet('${oPath("v13_codes", Sq8Tag)}/*.parquet')
+         |  FROM read_parquet('${Sq8Codes.oPath}/*.parquet')
          |),
          |qv AS (
          |  SELECT unnest(qe)::DOUBLE AS x, unnest(range(0, len(qe))) AS dim FROM q
@@ -2127,7 +1919,7 @@ object Indexed {
        |    FROM dist_all d JOIN allowed al ON al.vec_id = d.vec_id) t
        |  WHERE rn <= $K
        |),
-       |cent AS (SELECT cid, centroid FROM read_parquet('${oPath("v10_centroids", CentTag)}/*.parquet')),
+       |cent AS (SELECT cid, centroid FROM read_parquet('${Centroids.oPath}/*.parquet')),
        |qc AS (
        |  SELECT cid, sqrt(sum((a-b)*(a-b))) AS qd
        |  FROM (SELECT cid, unnest(centroid)::DOUBLE AS a, unnest(q.qe)::DOUBLE AS b
@@ -2144,15 +1936,15 @@ object Indexed {
        |    SELECT cid, row_number() OVER (ORDER BY qd ASC, cid ASC) AS rn FROM qc) t
        |  WHERE rn <= $FilteredNProbe
        |),
-       |assign AS (SELECT vec_id, cluster FROM read_parquet('${oPath("v10_assign", AssignTag)}/*.parquet')),
+       |assign AS (SELECT vec_id, cluster FROM read_parquet('${Assign.oPath}/*.parquet')),
        |pc2 AS (SELECT count(*) AS n FROM assign a JOIN probes2 p ON a.cluster = p.cid),
        |pc4f AS (SELECT count(*) AS n FROM assign a JOIN probes4 p ON a.cluster = p.cid
        |         JOIN allowed al ON al.vec_id = a.vec_id),
        |pr2 AS (SELECT count(*) AS n
-       |        FROM read_parquet('${oPath("v18_rcodes", RCbTag)}/*.parquet') c
+       |        FROM read_parquet('${ResidCodes.oPath}/*.parquet') c
        |        JOIN probes2 p ON c.cluster = p.cid),
-       |nc AS (SELECT count(*) AS n FROM read_parquet('${oPath("v12_codes", PqCbTag)}/*.parquet')),
-       |ns AS (SELECT count(*) AS n FROM read_parquet('${oPath("v13_codes", Sq8Tag)}/*.parquet')),
+       |nc AS (SELECT count(*) AS n FROM read_parquet('${PqCodes.oPath}/*.parquet')),
+       |ns AS (SELECT count(*) AS n FROM read_parquet('${Sq8Codes.oPath}/*.parquet')),
        |v10r AS (SELECT vec_id FROM (
        |  ${sub("q_v10_ivf_kmeans")}) t),
        |v12r AS (SELECT vec_id FROM (

@@ -95,18 +95,24 @@ class ArtifactFailureSpec extends SparkSuite {
         full.filter(col("doc_id") >= 300), "doc_id",
         () => content(Dedup.ensureSigIndex(spark, oneShot)))
     },
-    "IVF assignments" -> { () =>
-      val d = tmpDir("fail-ivf")
+  ) ++ Indexed.CodeTables.map { t =>
+    // the assignment table's row keeps the name it had before the
+    // other three code tables joined it
+    val label = if (t eq Indexed.Assign) "IVF assignments" else s"${t.name} code table"
+    label -> { () =>
+      val d = tmpDir(s"fail-${t.name}")
       val full = spark.read.parquet(s"$sf0001/embeddings.parquet")
       full.filter(col("vec_id") < 400).write.parquet(s"$d/embeddings.parquet")
-      val cents = Indexed.ensureCentroids(spark, d)
-      Fixture(artifactOf(Indexed.ensureAssignments(spark, d)),
-        () => rows(spark.read.parquet(Indexed.assignPath(d))),
-        Indexed.appendAssignments(spark, d, _),
+      // the frozen structures, learned from the base corpus
+      val encode = t.encode(spark, d)
+      Fixture(artifactOf(Indexed.ensureCodes(spark, d, t)),
+        () => rows(spark.read.parquet(t.path(d))),
+        Indexed.appendCodes(spark, d, t, _),
         full.filter(col("vec_id") >= 400), "vec_id",
-        // the one-shot encode of the union with the frozen centroids
-        () => rows(full.select(col("vec_id"), Indexed.assignExpr(cents).as("cluster"))))
-    })
+        // the one-shot encode of the union with the frozen structures
+        () => rows(encode(full)))
+    }
+  }
 
   for ((kind, fixture) <- kinds)
     test(s"$kind: a delta that throws mid-write is invisible; the next good append equals a one-shot build") {

@@ -34,7 +34,7 @@ class CompactionSpec extends SparkSuite {
     val rowsBefore = spark.read.parquet(appended)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
 
-    val after = Indexed.compactAssignments(spark, base)
+    val after = Indexed.compactCodes(spark, base, Indexed.Assign, onlyIfFragmented = false)
     assert(after !== before, "compaction must publish a NEW version dir")
     // the vacuum keeps a reader-retention window: the version an
     // in-flight reader resolved just before the compact must survive it
@@ -75,10 +75,9 @@ class CompactionSpec extends SparkSuite {
 
     // the trigger must not lose rows: live table == frozen-structure
     // encode of everything appended, and serving still resolves
-    val cents = Indexed.ensureCentroids(spark, base)
     val got = spark.read.parquet(Indexed.assignPath(base))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val exp = full.select(col("vec_id"), Indexed.assignExpr(cents).as("cluster"))
+    val exp = Indexed.Assign.encode(spark, base)(full)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got === exp, "auto-compaction must preserve the appended row set")
     assert(parquetFiles(Indexed.assignPath(base)).size

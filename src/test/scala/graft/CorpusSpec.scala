@@ -134,9 +134,7 @@ class CorpusSpec extends SparkSuite {
     // — ≤ 8 partitions × 49 = 392 < the 400 budget BY CONSTRUCTION,
     // whatever the hash partitioning did — so the re-probe must admit
     // the driver solve (mode witness), and the labels must be the
-    // exact component minimum (all 0). Knob off: the same over-budget
-    // graph must take the star loop (levels witness 0) to the same
-    // answer.
+    // exact component minimum (all 0).
     val k50 = (for {
       a <- 0L until 50L; b <- (a + 1) until 50L
     } yield (a, b)).toDF("a", "b")
@@ -151,14 +149,6 @@ class CorpusSpec extends SparkSuite {
       assert(notes.get("cc_mode") === Some("driver_contracted"),
         "1225 edges over budget 400 must contract (≤392 forest edges) and re-admit")
       assert(notes.get("cc_contract_levels") === Some("1"))
-      spark.conf.set("graft.graph.ccLocalContract", "false")
-      try {
-        val (got2, notes2) = run()
-        assert(got2 === expect)
-        assert(notes2.get("cc_mode") === Some("distributed"),
-          "knob off: the star loop must serve")
-        assert(notes2.get("cc_contract_levels") === Some("0"))
-      } finally spark.conf.unset("graft.graph.ccLocalContract")
     } finally spark.conf.unset("graft.graph.driverEdgeBudget")
   }
 
@@ -239,41 +229,32 @@ class CorpusSpec extends SparkSuite {
 
   test("driver budget default derives from the real heap: a small driver declines, never OOM-collects") {
     // no explicit conf → budget = min(2M, maxMemory / 4KB-per-edge).
-    // Mock a 4 MB heap (budget 1024): K50's 1225 canonical edges must
+    // A 4 MB heap derives budget 1024: K50's 1225 canonical edges must
     // overflow the raw probe — the driver path is DECLINED and the
-    // contraction prelude / star loop serves instead (witnessed).
+    // contraction prelude serves instead (witnessed).
     assert(spark.conf.getOption("graft.graph.driverEdgeBudget").isEmpty,
       "suite assumes no lingering explicit budget")
+    assert(Corpus.defaultEdgeBudget(4L * 1024 * 1024) === 1024)
     val k50 = (for {
       a <- 0L until 50L; b <- (a + 1) until 50L
     } yield (a, b)).toDF("a", "b")
     val expect = (0L until 50L).map(_ -> 0L).toMap
-    val realHeap = Corpus.maxHeapBytes
-    Corpus.maxHeapBytes = () => 4L * 1024 * 1024
+    spark.conf.set("graft.graph.driverEdgeBudget", "1024")
     try {
-      assert(Corpus.driverEdgeBudget(spark) === 1024)
       val (got, notes) = withNotes(Corpus.connectedComponentsStar(k50, "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(got === expect)
       assert(notes.get("cc_mode") !== Some("driver"),
-        "1225 edges must overflow the heap-derived 1024 budget")
+        "1225 edges must overflow the 4 MB heap's 1024 budget")
       // contraction gets K50 under 1024, so the admitted form is the
       // budget-sized contracted forest, not the raw collect
       assert(notes.get("cc_mode") === Some("driver_contracted"))
-      // with the prelude off, the same graph runs fully distributed
-      spark.conf.set("graft.graph.ccLocalContract", "false")
-      try {
-        val (got2, notes2) = withNotes(Corpus.connectedComponentsStar(k50, "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-        assert(got2 === expect)
-        assert(notes2.get("cc_mode") === Some("distributed"))
-      } finally spark.conf.unset("graft.graph.ccLocalContract")
-      // an EXPLICIT conf is an operator override and wins verbatim,
-      // even over the heap derivation
-      spark.conf.set("graft.graph.driverEdgeBudget", "5000000")
-      try assert(Corpus.driverEdgeBudget(spark) === 5000000)
-      finally spark.conf.unset("graft.graph.driverEdgeBudget")
-    } finally Corpus.maxHeapBytes = realHeap
+    } finally spark.conf.unset("graft.graph.driverEdgeBudget")
+    // an EXPLICIT conf is an operator override and wins verbatim,
+    // even over the heap derivation
+    spark.conf.set("graft.graph.driverEdgeBudget", "5000000")
+    try assert(Corpus.driverEdgeBudget(spark) === 5000000)
+    finally spark.conf.unset("graft.graph.driverEdgeBudget")
     // the real test JVM (-Xmx8g, the driver convention) derives the
     // probed ceiling: positive, never above 2M
     val real = Corpus.driverEdgeBudget(spark)

@@ -444,7 +444,7 @@ class GraphIndexSpec extends SparkSuite {
     val isQ = col("vec_id") < Graph.GannBatchQ
     val pred = col(Graph.StratumCol) === Graph.StratumServeLabel
     val key = (d, pred.toString, Graph.StratumServeLabel.toString,
-      Graph.corpusStamp(spark, d))
+      Graph.corpusStamp(d))
     try {
       spark.conf.set("graft.ann.autoExactMaxRows", "8")
       Graph.eligCensusMemo.remove(key)
@@ -472,28 +472,21 @@ class GraphIndexSpec extends SparkSuite {
     Dedup.releaseSlots()
   }
 
-  test("corpus stamp: TTL caches within the window, session conf tunes it, invalidateCorpusStamp bypasses it") {
+  test("corpus stamp: TTL caches within the window, invalidateCorpusStamp bypasses it") {
     val d = tmpDir("gst")
     val fifty = graft.core.Tables.embeddings(spark, sf0001)
       .select("vec_id", "embedding").orderBy("vec_id").limit(50)
     fifty.write.parquet(s"$d/embeddings.parquet")
-    val st0 = Graph.corpusStamp(spark, d)
+    val st0 = Graph.corpusStamp(d)
     // mutate a part file's mtime the way an external rewrite would
     val part = Option(new java.io.File(s"$d/embeddings.parquet").listFiles())
       .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet")).head
     part.setLastModified(part.lastModified() + 60000)
-    assert(Graph.corpusStamp(spark, d) === st0,
+    assert(Graph.corpusStamp(d) === st0,
       "inside the TTL the cached stamp hides the rewrite (documented trade)")
     Graph.invalidateCorpusStamp(d)
-    val st1 = Graph.corpusStamp(spark, d)
-    assert(st1 !== st0,
+    assert(Graph.corpusStamp(d) !== st0,
       "explicit invalidation must surface the rewrite immediately")
-    try {
-      spark.conf.set("graft.ann.stampTtlSec", "0")
-      part.setLastModified(part.lastModified() + 60000)
-      assert(Graph.corpusStamp(spark, d) !== st1,
-        "a zero TTL (session conf) must re-stamp on every call")
-    } finally spark.conf.unset("graft.ann.stampTtlSec")
   }
 
   test("graph_stats is version-stamped: an append invalidates and the rebuilt tables match live computation") {

@@ -445,19 +445,18 @@ class GraphSpec extends SparkSuite {
         (a, b)
       }.distinct.toDF("a", "b")
       var ref: Option[Map[Long, Long]] = None
-      // budget -1 forces the distributed loops; the contract axis
-      // drives the star path both with the local-contraction prelude
-      // (cross-partition forest merge) and as the raw star loop
-      for (budget <- Seq("1000000", "-1"); contract <- Seq("true", "false")) {
+      // budget -1 forces the distributed loops; the star path then runs
+      // the local-contraction prelude (cross-partition forest merge)
+      // before its star loop
+      for (budget <- Seq("1000000", "-1")) {
         spark.conf.set("graft.graph.driverEdgeBudget", budget)
-        spark.conf.set("graft.graph.ccLocalContract", contract)
         try {
           val lp = got(graft.operators.Corpus.connectedComponents(pairs, "a", "b"))
           val (st, notes) = withNotes(
             got(graft.operators.Corpus.connectedComponentsStar(pairs, "a", "b")))
           assert(lp === st,
-            s"trial $trial: label-prop ≠ star at budget $budget contract $contract")
-          if (budget == "-1" && contract == "true")
+            s"trial $trial: label-prop ≠ star at budget $budget")
+          if (budget == "-1")
             assert(notes.get("cc_contract_levels").exists(_.toInt >= 1),
               s"trial $trial: forced-distributed star must have contracted")
           ref match {
@@ -465,17 +464,14 @@ class GraphSpec extends SparkSuite {
             case Some(r) => assert(lp === r,
               s"trial $trial: assignment changed across serve paths")
           }
-        } finally {
-          spark.conf.unset("graft.graph.driverEdgeBudget")
-          spark.conf.unset("graft.graph.ccLocalContract")
-        }
+        } finally spark.conf.unset("graft.graph.driverEdgeBudget")
       }
     }
     // d7-shaped axis (r18): random CHAIN-spined graphs whose diameter
     // exceeds MaxCcIters — the boilerplate-family crawl pathology that
     // got q_d7 re-routed onto the star path. The star loop must solve
-    // them forced-distributed (with and without the contraction
-    // prelude) to the exact in-budget union-find answer, while the
+    // them forced-distributed (after the contraction prelude) to the
+    // exact in-budget union-find answer, while the
     // min-label fixpoint — kept only as the spec-side reference —
     // provably CANNOT: past the budget it must fail loudly at the cap.
     for (trial <- 1 to 3) {
@@ -494,16 +490,12 @@ class GraphSpec extends SparkSuite {
       assert(want.values.forall(_ == 0L), s"chain trial $trial: one component")
       spark.conf.set("graft.graph.driverEdgeBudget", "-1")
       try {
-        for (contract <- Seq("true", "false")) {
-          spark.conf.set("graft.graph.ccLocalContract", contract)
-          try {
-            val (st, notes) = withNotes(
-              got(graft.operators.Corpus.connectedComponentsStar(pairs, "a", "b")))
-            assert(st === want,
-              s"chain trial $trial: star ≠ reference at contract $contract")
-            assert(notes.get("cc_mode") === Some("distributed"))
-          } finally spark.conf.unset("graft.graph.ccLocalContract")
-        }
+        val (st, notes) = withNotes(
+          got(graft.operators.Corpus.connectedComponentsStar(pairs, "a", "b")))
+        assert(st === want, s"chain trial $trial: star ≠ reference")
+        assert(notes.get("cc_mode") === Some("distributed"))
+        assert(notes.get("cc_contract_levels").exists(_.toInt >= 1),
+          s"chain trial $trial: forced-distributed star must have contracted")
         val e = intercept[IllegalArgumentException] {
           graft.operators.Corpus.connectedComponents(pairs, "a", "b")
         }

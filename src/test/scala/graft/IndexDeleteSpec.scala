@@ -17,9 +17,7 @@ class IndexDeleteSpec extends SparkSuite {
 
     // build all four stored tables
     val assignBefore = Indexed.ensureAssignments(spark, base)
-    Indexed.ensurePqCodes(spark, base)
-    Indexed.ensureSq8Codes(spark, base)
-    Indexed.ensureResidCodes(spark, base)
+    Indexed.CodeTables.foreach(Indexed.ensureCodes(spark, base, _))
     val n = full.count()
 
     val victims = full.filter(col("vec_id") % 7 === 0).select("vec_id")
@@ -32,25 +30,21 @@ class IndexDeleteSpec extends SparkSuite {
       "pre-delete snapshot must survive for in-flight readers")
 
     // every table lost exactly the victim ids
-    for (path <- Seq(Indexed.assignPath(base), Indexed.pqCodesPath(base),
-        Indexed.sq8CodesPath(base), Indexed.residCodesPath(base))) {
-      val t = spark.read.parquet(path)
-      assert(t.count() === n - nVictims, s"$path wrong row count after delete")
-      assert(t.join(victims, "vec_id").count() === 0, s"$path retains deleted ids")
+    for (t <- Indexed.CodeTables) {
+      val rows = spark.read.parquet(t.path(base))
+      assert(rows.count() === n - nVictims, s"${t.name} wrong row count after delete")
+      assert(rows.join(victims, "vec_id").count() === 0, s"${t.name} retains deleted ids")
     }
 
     // re-appending the deleted vectors (frozen-structure encode)
     // restores the exact bulk-build content on every table
     val deltas = full.join(victims, "vec_id")
-    Indexed.appendAssignments(spark, base, deltas)
-    Indexed.appendPqCodes(spark, base, deltas)
-    Indexed.appendSq8Codes(spark, base, deltas)
-    Indexed.appendResidCodes(spark, base, deltas)
-    val cents = Indexed.ensureCentroids(spark, base)
-    val gotAssign = spark.read.parquet(Indexed.assignPath(base))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val expAssign = full.select(col("vec_id"), Indexed.assignExpr(cents).as("cluster"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(gotAssign === expAssign)
+    for (t <- Indexed.CodeTables) {
+      Indexed.appendCodes(spark, base, t, deltas)
+      val want = t.encode(spark, base)(full)
+      val got = spark.read.parquet(t.path(base)).select(want.columns.map(col): _*)
+      assert(got.collect().map(_.toSeq).toSet === want.collect().map(_.toSeq).toSet,
+        s"${t.name}: re-append ≠ bulk build")
+    }
   }
 }

@@ -125,7 +125,7 @@ class IndexedSearchSpec extends SparkSuite {
     // independent formulation reading the WRITTEN centroid parquet (also
     // proves the stored file is what serving actually used)
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val cent = spark.read.parquet(Indexed.centroidPath(sf0001))
+    val cent = spark.read.parquet(Indexed.Centroids.path(sf0001))
     assert(cent.count() === Indexed.CentroidK)
     val qv = emb.filter(col("vec_id") === Knn.QueryId)
       .select("embedding").head().getSeq[Float](0)
@@ -188,7 +188,7 @@ class IndexedSearchSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
     assert(got.size === Indexed.K)
     // the stored codebook is what serving used
-    val cb = spark.read.parquet(Indexed.pqPath(sf0001))
+    val cb = spark.read.parquet(Indexed.PqBook.path(sf0001))
     assert(cb.count() === Indexed.PqM * Indexed.PqK)
     // the query vector itself survives the ADC prune and re-ranks first
     assert(got.head._1 === Knn.QueryId && got.head._3 === 0.0)
@@ -270,7 +270,7 @@ class IndexedSearchSpec extends SparkSuite {
     // the stored bounds table is what serving used, one row per dim
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val dims = emb.select(size(col("embedding"))).head().getInt(0)
-    assert(spark.read.parquet(Indexed.sq8Path(sf0001)).count() === dims)
+    assert(spark.read.parquet(Indexed.Sq8Bounds.path(sf0001)).count() === dims)
     // the query vector codes to itself: approx2 = 0, exact dist = 0
     assert(got.head === ((Knn.QueryId, 0L, 0.0)))
     // 8-bit quantization error is tiny relative to neighbor gaps — the

@@ -22,10 +22,9 @@ class StreamingIndexRefreshSpec extends SparkSuite {
     val base = tmpDir("stream-idx")
     val full = spark.read.parquet(s"$sf0001/embeddings.parquet")
     full.filter(col("vec_id") < 400).write.parquet(s"$base/embeddings.parquet")
-    val cb = Indexed.ensureCodebook(spark, base)
-    Indexed.ensurePqCodes(spark, base)
+    Indexed.ensureCodes(spark, base, Indexed.PqCodes)
     // appends publish new versions: always read the LIVE codes table
-    def codesPath: String = Indexed.pqCodesPath(base)
+    def codesPath: String = Indexed.PqCodes.path(base)
 
     // the delta arrives as a JSON directory (the pipeline source shape)
     val srcDir = tmpDir("stream-idx-src")
@@ -44,7 +43,7 @@ class StreamingIndexRefreshSpec extends SparkSuite {
           val novel = batch.join(
             spark.read.parquet(codesPath).select("vec_id"),
             Seq("vec_id"), "left_anti")
-          Indexed.appendPqCodes(spark, base, novel)
+          Indexed.appendCodes(spark, base, Indexed.PqCodes, novel)
           ()
         }
         .option("checkpointLocation", checkpoint)
@@ -54,8 +53,7 @@ class StreamingIndexRefreshSpec extends SparkSuite {
     }
     drain(tmpDir("stream-idx-ckpt1"))
 
-    val expected = full
-      .select(col("vec_id") +: Indexed.pqCodeCols(cb): _*)
+    val expected = Indexed.PqCodes.encode(spark, base)(full)
       .collect().map(_.toSeq).toSet
     def stored(): Set[Seq[Any]] = spark.read.parquet(codesPath)
       .select("vec_id", "code0", "code1", "code2", "code3")
